@@ -37,10 +37,6 @@ def transform_from_gdal(gt) -> np.ndarray:
     )
 
 
-def identity_transform() -> np.ndarray:
-    return np.eye(3, dtype=np.float64)
-
-
 def transform_between(gt_a, gt_b) -> np.ndarray:
     """Affine mapping pixel coords of raster A -> pixel coords of raster B.
 
@@ -61,14 +57,6 @@ def transform_points(t: np.ndarray, xs, ys):
     return xo, yo
 
 
-def pixel_area(t: np.ndarray) -> float:
-    """Area of one pixel in world units: |det| of the affine.
-
-    Reference: raster-diff/main.rs:164-165.
-    """
-    return float(abs(np.linalg.det(t)))
-
-
 # ---------------------------------------------------------------------------
 # Bounds (half-open axis-aligned rects) and raster windows
 #
@@ -81,10 +69,6 @@ def pixel_area(t: np.ndarray) -> float:
 def bounds_new(x0: float, y0: float, x1: float, y1: float):
     """Normalized bounds from two corners (like geo::Rect::new)."""
     return (min(x0, x1), min(y0, y1), max(x0, x1), max(y0, y1))
-
-
-def bounds_area(b) -> float:
-    return (b[2] - b[0]) * (b[3] - b[1])
 
 
 def bounds_intersect(a, b):

@@ -162,14 +162,8 @@ def hex_center_np(q, r, size: float):
             float(size) * (1.5 * r))
 
 
-def hex_distance_expr(q1, r1, q2, r2):
-    """Integer hex-grid distance between two axial cells:
-    (|dq| + |dr| + |dq + dr|) / 2 — exact long arithmetic."""
-    dq = F.col(q1) - F.col(q2)
-    dr = F.col(r1) - F.col(r2)
-    return ((F.abs(dq) + F.abs(dr) + F.abs(dq + dr)) / F.lit(2)).cast("long")
-
-
+#: Integer hex-grid distance between two axial cells as a SQL template:
+#: (|dq| + |dr| + |dq + dr|) / 2 in exact BIGINT arithmetic.
 HEX_DIST_SQL = ("CAST((abs({q1} - {q2}) + abs({r1} - {r2}) "
                 "+ abs({q1} + {r1} - {q2} - {r2})) / 2 AS BIGINT)")
 

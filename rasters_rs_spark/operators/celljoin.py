@@ -21,7 +21,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions import codecs, geom
+from ..functions import codecs, geom, scanpar
 from ..functions.mercator import MAX_COORD
 
 AOI_SCHEMA = (
@@ -139,31 +139,11 @@ def _burn_strip_row(sy: int, strip_height: int, w: int, h: int, gt, t,
 def aoi_ordinals_dist(aois: DataFrame, partitions: int = 64) -> DataFrame:
     """(aoi_id, ordinal) by global aoi_id sort order WITHOUT a
     single-partition window (which funnels the whole catalog through
-    one task): range-repartition the DISTINCT ids, rank within each
-    partition, and add per-partition offsets — the two-pass
-    zipWithIndex idiom. RangePartitioner assigns ascending id ranges
-    to ascending partition ids, so offset(p) = total rows of
-    partitions < p; the driver holds one count per partition, never
-    the catalog."""
-    from pyspark.sql import Window
-
-    ids = (aois.select("aoi_id").distinct()
-           .repartitionByRange(partitions, "aoi_id")
-           .withColumn("_pid", F.spark_partition_id())
-           .localCheckpoint(eager=True))
-    counts = {int(r["_pid"]): int(r["count"])
-              for r in ids.groupBy("_pid").count().collect()}
-    acc, offsets = 0, {}
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off_df = aois.sparkSession.createDataFrame(
-        [(p, o) for p, o in offsets.items()], "_pid int, _off long")
-    win = Window.partitionBy("_pid").orderBy("aoi_id")
-    return (ids.join(F.broadcast(off_df), on="_pid")
-            .withColumn("ordinal",
-                        F.row_number().over(win) - 1 + F.col("_off"))
-            .select("aoi_id", "ordinal"))
+    one task): scanpar.range_rank over the DISTINCT ids — the driver
+    holds one count per partition, never the catalog."""
+    ranked, _ = scanpar.range_rank(aois.select("aoi_id").distinct(),
+                                   "aoi_id", partitions=partitions)
+    return ranked.select("aoi_id", F.col("_rank").alias("ordinal"))
 
 
 def rasterize_dist(aois: DataFrame, gt, w: int, h: int,

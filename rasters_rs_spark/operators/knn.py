@@ -10,9 +10,10 @@ interpolation.rs:36-39); the engine's equivalents are:
 - ``knn_join``: cell-bucketed k-ring-expansion kNN — points bucketed by
   grid cell, queries probe an expanding Chebyshev ring until the kth
   neighbor is provably inside the ring, then row_number() <= k.
-  Distributed: the candidate step is an equi-join on cell keys.
-- ``knn_join_broadcast``: brute-force vectorized variant for small
-  point sets (the reference's broadcast triangulation analogue, J6).
+  Distributed: the candidate step is an equi-join on cell keys. Small
+  point sets (<= ``fast_path_points``) take a broadcast brute-force
+  crossJoin instead — the reference's broadcast triangulation
+  analogue (J6).
 - ``fill_idw``: fills holes with inverse-distance weighting of the k
   nearest points. The reference's hole predicate has a quirk
   (`val == f64::NAN` is always false, interpolation.rs:19), so by
@@ -287,40 +288,6 @@ def knn_join_hex(queries: DataFrame, points: DataFrame, k: int, size: float,
     for df in to_unpersist:
         df.unpersist()
     return out
-
-
-def knn_join_broadcast(queries: DataFrame, points: pd.DataFrame, k: int,
-                       query_id: str = "qid") -> DataFrame:
-    """Brute-force kNN against a broadcast pandas point table (exact;
-    for point sets that fit in task memory, like the reference's shared
-    triangulation)."""
-    px = points["x"].to_numpy()
-    py = points["y"].to_numpy()
-    pid = points["pt_id"].to_numpy()
-    pz = points["z"].to_numpy()
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0 or len(px) == 0:
-                continue
-            qx = pdf["x"].to_numpy()
-            qy = pdf["y"].to_numpy()
-            d = np.sqrt((qx[:, None] - px[None, :]) ** 2 +
-                        (qy[:, None] - py[None, :]) ** 2)
-            kk = min(k, d.shape[1])
-            # stable full sort: distance ties break by POSITIONAL index
-            # (argpartition's arbitrary tie selection would diverge
-            # from knn_join's (dist, pt_id) ordering at the k boundary)
-            order_all = np.argsort(d, axis=1, kind="stable")[:, :kk]
-            rows = []
-            for qi in range(len(pdf)):
-                for rank, pj in enumerate(order_all[qi], start=1):
-                    rows.append((pdf[query_id].iloc[qi], str(pid[pj]),
-                                 float(d[qi, pj]), float(pz[pj]), rank))
-            yield pd.DataFrame(rows, columns=[query_id, "pt_id", "dist", "z", "rank"])
-
-    return queries.mapInPandas(
-        gen, schema=f"{query_id} string, pt_id string, dist double, z double, rank int")
 
 
 def idw(values: np.ndarray, dists: np.ndarray, power: float = 2.0) -> np.ndarray:

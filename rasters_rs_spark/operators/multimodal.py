@@ -17,7 +17,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions import codecs
+from ..functions import codecs, scanpar
 
 _REAL_FORMATS = ("raw", "q16")
 _STUB_FORMATS = ("jpeg", "png", "webp")
@@ -632,10 +632,9 @@ def bucket_batches(df: DataFrame, batch_size: int,
     default) drops each bucket's trailing partial batch. ``batch_id``
     is per-bucket — a loader key is the (bucket, batch_id) pair.
 
-    Scale shape: rank-in-bucket uses the same two-pass
-    range-repartition idiom as deterministic_shuffle/pack_sequences —
-    ONE range exchange on (bucket, order), per-partition windows,
-    broadcast (partition, bucket) offsets — NEVER a
+    Scale shape: rank-in-bucket is scanpar.range_rank grouped by
+    bucket — ONE range exchange on (bucket, order), per-partition
+    windows, broadcast (partition, bucket) offsets — NEVER a
     Window.partitionBy(bucket) over the raw table: buckets are
     categorical (SDXL has 17), so a bucket-keyed global window would
     funnel the whole corpus through <= n_buckets tasks. The driver
@@ -643,38 +642,17 @@ def bucket_batches(df: DataFrame, batch_size: int,
     range partitioning keeps each bucket's rows contiguous-ordered so
     the per-partition window never crosses bucket boundaries out of
     order. SQL-oracled (bucket_batches_docs)."""
-    from pyspark.sql import Window
-
     if batch_size < 1:
         raise ValueError("batch_size must be >= 1")
-    d = (df.select(id_col, bucket_col, order_col)
-         .repartitionByRange(partitions, bucket_col, order_col, id_col)
-         .withColumn("_pid", F.spark_partition_id())
-         .localCheckpoint(eager=True))   # pin rows: _pid feeds 2 consumers
-    counts = d.groupBy("_pid", bucket_col).agg(
-        F.count("*").alias("n")).collect()
-    acc: dict = {}
-    off_rows = []
-    for r in sorted(counts, key=lambda r: (r[bucket_col], r["_pid"])):
-        b = r[bucket_col]
-        off_rows.append((int(r["_pid"]), b, acc.get(b, 0)))
-        acc[b] = acc.get(b, 0) + int(r["n"])
-    spark = df.sparkSession
-    b_type = dict(d.dtypes)[bucket_col]
-    off_df = spark.createDataFrame(
-        off_rows or [(0, None, 0)],
-        f"_pid int, {bucket_col} {b_type}, _off long")
-    full_df = spark.createDataFrame(
-        [(b, (n // batch_size) * batch_size) for b, n in acc.items()]
-        or [(None, 0)],
-        f"{bucket_col} {b_type}, _nfull long")
-    win = Window.partitionBy("_pid", bucket_col) \
-                .orderBy(order_col, id_col)
-    ranked = (d.join(F.broadcast(off_df), on=["_pid", bucket_col])
-              .withColumn("rank_in_bucket",
-                          (F.row_number().over(win) - 1
-                           + F.col("_off")).cast("long")))
+    ranked, totals = scanpar.range_rank(
+        df.select(id_col, bucket_col, order_col), [order_col, id_col],
+        group=bucket_col, partitions=partitions)
+    ranked = ranked.withColumnRenamed("_rank", "rank_in_bucket")
     if drop_last:
+        full_df = df.sparkSession.createDataFrame(
+            [(b, (n // batch_size) * batch_size)
+             for (b,), n in totals.items()] or [(None, 0)],
+            f"{bucket_col} {dict(df.dtypes)[bucket_col]}, _nfull long")
         ranked = ranked.join(F.broadcast(full_df), on=bucket_col) \
             .where(F.col("rank_in_bucket") < F.col("_nfull"))
     return ranked.select(

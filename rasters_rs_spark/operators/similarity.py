@@ -4,9 +4,12 @@
   JVM-side (F.zip_with + F.aggregate inside whole-stage codegen); the
   query side is broadcast, so the scan parallelizes over the corpus and
   the only shuffle is the per-query top-k window.
-- ``lsh_topk``: random-hyperplane LSH buckets as the scale path: probe
-  the query's bucket (plus optional multi-probe flips), rerank with the
-  exact cosine; recall measured against brute force in the tests.
+- ``lsh_topk_det`` / ``ivf_topk_det``: the approximate scale paths
+  with deterministic LCG hyperplanes / centroids — probe the query's
+  bucket (plus multi-probe flips) or nearest lists, rerank with the
+  exact cosine; every intermediate is reproducible in SQL.
+- ``ivf_topk``: IVF with a k-means quantizer trained by distributed
+  Lloyd over the full corpus (train_ivf_centroids_distributed).
 """
 
 from __future__ import annotations
@@ -158,14 +161,14 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int,
     the query side broadcast): it REFUSES — via a limit-capped probe,
     never a full count — query tables over ``max_queries``, where the
     broadcast would OOM executors and the scan goes quadratic; use
-    lsh_topk / ivf_topk as the scale path, or raise the cap
+    lsh_topk_det / ivf_topk as the scale path, or raise the cap
     explicitly."""
     n = queries.select(queries.columns[0]).limit(max_queries + 1).count()
     if n > max_queries:
         raise ValueError(
             f"cosine_topk is the exact brute-force surface (corpus x "
             f"queries); the query table exceeds max_queries="
-            f"{max_queries}. Use similarity.lsh_topk / ivf_topk for "
+            f"{max_queries}. Use similarity.lsh_topk_det / ivf_topk for "
             f"large query sets, or raise max_queries explicitly.")
     cand = corpus.crossJoin(F.broadcast(queries))
     return _rerank_topk(cand, k, q_id, c_id, q_vec, c_vec)
@@ -198,15 +201,11 @@ def _lsh_bucket_udf(vec_col: str, planes: list[list[float]]):
     """Bucket id = hyperplane sign bits (bit j set when dot_j > 0),
     computed in an Arrow-batched pandas UDF with fold-order dots. The
     planes are precomputed driver-side and closed over as numpy arrays
-    (converted once per executor, not per batch).
-
-    Kept as the DEFAULT over the pure-Catalyst _lsh_bucket_expr after
-    an A/B at sf0.1 (60k x 64-dim, local[32], best-of-3): numpy-fold
-    UDF 1.43s vs Catalyst fold exprs 2.22s end-to-end — Spark's
-    higher-order aggregate/zip_with evaluate interpreted lambda
-    closures per ELEMENT, while the Arrow batch amortizes its
-    serialization over vectorized row-sweeps. Both produce
-    bit-identical buckets (same strict fold order)."""
+    (converted once per executor, not per batch). An A/B at sf0.1
+    (60k x 64-dim, local[32], best-of-3) measured it 1.43s against
+    2.22s for the same strict fold written as Catalyst zip_with +
+    aggregate expressions, which evaluate interpreted lambda closures
+    per ELEMENT."""
     pl = [np.asarray(p, dtype=np.float64) for p in planes]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -224,56 +223,28 @@ def _lsh_bucket_udf(vec_col: str, planes: list[list[float]]):
     return gen
 
 
-def _lsh_bucket_expr(vec_col: str, planes: list[list[float]]):
-    """_lsh_bucket_udf as a pure Catalyst expression: each dot is a
-    zip_with + left-fold aggregate over the plane emitted as array
-    LITERALS — no Arrow round-trip or Python worker (useful where
-    Python workers are unavailable, e.g. pure-SQL surfaces), and
-    F.aggregate's strict left fold is the exact per-element op order
-    the SQL oracle's list_reduce uses, so bucket bits stay
-    bit-identical across engines (same reason _fold_dot_rows exists).
-    ~1.6x slower than the Arrow UDF at sf0.1 (see _lsh_bucket_udf)."""
-    bucket = F.lit(0).cast("long")
-    for j, p in enumerate(planes):
-        plane_lit = F.array(*[F.lit(float(v)) for v in p])
-        dot = F.aggregate(F.zip_with(F.col(vec_col), plane_lit,
-                                     lambda x, y: x * y),
-                          F.lit(0.0), lambda acc, x: acc + x)
-        bucket = bucket.bitwiseOR(
-            F.when(dot > 0, F.lit(1 << j)).otherwise(F.lit(0)).cast("long"))
-    return bucket
-
-
 def lsh_topk_det(queries: DataFrame, corpus: DataFrame, k: int, dim: int,
                  n_planes: int = 8, probes: int = 3,
                  q_id: str = "q_id", c_id: str = "vec_id",
                  q_vec: str = "q_vec", c_vec: str = "embedding",
                  broadcast_queries: bool | None = None,
-                 max_broadcast_queries: int = 1_000_000,
-                 catalyst_buckets: bool = False) -> DataFrame:
-    """lsh_topk with deterministic LCG hyperplanes and JVM-side fold
-    dot products: same plan shape (bucket equi-join + multi-probe +
-    exact rerank), but every intermediate is reproducible in ANSI SQL —
-    this is the contract-oracled variant. Bucketing uses the
-    Arrow-batched fold-dot UDF with driver-precomputed planes
-    (measured faster than the pure-Catalyst _lsh_bucket_expr — pass
-    ``catalyst_buckets=True`` for a zero-Python-worker plan)."""
+                 max_broadcast_queries: int = 1_000_000) -> DataFrame:
+    """Approximate top-k by random-hyperplane LSH with deterministic
+    LCG hyperplanes: bucket equi-join + multi-probe single-bit flips +
+    exact rerank, every intermediate reproducible in ANSI SQL — the
+    contract-oracled path. Bucketing uses the Arrow-batched fold-dot
+    UDF with driver-precomputed planes. Same output schema as
+    cosine_topk."""
     planes = lcg_planes(n_planes, dim)
     # (no fan_out of the corpus here — A/B'd in round 8: the rerank
     # window's shuffle already re-parallelizes after the candidate
     # join, and the extra exchange measured flat-to-negative)
-    if catalyst_buckets:
-        ck = corpus.withColumn("bucket", _lsh_bucket_expr(c_vec, planes))
-        qk = queries.withColumn("bucket", _lsh_bucket_expr(q_vec, planes))
-    else:
-        c_schema = ", ".join(f"{n} {t}" for n, t in corpus.dtypes) \
-            + ", bucket long"
-        q_schema = ", ".join(f"{n} {t}" for n, t in queries.dtypes) \
-            + ", bucket long"
-        ck = corpus.mapInPandas(_lsh_bucket_udf(c_vec, planes),
-                                schema=c_schema)
-        qk = queries.mapInPandas(_lsh_bucket_udf(q_vec, planes),
-                                 schema=q_schema)
+    c_schema = ", ".join(f"{n} {t}" for n, t in corpus.dtypes) \
+        + ", bucket long"
+    q_schema = ", ".join(f"{n} {t}" for n, t in queries.dtypes) \
+        + ", bucket long"
+    ck = corpus.mapInPandas(_lsh_bucket_udf(c_vec, planes), schema=c_schema)
+    qk = queries.mapInPandas(_lsh_bucket_udf(q_vec, planes), schema=q_schema)
     flips = [0] + [1 << b for b in range(min(probes, n_planes))]
     probe_df = qk.sparkSession.createDataFrame([(f,) for f in flips], "flip long")
     qprobe = qk.crossJoin(F.broadcast(probe_df)).withColumn(
@@ -351,41 +322,6 @@ def ivf_topk_det(queries: DataFrame, corpus: DataFrame, k: int, dim: int,
                                   multiplier=nprobe)
     cand = ck.join(qk, on="list_id")
     return _rerank_topk(cand, k, q_id, c_id, q_vec, c_vec)
-
-
-def _bucket_udf(vec_col: str, dim: int, n_planes: int, seed: int):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rng = np.random.default_rng(seed)
-        planes = rng.normal(size=(dim, n_planes))
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            signs = (mat @ planes) > 0
-            key = np.zeros(len(pdf), dtype=np.int64)
-            for b in range(n_planes):
-                key = key * 2 + signs[:, b].astype(np.int64)
-            res = pdf.copy()
-            res["bucket"] = key
-            yield res
-    return gen
-
-
-def train_ivf_centroids(sample: np.ndarray, n_lists: int, iters: int = 10,
-                        seed: int = 11) -> np.ndarray:
-    """Driver-side k-means (Lloyd, numpy) over a corpus sample — the IVF
-    coarse quantizer. At 10^12 scale the sample is a cheap limit() pull;
-    centroids broadcast to every task."""
-    rng = np.random.default_rng(seed)
-    cents = sample[rng.choice(len(sample), size=n_lists, replace=False)].copy()
-    for _ in range(iters):
-        d = ((sample[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        for c in range(n_lists):
-            m = assign == c
-            if m.any():
-                cents[c] = sample[m].mean(axis=0)
-    return cents
 
 
 def train_ivf_centroids_distributed(corpus: DataFrame, dim: int,
@@ -468,40 +404,22 @@ def _ivf_assign_udf(vec_col: str, cents: np.ndarray, nprobe: int):
 
 
 def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int, dim: int,
-             n_lists: int = 16, nprobe: int = 4, train_sample: int = 2048,
+             n_lists: int = 16, nprobe: int = 4,
              q_id: str = "q_id", c_id: str = "vec_id",
              q_vec: str = "q_vec", c_vec: str = "embedding",
              broadcast_queries: bool | None = None,
-             max_broadcast_queries: int = 1_000_000,
-             train: str = "sample") -> DataFrame:
+             max_broadcast_queries: int = 1_000_000) -> DataFrame:
     """IVF approximate top-k: k-means coarse quantizer, corpus rows
     assigned to their nearest list, queries probe their ``nprobe``
     nearest lists, exact cosine rerank inside the probed lists.
     Same output schema as cosine_topk.
 
-    ``train="sample"`` (default) trains on a bounded limit() sample —
-    cheap and adequate when the sample sees every mode;
-    ``train="distributed"`` runs map-side partial-sum Lloyd over the
-    FULL corpus (train_ivf_centroids_distributed) — the 100 TB
-    quantizer: no corpus-sized driver collect anywhere."""
-    if train == "distributed":
-        cents = train_ivf_centroids_distributed(
-            corpus, dim, n_lists, c_vec=c_vec, c_id=c_id)
-    elif train == "sample":
-        sampled = [np.asarray(r[c_vec], dtype=np.float64)
-                   for r in corpus.limit(train_sample).collect()]
-        if not sampled:
-            raise ValueError("ivf_topk: the corpus is empty (nothing to "
-                             "train the coarse quantizer on)")
-        sample = np.stack(sampled)
-        if len(sample) < n_lists:
-            # fewer rows than lists: clamp (k-means with replace=False
-            # would raise an opaque numpy error)
-            n_lists = len(sample)
-        cents = train_ivf_centroids(sample, n_lists)
-    else:
-        raise ValueError(f"ivf_topk: unknown train={train!r} "
-                         f"(use 'sample' or 'distributed')")
+    The quantizer is trained by train_ivf_centroids_distributed:
+    map-side partial-sum Lloyd over the FULL corpus — the 100 TB
+    quantizer, no corpus-sized driver collect anywhere. An empty
+    corpus raises ValueError."""
+    cents = train_ivf_centroids_distributed(
+        corpus, dim, n_lists, c_vec=c_vec, c_id=c_id)
 
     c_schema = ", ".join(f"{n} {t}" for n, t in corpus.dtypes) + ", lists array<int>"
     q_schema = ", ".join(f"{n} {t}" for n, t in queries.dtypes) + ", lists array<int>"
@@ -514,33 +432,6 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int, dim: int,
                                   max_broadcast_queries, dim=dim,
                                   multiplier=nprobe)
     cand = ck.join(qk, on="list_id")
-    return _rerank_topk(cand, k, q_id, c_id, q_vec, c_vec)
-
-
-def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int, dim: int,
-             n_planes: int = 12, probes: int = 3, seed: int = 7,
-             q_id: str = "q_id", c_id: str = "vec_id",
-             q_vec: str = "q_vec", c_vec: str = "embedding",
-             broadcast_queries: bool | None = None,
-             max_broadcast_queries: int = 1_000_000) -> DataFrame:
-    """Approximate top-k: bucket corpus and queries by hyperplane signs,
-    multi-probe by flipping ``probes`` single bits, equi-join on bucket,
-    exact cosine rerank. Same output schema as cosine_topk."""
-    c_schema = ", ".join(f"{n} {t}" for n, t in corpus.dtypes) + ", bucket long"
-    q_schema = ", ".join(f"{n} {t}" for n, t in queries.dtypes) + ", bucket long"
-    ck = corpus.mapInPandas(_bucket_udf(c_vec, dim, n_planes, seed), schema=c_schema)
-    qk = queries.mapInPandas(_bucket_udf(q_vec, dim, n_planes, seed), schema=q_schema)
-
-    # multi-probe: original bucket plus single-bit flips
-    flips = [0] + [1 << b for b in range(min(probes, n_planes))]
-    probe_df = qk.sparkSession.createDataFrame([(f,) for f in flips], "flip long")
-    qprobe = qk.crossJoin(F.broadcast(probe_df)).withColumn(
-        "bucket", F.col("bucket").bitwiseXOR(F.col("flip"))).drop("flip")
-
-    qprobe = _maybe_broadcast_queries(queries, qprobe, broadcast_queries,
-                                      max_broadcast_queries, dim=dim,
-                                      multiplier=len(flips))
-    cand = ck.join(qprobe, on="bucket")
     return _rerank_topk(cand, k, q_id, c_id, q_vec, c_vec)
 
 

@@ -29,14 +29,6 @@ LANG_MARKERS = {
 STOPWORDS = ("the", "a", "of", "and", "is", "to", "in")
 
 
-def token_count_expr(text_col: str = "text"):
-    return F.size(F.split(F.col(text_col), " "))
-
-
-def with_token_count(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    return docs.withColumn("n_tokens", token_count_expr(text_col))
-
-
 def with_quality(docs: DataFrame, text_col: str = "text",
                  tokens_col: str | None = None) -> DataFrame:
     """Quality features: token count, char count, mean token length,
@@ -904,17 +896,14 @@ def pack_sequences(docs: DataFrame, budget: int, id_col: str = "doc_id",
     seq_id/seq_offset locate the doc's first token; n_seqs is how many
     training sequences it touches.
 
-    The global exclusive cumsum uses the two-pass zipWithIndex idiom
-    (range-repartition by id, per-partition window cumsum, broadcast
-    per-partition totals) — no single-partition window, so the plan
-    holds at corpus scale; the driver sees one sum per partition.
+    The global exclusive cumsum is scanpar.range_rank with the token
+    count as weight — no single-partition window, so the plan holds at
+    corpus scale; the driver sees one sum per partition.
     Deterministic: a pure function of the (id -> n_tokens) mapping
     when ids are unique (the expected shape); duplicate ids still pack
     without overlap (ROWS frame) but their relative order is
     tie-broken arbitrarily. SQL-oracled (DuckDB window cumsum over the
     same order)."""
-    from pyspark.sql import Window
-
     if budget <= 0:
         raise ValueError("pack_sequences: budget must be positive")
     if count_col:                      # precomputed per-row size
@@ -924,30 +913,11 @@ def pack_sequences(docs: DataFrame, budget: int, id_col: str = "doc_id",
     else:
         n_tok = F.size(F.split(F.coalesce(F.col(text_col), F.lit("")),
                                " ")).cast("long")
-    d = (docs.select(F.col(id_col).alias("doc_id"),
-                     n_tok.alias("n_tokens"))
-         .repartitionByRange(partitions, "doc_id")
-         .withColumn("_pid", F.spark_partition_id())
-         .localCheckpoint(eager=True))   # pin rows: _pid feeds 2 consumers
-    sums = {int(r["_pid"]): int(r["s"] or 0) for r in
-            d.groupBy("_pid").agg(F.sum("n_tokens").alias("s")).collect()}
-    acc, offsets = 0, {}
-    for pid in sorted(sums):
-        offsets[pid] = acc
-        acc += sums[pid]
-    off_df = docs.sparkSession.createDataFrame(
-        [(p, o) for p, o in offsets.items()] or [(0, 0)],
-        "_pid int, _off long")
-    # explicit ROWS frame: the default for sum().over(orderBy) is
-    # RANGE, which sums ALL peer rows of a tied doc_id into each of
-    # them — duplicate ids would get overlapping starts (review r5)
-    win = (Window.partitionBy("_pid").orderBy("doc_id")
-           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    out, _ = scanpar.range_rank(
+        docs.select(F.col(id_col).alias("doc_id"), n_tok.alias("n_tokens")),
+        "doc_id", weight="n_tokens", partitions=partitions)
+    out = out.withColumnRenamed("_rank", "global_start")
     b = int(budget)
-    out = (d.join(F.broadcast(off_df), on="_pid")
-           .withColumn("global_start",
-                       F.sum("n_tokens").over(win) - F.col("n_tokens")
-                       + F.col("_off")))
     return out.select(
         "doc_id", "n_tokens", "global_start",
         F.expr(f"global_start div {b}").alias("seq_id"),
@@ -1595,34 +1565,19 @@ def deterministic_shuffle(docs: DataFrame, salt: str = "sh1",
     pipeline (re-salting re-shuffles; the same salt always reproduces
     the same order, independent of partitioning or cluster size).
 
-    Rank assignment uses the two-pass zipWithIndex idiom
-    (pack_sequences): range-repartition on the shuffle key, window
-    ranks WITHIN each partition, add broadcast per-partition offsets —
-    no single-partition window anywhere, so the plan is one range
+    Rank assignment is scanpar.range_rank on the shuffle key — no
+    single-partition window anywhere, so the plan is one range
     exchange at any scale (which a global permutation genuinely
     requires; consumers that only need *an* order, not ranks, can
     skip ranks and range-read by shuffle_key directly).
     Returns (id, shuffle_key, shuffle_rank); ties on the 128-bit key
     are broken by id. SQL-oracled."""
     key = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(f":{salt}")))
-    d = (docs.select(F.col(id_col), key.alias("shuffle_key"))
-         .repartitionByRange(partitions, "shuffle_key", id_col)
-         .withColumn("_pid", F.spark_partition_id())
-         .localCheckpoint(eager=True))   # pin rows: _pid feeds 2 consumers
-    counts = {int(r["_pid"]): int(r["n"]) for r in
-              d.groupBy("_pid").agg(F.count("*").alias("n")).collect()}
-    acc, offsets = 0, {}
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off_df = docs.sparkSession.createDataFrame(
-        [(p, o) for p, o in offsets.items()] or [(0, 0)],
-        "_pid int, _off long")
-    win = Window.partitionBy("_pid").orderBy("shuffle_key", id_col)
-    return (d.join(F.broadcast(off_df), on="_pid")
-            .select(id_col, "shuffle_key",
-                    (F.row_number().over(win) - 1 + F.col("_off"))
-                    .cast("long").alias("shuffle_rank")))
+    ranked, _ = scanpar.range_rank(
+        docs.select(F.col(id_col), key.alias("shuffle_key")),
+        ["shuffle_key", id_col], partitions=partitions)
+    return ranked.select(id_col, "shuffle_key",
+                         F.col("_rank").alias("shuffle_rank"))
 
 
 def temperature_mixture_sample(docs: DataFrame, alpha: float = 0.5,

@@ -512,8 +512,10 @@ def image_curate_fold(spark: SparkSession, out_dir: str,
     appending duplicates, and the incremental phash probe already
     supersedes replayed ids on the register side
     (phash_neardup_incremental's replay filter), so the pair set is
-    unchanged on the second attempt. Existence probes use the Hadoop
-    FS API, not os.path. Readers of the two stores see an extra
+    unchanged on the second attempt. Only register epochs with a
+    committed ``_SUCCESS`` are read back as the prior register, so a
+    crash mid-write never wedges the next batch. Existence probes use
+    the Hadoop FS API, not os.path. Readers of the two stores see an extra
     ``epoch`` partition column."""
     from pyspark.sql import functions as SF
 
@@ -536,8 +538,20 @@ def image_curate_fold(spark: SparkSession, out_dir: str,
         aligned = sized.join(
             gate.where(SF.col("keep")).select("image_id"),
             on="image_id").localCheckpoint(eager=True)
+        # only COMMITTED epochs count as a prior register: a crash
+        # before the first commit leaves a bare register/epoch=N
+        # directory that must not be read (same rule as
+        # windows.pyramid_fold_batch's committed_epochs)
+        committed = []
         if fs.exists(P(register)):
-            prior = spark.read.parquet(register).drop("epoch")
+            for st in fs.listStatus(P(register)):
+                path = st.getPath()
+                if (path.getName().startswith("epoch=")
+                        and fs.exists(P(path, "_SUCCESS"))):
+                    committed.append(path.toString())
+        if committed:
+            prior = spark.read.option("basePath", register) \
+                .parquet(*committed).drop("epoch")
             pairs = dedup.phash_neardup_incremental(
                 aligned, prior, max_hamming=max_hamming)
         else:

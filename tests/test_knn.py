@@ -201,10 +201,13 @@ def test_knn_join_hex_partial_fallback_union(spark):
 
 
 def test_knn_broadcast_matches(spark):
+    """knn_join's default plan on a small point set (the broadcast
+    brute-force fast path) equals numpy brute force."""
     ps = synth.points_table(200, seed=22)
     qs = synth.points_table(25, seed=23).rename(columns={"pt_id": "qid"}).drop(columns=["z"])
     expect = _bruteforce_knn(qs, ps, 3)
-    res = K.knn_join_broadcast(spark.createDataFrame(qs), ps, k=3).collect()
+    res = K.knn_join(spark.createDataFrame(qs), spark.createDataFrame(ps),
+                     k=3, cell_size=300.0, query_id="qid").collect()
     got = {}
     for r in sorted(res, key=lambda r: (r["qid"], r["rank"])):
         got.setdefault(r["qid"], []).append(r["pt_id"])

@@ -511,3 +511,29 @@ def test_image_curate_fold_replay_idempotent(spark, tmp_path):
     reg = [r["image_id"] for r in spark.read.parquet(
         f"{out}/register").select("image_id").collect()]
     assert len(reg) == len(set(reg))
+
+
+def test_image_curate_fold_ignores_uncommitted_register(spark, tmp_path):
+    """Fault injection: a crash before the first register commit leaves
+    a bare register/epoch=0 directory with no _SUCCESS. The next batch
+    must treat the register as absent — not fail reading it — and
+    produce exactly the no-prior result."""
+    from rasters_rs_spark.sources import synth
+    from rasters_rs_spark.streaming.pipeline import image_curate_fold
+
+    images = spark.createDataFrame(
+        synth.clip_caption_table(16, plant_neardups=((5, 4),)))
+
+    def curated(out):
+        return sorted(tuple(r) for r in spark.read.parquet(
+            f"{out}/curated").select("image_id", "bucket_id").collect())
+
+    clean = str(tmp_path / "clean")
+    image_curate_fold(spark, clean, max_hamming=10)(images, 0)
+
+    crashed = str(tmp_path / "crashed")
+    (tmp_path / "crashed" / "register" / "epoch=0").mkdir(parents=True)
+    image_curate_fold(spark, crashed, max_hamming=10)(images, 0)
+
+    assert curated(crashed) == curated(clean)
+    assert len(curated(clean)) > 0

@@ -39,31 +39,6 @@ def test_cosine_topk_exact(spark, emb):
         assert np.allclose([r["cosine"] for r in rows], cos[order])
 
 
-def test_lsh_topk_recall(spark, emb):
-    df, pdf = emb
-    qs = pdf.head(10)
-    queries = spark.createDataFrame(pd.DataFrame({
-        "q_id": qs["vec_id"].astype(str),
-        "q_vec": [list(map(float, v)) for v in qs["embedding"]],
-    }))
-    corpus = df.selectExpr("cast(vec_id as string) vec_id",
-                           "transform(embedding, x -> cast(x as double)) embedding")
-    exact = SIM.cosine_topk(queries, corpus, k=10).collect()
-    approx = SIM.lsh_topk(queries, corpus, k=10, dim=64,
-                          n_planes=6, probes=6).collect()
-    e = {}
-    for r in exact:
-        e.setdefault(r["q_id"], set()).add(r["vec_id"])
-    a = {}
-    for r in approx:
-        a.setdefault(r["q_id"], set()).add(r["vec_id"])
-    recalls = [len(e[q] & a.get(q, set())) / len(e[q]) for q in e]
-    # every query's own vector must be found (it shares the exact bucket)
-    for q in e:
-        assert q in a and q in a[q]
-    assert np.mean(recalls) >= 0.3  # approximate, but far above chance (~2%)
-
-
 def test_det_ann_variants_recall(spark, emb):
     """The SQL-oracled deterministic variants (LCG planes/centroids)
     keep useful recall vs exact top-k and always find the query's own
@@ -498,9 +473,8 @@ def test_distributed_kmeans_equals_driver_lloyd(spark, emb):
 
 
 def test_ivf_topk_distributed_train_recall(spark, emb):
-    """ivf_topk(train='distributed'): the full-corpus quantizer keeps
-    the recall bar of the sampled one and always finds the query's own
-    vector."""
+    """ivf_topk's full-corpus distributed quantizer keeps useful recall
+    vs exact top-k and always finds the query's own vector."""
     df, pdf = emb
     qs = pdf.head(8)
     queries = spark.createDataFrame(pd.DataFrame({
@@ -515,7 +489,7 @@ def test_ivf_topk_distributed_train_recall(spark, emb):
     for r in exact:
         e.setdefault(r["q_id"], set()).add(r["vec_id"])
     out = SIM.ivf_topk(queries, corpus, k=5, dim=64, n_lists=8,
-                       nprobe=4, train="distributed").collect()
+                       nprobe=4).collect()
     a = {}
     for r in out:
         a.setdefault(r["q_id"], set()).add(r["vec_id"])

@@ -56,6 +56,8 @@ def test_tile_config_fab1_zoom_range():
     assert cfg.min_zoom() == 18
 
 
+@pytest.mark.skipif(not FIXTURE.exists(),
+                    reason=f"reference fixture {FIXTURE} is absent")
 def test_golden_fixture_local(spark):
     encoded = T.tile_index_manifest(_fab1_images(spark), mode="local")
     got = T.index_json(encoded, "fab1")
