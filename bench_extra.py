@@ -41,14 +41,14 @@ def calibrate_ms(iters: int = 20_000_000) -> float:
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     rounds = int(os.environ.get("BENCH_QUERY_ROUNDS", "3"))
     names = sys.argv[1:]
 
     calib_before = calibrate_ms()
 
-    spark = get_spark("bench_extra", cores=cpus,
-                      shuffle_partitions=max(cpus, 8))
+    # cores: SPARK_GRAFT_CPUS, else the CPUs this process may run on
+    spark = get_spark("bench_extra", cores=None)
+    cpus = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
     if not names:

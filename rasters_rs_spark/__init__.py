@@ -9,4 +9,15 @@ pipeline layer (dedup, similarity search, text analysis, multimodal
 plumbing) that a 100 TB image+caption corpus needs.
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+# Unpickling an engine UDF that refers to any of the package's modules
+# or functions imports this package inside the Python worker; install
+# the lazy zip invalidation there (see zipcache.py). The driver never
+# has pyspark.worker loaded.
+if "pyspark.worker" in sys.modules:
+    from rasters_rs_spark import zipcache
+
+    zipcache.install()

@@ -25,8 +25,8 @@ def main():
     names = sys.argv[2:]
     os.makedirs(outdir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("plan_dump", cores=cpus, shuffle_partitions=max(cpus, 8))
+    # cores: SPARK_GRAFT_CPUS, else the CPUs this process may run on
+    spark = get_spark("plan_dump", cores=None)
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
     if not names:
