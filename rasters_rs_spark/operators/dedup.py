@@ -21,7 +21,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions import scanpar
+from ..functions import scanpar, vectors
 from .text import shingle_expr
 
 #: Max MATERIALIZED band-table bytes the LSH self-join will broadcast
@@ -672,16 +672,14 @@ def caption_dup_groups(images: DataFrame, id_col: str = "image_id",
 
 def _embedding_planes(dim: int, bands: int, band_planes: int,
                       seed: int | None):
-    """Hyperplane set shared by the batch and streaming embedding-LSH
-    paths: deterministic LCG planes when seed is None (SQL-mirrorable),
-    gaussian otherwise."""
+    """(bands * band_planes, dim) hyperplane matrix shared by the batch
+    and streaming embedding-LSH paths: deterministic LCG planes when
+    seed is None (SQL-mirrorable), gaussian otherwise."""
     from .similarity import lcg_planes
     n_planes = bands * band_planes
     if seed is None:
-        return [np.asarray(p, dtype=np.float64)
-                for p in lcg_planes(n_planes, dim)]
-    rng = np.random.default_rng(seed)
-    return list(rng.normal(size=(n_planes, dim)))
+        return vectors.matrix(lcg_planes(n_planes, dim))
+    return np.random.default_rng(seed).normal(size=(n_planes, dim))
 
 
 def _embedding_band_keys(mat: np.ndarray, planes, bands: int,
@@ -692,26 +690,19 @@ def _embedding_band_keys(mat: np.ndarray, planes, bands: int,
     embedding_bands (batch) and stream_embedding_neardup.
 
     ``fold_order=True`` computes each dot as a strict left fold
-    (_fold_dot_rows) so signs are bit-identical to the SQL oracle's
+    (vectors.dot) so signs are bit-identical to the SQL oracle's
     list_reduce — required for the LCG (seed=None) contract path.
     ``fold_order=False`` is one ``mat @ planes.T`` matmul: numpy's
     pairwise summation differs from the fold by fp association only,
     which can flip a sign exactly on a dot at 0.0 — impossible for
     gaussian planes (measure-zero) — so the seeded production path
     takes the fast kernel."""
-    if not fold_order:
-        pm = np.stack([np.asarray(p, dtype=np.float64) for p in planes])
-        signs = (mat @ pm.T) > 0                      # (rows, bands*planes)
-        weights = (1 << np.arange(band_planes, dtype=np.int64))
-        return (signs.reshape(mat.shape[0], bands, band_planes)
-                * weights).sum(axis=2, dtype=np.int64)
-    from .similarity import _fold_dot_rows
-    keys = np.zeros((mat.shape[0], bands), dtype=np.int64)
-    for b in range(bands):
-        for j in range(band_planes):
-            bit = _fold_dot_rows(mat, planes[b * band_planes + j]) > 0
-            keys[:, b] |= bit.astype(np.int64) << j
-    return keys
+    dots = (vectors.dot(mat[:, None], planes[None]) if fold_order
+            else mat @ planes.T)
+    signs = dots > 0                                   # (rows, bands*planes)
+    weights = (1 << np.arange(band_planes, dtype=np.int64))
+    return (signs.reshape(mat.shape[0], bands, band_planes)
+            * weights).sum(axis=2, dtype=np.int64)
 
 
 def embedding_bands(embs: DataFrame, id_col: str = "vec_id",
@@ -742,8 +733,7 @@ def embedding_bands(embs: DataFrame, id_col: str = "vec_id",
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.stack([np.asarray(v, dtype=np.float64)
-                            for v in pdf[vec_col]])
+            mat = vectors.matrix(pdf[vec_col])
             if planes is None:
                 planes = _embedding_planes(mat.shape[1], bands, band_planes,
                                            seed)
@@ -806,33 +796,16 @@ def _semdedup_assign_udf(id_col: str, vec_col: str, cents):
     == the oracle's CASE WHEN d_i = m ordered scan) plus the cosine to
     the assigned centroid, every sum a strict left fold so the value is
     bit-identical to the DuckDB list_reduce mirror."""
-    from .similarity import _fold_sqdist_rows, _fold_dot_rows
-
-    cl = [np.asarray(c, dtype=np.float64) for c in cents]
-    cnorm = []
-    for c in cl:
-        acc = 0.0
-        for x in c:
-            acc = acc + x * x
-        cnorm.append(np.sqrt(acc))
+    C = vectors.matrix(cents)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.stack([np.asarray(v, dtype=np.float64)
-                            for v in pdf[vec_col]])
-            d = np.stack([_fold_sqdist_rows(mat, c) for c in cl], axis=1)
-            cluster = np.argmin(d, axis=1)
-            vnorm_sq = np.zeros(mat.shape[0])
-            for j in range(mat.shape[1]):
-                vnorm_sq = vnorm_sq + mat[:, j] * mat[:, j]
-            vnorm = np.sqrt(vnorm_sq)
-            dots = np.stack([_fold_dot_rows(mat, c) for c in cl], axis=1)
-            cdot = np.take_along_axis(dots, cluster[:, None], axis=1)[:, 0]
-            denom = vnorm * np.asarray(cnorm)[cluster]
-            with np.errstate(invalid="ignore", divide="ignore"):
-                sim = np.where(denom != 0.0, cdot / denom, np.nan)
+            mat = vectors.matrix(pdf[vec_col])
+            cluster = np.argmin(vectors.sqdist(mat[:, None], C[None]), axis=1)
+            # NaN where the denominator is 0, so it becomes None below
+            sim, _ = vectors.cosine(mat, C[cluster])
             yield pd.DataFrame({
                 id_col: pdf[id_col],
                 vec_col: pdf[vec_col],
@@ -840,57 +813,6 @@ def _semdedup_assign_udf(id_col: str, vec_col: str, cents):
                 "centroid_sim": [None if not np.isfinite(s) else float(s)
                                  for s in sim],
             })
-    return gen
-
-
-def _pair_cosine_filter_udf(threshold: float):
-    """Per-batch Arrow kernel over candidate pairs: the strict-fold
-    cosine of cosine_expr — dot = left fold of a[i]*b[i] from 0.0,
-    norm = sqrt(left fold of x*x from 0.0), NULL (dropped) when the
-    denominator is 0 or lengths mismatch — vectorized ACROSS pairs by
-    looping over the dimension axis, so every per-pair accumulation is
-    the same sequential float64 add chain as the Catalyst fold
-    (bit-identical; pinned by test_semdedup_pair_kernel_matches_expr).
-    Emits only pairs with cosine >= threshold.  Replaces the
-    interpreted higher-order-function evaluation, which cost ~20us per
-    pair (8.0s for 385k pairs at sf0.1; the kernel runs the same
-    batch in ~0.2s — measured same-session)."""
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_cols = ["id_a", "id_b", "cs_a", "cs_b"]
-            if len(pdf) == 0:
-                yield pdf[out_cols]
-                continue
-            va, vb = pdf["va"].to_numpy(), pdf["vb"].to_numpy()
-            lens = np.array([
-                (len(a) if a is not None else -1,
-                 len(b) if b is not None else -1)
-                for a, b in zip(va, vb)], dtype=np.int64)
-            keep = np.zeros(len(pdf), dtype=bool)
-            for la, lb in {tuple(t) for t in lens}:
-                # length mismatch -> zip_with pads with null -> fold is
-                # NULL -> pair fails the threshold; missing vec likewise
-                if la != lb or la <= 0:
-                    continue
-                idx = np.flatnonzero((lens[:, 0] == la) & (lens[:, 1] == lb))
-                A = np.stack([np.asarray(va[i], dtype=np.float64)
-                              for i in idx])
-                B = np.stack([np.asarray(vb[i], dtype=np.float64)
-                              for i in idx])
-                dot = np.zeros(len(idx))
-                na = np.zeros(len(idx))
-                nb = np.zeros(len(idx))
-                for d in range(la):
-                    ad, bd = A[:, d], B[:, d]
-                    dot = dot + ad * bd
-                    na = na + ad * ad
-                    nb = nb + bd * bd
-                denom = np.sqrt(na) * np.sqrt(nb)
-                ok = denom != 0.0
-                cos = np.zeros(len(idx))
-                cos[ok] = dot[ok] / denom[ok]
-                keep[idx] = ok & (cos >= threshold)
-            yield pdf.loc[keep, out_cols]
     return gen
 
 
@@ -938,13 +860,14 @@ def _semdedup_pair_kernel(threshold: float):
     """Cogroup kernel for semantic_dedup's pair stage: all-pairs
     strict-fold cosine between a group's left (id_a, va, cs_a) and
     right (id_b, vb, cs_b) rows, emitting (id_a, id_b, cs_a, cs_b)
-    for pairs with id_a < id_b and cosine >= threshold. The fold runs
-    as the SAME dimension-axis float64 add chain as
-    _pair_cosine_filter_udf / cosine_expr (dot and both norms
-    accumulated d = 0..L-1), so every pair cosine — and the kept pair
-    set — is bit-identical to the join+kernel shape it replaced
-    (pinned by test_semdedup_cogroup_pairs_match_join_kernel).
-    Length-mismatched and zero-norm pairs drop, as before."""
+    for pairs with id_a < id_b and cosine >= threshold. The cosine is
+    vectors.cosine_tiles, cosine_expr's float64 add chain (dot and
+    both norms accumulated d = 0..L-1) over TILE x TILE blocks, so
+    every pair cosine — and the kept pair set — is bit-identical to
+    cosine_expr + threshold over the salted join (pinned by
+    test_semdedup_cogroup_pairs_match_join_kernel) and memory stays
+    bounded whatever the cluster size. Length-mismatched, null and
+    zero-norm pairs drop, as cosine_expr's NULL does."""
     cols = ["id_a", "id_b", "cs_a", "cs_b"]
 
     def fn(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
@@ -952,47 +875,27 @@ def _semdedup_pair_kernel(threshold: float):
             return pd.DataFrame(columns=cols)
         va = lpdf["va"].to_numpy()
         vb = rpdf["vb"].to_numpy()
-        la = np.fromiter((len(v) if v is not None else -1 for v in va),
-                         dtype=np.int64, count=len(va))
-        lb = np.fromiter((len(v) if v is not None else -1 for v in vb),
-                         dtype=np.int64, count=len(vb))
+        la, lb = vectors.lengths(va), vectors.lengths(vb)
         ida = lpdf["id_a"].to_numpy()
         idb = rpdf["id_b"].to_numpy()
         csa = lpdf["cs_a"].to_numpy()
         csb = rpdf["cs_b"].to_numpy()
         outs = []
-        for L in np.unique(la):
-            if L <= 0:
-                continue
+        for L in np.unique(la[la > 0]):
             li = np.flatnonzero(la == L)
             rj = np.flatnonzero(lb == L)
             if rj.size == 0:
                 continue
-            A = np.stack([np.asarray(va[i], dtype=np.float64) for i in li])
-            B = np.stack([np.asarray(vb[j], dtype=np.float64) for j in rj])
-            dot = np.zeros((li.size, rj.size))
-            na = np.zeros(li.size)
-            nb = np.zeros(rj.size)
-            for d in range(int(L)):
-                ad, bd = A[:, d], B[:, d]
-                dot = dot + ad[:, None] * bd[None, :]
-                na = na + ad * ad
-                nb = nb + bd * bd
-            denom = np.sqrt(na)[:, None] * np.sqrt(nb)[None, :]
-            ok = denom != 0.0
-            cos = np.zeros_like(dot)
-            cos[ok] = dot[ok] / denom[ok]
-            keep = ok & (cos >= threshold)
-            ii, jj = np.nonzero(keep)
-            if ii.size == 0:
-                continue
-            lt_mask = ida[li[ii]] < idb[rj[jj]]
-            ii, jj = ii[lt_mask], jj[lt_mask]
-            if ii.size == 0:
-                continue
-            outs.append(pd.DataFrame({
-                "id_a": ida[li[ii]], "id_b": idb[rj[jj]],
-                "cs_a": csa[li[ii]], "cs_b": csb[rj[jj]]}))
+            for i, j, cos, ok in vectors.cosine_tiles(
+                    vectors.matrix(va[li]), vectors.matrix(vb[rj])):
+                ii, jj = np.nonzero(ok & (cos >= threshold))
+                a, b = li[i + ii], rj[j + jj]
+                lt = ida[a] < idb[b]
+                if lt.any():
+                    a, b = a[lt], b[lt]
+                    outs.append(pd.DataFrame({
+                        "id_a": ida[a], "id_b": idb[b],
+                        "cs_a": csa[a], "cs_b": csb[b]}))
         if not outs:
             return pd.DataFrame(columns=cols)
         return pd.concat(outs, ignore_index=True)
@@ -1021,8 +924,8 @@ def semantic_dedup(embs: DataFrame, cents, threshold: float = 0.9,
     metadata, one corpus scan assigns cluster + centroid cosine); the
     only shuffle is the cluster-keyed self-equi-join, hot clusters
     salted like every other dedup candidate join; pair cosines run in
-    a dimension-axis-loop Arrow kernel (strict folds vectorized across
-    pairs — see _pair_cosine_filter_udf), not per-pair interpreted
+    a tiled Arrow kernel (strict folds vectorized across pairs — see
+    _semdedup_pair_kernel), not per-pair interpreted
     expressions.  Within-cluster work
     is O((n/k)^2) per cluster — size the centroid count so clusters
     stay bounded (the paper runs 50k clusters at 5B embeddings), and

@@ -1081,7 +1081,7 @@ def sibson_discrete(spark, sites: DataFrame, queries: DataFrame,
         .select("q_id", "site_id", "cnt", "n_stolen", "val")
 
 
-def _fold_by(key: str, term) -> F.Column:
+def _ordered_fold(key: str, term) -> F.Column:
     """Order-pinned float sum inside an aggregation: collect
     (key, term) structs, sort by key, left-fold from 0.0 — the float
     result is independent of partitioning and bit-reproducible, and
@@ -1123,7 +1123,7 @@ def sibson_c1_discrete(spark, sites: DataFrame, queries: DataFrame,
     Catalyst from the given triangle index table: each non-degenerate
     triangle contributes its plane gradient weighted by area.  Every
     float sum — the fan sums AND the per-query blend sums — folds in
-    key order (_fold_by), so the values are bit-reproducible and
+    key order (_ordered_fold), so the values are bit-reproducible and
     match the DuckDB oracle exactly (sibson_c1_discrete_synth pins
     them, plus the C0 value, hash-hard).  estimate_gradients'
     np.bincount accumulates in triangle order too, so the Catalyst
@@ -1170,9 +1170,9 @@ def sibson_c1_discrete(spark, sites: DataFrame, queries: DataFrame,
         "tri_id", "w", "wgx", "wgy",
         F.explode(F.array("i1", "i2", "i3")).alias("site_id"))
     grads = corners.groupBy("site_id").agg(
-        _fold_by("tri_id", F.col("w")).alias("_den"),
-        _fold_by("tri_id", F.col("wgx")).alias("_sgx"),
-        _fold_by("tri_id", F.col("wgy")).alias("_sgy"))
+        _ordered_fold("tri_id", F.col("w")).alias("_den"),
+        _ordered_fold("tri_id", F.col("wgx")).alias("_sgx"),
+        _ordered_fold("tri_id", F.col("wgy")).alias("_sgy"))
     grads = grads.select(
         "site_id",
         F.when(F.col("_den") > 0.0, F.col("_sgx") / F.col("_den"))
@@ -1209,11 +1209,11 @@ def sibson_c1_discrete(spark, sites: DataFrame, queries: DataFrame,
         F.when(safe, (lam * r) * r).otherwise(F.lit(0.0)).alias("_tb"))
     per_q = terms.groupBy("q_id").agg(
         F.sum("cnt").cast("bigint").alias("n_stolen"),
-        _fold_by("site_id", F.col("_tnum")).alias("_num"),
-        _fold_by("site_id", F.col("_tw")).alias("_w"),
-        _fold_by("site_id", F.col("_twxi")).alias("_wxi"),
-        _fold_by("site_id", F.col("_ta")).alias("_a"),
-        _fold_by("site_id", F.col("_tb")).alias("_b"),
+        _ordered_fold("site_id", F.col("_tnum")).alias("_num"),
+        _ordered_fold("site_id", F.col("_tw")).alias("_w"),
+        _ordered_fold("site_id", F.col("_twxi")).alias("_wxi"),
+        _ordered_fold("site_id", F.col("_ta")).alias("_a"),
+        _ordered_fold("site_id", F.col("_tb")).alias("_b"),
         F.min("_d2").alias("_mind2"),
         F.max(F.when(F.col("_d2") == 0.0, F.col("_z"))).alias("_hitz"))
     s_dbl = F.col("n_stolen").cast("double")

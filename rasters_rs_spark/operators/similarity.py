@@ -20,6 +20,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..functions import vectors
+
 
 #: Executor-memory budget for a broadcast probe table. The probe table
 #: is queries x multi-probe flips and each row CARRIES the full q_vec
@@ -78,8 +80,8 @@ def _rerank_topk(cand: DataFrame, k: int, q_id: str, c_id: str,
     pairs, score with the exact cosine, keep each query's top k
     (ties to the lower corpus id).
 
-    Round-8: the cosine runs in an Arrow kernel (dimension-axis
-    strict-fold loop, vectorized ACROSS pairs) instead of the
+    Round-8: the cosine runs in an Arrow kernel (vectors.cosine, a
+    dimension-axis strict fold vectorized ACROSS pairs) instead of the
     interpreted higher-order zip_with/aggregate expression, which
     evaluates its lambdas per ELEMENT (~20us per 64-dim pair —
     measured in the semdedup A/B). Same fold order, so every cosine
@@ -97,45 +99,21 @@ def _rerank_topk(cand: DataFrame, k: int, q_id: str, c_id: str,
                 continue
             va = pdf[q_vec].to_numpy()
             vb = pdf[c_vec].to_numpy()
-            lens = np.array([
-                (len(a) if a is not None else -1,
-                 len(b) if b is not None else -1)
-                for a, b in zip(va, vb)], dtype=np.int64)
+            la, lb = vectors.lengths(va), vectors.lengths(vb)
             cos = np.full(n, np.nan)
             # defined[i]: the fold expr would yield a (possibly NaN)
-            # VALUE; undefined -> NULL (zero denom / length mismatch)
+            # VALUE; undefined -> NULL (zero denom / length mismatch /
+            # null vector, all left out of the groups below)
             defined = np.zeros(n, dtype=bool)
-            for la, lb in {tuple(t) for t in lens}:
-                if la != lb or la <= 0:
-                    continue      # NULL cosine, like the fold expr
-                idx = np.flatnonzero((lens[:, 0] == la)
-                                     & (lens[:, 1] == lb))
-                A = np.stack([np.asarray(va[i], dtype=np.float64)
-                              for i in idx])
-                B = np.stack([np.asarray(vb[i], dtype=np.float64)
-                              for i in idx])
-                dot = np.zeros(idx.size)
-                na = np.zeros(idx.size)
-                nb = np.zeros(idx.size)
-                for d in range(int(la)):
-                    ad, bd = A[:, d], B[:, d]
-                    dot = dot + ad * bd
-                    na = na + ad * ad
-                    nb = nb + bd * bd
-                denom = np.sqrt(na) * np.sqrt(nb)
-                # NaN != 0.0 is TRUE in both numpy and Spark, so a
-                # NaN-poisoned denominator stays "defined" and the
-                # division propagates NaN — exactly like the when()
-                ok = denom != 0.0
-                vals = np.full(idx.size, np.nan)
-                vals[ok] = dot[ok] / denom[ok]
-                cos[idx] = vals
-                defined[idx] = ok
-            # nullable Float64 so a COMPUTED NaN survives as NaN while
-            # undefined entries become SQL NULLs (an object column
-            # would coerce NaN to null in the Arrow conversion)
-            carr = pd.array(cos, dtype="Float64")
-            carr[~defined] = pd.NA
+            for L in np.unique(la[(la == lb) & (la > 0)]):
+                idx = np.flatnonzero((la == L) & (lb == L))
+                cos[idx], defined[idx] = vectors.cosine(
+                    vectors.matrix(va[idx]), vectors.matrix(vb[idx]))
+            # nullable Float64 with an explicit mask, so a COMPUTED NaN
+            # survives as NaN while undefined entries become SQL NULLs
+            # (pd.array(cos, dtype="Float64") and an object column both
+            # turn NaN into null)
+            carr = pd.arrays.FloatingArray(cos, ~defined)
             yield pd.DataFrame({
                 q_id: pdf[q_id].to_numpy(),
                 c_id: pdf[c_id].to_numpy(),
@@ -185,18 +163,6 @@ def lcg_planes(n_planes: int, dim: int) -> list[list[float]]:
     return [vals[j * dim:(j + 1) * dim].tolist() for j in range(n_planes)]
 
 
-def _fold_dot_rows(mat, plane) -> "np.ndarray":
-    """Strict left-fold dot product, vectorized across rows: the exact
-    per-element op order the SQL oracle's list_reduce uses (so signs
-    and distances are bit-identical across engines). numpy's pairwise
-    `mat @ plane` would NOT match."""
-    import numpy as np
-    acc = np.zeros(mat.shape[0])
-    for d in range(mat.shape[1]):
-        acc = acc + mat[:, d] * plane[d]
-    return acc
-
-
 def _lsh_bucket_udf(vec_col: str, planes: list[list[float]]):
     """Bucket id = hyperplane sign bits (bit j set when dot_j > 0),
     computed in an Arrow-batched pandas UDF with fold-order dots. The
@@ -206,17 +172,16 @@ def _lsh_bucket_udf(vec_col: str, planes: list[list[float]]):
     2.22s for the same strict fold written as Catalyst zip_with +
     aggregate expressions, which evaluate interpreted lambda closures
     per ELEMENT."""
-    pl = [np.asarray(p, dtype=np.float64) for p in planes]
+    pm = vectors.matrix(planes)
+    weights = 1 << np.arange(len(pm), dtype=np.int64)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.stack([np.asarray(v, dtype=np.float64)
-                            for v in pdf[vec_col]])
-            bucket = np.zeros(len(pdf), dtype=np.int64)
-            for j, p in enumerate(pl):
-                bucket |= (_fold_dot_rows(mat, p) > 0).astype(np.int64) << j
+            mat = vectors.matrix(pdf[vec_col])
+            signs = vectors.dot(mat[:, None], pm[None]) > 0
+            bucket = (signs * weights).sum(axis=1, dtype=np.int64)
             res = pdf.copy()
             res["bucket"] = bucket
             yield res
@@ -266,27 +231,15 @@ def lcg_centroids(n_lists: int, dim: int) -> list[list[float]]:
     return [vals[c * dim:(c + 1) * dim].tolist() for c in range(n_lists)]
 
 
-def _fold_sqdist_rows(mat, cent) -> "np.ndarray":
-    """Strict left-fold squared distance (see _fold_dot_rows)."""
-    import numpy as np
-    acc = np.zeros(mat.shape[0])
-    for d in range(mat.shape[1]):
-        diff = mat[:, d] - cent[d]
-        acc = acc + diff * diff
-    return acc
-
-
 def _ivf_assign_det_udf(vec_col: str, cents: list[list[float]], nprobe: int):
-    import numpy as np
-    cl = [np.asarray(c, dtype=np.float64) for c in cents]
+    C = vectors.matrix(cents)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.stack([np.asarray(v, dtype=np.float64)
-                            for v in pdf[vec_col]])
-            d = np.stack([_fold_sqdist_rows(mat, c) for c in cl], axis=1)
+            mat = vectors.matrix(pdf[vec_col])
+            d = vectors.sqdist(mat[:, None], C[None])
             # stable sort: equal distances keep the lower list id, the
             # same tie-break as the oracle's ORDER BY (dist, list)
             order = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
@@ -347,8 +300,7 @@ def train_ivf_centroids_distributed(corpus: DataFrame, dim: int,
                  .limit(n_lists).collect())
     if not init_rows:
         raise ValueError("train_ivf_centroids_distributed: empty corpus")
-    cents = np.stack([np.asarray(r["_v"], dtype=np.float64)
-                      for r in init_rows])
+    cents = vectors.matrix([r["_v"] for r in init_rows])
     k = len(cents)
     vecs = vec.select("_v").persist()
     try:
@@ -363,8 +315,7 @@ def train_ivf_centroids_distributed(corpus: DataFrame, dim: int,
                 for pdf in batches:
                     if len(pdf) == 0:
                         continue
-                    mat = np.stack([np.asarray(v, dtype=np.float64)
-                                    for v in pdf["_v"]])
+                    mat = vectors.matrix(pdf["_v"])
                     a = (-2.0 * (mat @ c.T) + c2).argmin(axis=1)
                     np.add.at(sums, a, mat)
                     cnt += np.bincount(a, minlength=k)
@@ -394,8 +345,8 @@ def _ivf_assign_udf(vec_col: str, cents: np.ndarray, nprobe: int):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            d = ((mat[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
+            mat = vectors.matrix(pdf[vec_col])
+            d = vectors.sqdist(mat[:, None], cents[None])
             order = np.argsort(d, axis=1)[:, :nprobe]
             res = pdf.copy()
             res["lists"] = [row.tolist() for row in order]
@@ -449,6 +400,14 @@ def pq_codebooks_det(m_sub: int, k_codes: int, sub_dim: int) -> np.ndarray:
     return lcg_values(k).reshape(m_sub, k_codes, sub_dim)
 
 
+def _pq_subdists(mat: np.ndarray, cb: np.ndarray) -> np.ndarray:
+    """(rows, m_sub, k_codes) fold-order squared distances from each
+    row's subvectors to every codebook entry: the encoders' argmin input
+    and the ADC tables."""
+    m_sub, _, sd = cb.shape
+    return vectors.sqdist(mat.reshape(len(mat), m_sub, 1, sd), cb[None])
+
+
 def pq_encode(corpus: DataFrame, dim: int, m_sub: int = 8,
               k_codes: int = 16, c_id: str = "vec_id",
               c_vec: str = "embedding",
@@ -473,14 +432,9 @@ def pq_encode(corpus: DataFrame, dim: int, m_sub: int = 8,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.stack([np.asarray(v, dtype=np.float64)
-                            for v in pdf[c_vec]])
-            codes = np.empty((len(pdf), m_sub), dtype=np.int32)
-            for s in range(m_sub):
-                sub = mat[:, s * sd:(s + 1) * sd]
-                d = np.stack([_fold_sqdist_rows(sub, cb[s, j])
-                              for j in range(cb.shape[1])], axis=1)
-                codes[:, s] = d.argmin(axis=1)   # first min = lowest id
+            # first min = lowest code id
+            codes = _pq_subdists(vectors.matrix(pdf[c_vec]), cb) \
+                .argmin(axis=2)
             yield pd.DataFrame({"vec_id": pdf[c_id].to_numpy(),
                                 "codes": [row.tolist() for row in codes]})
 
@@ -503,8 +457,7 @@ def train_pq_codebooks_distributed(corpus: DataFrame, dim: int,
                  .limit(k_codes).collect())
     if not init_rows:
         raise ValueError("train_pq_codebooks_distributed: empty corpus")
-    init = np.stack([np.asarray(r["_v"], dtype=np.float64)
-                     for r in init_rows])
+    init = vectors.matrix([r["_v"] for r in init_rows])
     kk = len(init)
     cb = np.stack([init[:, s * sd:(s + 1) * sd] for s in range(m_sub)])
     vecs = vec.select("_v").persist()
@@ -519,8 +472,7 @@ def train_pq_codebooks_distributed(corpus: DataFrame, dim: int,
                 for pdf in batches:
                     if len(pdf) == 0:
                         continue
-                    mat = np.stack([np.asarray(v, dtype=np.float64)
-                                    for v in pdf["_v"]])
+                    mat = vectors.matrix(pdf["_v"])
                     for s in range(m_sub):
                         sub = mat[:, s * sd:(s + 1) * sd]
                         c2 = (c[s] * c[s]).sum(axis=1)
@@ -588,15 +540,9 @@ def ann_pq(queries: DataFrame, corpus: DataFrame, k: int, dim: int,
             f"{max_queries} queries would blow the task closure — batch "
             f"the query table or raise max_queries explicitly")
     q_ids = [r[q_id] for r in qrows]
-    qmat = np.stack([np.asarray(r[q_vec], dtype=np.float64)
-                     for r in qrows])
     nq = len(q_ids)
     # (nq, m_sub, k_codes) ADC tables with fold-order sub-distances
-    tables = np.empty((nq, m_sub, cb.shape[1]), dtype=np.float64)
-    for s in range(m_sub):
-        sub = qmat[:, s * sd:(s + 1) * sd]
-        for j in range(cb.shape[1]):
-            tables[:, s, j] = _fold_sqdist_rows(sub, cb[s, j])
+    tables = _pq_subdists(vectors.matrix([r[q_vec] for r in qrows]), cb)
 
     codes_df = codes if codes is not None else \
         pq_encode(corpus, dim, m_sub, cb.shape[1], c_id, c_vec, cb)
@@ -608,8 +554,7 @@ def ann_pq(queries: DataFrame, corpus: DataFrame, k: int, dim: int,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            cmat = np.stack([np.asarray(c, dtype=np.int64)
-                             for c in pdf["codes"]])
+            cmat = vectors.matrix(pdf["codes"], dtype=np.int64)
             vids = pdf["vec_id"].to_numpy()
             # left-fold over subspaces: ((t0 + t1) + t2) ... matches
             # the SQL mirror's t0 + t1 + ... literal chain
@@ -678,18 +623,9 @@ def ann_ivfpq(queries: DataFrame, corpus: DataFrame, k: int, dim: int,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.stack([np.asarray(v, dtype=np.float64)
-                            for v in pdf[c_vec]])
-            d = np.stack([_fold_sqdist_rows(mat, cents[j])
-                          for j in range(n_lists)], axis=1)
-            lists = d.argmin(axis=1)
-            res = mat - cents[lists]
-            codes = np.empty((len(pdf), m_sub), dtype=np.int32)
-            for s in range(m_sub):
-                sub = res[:, s * sd:(s + 1) * sd]
-                ds = np.stack([_fold_sqdist_rows(sub, cb[s, j])
-                               for j in range(k_codes)], axis=1)
-                codes[:, s] = ds.argmin(axis=1)
+            mat = vectors.matrix(pdf[c_vec])
+            lists = vectors.sqdist(mat[:, None], cents[None]).argmin(axis=1)
+            codes = _pq_subdists(mat - cents[lists], cb).argmin(axis=2)
             yield pd.DataFrame({
                 "vec_id": pdf[c_id].to_numpy(),
                 "list_id": lists.astype(np.int32),
@@ -707,41 +643,31 @@ def ann_ivfpq(queries: DataFrame, corpus: DataFrame, k: int, dim: int,
             f"{max_queries} queries would blow the task closure — batch "
             f"the query table or raise max_queries explicitly")
     q_ids = [r[q_id] for r in qrows]
-    qmat = np.stack([np.asarray(r[q_vec], dtype=np.float64)
-                     for r in qrows])
+    qmat = vectors.matrix([r[q_vec] for r in qrows])
     nq = len(q_ids)
-    qd = np.stack([_fold_sqdist_rows(qmat, cents[j])
-                   for j in range(n_lists)], axis=1)
+    qd = vectors.sqdist(qmat[:, None], cents[None])
     # nprobe nearest lists, ties to the lower list id (stable argsort)
     probe_lists = np.argsort(qd, axis=1, kind="stable")[:, :nprobe]
     # per-(query, probed list) ADC tables over the query RESIDUAL
-    tabs = {}
-    for qi in range(nq):
-        for li in probe_lists[qi]:
-            r = (qmat[qi] - cents[li])[None, :]
-            t = np.empty((m_sub, k_codes), dtype=np.float64)
-            for s in range(m_sub):
-                sub = r[:, s * sd:(s + 1) * sd]
-                for j in range(k_codes):
-                    t[s, j] = _fold_sqdist_rows(sub, cb[s, j])[0]
-            tabs[(qi, int(li))] = t
+    resid = qmat[:, None] - cents[probe_lists]
+    tabs = _pq_subdists(resid.reshape(-1, qmat.shape[1]), cb).reshape(
+        nq, probe_lists.shape[1], m_sub, k_codes)
     shortlist = (k * rerank_factor) if rerank else k
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            cmat = np.stack([np.asarray(c, dtype=np.int64)
-                             for c in pdf["codes"]])
+            cmat = vectors.matrix(pdf["codes"], dtype=np.int64)
             vids = pdf["vec_id"].to_numpy()
             lids = pdf["list_id"].to_numpy()
             out = []
             for qi in range(nq):
-                for li in probe_lists[qi]:
+                for pi, li in enumerate(probe_lists[qi]):
                     m = lids == li
                     if not m.any():
                         continue
-                    t = tabs[(qi, int(li))]
+                    t = tabs[qi, pi]
                     sub = cmat[m]
                     acc = t[0, sub[:, 0]]
                     for s in range(1, m_sub):
@@ -987,7 +913,9 @@ def retrieval_rank_eval(queries: DataFrame, corpus: DataFrame,
     Zero-norm edge: cosine is NULL for zero-norm vectors (see
     cosine_expr); a NULL never beats, and queries whose TRUE pair has
     NULL cosine (or no corpus row) are dropped — they have no defined
-    rank. Every comparison is between doubles produced by the same
+    rank. A NaN cosine (a NaN element) beats every number and ties
+    with NaN, as Spark orders doubles in cosine_topk's window. Every
+    comparison is between doubles produced by the same
     strict-left-fold expression on both engines, so ranks are
     bit-stable vs the DuckDB mirror (retrieval_eval_embeddings row)."""
     n = queries.select(queries.columns[0]).limit(max_queries + 1).count()
@@ -1003,15 +931,12 @@ def retrieval_rank_eval(queries: DataFrame, corpus: DataFrame,
         .withColumn("_true_cos", cosine_expr(q_vec, "_tv")) \
         .where(F.col("_true_cos").isNotNull()) \
         .select(q_id, q_vec, "_true_cos")
-    # Round-8: pass 2 was a crossJoin + per-row interpreted
-    # higher-order-fold cosine over nq x nc rows (~20us each — the
-    # same cost _pair_cosine_filter_udf's docstring measured); it is
-    # now ONE Arrow corpus scan against the collected truth table
-    # (driver traffic <= max_queries rows — the broadcast shipped the
-    # same bytes before) emitting per-TASK partial beat counts, summed
-    # by a tiny aggregation. The kernel runs the identical
-    # dimension-axis strict-fold add chain as cosine_expr, so each
-    # (corpus row, query) cosine — and therefore every rank — is
+    # Pass 2 is ONE Arrow corpus scan against the collected truth
+    # table (driver traffic <= max_queries rows) emitting per-TASK
+    # partial beat counts, summed by a tiny aggregation; an interpreted
+    # higher-order-fold cosine over a crossJoin costs ~20us per row.
+    # vectors.cosine_tiles runs cosine_expr's strict-fold add chain, so
+    # each (corpus row, query) cosine — and therefore every rank — is
     # bit-identical (pinned by
     # test_retrieval_rank_eval_matches_window_rank, which compares
     # against cosine_topk's Catalyst-fold window ranks).
@@ -1028,21 +953,12 @@ def retrieval_rank_eval(queries: DataFrame, corpus: DataFrame,
     qids = np.array([r[q_id] for r in truth_rows])
     tcos = np.array([r["_true_cos"] for r in truth_rows],
                     dtype=np.float64)
-    by_len: dict = {}
-    for idx, r in enumerate(truth_rows):
-        v = r[q_vec]
-        by_len.setdefault(len(v), []).append(idx)
+    qvecs = [r[q_vec] for r in truth_rows]
+    qlen = vectors.lengths(qvecs)
     groups = []
-    for L, idxs in by_len.items():
-        if L <= 0:
-            continue
-        Q = np.stack([np.asarray(truth_rows[i][q_vec], dtype=np.float64)
-                      for i in idxs])
-        qn = np.zeros(len(idxs))
-        for d in range(L):
-            qn = qn + Q[:, d] * Q[:, d]
-        groups.append((L, np.asarray(idxs, dtype=np.int64), Q,
-                       np.sqrt(qn)))
+    for L in np.unique(qlen[qlen > 0]):
+        idxs = np.flatnonzero(qlen == L)
+        groups.append((L, idxs, vectors.matrix([qvecs[i] for i in idxs])))
     bc = spark.sparkContext.broadcast((groups, qids, tcos))
 
     def gen(batches):
@@ -1056,39 +972,29 @@ def retrieval_rank_eval(queries: DataFrame, corpus: DataFrame,
             saw_rows = True
             cv = pdf[c_vec].to_numpy()
             cid = pdf[c_id].to_numpy()
-            clen = np.fromiter(
-                (len(v) if v is not None else -1 for v in cv),
-                dtype=np.int64, count=len(cv))
-            for L, idxs, Q, qnorm in grps:
+            clen = vectors.lengths(cv)
+            for L, idxs, Q in grps:
                 rows = np.flatnonzero(clen == L)
                 if rows.size == 0:
                     continue
-                C = np.stack([np.asarray(cv[i], dtype=np.float64)
-                              for i in rows])
-                dot = np.zeros((rows.size, idxs.size))
-                cn = np.zeros(rows.size)
-                for d in range(int(L)):
-                    cd = C[:, d]
-                    dot = dot + cd[:, None] * Q[:, d][None, :]
-                    cn = cn + cd * cd
-                denom = np.sqrt(cn)[:, None] * qnorm[None, :]
-                ok = denom != 0.0
-                cos = np.zeros_like(dot)
-                cos[ok] = dot[ok] / denom[ok]
-                tcs = tc_arr[idxs][None, :]
-                beats = ok & (cos > tcs)
-                eq = ok & (cos == tcs)
-                if eq.any():
-                    ii, jj = np.nonzero(eq)
-                    lt = np.array(
-                        [cid[rows[i]] < qid_arr[idxs[j]]
-                         for i, j in zip(ii, jj)], dtype=bool)
-                    beats[ii[lt], jj[lt]] = True
-                beats_acc[idxs] += beats.sum(axis=0).astype(np.int64)
+                for i, j, cos, ok in vectors.cosine_tiles(
+                        vectors.matrix(cv[rows]), Q):
+                    r = rows[i:i + cos.shape[0]]
+                    q = idxs[j:j + cos.shape[1]]
+                    tcs = tc_arr[q][None, :]
+                    # Spark's double order, as in cosine_topk's window:
+                    # NaN sorts above every number and equals NaN
+                    cnan, tnan = np.isnan(cos), np.isnan(tcs)
+                    beats = ok & ((cos > tcs) | (cnan & ~tnan))
+                    ii, jj = np.nonzero(ok & ((cos == tcs) | (cnan & tnan)))
+                    beats[ii, jj] = cid[r[ii]] < qid_arr[q[jj]]
+                    beats_acc[q] += beats.sum(axis=0)
         if saw_rows:
             # carry (q_id, true_cos) in the partials so the final agg
-            # needs no join-back stage; float64 round-trips exactly
-            yield pd.DataFrame({q_id: qid_arr, "_true_cos": tc_arr,
+            # needs no join-back stage; float64 round-trips exactly, and
+            # the unmasked Float64 keeps a NaN true cosine a NaN
+            tc = pd.arrays.FloatingArray(tc_arr, np.zeros(nq, dtype=bool))
+            yield pd.DataFrame({q_id: qid_arr, "_true_cos": tc,
                                 "_beats": beats_acc})
 
     qt = q_schema[q_id].dataType.simpleString()

@@ -475,6 +475,7 @@ def stream_embedding_neardup(spark: SparkSession, source_dir: str,
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+    from ..functions import vectors
     from ..operators.dedup import _embedding_band_keys, _embedding_planes
 
     stream = spark.readStream.schema(schema).parquet(source_dir)
@@ -484,8 +485,7 @@ def stream_embedding_neardup(spark: SparkSession, source_dir: str,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.stack([np.asarray(v, dtype=np.float64)
-                            for v in pdf[vec_col]])
+            mat = vectors.matrix(pdf[vec_col])
             if planes is None:
                 planes = _embedding_planes(mat.shape[1], bands,
                                            band_planes, seed)
@@ -506,17 +506,14 @@ def stream_embedding_neardup(spark: SparkSession, source_dir: str,
     def update(key, pdfs, state: GroupState):
         if state.exists:
             ids, vecs = state.get
-            ids = list(ids)
-            vecs = [np.asarray(v, dtype=np.float64) for v in vecs]
+            ids, vecs = list(ids), list(vecs)
         else:
             ids, vecs = [], []
         new = []
         for pdf in pdfs:
-            for row in pdf.itertuples(index=False):
-                new.append((row.id, np.asarray(row.vec, dtype=np.float64)))
+            new.extend(zip(pdf["id"], pdf["vec"]))
         new.sort(key=lambda t: t[0])
         seen = set(ids)
-        norms = [float(np.linalg.norm(v)) for v in vecs]   # hoisted
         pairs = []
         changed = False
         for nid, nv in new:
@@ -526,20 +523,17 @@ def stream_embedding_neardup(spark: SparkSession, source_dir: str,
                 # full bucket: skip entirely (see stream_minhash_dedup —
                 # pairing without storing breaks replay idempotence)
                 continue
-            nn = float(np.linalg.norm(nv))
-            for eid, ev, en in zip(ids, vecs, norms):
-                denom = nn * en
-                if denom == 0.0:
-                    # batch parity: cosine_expr yields NULL for
-                    # zero-norm vectors -> the pair is dropped
-                    continue
-                cos = float(nv @ ev) / denom
-                if cos >= threshold:
+            if ids:
+                # batch parity: cosine_expr's fold, and its NULL (not ok)
+                # for zero-norm vectors drops the pair
+                cos, ok = vectors.cosine(vectors.matrix([nv]),
+                                         vectors.matrix(vecs))
+                for j in np.flatnonzero(ok & (cos >= threshold)):
+                    eid = ids[j]
                     a, b = (nid, eid) if nid < eid else (eid, nid)
-                    pairs.append((a, b, cos))
+                    pairs.append((a, b, float(cos[j])))
             ids.append(nid)
             vecs.append(nv)
-            norms.append(nn)
             seen.add(nid)
             changed = True
         if changed:

@@ -458,11 +458,10 @@ def test_semantic_dedup_planted_clusters(spark):
 
 
 def test_semdedup_pair_kernel_matches_expr(spark):
-    """The Arrow pair-cosine kernel is bit-identical to cosine_expr's
-    strict folds: same kept pair set AND, for every kept pair, the
-    kernel's threshold decision agrees with the Catalyst fold value
-    exactly (zero-norm -> NULL -> dropped; length mismatch -> NULL ->
-    dropped)."""
+    """The semantic_dedup pair kernel keeps exactly the pairs that
+    cosine_expr + threshold keeps: its strict folds are bit-identical
+    to the Catalyst fold (zero-norm -> NULL -> dropped; length mismatch
+    -> NULL -> dropped)."""
     from pyspark.sql import functions as F
     from rasters_rs_spark.operators.similarity import cosine_expr
     rng = np.random.default_rng(41)
@@ -473,31 +472,39 @@ def test_semdedup_pair_kernel_matches_expr(spark):
     rows = [(a, b, vecs[a], vecs[b])
             for a in range(n) for b in range(a + 1, n)]
     cand = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["id_a", "id_b", "va", "vb"])) \
-        .withColumn("cs_a", F.lit(0.0)).withColumn("cs_b", F.lit(0.0)) \
-        .select("id_a", "id_b", "cs_a", "cs_b", "va", "vb")
+        pd.DataFrame(rows, columns=["id_a", "id_b", "va", "vb"]))
     thr = 0.05
     expr_kept = {(r["id_a"], r["id_b"]) for r in
                  cand.withColumn("_cos", cosine_expr("va", "vb"))
                      .where(F.col("_cos") >= F.lit(thr))
                      .select("id_a", "id_b").collect()}
+    # one group: every vector on both sides, as one cogroup call
+    members = spark.createDataFrame(pd.DataFrame({
+        "id": list(range(n)), "g": 0, "v": vecs}))
+    left = members.select(F.col("id").alias("id_a"), "g",
+                          F.col("v").alias("va"), F.lit(0.0).alias("cs_a"))
+    right = members.select(F.col("id").alias("id_b"),
+                           F.col("g").alias("_r_g"),
+                           F.col("v").alias("vb"), F.lit(0.0).alias("cs_b"))
     kern_kept = {(r["id_a"], r["id_b"]) for r in
-                 cand.mapInPandas(
-                     D._pair_cosine_filter_udf(thr),
-                     schema="id_a bigint, id_b bigint, "
-                            "cs_a double, cs_b double").collect()}
+                 left.groupBy("g").cogroup(right.groupBy("_r_g"))
+                     .applyInPandas(
+                         D._semdedup_pair_kernel(thr),
+                         schema="id_a bigint, id_b bigint, "
+                                "cs_a double, cs_b double").collect()}
     assert kern_kept == expr_kept
     assert expr_kept, "threshold must keep a non-trivial pair set"
     assert not any(7 in p or 11 in p for p in kern_kept)
 
 
 def test_semdedup_cogroup_pairs_match_join_kernel(spark):
-    """Round-8 pair stage: the salted COGROUP emits exactly the pair
-    set (ids AND cs values) of the salted join + _pair_cosine_filter_udf
-    shape it replaced — including zero-norm / ragged-length drops and a
-    forced hot cluster (hot_bucket_rows=10 < cluster size, so the salt
-    split path is exercised)."""
+    """The salted COGROUP emits exactly the pair set (ids AND cs
+    values) of the salted join + cosine_expr + threshold — including
+    zero-norm / ragged-length drops and a forced hot cluster
+    (hot_bucket_rows=10 < cluster size, so the salt split path is
+    exercised)."""
     from pyspark.sql import functions as F
+    from rasters_rs_spark.operators.similarity import cosine_expr
     rng = np.random.default_rng(43)
     n, dim = 80, 12
     vecs = [rng.normal(size=dim).tolist() for _ in range(n)]
@@ -520,10 +527,8 @@ def test_semdedup_cogroup_pairs_match_join_kernel(spark):
         (r["id_a"], r["id_b"], r["cs_a"], r["cs_b"]) for r in
         D._salted_bucket_join(left, right, ["cluster"], 10, 4, assigned)
          .where(F.col("id_a") < F.col("id_b"))
-         .select("id_a", "id_b", "cs_a", "cs_b", "va", "vb")
-         .mapInPandas(D._pair_cosine_filter_udf(thr),
-                      schema="id_a bigint, id_b bigint, "
-                             "cs_a double, cs_b double").collect()}
+         .where(cosine_expr("va", "vb") >= F.lit(thr))
+         .select("id_a", "id_b", "cs_a", "cs_b").collect()}
     cg_pairs = {
         (r["id_a"], r["id_b"], r["cs_a"], r["cs_b"]) for r in
         D._salted_pair_cogroup(

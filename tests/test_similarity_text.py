@@ -1,5 +1,7 @@
 """Similarity search + text analysis tests (vs numpy/python oracles)."""
 
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -1092,9 +1094,15 @@ def test_retrieval_rank_eval_matches_window_rank(spark, emb):
     pair) == the window-sort rank from cosine_topk with k=n, under the
     shared (cosine desc, id asc) total order; hit flags consistent."""
     df, pdf = emb
+    # a NaN element in rows 5 (a query's true vector, so query 5's
+    # cosines are all NaN and rank by id) and 300 (its cosine is NaN
+    # for every query, so it beats every number): Spark orders NaN
+    # above all doubles and equal to NaN
     corpus = df.selectExpr(
         "cast(vec_id as bigint) vec_id",
-        "transform(embedding, x -> cast(x as double)) embedding")
+        "transform(embedding, (x, i) -> CASE WHEN vec_id IN (5, 300) "
+        "AND i = 10 THEN double('NaN') ELSE cast(x as double) END) "
+        "embedding")
     n = corpus.count()
     # caption-side double: dims 0..39 rotated by 7 + dyadic (k%16)/64
     # noise — the contract fixture's derivation, ranks spread over
@@ -1123,12 +1131,32 @@ def test_retrieval_rank_eval_matches_window_rank(spark, emb):
     for q, e in expect.items():
         g = got[q]
         assert g["true_rank"] == e["rank"], q
-        assert g["true_cosine"] == e["cosine"], q
+        assert g["true_cosine"] == e["cosine"] or (
+            math.isnan(g["true_cosine"]) and math.isnan(e["cosine"])), q
         for k in (1, 5, 10):
             assert g[f"hit_at_{k}"] == int(g["true_rank"] <= k)
     # non-vacuous: the perturbed queries must not all sit at rank 1
     ranks = sorted(r["true_rank"] for r in got.values())
     assert ranks[-1] > 1
+    # the NaN rows take part: row 300 beats every finite true cosine,
+    # and query 5 ties on NaN with rows 0..4
+    assert math.isnan(got[5]["true_cosine"]) and got[5]["true_rank"] == 6
+    assert ranks[0] > 1
+
+
+def test_rerank_kernel_keeps_nan_cosine(spark):
+    """A NaN element gives a NaN cosine, not a NULL, as cosine_expr
+    does; Spark's window ranks it above every number, and the
+    zero-norm NULL last."""
+    corpus = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [float("nan"), 1.0]), (2, [0.0, 0.0]),
+         (3, [0.5, 0.5])], "vec_id bigint, embedding array<double>")
+    qs = spark.createDataFrame([(0, [1.0, 0.2])],
+                               "q_id bigint, q_vec array<double>")
+    rows = sorted(SIM.cosine_topk(qs, corpus, k=4).collect(),
+                  key=lambda r: r["rank"])
+    assert [r["vec_id"] for r in rows] == [1, 0, 3, 2]
+    assert math.isnan(rows[0]["cosine"]) and rows[3]["cosine"] is None
 
 
 def test_retrieval_rank_eval_edges(spark):

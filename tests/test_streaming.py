@@ -313,7 +313,8 @@ def test_stream_minhash_dedup_converges_to_batch(spark, tmp_path):
 def test_stream_embedding_neardup_converges_to_batch(spark, tmp_path):
     """Streaming embedding near-dup across two micro-batches finds the
     same pair set as batch embedding_neardup (identical band keys by
-    construction; cosines equal to 1e-9 — numpy vs JVM fold order)."""
+    construction) with bit-identical cosines (vectors.cosine runs
+    cosine_expr's strict fold)."""
     import numpy as np
     from rasters_rs_spark.operators import dedup as D
     from rasters_rs_spark.streaming.windows import stream_embedding_neardup
@@ -350,7 +351,7 @@ def test_stream_embedding_neardup_converges_to_batch(spark, tmp_path):
     assert not any("e900" in k for k in got)    # zero-norm never pairs
     assert ("e003", "e025") in got and ("e030", "e033") in got
     for k in expect:
-        assert got[k] == pytest.approx(expect[k], abs=1e-9)
+        assert got[k] == expect[k], k
 
 
 def test_stream_minhash_dedup_checkpoint_restart(spark, tmp_path):
