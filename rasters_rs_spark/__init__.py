@@ -15,8 +15,8 @@ __version__ = "0.1.0"
 
 # Unpickling an engine UDF that refers to any of the package's modules
 # or functions imports this package inside the Python worker; install
-# the lazy zip invalidation there (see zipcache.py). The driver never
-# has pyspark.worker loaded.
+# the lazy zip invalidation and the one-time heap freeze there (see
+# zipcache.py). The driver never has pyspark.worker loaded.
 if "pyspark.worker" in sys.modules:
     from rasters_rs_spark import zipcache
 

@@ -35,6 +35,8 @@ import math
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from ..sources.io import local_table
+
 # exact double constants, shared verbatim by the Spark and SQL sides
 C_INV_SQRT3 = 1.0 / math.sqrt(3.0)   # 0.5773502691896258
 C_1_3 = 1.0 / 3.0
@@ -431,11 +433,8 @@ def hex_density_clusters(points: DataFrame, x_col: str = "x",
         mapping = _driver_union_find(
             [(r["id_a"], r["id_b"]) for r in edge_rows])
         spark = points.sparkSession
-        if mapping:
-            comp = F.broadcast(
-                spark.createDataFrame(mapping, ["node", "component"]))
-        else:
-            comp = spark.createDataFrame([], "node string, component string")
+        comp = F.broadcast(local_table(
+            spark, mapping, "node string, component string"))
     else:
         comp = connected_components(edges, max_iters=max_iters)
 

@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..sources.io import local_table
+
 
 def fan_out(df: DataFrame, key: str | None = None,
             factor: int = 1) -> DataFrame:
@@ -95,8 +97,8 @@ def range_rank(df: DataFrame, order, group=None, weight: str | None = None,
         off_rows.append((int(r["_pid"]), *key, acc))
         totals[key] = acc + int(r["_n"] or 0)
     types = dict(d.dtypes)
-    off_df = df.sparkSession.createDataFrame(
-        off_rows or [(0, *[None] * len(group), 0)],
+    off_df = local_table(
+        df.sparkSession, off_rows or [(0, *[None] * len(group), 0)],
         ", ".join(["_pid int", *(f"{g} {types[g]}" for g in group),
                    "_off long"]))
     win = Window.partitionBy("_pid", *group).orderBy(*order)

@@ -10,7 +10,10 @@ polygons) nested-loop PIP (raster-stats/main.rs:72-82):
   AOIs    -> covering cell set (bbox tile range, exploded)
   equi-join on cell (broadcast when the AOI side is small, shuffle-hash
   otherwise, optional salting for hot cells)
-  exact winding-number refine in an Arrow-batched pandas UDF.
+  exact point-in-polygon refine, even-odd by default (nonzero winding
+  on request): a mapInPandas over the candidate rows, or, when an AOI
+  DataFrame is joined without broadcast, a cogroup applyInArrow of
+  pyarrow tables against the one-row-per-part ring table.
 """
 
 from __future__ import annotations
@@ -19,10 +22,12 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import codecs, geom, scanpar
 from ..functions.mercator import MAX_COORD
+from ..sources.io import local_table
 
 AOI_SCHEMA = (
     "aoi_id string, ring_offsets array<int>, xs array<double>, ys array<double>"
@@ -383,12 +388,10 @@ def aoi_cells_df(spark: SparkSession, aois: pd.DataFrame, zoom: int) -> DataFram
                     (r.aoi_id, part, (cx << 32) + cy, list(r.ring_offsets),
                      [float(v) for v in r.xs], [float(v) for v in r.ys])
                 )
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["aoi_id", "part", "cell",
-                                    "ring_offsets", "xs", "ys"]),
-        schema=f"aoi_id string, part int, cell long, ring_offsets array<int>, "
-               f"xs array<double>, ys array<double>",
-    )
+    return local_table(
+        spark, rows,
+        "aoi_id string, part int, cell long, ring_offsets array<int>, "
+        "xs array<double>, ys array<double>")
 
 
 def _refine(df: DataFrame, keep_cols: list[str],
@@ -548,7 +551,7 @@ def cell_pip_join(points: DataFrame, aois, zoom: int = 12,
     pts = points.withColumn("cell", cell_expr(x_col, y_col, zoom))
     pts = pts.withColumn("px", F.col(x_col)).withColumn("py", F.col(y_col))
 
-    # cogroup applyInPandas is batch-only: a streaming query with a
+    # cogroup applyInArrow is batch-only: a streaming query with a
     # too-big-to-broadcast catalog falls back to the carry-rings
     # stream-static equi-join (rings duplicated per candidate row —
     # correct, but prefer broadcast-sized catalogs on streams)
@@ -646,19 +649,21 @@ def _refine_cogroup(pts: DataFrame, cells: DataFrame,
                              F.explode(F.lit(list(range(refine_salt)))))
                  .withColumn("_asalt", F.col("_asalt").cast("long")))
 
-    def kernel(pt_pdf: pd.DataFrame, aoi_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pt_pdf) == 0 or len(aoi_pdf) == 0:
-            return pd.DataFrame(columns=names)
-        r = aoi_pdf.iloc[0]
-        inside = pip(pt_pdf["px"].to_numpy(), pt_pdf["py"].to_numpy(),
-                     list(r["ring_offsets"]),
-                     np.asarray(r["xs"], dtype=np.float64),
-                     np.asarray(r["ys"], dtype=np.float64))
-        return pt_pdf.loc[inside, names]
+    def ring(aoi: pa.Table, col: str) -> np.ndarray:
+        return aoi.column(col)[0].values.to_numpy(zero_copy_only=False)
+
+    def kernel(pts: pa.Table, aoi: pa.Table) -> pa.Table:
+        out = pts.select(names)
+        if pts.num_rows == 0 or aoi.num_rows == 0:
+            return out.slice(0, 0)
+        inside = pip(pts.column("px").to_numpy(), pts.column("py").to_numpy(),
+                     ring(aoi, "ring_offsets"), ring(aoi, "xs"),
+                     ring(aoi, "ys"))
+        return out.filter(inside)
 
     return cand.groupBy("part", "_gsalt").cogroup(
         aoi_parts.groupBy("_apart", "_asalt")) \
-        .applyInPandas(lambda key, a, b: kernel(a, b), schema=out_schema)
+        .applyInArrow(kernel, schema=out_schema)
 
 
 def point_tile_pyramid(points: DataFrame, zoom_max: int = 12,

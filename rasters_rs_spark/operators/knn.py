@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import codecs, geom
+from ..sources.io import local_table
 
 
 def _with_cell(df: DataFrame, x_col: str, y_col: str, cs: float, prefix: str):
@@ -108,7 +109,7 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, cell_size: float,
         offs = [(dx, dy) for dx in range(-radius, radius + 1)
                 for dy in range(-radius, radius + 1)
                 if max(abs(dx), abs(dy)) > prev_radius]
-        offs_df = remaining.sparkSession.createDataFrame(offs, "dx int, dy int")
+        offs_df = local_table(remaining.sparkSession, offs, "dx int, dy int")
         probes = remaining.crossJoin(F.broadcast(offs_df)).select(
             "*",
             (F.col("qcx") + F.col("dx")).alias("pcx"),
@@ -1148,7 +1149,7 @@ def sibson_c1_discrete(spark, sites: DataFrame, queries: DataFrame,
         raise ValueError("flatness must be 0.5 or 1.0 for the "
                          "cross-engine-exact discrete surface")
     tris = np.asarray(triangles, dtype=np.int64).reshape(-1, 3)
-    tdf = F.broadcast(spark.createDataFrame(pd.DataFrame({
+    tdf = F.broadcast(local_table(spark, pd.DataFrame({
         "tri_id": np.arange(tris.shape[0], dtype=np.int64),
         "i1": tris[:, 0], "i2": tris[:, 1], "i3": tris[:, 2]})))
     sc = F.broadcast(sites.select("site_id", "x", "y", "z"))

@@ -18,6 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import codecs, scanpar
+from ..sources.io import local_table
 
 _REAL_FORMATS = ("raw", "q16")
 _STUB_FORMATS = ("jpeg", "png", "webp")
@@ -649,7 +650,8 @@ def bucket_batches(df: DataFrame, batch_size: int,
         group=bucket_col, partitions=partitions)
     ranked = ranked.withColumnRenamed("_rank", "rank_in_bucket")
     if drop_last:
-        full_df = df.sparkSession.createDataFrame(
+        full_df = local_table(
+            df.sparkSession,
             [(b, (n // batch_size) * batch_size)
              for (b,), n in totals.items()] or [(None, 0)],
             f"{bucket_col} {dict(df.dtypes)[bucket_col]}, _nfull long")

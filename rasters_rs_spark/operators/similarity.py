@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import vectors
+from ..sources.io import local_table
 
 
 #: Executor-memory budget for a broadcast probe table. The probe table
@@ -211,7 +212,7 @@ def lsh_topk_det(queries: DataFrame, corpus: DataFrame, k: int, dim: int,
     ck = corpus.mapInPandas(_lsh_bucket_udf(c_vec, planes), schema=c_schema)
     qk = queries.mapInPandas(_lsh_bucket_udf(q_vec, planes), schema=q_schema)
     flips = [0] + [1 << b for b in range(min(probes, n_planes))]
-    probe_df = qk.sparkSession.createDataFrame([(f,) for f in flips], "flip long")
+    probe_df = local_table(qk.sparkSession, [(f,) for f in flips], "flip long")
     qprobe = qk.crossJoin(F.broadcast(probe_df)).withColumn(
         "bucket", F.col("bucket").bitwiseXOR(F.col("flip"))).drop("flip")
     qprobe = _maybe_broadcast_queries(queries, qprobe, broadcast_queries,
@@ -944,7 +945,7 @@ def retrieval_rank_eval(queries: DataFrame, corpus: DataFrame,
     truth_rows = truth.collect()
     q_schema = truth.schema
     if not truth_rows:
-        empty = spark.createDataFrame([], q_schema)
+        empty = local_table(spark, [], q_schema)
         return empty.select(
             q_id, F.lit(None).cast("double").alias("true_cosine"),
             F.lit(None).cast("bigint").alias("true_rank"),

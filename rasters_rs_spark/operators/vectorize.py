@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import codecs
+from ..sources.io import local_table
 
 
 def quantize_classes(block: np.ndarray, n_classes: int) -> np.ndarray:
@@ -281,12 +282,8 @@ def polygonize_chunked(chunks: DataFrame, n_classes: int = 4,
         edge_list = [(r["id_a"], r["id_b"]) for r in pair_rows]
         mapping = _driver_union_find(edge_list)
         spark = chunks.sparkSession
-        if mapping:
-            comp = spark.createDataFrame(mapping, ["node", "component"])
-        else:
-            comp = spark.createDataFrame(
-                [], "node string, component string")
-        comp = F.broadcast(comp)
+        comp = F.broadcast(local_table(
+            spark, mapping, "node string, component string"))
     else:
         comp = connected_components(pairs, max_iters=max_iters)
     comp = comp \

@@ -4,7 +4,8 @@ Local testing runs on local[N]; the same config block is what we'd ship
 to a 1000-executor cluster via spark-submit --py-files (AQE on, skew-join
 mitigation on, Arrow batching for all pandas UDFs).
 
-Two fixed costs are paid once rather than per operation or per task:
+Four fixed costs are paid once, or not at all, rather than per
+operation or per task:
 
 - Spark's codegen cache (``spark.sql.codegen.cache.maxEntries``) holds
   1000 generated classes instead of its default 100. One
@@ -32,6 +33,13 @@ Two fixed costs are paid once rather than per operation or per task:
   ``spark-submit --py-files`` alike; the hook then stays for the
   worker's later tasks. It does nothing in the driver, and the
   installed pyspark is left unchanged.
+- The same hook freezes each Python worker's heap once, at the start
+  of its next task, so the daemon's ``gc.collect()`` after every task
+  stops walking the ~74k objects of the worker's imports: a reused
+  worker's CPU per task falls from 30-45 ms to 10 ms.
+- Small driver-built tables go through ``sources.io.local_table``: one
+  ``pyarrow.Table``, planned as a ``LocalTableScan`` rather than a
+  Python RDD whose every read (a broadcast included) runs Python tasks.
 """
 
 from __future__ import annotations

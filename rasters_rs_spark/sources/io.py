@@ -1,4 +1,5 @@
-"""Table IO: Iceberg when the runtime is present, parquet otherwise.
+"""Table IO: Iceberg when the runtime is present, parquet otherwise, and
+the one way the driver hands Spark a small table it built itself.
 
 The input-hint table is an Iceberg table of image+caption rows at
 10^12-image scale; this sandbox has no Iceberg runtime jar, so every
@@ -10,7 +11,39 @@ create_output_raster.)
 
 from __future__ import annotations
 
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _parse_datatype_string
+
+
+def local_table(spark: SparkSession, data, schema: StructType | str | None = None
+                ) -> DataFrame:
+    """A small driver-built table as a DataFrame: ``data`` is a list of
+    row tuples or a pandas frame, ``schema`` a StructType or DDL string
+    (a pandas frame may omit it, and keeps the types Arrow infers).
+
+    The rows go to Spark as one ``pyarrow.Table``, which plans as a
+    ``LocalTableScan`` whatever ``spark.sql.execution.arrow.pyspark.enabled``
+    says. ``createDataFrame`` on a list, or on a pandas frame with that
+    setting off, plans as a Python RDD instead: a Python task per slice
+    every time the table is read, and a broadcast of it costs a job of
+    such tasks."""
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = None if schema is None else to_arrow_schema(schema)
+    if isinstance(data, pd.DataFrame):
+        table = pa.Table.from_pandas(data, schema=arrow_schema,
+                                     preserve_index=False)
+    else:
+        if arrow_schema is None:
+            raise ValueError("local_table: row tuples need a schema")
+        columns = list(zip(*data)) or [()] * len(arrow_schema)
+        table = pa.table([pa.array(c, type=f.type)
+                          for c, f in zip(columns, arrow_schema)],
+                         schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
 
 
 def iceberg_available(spark: SparkSession) -> bool:

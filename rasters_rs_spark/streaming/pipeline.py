@@ -8,6 +8,7 @@ from pyspark.sql import SparkSession, functions as F
 
 from ..operators import celljoin, stats, tiling
 from ..sources import synth
+from ..sources.io import local_table
 from .manifest import CheckpointRunner
 
 
@@ -330,9 +331,8 @@ def run_image_curation(spark: SparkSession, root: str, n_images: int = 48,
     runner = CheckpointRunner(spark, root)
     images = runner.run(
         "images",
-        lambda: spark.createDataFrame(
-            synth.clip_caption_table(n_images,
-                                     plant_neardups=plant_neardups)))
+        lambda: local_table(spark, synth.clip_caption_table(
+            n_images, plant_neardups=plant_neardups)))
 
     # DataComp stage order: the cheap metadata gate first, the
     # (embedding) alignment gate second on the survivors

@@ -173,7 +173,7 @@ def test_cell_pip_join_cogroup_refine_parquet_catalog(spark, tmp_path):
     never ride the candidate exchange) on a PARQUET-sourced catalog —
     pinning part-id determinism across the two evaluations of the
     scan — with multipart ids, duplicated points, and several
-    refine_salt values. Plan must show the cogroup refine."""
+    refine_salt values. Plan must show the Arrow cogroup refine."""
     parts = synth.aoi_table(6, seed=10)
     parts.loc[1, "aoi_id"] = parts.loc[0, "aoi_id"]
     path = str(tmp_path / "aois.parquet")
@@ -193,7 +193,8 @@ def test_cell_pip_join_cogroup_refine_parquet_catalog(spark, tmp_path):
         got = sorted((r["pt_id"], r["aoi_id"]) for r in out.collect())
         assert got == base, f"refine_salt={rs}"
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in plan
+    assert "FlatMapCoGroupsInArrow" in plan
+    assert "FlatMapCoGroupsInPandas" not in plan
 
 
 def test_chunked_zonal_stats_dist_equals_all_paths(spark):

@@ -183,6 +183,54 @@ def test_cell_pip_join_nonzero_rule_matches_on_convex(spark):
     assert eo == nz and len(eo) > 0
 
 
+def test_cell_pip_join_shuffled_refine_matches_pandas_catalog(spark):
+    """The shuffled-catalog path (broadcast_aois=False: the cogroup
+    applyInArrow refine) returns the same rows as the pandas-catalog
+    path under both rules. The catalog has a pentagram, where the rules
+    differ (its core is inside only under nonzero), a two-part aoi_id
+    whose parts overlap (multipart dedup), and a part no point reaches
+    (its cogroup has an empty point side)."""
+    import numpy as np
+    import pandas as pd
+    from rasters_rs_spark.operators.celljoin import AOI_SCHEMA, cell_pip_join
+    rng = np.random.default_rng(29)
+    pts = pd.DataFrame({
+        "pid": [f"p{i}" for i in range(600)],
+        "x": rng.uniform(-9000, 9000, 600),
+        "y": rng.uniform(-9000, 9000, 600),
+    })
+    ang = np.pi / 2 + np.arange(5) * 4 * np.pi / 5
+    aois = pd.DataFrame([
+        {"aoi_id": "star", "ring_offsets": [0],
+         "xs": list(2000.0 + 6000.0 * np.cos(ang)),
+         "ys": list(-1000.0 + 6000.0 * np.sin(ang))},
+        {"aoi_id": "two", "ring_offsets": [0],
+         "xs": [-8000.5, -1000.25, -1000.25, -8000.5],
+         "ys": [1000.75, 1000.75, 8000.5, 8000.5]},
+        {"aoi_id": "two", "ring_offsets": [0],
+         "xs": [-4000.5, 3000.25, 3000.25, -4000.5],
+         "ys": [4000.75, 4000.75, 8500.5, 8500.5]},
+        {"aoi_id": "far", "ring_offsets": [0],
+         "xs": [50000.0, 51000.0, 51000.0, 50000.0],
+         "ys": [50000.0, 50000.0, 51000.0, 51000.0]},
+    ])
+    df = spark.createDataFrame(pts)
+    cat = spark.createDataFrame(aois, schema=AOI_SCHEMA)
+    got = {}
+    for rule in ("evenodd", "nonzero"):
+        want = sorted(tuple(r) for r in cell_pip_join(
+            df, aois, zoom=10, pip_rule=rule).collect())
+        shuffled = cell_pip_join(df, cat, zoom=10, pip_rule=rule,
+                                 broadcast_aois=False, multipart=True)
+        got[rule] = sorted(tuple(r) for r in shuffled.collect())
+        assert got[rule] == want, rule
+        assert "FlatMapCoGroupsInArrow" in \
+            shuffled._jdf.queryExecution().executedPlan().toString()
+    ids = {rule: {r[-1] for r in rows} for rule, rows in got.items()}
+    assert ids["evenodd"] == ids["nonzero"] == {"star", "two"}
+    assert set(got["evenodd"]) < set(got["nonzero"])
+
+
 def test_hilbert_spark_matches_scalar_and_adjacency(spark):
     """with_hilbert (chained Catalyst projections) equals the scalar
     xy2d recurrence for random coordinates, is a bijection on a full

@@ -1,7 +1,9 @@
 """Session and worker plumbing: the codegen cache holds a multi-operator
 pipeline's generated classes, and Python workers re-read a zip
-archive's directory only when the archive changed (zipcache.py)."""
+archive's directory only when the archive changed and freeze their heap
+once (zipcache.py)."""
 
+import gc
 import importlib
 import sys
 import zipfile
@@ -20,7 +22,8 @@ def _write_zip(path, modules: dict) -> None:
 def test_zipcache_rereads_only_changed_archives(tmp_path, monkeypatch):
     """Without Spark: repeated invalidate_caches() leave an unchanged
     archive's directory alone; a rewritten archive is re-read and its
-    new module imports after one call."""
+    new module imports after one call. The first call after install
+    freezes the heap, and no later call does."""
     from rasters_rs_spark import zipcache
 
     zp = str(tmp_path / "mods.zip")
@@ -36,6 +39,11 @@ def test_zipcache_rereads_only_changed_archives(tmp_path, monkeypatch):
                         dict(zipimport._zip_directory_cache))
     monkeypatch.setattr(sys, "path_importer_cache",
                         dict(sys.path_importer_cache))
+    # keep the freeze finder out of this process's meta path and heap
+    monkeypatch.setattr(sys, "meta_path", list(sys.meta_path))
+    monkeypatch.setattr(zipcache._FreezeAtNextTask, "frozen", False)
+    freezes = []
+    monkeypatch.setattr(gc, "freeze", lambda: freezes.append(1))
     assert importlib.import_module("zc_mod_a").X == 1
 
     reads = []
@@ -51,11 +59,15 @@ def test_zipcache_rereads_only_changed_archives(tmp_path, monkeypatch):
     zipcache.install()
     assert zipimport.zipimporter.invalidate_caches.__module__ == \
         "rasters_rs_spark.zipcache"
+    assert sys.meta_path.count(zipcache._FreezeAtNextTask) == 1
+    assert freezes == []
     importlib.invalidate_caches()  # first call per archive: stamp unknown
     assert len(reads) == 1
+    assert freezes == [1]
     for _ in range(5):
         importlib.invalidate_caches()
     assert len(reads) == 1, "unchanged archive was re-read"
+    assert freezes == [1]
 
     _write_zip(zp, {"zc_mod_a": "X = 1\n", "zc_mod_b": "Y = 2\n"})
     importlib.invalidate_caches()
@@ -67,9 +79,11 @@ def test_zipcache_rereads_only_changed_archives(tmp_path, monkeypatch):
 
 def test_zipcache_installed_in_workers_not_driver(spark):
     """Two consecutive Python jobs: inside every worker task the lazy
-    invalidate_caches is installed once the engine package is imported;
-    the driver keeps the stdlib one."""
+    invalidate_caches is installed once the engine package is imported,
+    and by the second job every worker has frozen its heap; the driver
+    keeps the stdlib hook and freezes nothing."""
     def report(batches):
+        import gc
         import sys
         import zipimport
 
@@ -80,16 +94,20 @@ def test_zipcache_installed_in_workers_not_driver(spark):
             pass
         yield pd.DataFrame({
             "in_worker": ["pyspark.worker" in sys.modules],
-            "hook": [zipimport.zipimporter.invalidate_caches.__module__]})
+            "hook": [zipimport.zipimporter.invalidate_caches.__module__],
+            "frozen": [gc.get_freeze_count()]})
 
     df = spark.range(4, numPartitions=4)
     for _ in range(2):
-        rows = df.mapInPandas(report, "in_worker boolean, hook string").collect()
+        rows = df.mapInPandas(
+            report, "in_worker boolean, hook string, frozen long").collect()
         assert len(rows) == 4
         assert all(r["in_worker"] for r in rows)
         assert {r["hook"] for r in rows} == {"rasters_rs_spark.zipcache"}
+    assert all(r["frozen"] > 0 for r in rows)
     assert "pyspark.worker" not in sys.modules
     assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+    assert gc.get_freeze_count() == 0
 
 
 def _clear_codegen_cache(spark) -> None:

@@ -2,13 +2,16 @@
 
 Each job is a ``mapInPandas`` over 4 partitions whose UDF only imports
 the engine package (as unpickling any engine UDF does) and reports its
-worker's pid. Per job the tool prints the job's wall time and, for every
-Python worker that ran one of its tasks, the CPU that worker used per
-task: utime + stime from ``/proc/<pid>/stat``, differenced against the
-reading after the previous job. Workers are reused between jobs, so from
-the second job on this is the per-task cost of a warm worker, almost all
-of it PySpark's task set-up. Local mode only (the workers must be
-processes of this host).
+worker's pid and ``gc.get_freeze_count()``. Per job the tool prints the
+job's wall time and, for every Python worker that ran one of its tasks,
+the CPU that worker used per task (utime + stime from
+``/proc/<pid>/stat``, differenced against the reading after the previous
+job) and its frozen object count. Workers are reused between jobs, so
+from the second job on this is the per-task cost of a warm worker,
+almost all of it PySpark's task set-up. The summary gives the median
+over those reused-worker tasks and the median wall of jobs 3..N, by
+which point every worker has frozen its heap. Local mode only (the
+workers must be processes of this host).
 
     python tools/task_overhead.py [N]     # N jobs, default 10
 """
@@ -41,6 +44,7 @@ def cpu_s(pid: int) -> float | None:
 
 
 def report_pid(batches):
+    import gc
     import os
 
     import pandas as pd
@@ -49,7 +53,7 @@ def report_pid(batches):
 
     for _ in batches:
         pass
-    yield pd.DataFrame({"pid": [os.getpid()]})
+    yield pd.DataFrame({"pid": [os.getpid()], "frozen": [gc.get_freeze_count()]})
 
 
 def main(jobs: int = 10) -> None:
@@ -58,12 +62,15 @@ def main(jobs: int = 10) -> None:
     df = spark.range(PARTITIONS, numPartitions=PARTITIONS)
     last: dict[int, float] = {}
     warm = []
+    walls = []
     for j in range(1, jobs + 1):
         t0 = time.perf_counter()
-        pids = [r["pid"] for r in df.mapInPandas(report_pid, "pid long").collect()]
+        rows = df.mapInPandas(report_pid, "pid long, frozen long").collect()
         wall = time.perf_counter() - t0
+        walls.append(wall)
+        frozen = {r["pid"]: r["frozen"] for r in rows}
         cells = []
-        for pid, tasks in sorted(collections.Counter(pids).items()):
+        for pid, tasks in sorted(collections.Counter(r["pid"] for r in rows).items()):
             now = cpu_s(pid)
             if now is None:
                 cells.append(f"{pid}: exited")
@@ -71,15 +78,17 @@ def main(jobs: int = 10) -> None:
             if pid in last:
                 per_task = (now - last[pid]) / tasks * 1e3
                 warm.append(per_task)
-                cells.append(f"{pid}: {per_task:.0f} ms x{tasks}")
+                cells.append(f"{pid}: {per_task:.0f} ms x{tasks} frozen {frozen[pid]}")
             else:
-                cells.append(f"{pid}: new x{tasks}")
+                cells.append(f"{pid}: new x{tasks} frozen {frozen[pid]}")
             last[pid] = now
         print(f"job {j:2d}  {wall * 1e3:6.0f} ms  worker cpu/task  "
               + ", ".join(cells), flush=True)
     if warm:
         print(f"reused workers: median {statistics.median(warm):.0f} ms CPU "
               f"per task over {len(warm)} tasks")
+    if len(walls) > 2:
+        print(f"jobs 3..{jobs}: median wall {statistics.median(walls[2:]) * 1e3:.0f} ms")
     spark.stop()
 
 
