@@ -23,6 +23,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import codecs, geom, scanpar
@@ -460,6 +461,20 @@ MAX_BROADCAST_AOI_CELLS = 200_000
 MULTIPART_PROBE_ROWS = 100_000
 
 
+def _multipart_probe(parts: DataFrame) -> bool:
+    """Whether an AOI catalog may hold several rows per aoi_id, from
+    one bounded Arrow collect of at most MULTIPART_PROBE_ROWS + 1 ids
+    (a groupBy over the limit would cost a second job): a repeated id
+    decides True exactly, a whole catalog without one False exactly,
+    and a larger catalog falls back to True — conservative but never
+    wrong, since the (_rowid, aoi_id) dedup is a semantic no-op on a
+    single-part catalog and only costs one extra shuffle."""
+    cap = MULTIPART_PROBE_ROWS
+    ids = parts.select("aoi_id").limit(cap + 1).toArrow().column(0)
+    return len(ids) > cap or \
+        pc.count_distinct(ids, mode="all").as_py() < len(ids)
+
+
 def cell_pip_join(points: DataFrame, aois, zoom: int = 12,
                   x_col: str = "x", y_col: str = "y",
                   broadcast_aois: bool | None = None, salt: int = 1,
@@ -481,7 +496,7 @@ def cell_pip_join(points: DataFrame, aois, zoom: int = 12,
     + ``aoi_id``. One equi-join (set ``salt`` > 1 to spread a hot cell
     across ``salt`` shuffle keys when the AOI side is shuffled and a
     cell is skewed). ``multipart=None`` auto-detects duplicate aoi_ids
-    (exact for pandas; a tiny agg-probe for DataFrames — pass
+    (exact for pandas; a bounded id collect for DataFrames — pass
     False/True to skip the probe when the catalog shape is known)."""
     reserved = {"cell", "px", "py", "part", "aoi_id", "ring_offsets",
                 "xs", "ys", "_rowid"} & set(points.columns)
@@ -505,21 +520,7 @@ def cell_pip_join(points: DataFrame, aois, zoom: int = 12,
         aoi_parts_src = aois.localCheckpoint(eager=True)
         cells = aoi_cells_dist(aoi_parts_src, zoom)
         if multipart is None:
-            # capped probe (round-4 ADVICE: the old groupBy over the
-            # ENTIRE catalog was a full scan + shuffle): duplicates in
-            # the first MULTIPART_PROBE_ROWS rows decide True exactly;
-            # a dup-free sample that covers the whole catalog decides
-            # False exactly; a dup-free sample of a LARGER catalog
-            # falls back to True — conservative but never wrong (the
-            # (_rowid, aoi_id) dedup is a semantic no-op on a
-            # single-part catalog, it just costs one extra shuffle;
-            # pass multipart=False at scale when the shape is known)
-            cap = MULTIPART_PROBE_ROWS
-            probe = (aoi_parts_src.select("aoi_id").limit(cap + 1)
-                     .groupBy("aoi_id").count()
-                     .agg(F.sum("count").alias("n_rows"),
-                          F.max("count").alias("mx")).first())
-            multipart = (probe.mx or 0) > 1 or (probe.n_rows or 0) > cap
+            multipart = _multipart_probe(aoi_parts_src)
         if broadcast_aois is None:
             cap = MAX_BROADCAST_AOI_CELLS
             broadcast_aois = \

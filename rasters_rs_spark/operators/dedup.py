@@ -19,7 +19,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 from ..functions import scanpar, vectors
 from .text import shingle_expr
@@ -818,7 +818,7 @@ def _semdedup_assign_udf(id_col: str, vec_col: str, cents):
 
 def _salted_pair_cogroup(left: DataFrame, right: DataFrame,
                          keys: list[str], hot_bucket_rows: int,
-                         hot_salt: int, sizes_from: DataFrame,
+                         hot_salt: int, sizes_from: DataFrame | None,
                          kernel, schema: str,
                          salt_on: str = "id_a") -> DataFrame:
     """_salted_bucket_join's exact salt decomposition, expressed as a
@@ -830,21 +830,30 @@ def _salted_pair_cogroup(left: DataFrame, right: DataFrame,
     once" rule). Hot buckets (> hot_bucket_rows rows) split the left
     side into hot_salt id-hash sub-buckets with the right side
     replicated across them — every (a, b) pair meets exactly once, in
-    a's salt partition, identical to the join variant."""
-    hot = (sizes_from.groupBy(*keys).count()
-           .where(F.col("count") > hot_bucket_rows)
-           .select(*keys, F.lit(True).alias("_hot")))
-    lt = left.join(F.broadcast(hot), on=keys, how="left").withColumn(
-        "_salt", F.when(F.col("_hot").isNotNull(),
-                        F.pmod(F.xxhash64(salt_on), F.lit(hot_salt)))
-                  .otherwise(F.lit(0)).cast("int")).drop("_hot")
-    rt = right.join(F.broadcast(hot), on=keys, how="left") \
-        .withColumn("_salts",
-                    F.when(F.col("_hot").isNotNull(),
-                           F.sequence(F.lit(0), F.lit(hot_salt - 1)))
-                    .otherwise(F.array(F.lit(0)))) \
-        .withColumn("_salt", F.explode("_salts")) \
-        .drop("_hot", "_salts")
+    a's salt partition, identical to the join variant.
+
+    ``sizes_from=None`` says no bucket can be hot (the caller knows its
+    whole table holds at most ``hot_bucket_rows`` rows): every row
+    takes salt 0, and the bucket-size count and its broadcast — two
+    Spark jobs — are not planned. Salting never changes the output."""
+    if sizes_from is None:
+        lt = left.withColumn("_salt", F.lit(0))
+        rt = right.withColumn("_salt", F.lit(0))
+    else:
+        hot = (sizes_from.groupBy(*keys).count()
+               .where(F.col("count") > hot_bucket_rows)
+               .select(*keys, F.lit(True).alias("_hot")))
+        lt = left.join(F.broadcast(hot), on=keys, how="left").withColumn(
+            "_salt", F.when(F.col("_hot").isNotNull(),
+                            F.pmod(F.xxhash64(salt_on), F.lit(hot_salt)))
+                      .otherwise(F.lit(0)).cast("int")).drop("_hot")
+        rt = right.join(F.broadcast(hot), on=keys, how="left") \
+            .withColumn("_salts",
+                        F.when(F.col("_hot").isNotNull(),
+                               F.sequence(F.lit(0), F.lit(hot_salt - 1)))
+                        .otherwise(F.array(F.lit(0)))) \
+            .withColumn("_salt", F.explode("_salts")) \
+            .drop("_hot", "_salts")
     # both sides share the checkpointed parent, so identical key
     # attribute ids would be flagged ambiguous by the cogroup's
     # analyzer — rename the right side's keys (cogroup matches groups
@@ -940,9 +949,11 @@ def semantic_dedup(embs: DataFrame, cents, threshold: float = 0.9,
     # (cluster, salt) anyway, so the cogroup — not the scan layout —
     # provides the pair-stage parallelism; the assign kernel itself is
     # O(n x k) and cheap relative to an extra exchange)
+    rows = Observation()
     assigned = embs.select(id_col, vec_col) \
         .mapInPandas(_semdedup_assign_udf(id_col, vec_col, cents),
                      schema=schema) \
+        .observe(rows, F.count(F.lit(1)).alias("n")) \
         .localCheckpoint(eager=True)
     # Round-8 pair stage: the old salted self-JOIN shipped BOTH
     # vectors on every candidate row into the pair kernel — ~n_c
@@ -962,8 +973,11 @@ def semantic_dedup(embs: DataFrame, cents, threshold: float = 0.9,
                             F.col(vec_col).alias("vb"),
                             F.col("centroid_sim").alias("cs_b"))
     id_t = dict(embs.dtypes)[id_col]
+    # the checkpoint's job counted the rows: a cluster holds at most
+    # all of them, so within hot_cluster_rows none can be hot
+    sizes_from = assigned if rows.get["n"] > hot_cluster_rows else None
     pairs = _salted_pair_cogroup(
-        left, right, ["cluster"], hot_cluster_rows, hot_salt, assigned,
+        left, right, ["cluster"], hot_cluster_rows, hot_salt, sizes_from,
         _semdedup_pair_kernel(threshold),
         schema=f"id_a {id_t}, id_b {id_t}, cs_a double, cs_b double")
     dropped = pairs.select(

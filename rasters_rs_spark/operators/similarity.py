@@ -142,15 +142,28 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int,
     broadcast would OOM executors and the scan goes quadratic; use
     lsh_topk_det / ivf_topk as the scale path, or raise the cap
     explicitly."""
-    n = queries.select(queries.columns[0]).limit(max_queries + 1).count()
-    if n > max_queries:
-        raise ValueError(
-            f"cosine_topk is the exact brute-force surface (corpus x "
-            f"queries); the query table exceeds max_queries="
-            f"{max_queries}. Use similarity.lsh_topk_det / ivf_topk for "
-            f"large query sets, or raise max_queries explicitly.")
+    queries = _capped_queries(
+        queries, max_queries,
+        f"cosine_topk is the exact brute-force surface (corpus x "
+        f"queries); the query table exceeds max_queries="
+        f"{max_queries}. Use similarity.lsh_topk_det / ivf_topk for "
+        f"large query sets, or raise max_queries explicitly.")
     cand = corpus.crossJoin(F.broadcast(queries))
     return _rerank_topk(cand, k, q_id, c_id, q_vec, c_vec)
+
+
+def _capped_queries(queries: DataFrame, max_queries: int,
+                    refusal: str) -> DataFrame:
+    """The query table of a brute-force surface as a local table, from
+    ONE bounded Arrow collect of at most ``max_queries`` + 1 rows:
+    raises ``ValueError(refusal)`` past the cap, never counting further.
+    The collect is both the refusal probe and the rows the plan then
+    broadcasts or joins, so neither a count (two jobs under AQE) nor a
+    second scan of the query input runs."""
+    rows = queries.limit(max_queries + 1).toArrow()
+    if rows.num_rows > max_queries:
+        raise ValueError(refusal)
+    return local_table(queries.sparkSession, rows, queries.schema)
 
 
 def lcg_planes(n_planes: int, dim: int) -> list[list[float]]:
@@ -919,13 +932,12 @@ def retrieval_rank_eval(queries: DataFrame, corpus: DataFrame,
     comparison is between doubles produced by the same
     strict-left-fold expression on both engines, so ranks are
     bit-stable vs the DuckDB mirror (retrieval_eval_embeddings row)."""
-    n = queries.select(queries.columns[0]).limit(max_queries + 1).count()
-    if n > max_queries:
-        raise ValueError(
-            f"retrieval_rank_eval scans corpus x queries; the query "
-            f"table exceeds max_queries={max_queries}. Evaluate on a "
-            f"sample (the CLIP/LAION protocol), or raise the cap "
-            f"explicitly.")
+    queries = _capped_queries(
+        queries, max_queries,
+        f"retrieval_rank_eval scans corpus x queries; the query "
+        f"table exceeds max_queries={max_queries}. Evaluate on a "
+        f"sample (the CLIP/LAION protocol), or raise the cap "
+        f"explicitly.")
     truth = queries.join(
         corpus.select(F.col(c_id).alias(q_id), F.col(c_vec).alias("_tv")),
         on=q_id) \

@@ -11,6 +11,8 @@ create_output_raster.)
 
 from __future__ import annotations
 
+import json
+
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -21,8 +23,9 @@ from pyspark.sql.types import StructType, _parse_datatype_string
 def local_table(spark: SparkSession, data, schema: StructType | str | None = None
                 ) -> DataFrame:
     """A small driver-built table as a DataFrame: ``data`` is a list of
-    row tuples or a pandas frame, ``schema`` a StructType or DDL string
-    (a pandas frame may omit it, and keeps the types Arrow infers).
+    row tuples, a pandas frame or a ``pyarrow.Table``, ``schema`` a
+    StructType or DDL string (a frame or Arrow table may omit it, and
+    keeps the types Arrow gives it).
 
     The rows go to Spark as one ``pyarrow.Table``, which plans as a
     ``LocalTableScan`` whatever ``spark.sql.execution.arrow.pyspark.enabled``
@@ -33,7 +36,9 @@ def local_table(spark: SparkSession, data, schema: StructType | str | None = Non
     if isinstance(schema, str):
         schema = _parse_datatype_string(schema)
     arrow_schema = None if schema is None else to_arrow_schema(schema)
-    if isinstance(data, pd.DataFrame):
+    if isinstance(data, pa.Table):
+        table = data
+    elif isinstance(data, pd.DataFrame):
         table = pa.Table.from_pandas(data, schema=arrow_schema,
                                      preserve_index=False)
     else:
@@ -58,7 +63,11 @@ def iceberg_available(spark: SparkSession) -> bool:
 
 def read_table(spark: SparkSession, location: str, fmt: str | None = None) -> DataFrame:
     """Read a table by location. ``iceberg:<name>`` targets a catalog
-    table when the runtime exists; anything else is a parquet path."""
+    table when the runtime exists; anything else is a parquet path.
+
+    A parquet read takes its schema from one data file's footer, read
+    on the driver (see ``_footer_schema``), so it starts no Spark job;
+    plain ``spark.read.parquet`` infers it with a one-task job."""
     if location.startswith("iceberg:"):
         name = location.split(":", 1)[1]
         if iceberg_available(spark):
@@ -66,7 +75,68 @@ def read_table(spark: SparkSession, location: str, fmt: str | None = None) -> Da
         raise RuntimeError(
             "iceberg runtime not on the classpath; use a parquet path "
             "or add iceberg-spark-runtime to spark.jars")
-    return spark.read.parquet(location)
+    schema = _footer_schema(spark, location)
+    if schema is None:
+        return spark.read.parquet(location)
+    return spark.read.schema(schema).parquet(location)
+
+
+def _footer_schema(spark: SparkSession, location: str) -> StructType | None:
+    """The schema ``spark.read.parquet(location)`` would infer, from the
+    footer of the first data file under ``location`` (recursing into
+    ``k=v`` partition directories; partition columns are still found
+    and appended by the read itself).
+
+    Without ``mergeSchema`` Spark's inference also reads just one data
+    file's footer, but as a one-task job. This reads the same footer
+    with the same converter (``ParquetFileFormat.readSchema``, which
+    honours the Spark schema a writer stores in the footer) on the
+    driver. None, so the caller infers as before, when schemas are to
+    be merged, the location is a glob, no data file is found, or the
+    JVM bridge is unavailable (Spark Connect, say)."""
+    if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() \
+            == "true" or any(c in location for c in "*?[{"):
+        return None
+    try:
+        jvm = spark.sparkContext._jvm
+        session = spark._jsparkSession
+        conf = session.sessionState().newHadoopConf()
+        path = jvm.org.apache.hadoop.fs.Path(location)
+        fs = path.getFileSystem(conf)
+        status = _first_data_file(fs, fs.getFileStatus(path))
+        if status is None:
+            return None
+        fmt = getattr(getattr(jvm.org.apache.spark.sql.execution.datasources
+                              .parquet, "ParquetFileFormat$"), "MODULE$")
+        footers = fmt.readParquetFootersInParallel(
+            conf, jvm.PythonUtils.toSeq(jvm.java.util.List.of(status)),
+            session.sessionState().conf().ignoreCorruptFiles())
+        found = fmt.readSchema(footers, session)
+        if found.isEmpty():
+            return None
+        return StructType.fromJson(json.loads(found.get().json()))
+    except Exception:
+        return None
+
+
+def _first_data_file(fs, status):
+    """The first file under ``status`` that Spark's file index would
+    read as data: not hidden (``_`` or ``.``), searched through ``k=v``
+    partition directories; None when there is none."""
+    if status.isFile():
+        return status
+    for child in fs.listStatus(status.getPath()):
+        name = child.getPath().getName()
+        if name.startswith(("_", ".")):
+            continue
+        if child.isFile():
+            if not name.endswith("._COPYING_"):
+                return child
+        elif "=" in name:
+            found = _first_data_file(fs, child)
+            if found is not None:
+                return found
+    return None
 
 
 def write_images(df: DataFrame, location: str, partition_buckets: int = 256,

@@ -8,6 +8,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from rasters_rs_spark.operators import celljoin
 from rasters_rs_spark.operators.celljoin import (AOI_SCHEMA, aoi_cells_df,
                                                  aoi_cells_dist,
                                                  cell_pip_join)
@@ -47,10 +48,13 @@ def test_cell_pip_join_dataframe_aois_matches_pandas(spark):
         assert got == base, f"broadcast_aois={bc}"
 
 
-def test_cell_pip_join_dataframe_multipart_and_dup_points(spark):
+def test_cell_pip_join_dataframe_multipart_and_dup_points(spark, monkeypatch):
     """Multipart aoi_ids collapse to one row per POINT ROW through the
     DataFrame path too — and duplicated input point rows each keep
-    their own output row (the per-row-identity dedup)."""
+    their own output row (the per-row-identity dedup). The capped
+    multipart probe at its cap: a whole dup-free catalog is False, one
+    row past the cap is True (conservative), a repeated id is True, and
+    the join output never depends on the answer."""
     parts = synth.aoi_table(4, seed=10)
     # two parts share one id -> multipart catalog
     parts.loc[1, "aoi_id"] = parts.loc[0, "aoi_id"]
@@ -75,6 +79,20 @@ def test_cell_pip_join_dataframe_multipart_and_dup_points(spark):
                     for r in cell_pip_join(pts_df, _aoi_df(spark, parts),
                                            zoom=12, multipart=True).collect())
     assert forced == base
+
+    monkeypatch.setattr(celljoin, "MULTIPART_PROBE_ROWS", 3)
+    four = synth.aoi_table(4, seed=10)
+    assert not celljoin._multipart_probe(_aoi_df(spark, four.iloc[:3]))
+    assert celljoin._multipart_probe(_aoi_df(spark, four))
+    dup3 = four.iloc[:3].copy()
+    dup3.loc[1, "aoi_id"] = dup3.loc[0, "aoi_id"]
+    assert celljoin._multipart_probe(_aoi_df(spark, dup3))
+    for cat in (four, dup3):
+        out = {mp: sorted((r["pt_id"], r["aoi_id"]) for r in cell_pip_join(
+                   pts_df, _aoi_df(spark, cat), zoom=12,
+                   multipart=mp).collect())
+               for mp in (None, True)}
+        assert out[None] == out[True] and out[None]
 
 
 def test_aoi_cells_dist_plan_no_driver_materialization(spark, tmp_path):

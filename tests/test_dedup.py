@@ -502,7 +502,8 @@ def test_semdedup_cogroup_pairs_match_join_kernel(spark):
     values) of the salted join + cosine_expr + threshold — including
     zero-norm / ragged-length drops and a forced hot cluster
     (hot_bucket_rows=10 < cluster size, so the salt split path is
-    exercised)."""
+    exercised) — and so does the unsalted plan semantic_dedup takes
+    when no cluster can be hot."""
     from pyspark.sql import functions as F
     from rasters_rs_spark.operators.similarity import cosine_expr
     rng = np.random.default_rng(43)
@@ -539,3 +540,29 @@ def test_semdedup_cogroup_pairs_match_join_kernel(spark):
     assert cg_pairs == join_pairs
     assert join_pairs, "fixture must produce a non-trivial pair set"
     assert not any(5 in p[:2] or 9 in p[:2] for p in cg_pairs)
+    # sizes_from=None (no bucket can be hot): every row on salt 0, the
+    # same pairs
+    cold_pairs = {
+        (r["id_a"], r["id_b"], r["cs_a"], r["cs_b"]) for r in
+        D._salted_pair_cogroup(
+            left, right, ["cluster"], 10, 4, None,
+            D._semdedup_pair_kernel(thr),
+            schema="id_a bigint, id_b bigint, "
+                   "cs_a double, cs_b double").collect()}
+    assert cold_pairs == join_pairs
+    # semantic_dedup plans the hot-cluster count only when its row
+    # count exceeds hot_cluster_rows; the output is the salted one
+    from rasters_rs_spark.operators.similarity import lcg_centroids
+    embs = assigned.where(F.size("v") == dim) \
+        .selectExpr("id as vec_id", "v as embedding")
+    rows = n - 1
+    out = {}
+    for cap in (rows, 1):
+        df = D.semantic_dedup(embs, lcg_centroids(3, dim), threshold=0.3,
+                              hot_cluster_rows=cap)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        out[cap] = sorted(tuple(r) for r in df.collect())
+        assert ("_hot" in plan) == (cap < rows)
+        assert ("functions=[count(1)]" in plan) == (cap < rows)
+    assert out[rows] == out[1]
+    assert 0 < sum(not r[3] for r in out[rows]) < rows - 2

@@ -81,3 +81,9 @@ def test_cosine_topk_refuses_huge_query_side(spark):
     corpus = df.selectExpr("q_id as vec_id", "q_vec as embedding")
     with pytest.raises(ValueError, match="max_queries"):
         S.cosine_topk(df, corpus, k=3, max_queries=5)
+    # the cap is inclusive: exactly max_queries rows run, one more refuse
+    with pytest.raises(ValueError, match="max_queries"):
+        S.cosine_topk(df, corpus, k=3, max_queries=19)
+    rows = S.cosine_topk(df, corpus, k=3, max_queries=20).collect()
+    assert len(rows) == 60 and {r["q_id"] for r in rows} == set(range(20))
+    assert all(r["vec_id"] == r["q_id"] for r in rows if r["rank"] == 1)

@@ -1174,8 +1174,12 @@ def test_retrieval_rank_eval_edges(spark):
     rows = SIM.retrieval_rank_eval(qs, corpus, hits_at=(1,)).collect()
     assert [r["q_id"] for r in rows] == [0]
     assert rows[0]["true_rank"] == 1 and rows[0]["hit_at_1"] == 1
+    # the cap is inclusive: exactly max_queries rows run, one more refuse
     with pytest.raises(ValueError, match="max_queries"):
         SIM.retrieval_rank_eval(qs, corpus, max_queries=2)
+    capped = SIM.retrieval_rank_eval(qs, corpus, hits_at=(1,),
+                                     max_queries=3).collect()
+    assert capped == rows
 
 
 def test_window_hash_rows2_matches_two_pass():
