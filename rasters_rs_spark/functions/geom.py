@@ -11,6 +11,15 @@ engine (AspecScire/rasters.rs):
 - winding/crossing point-in-polygon over packed coordinate buffers
   (replaces geo::Contains used at raster-stats/main.rs:72-82)
 
+Point-in-polygon has two kernels with identical answers. A north-up
+pixel grid (gt[2] == gt[4] == 0: every centre of a row shares one y)
+goes through the scanline ``grid_in_rings``, which crosses each edge
+with each row once and counts the centres left of the intercept by
+binary search: O(rows x edges + pixels), never a (pixels x edges)
+array (the Raptor zonal scheme). The dense ``points_in_rings`` /
+``points_in_rings_winding`` still run where the points are not a
+grid: rotated transforms and the scattered points of the cell join.
+
 Everything here is vectorized numpy so it can run inside Arrow-batched
 pandas UDFs; nothing allocates per-point Python objects.
 """
@@ -201,7 +210,17 @@ def bilinear_weights_grid(chunk_t: np.ndarray, rows: int, cols: int, dims):
 # ---------------------------------------------------------------------------
 
 
-def points_in_rings(px, py, ring_offsets, xs, ys) -> np.ndarray:
+def _ring_edges(ring_offsets, xs, ys):
+    """(x0, y0, x1, y1) edge arrays of each ring with at least 3
+    vertices; rings need no explicit closing vertex."""
+    offs = list(ring_offsets) + [len(xs)]
+    for a, b in zip(offs[:-1], offs[1:]):
+        if b - a >= 3:
+            yield xs[a:b], ys[a:b], np.roll(xs[a:b], -1), np.roll(ys[a:b], -1)
+
+
+def points_in_rings(px, py, ring_offsets, xs, ys,
+                    winding: bool = False) -> np.ndarray:
     """Even-odd crossing-number containment test of many points against one
     (multi)polygon stored as packed ring buffers.
 
@@ -211,6 +230,7 @@ def points_in_rings(px, py, ring_offsets, xs, ys) -> np.ndarray:
     even-odd rule makes a point inside an odd number of rings "contained",
     which matches exterior-minus-holes for validly nested polygons
     (reference semantics: geo::Contains at raster-stats/main.rs:77).
+    ``winding`` switches to the nonzero rule (points_in_rings_winding).
 
     Fully vectorized: O(points x edges) numpy ops, no Python loop over
     points. Returns a boolean array.
@@ -219,17 +239,9 @@ def points_in_rings(px, py, ring_offsets, xs, ys) -> np.ndarray:
     py = np.asarray(py, dtype=np.float64)
     xs = np.asarray(xs, dtype=np.float64)
     ys = np.asarray(ys, dtype=np.float64)
-    offs = list(ring_offsets) + [len(xs)]
 
-    inside = np.zeros(px.shape, dtype=bool)
-    for r in range(len(offs) - 1):
-        a, b = offs[r], offs[r + 1]
-        if b - a < 3:
-            continue
-        x0 = xs[a:b]
-        y0 = ys[a:b]
-        x1 = np.roll(x0, -1)
-        y1 = np.roll(y0, -1)
+    count = np.zeros(px.shape, dtype=np.int64)
+    for (x0, y0, x1, y1) in _ring_edges(ring_offsets, xs, ys):
         # edges as (E,) arrays; points as (P,1) for broadcasting
         pxc = px[:, None]
         pyc = py[:, None]
@@ -238,8 +250,13 @@ def points_in_rings(px, py, ring_offsets, xs, ys) -> np.ndarray:
             t = (pyc - y0[None, :]) / (y1[None, :] - y0[None, :])
             xint = x0[None, :] + t * (x1[None, :] - x0[None, :])
         hits = crosses & (pxc < xint)
-        inside ^= (hits.sum(axis=1) % 2).astype(bool)
-    return inside
+        if winding:
+            # +1 for an upward edge, -1 for a downward one
+            up = y1[None, :] > pyc
+            count += (hits & up).sum(axis=1) - (hits & ~up).sum(axis=1)
+        else:
+            count += hits.sum(axis=1)
+    return count != 0 if winding else (count % 2).astype(bool)
 
 
 def points_in_rings_winding(px, py, ring_offsets, xs, ys) -> np.ndarray:
@@ -251,35 +268,98 @@ def points_in_rings_winding(px, py, ring_offsets, xs, ys) -> np.ndarray:
     For valid simple polygons with correctly oriented holes (holes
     wound opposite the exterior) this equals the even-odd rule; the two
     differ on self-intersecting rings and same-winding overlaps, where
-    nonzero fills the overlap region (the PostGIS/GEOS-style rule).
-    Fully vectorized, same O(points x edges) shape as the even-odd
-    path."""
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
+    nonzero fills the overlap region (the PostGIS/GEOS-style rule)."""
+    return points_in_rings(px, py, ring_offsets, xs, ys, winding=True)
+
+
+def grid_in_rings(xc, yc, ring_offsets, xs, ys,
+                  winding: bool = False) -> np.ndarray:
+    """``points_in_rings`` (or ``points_in_rings_winding`` when
+    ``winding``) over the grid ``meshgrid(xc, yc)``, as an (R, C) bool
+    array for ``R = len(yc)`` rows and ``C = len(xc)`` columns; ``xc``
+    must be monotone (either direction).
+
+    Scanline form: the crossing test runs once per (row, edge) with
+    the dense kernel's own ``t`` / ``xint`` floats, ``searchsorted``
+    counts the centres with ``xc < xint`` (the dense ``px < xint``),
+    and one ``bincount`` plus a suffix sum along each row adds the
+    crossings up. Memory is one (rows x edges) bool mask plus
+    O(crossings + pixels)."""
+    xc = np.asarray(xc, dtype=np.float64)
+    yc = np.asarray(yc, dtype=np.float64)
     xs = np.asarray(xs, dtype=np.float64)
     ys = np.asarray(ys, dtype=np.float64)
-    offs = list(ring_offsets) + [len(xs)]
+    edges = list(_ring_edges(ring_offsets, xs, ys))
+    R, C = len(yc), len(xc)
+    if not edges:
+        return np.zeros((R, C), dtype=bool)
+    x0, y0, x1, y1 = (np.concatenate(e) for e in zip(*edges))
+    flip = C > 1 and xc[0] > xc[-1]
+    if flip:
+        xc = xc[::-1]
+    ri, ei = np.nonzero((y0 > yc[:, None]) != (y1 > yc[:, None]))
+    py = yc[ri]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        t = (py - y0[ei]) / (y1[ei] - y0[ei])
+        xint = x0[ei] + t * (x1[ei] - x0[ei])
+    k = np.searchsorted(xc, xint, side="left")
+    k[np.isnan(xint)] = 0           # px < nan holds for no centre
+    # a crossing counts for columns j < k: bin it at k, suffix-sum
+    weights = np.where(y1[ei] > py, 1.0, -1.0) if winding else None
+    h = np.bincount(ri * (C + 1) + k, weights=weights,
+                    minlength=R * (C + 1)).reshape(R, C + 1)
+    n = np.cumsum(h[:, ::-1], axis=1)[:, ::-1][:, 1:]
+    inside = n != 0 if winding else (n % 2).astype(bool)
+    return inside[:, ::-1] if flip else inside
 
-    winding = np.zeros(px.shape, dtype=np.int64)
-    for r in range(len(offs) - 1):
-        a, b = offs[r], offs[r + 1]
-        if b - a < 3:
+
+def pixel_centers(t: np.ndarray, rows: int, cols: int, row0: int = 0):
+    """World coordinates of the pixel centres of a (rows x cols) block
+    whose first row is global row ``row0``. North-up (``t[0,1] ==
+    t[1,0] == 0``): 1-D column xs and row ys, bit-equal to
+    ``transform_points`` on the meshgrid; otherwise (rows, cols)
+    arrays."""
+    j = np.arange(cols) + 0.5
+    i = np.arange(row0, row0 + rows) + 0.5
+    if t[0, 1] == 0.0 and t[1, 0] == 0.0:
+        return t[0, 0] * j + t[0, 2], t[1, 1] * i + t[1, 2]
+    jj, ii = np.meshgrid(j, i)
+    return transform_points(t, jj, ii)
+
+
+def centers_in_polygons(xc, yc, polys, winding: bool = False):
+    """Centre-in-polygon over one pixel block, given its
+    ``pixel_centers``, for (key, ring_offsets, xs, ys, bbox) polygons:
+    yields ``(key, rows, cols, mask)`` for each polygon whose bbox holds
+    a centre, where ``rows`` / ``cols`` slice the window of centres
+    inside the bbox and ``mask`` marks the contained ones. Grid windows
+    go through the scanline ``grid_in_rings``; rotated centres through
+    the dense kernel."""
+    x0, x1 = float(xc.min(initial=np.inf)), float(xc.max(initial=-np.inf))
+    y0, y1 = float(yc.min(initial=np.inf)), float(yc.max(initial=-np.inf))
+    for (key, ro, xs, ys, box) in polys:
+        # O(1) block-vs-bbox rejection before any per-pixel work
+        if box[0] > x1 or box[2] < x0 or box[1] > y1 or box[3] < y0:
             continue
-        x0 = xs[a:b]
-        y0 = ys[a:b]
-        x1 = np.roll(x0, -1)
-        y1 = np.roll(y0, -1)
-        pxc = px[:, None]
-        pyc = py[:, None]
-        up = (y0[None, :] <= pyc) & (y1[None, :] > pyc)      # upward edge
-        down = (y0[None, :] > pyc) & (y1[None, :] <= pyc)    # downward edge
-        with np.errstate(divide="ignore", invalid="ignore"):
-            t = (pyc - y0[None, :]) / (y1[None, :] - y0[None, :])
-            xint = x0[None, :] + t * (x1[None, :] - x0[None, :])
-        left_of = pxc < xint
-        winding += (up & left_of).sum(axis=1)
-        winding -= (down & left_of).sum(axis=1)
-    return winding != 0
+        if xc.ndim == 1:
+            cj = np.flatnonzero((xc >= box[0]) & (xc <= box[2]))
+            ri = np.flatnonzero((yc >= box[1]) & (yc <= box[3]))
+            if len(cj) and len(ri):
+                rows = slice(ri[0], ri[-1] + 1)
+                cols = slice(cj[0], cj[-1] + 1)
+                yield key, rows, cols, grid_in_rings(
+                    xc[cols], yc[rows], ro, xs, ys, winding)
+            continue
+        ri, cj = np.nonzero((xc >= box[0]) & (xc <= box[2])
+                            & (yc >= box[1]) & (yc <= box[3]))
+        if len(ri):
+            rows = slice(ri.min(), ri.max() + 1)
+            cols = slice(cj.min(), cj.max() + 1)
+            mask = np.zeros((rows.stop - rows.start,
+                             cols.stop - cols.start), dtype=bool)
+            mask[ri - rows.start, cj - cols.start] = points_in_rings(
+                xc[ri, cj], yc[ri, cj], ro, xs, ys, winding)
+            yield key, rows, cols, mask
 
 
 def polygon_bbox(ring_offsets, xs, ys):

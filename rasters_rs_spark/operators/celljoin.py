@@ -87,8 +87,7 @@ def rasterize(spark: SparkSession, aois: pd.DataFrame, gt, w: int, h: int,
               np.asarray(r.ys, dtype=np.float64),
               G.polygon_bbox(r.ring_offsets, r.xs, r.ys))
              for k, r in enumerate(srt.itertuples(index=False))]
-    pip = {"evenodd": G.points_in_rings,
-           "nonzero": G.points_in_rings_winding}[pip_rule]
+    winding = _winding(pip_rule)
     n_strips = (h + strip_height - 1) // strip_height
     t = G.transform_from_gdal(gt)
 
@@ -98,7 +97,7 @@ def rasterize(spark: SparkSession, aois: pd.DataFrame, gt, w: int, h: int,
             for row in pdf.itertuples(index=False):
                 sy = int(row.id)
                 out.append(_burn_strip_row(sy, strip_height, w, h, gt, t,
-                                           polys, pip))
+                                           polys, winding))
             yield pd.DataFrame(out, columns=_CHUNK_COLS)
 
     from .chunked import CHUNK_SCHEMA
@@ -110,35 +109,26 @@ _CHUNK_COLS = ["image_id", "chunk_idx", "data_start", "data_end",
                "gt", "crs", "no_val"]
 
 
+def _winding(pip_rule: str) -> bool:
+    return {"evenodd": False, "nonzero": True}[pip_rule]
+
+
 def _burn_strip_row(sy: int, strip_height: int, w: int, h: int, gt, t,
-                    polys, pip):
+                    polys, winding: bool):
     """Burn one target-grid row strip against (ordinal, rings, bbox)
     polys — the kernel shared by rasterize (broadcast AOI closure) and
     rasterize_dist (cell-join-pruned AOI subset). Ascending-ordinal
     iteration + the isnan guard make the smallest ordinal win
     overlaps."""
-    G = geom
     r0 = sy * strip_height
     r1 = min(r0 + strip_height, h)
-    jj, ii = np.meshgrid(np.arange(w), np.arange(r0, r1))
-    wx, wy = G.transform_points(t, jj.ravel() + 0.5, ii.ravel() + 0.5)
-    sx0, sx1 = float(wx.min()), float(wx.max())
-    sy0, sy1 = float(wy.min()), float(wy.max())
-    block = np.full(wx.shape, np.nan)
-    for (k, ro, xs, ys, (bx0, by0, bx1, by1)) in polys:
-        # O(1) strip-vs-AOI bbox rejection before any per-pixel mask
-        # work (the per-strip prefilter the docstring promises)
-        if bx1 < sx0 or bx0 > sx1 or by1 < sy0 or by0 > sy1:
-            continue
-        cand = ((wx >= bx0) & (wx <= bx1)
-                & (wy >= by0) & (wy <= by1) & np.isnan(block))
-        if not cand.any():
-            continue
-        idx = np.nonzero(cand)[0]
-        inside = pip(wx[idx], wy[idx], ro, xs, ys)
-        block[idx[inside]] = float(k)
-    return ("rasterized", sy, r0, r1, r0, r1,
-            codecs.encode_raw(block.reshape(r1 - r0, w)),
+    xc, yc = geom.pixel_centers(t, r1 - r0, w, r0)
+    block = np.full((r1 - r0, w), np.nan)
+    for k, rows, cols, mask in geom.centers_in_polygons(xc, yc, polys,
+                                                        winding):
+        sub = block[rows, cols]
+        sub[mask & np.isnan(sub)] = float(k)
+    return ("rasterized", sy, r0, r1, r0, r1, codecs.encode_raw(block),
             w, h, "raw", gt, "EPSG:3857", float("nan"))
 
 
@@ -177,8 +167,7 @@ def rasterize_dist(aois: DataFrame, gt, w: int, h: int,
     strip_height = max(1, min(strip_height, h))
     n_strips = (h + strip_height - 1) // strip_height
     t = G.transform_from_gdal(gt)
-    pip = {"evenodd": G.points_in_rings,
-           "nonzero": G.points_in_rings_winding}[pip_rule]
+    winding = _winding(pip_rule)
 
     if "ordinal" not in aois.columns:
         aois = aois.join(aoi_ordinals_dist(aois), on="aoi_id")
@@ -225,7 +214,7 @@ def rasterize_dist(aois: DataFrame, gt, w: int, h: int,
                                  .itertuples(index=False)]
         for row in strip_pdf.itertuples(index=False):
             out.append(_burn_strip_row(int(row.sy), strip_height, w, h,
-                                       gt, t, polys, pip))
+                                       gt, t, polys, winding))
         return pd.DataFrame(out, columns=_CHUNK_COLS)
 
     from .chunked import CHUNK_SCHEMA

@@ -24,7 +24,11 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions import codecs, geom
 from ..plans.chunking import ChunkPlan
-from .stats import merge_partials_exprs, with_derived_stats
+from .stats import (MAJORITY_PARTIAL_COLS, MAJORITY_PARTIAL_SCHEMA,
+                    ZONAL_PARTIAL_COLS, ZONAL_PARTIAL_SCHEMA, _block_partial,
+                    _packed_aoi_rows, _valid_mask, majority_block_partials,
+                    majority_from_partials, merge_partials_exprs,
+                    with_derived_stats, zonal_block_partials)
 
 CHUNK_SCHEMA = (
     "image_id string, chunk_idx int, data_start long, data_end long, "
@@ -45,6 +49,14 @@ def _slice_strip_bytes(data: bytes, ls: int, le: int, w: int,
     if fmt == "q16":
         return data[:16] + data[16 + ls * w * 2: 16 + le * w * 2]
     raise ValueError(f"unknown block format: {fmt}")
+
+
+def _strip_data(row) -> np.ndarray:
+    """The DATA rows (data_start..data_end) of one chunk-strip row."""
+    strip = codecs.decode_block(
+        row.bytes, row.load_end - row.load_start, row.w, row.fmt)
+    return strip[int(row.data_start) - int(row.load_start):
+                 int(row.data_end) - int(row.load_start)]
 
 
 def chunk_images(images: DataFrame, min_data_size: int = 0x10000,
@@ -165,14 +177,11 @@ def diff_stats_chunked(a_chunks: DataFrame, b: DataFrame,
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
-                strip = codecs.decode_block(
-                    row.bytes, row.load_end - row.load_start, row.w, row.fmt)
                 # aggregate over DATA rows only: padding rows are loaded
                 # context shared with adjacent chunks and must not be
                 # double-counted (mirrors chunked_pixel_stats)
                 ds = int(row.data_start)
-                data = strip[ds - int(row.load_start):
-                             int(row.data_end) - int(row.load_start)]
+                data = _strip_data(row)
                 block_b = codecs.decode_block(row.b_bytes, row.b_h, row.b_w, row.b_fmt)
                 t = geom.transform_between(row.gt, row.b_gt)
                 h_b, w_b = block_b.shape
@@ -187,15 +196,11 @@ def diff_stats_chunked(a_chunks: DataFrame, b: DataFrame,
                                               (float(bx), float(by)))
                     valid, i2, j2 = geom.index_transform_grid(
                         ct, rows_n, row.w, (bw, bh))
-                    mask = valid & ~np.isnan(data)
-                    if not np.isnan(row.no_val):
-                        mask &= data != row.no_val
+                    mask = valid & _valid_mask(data, row.no_val)
                     if mask.any():
                         ii, jj = np.nonzero(mask)
                         vb = sub_b[i2[ii, jj], j2[ii, jj]]
-                        ok = ~np.isnan(vb)
-                        if not np.isnan(row.b_no_val):
-                            ok &= vb != row.b_no_val
+                        ok = _valid_mask(vb, row.b_no_val)
                         va = data[ii[ok], jj[ok]]
                         vb = vb[ok]
                         d = vb - va + adjust
@@ -260,11 +265,8 @@ def diff_stats_chunked_both(a_chunks: DataFrame, b_chunks: DataFrame,
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
-                strip = codecs.decode_block(
-                    row.bytes, row.load_end - row.load_start, row.w, row.fmt)
                 ds = int(row.data_start)
-                data = strip[ds - int(row.load_start):
-                             int(row.data_end) - int(row.load_start)]
+                data = _strip_data(row)
                 b_strip = codecs.decode_block(
                     row.b_bytes, row.b_load_end - row.b_load_start,
                     row.b_w, row.b_fmt)
@@ -279,16 +281,12 @@ def diff_stats_chunked_both(a_chunks: DataFrame, b_chunks: DataFrame,
                         ct, rows_n, row.w, (row.b_w, row.b_h))
                     bds, bde = int(row.b_data_start), int(row.b_data_end)
                     valid &= (i2 >= bds) & (i2 < bde)
-                    mask = valid & ~np.isnan(data)
-                    if not np.isnan(row.no_val):
-                        mask &= data != row.no_val
+                    mask = valid & _valid_mask(data, row.no_val)
                     if mask.any():
                         ii, jj = np.nonzero(mask)
                         bls = int(row.b_load_start)
                         vb = b_strip[i2[ii, jj] - bls, j2[ii, jj]]
-                        ok = ~np.isnan(vb)
-                        if not np.isnan(row.b_no_val):
-                            ok &= vb != row.b_no_val
+                        ok = _valid_mask(vb, row.b_no_val)
                         va = data[ii[ok], jj[ok]]
                         vb = vb[ok]
                         d = vb - va
@@ -332,11 +330,8 @@ def diff_histogram_chunked(a_chunks: DataFrame, b: DataFrame,
         for pdf in batches:
             acc: dict[int, int] = {}
             for row in pdf.itertuples(index=False):
-                strip = codecs.decode_block(
-                    row.bytes, row.load_end - row.load_start, row.w, row.fmt)
                 ds = int(row.data_start)
-                data = strip[ds - int(row.load_start):
-                             int(row.data_end) - int(row.load_start)]
+                data = _strip_data(row)
                 block_b = codecs.decode_block(row.b_bytes, row.b_h, row.b_w,
                                               row.b_fmt)
                 t = geom.transform_between(row.gt, row.b_gt)
@@ -351,16 +346,12 @@ def diff_histogram_chunked(a_chunks: DataFrame, b: DataFrame,
                                           (float(bx), float(by)))
                 valid, i2, j2 = geom.index_transform_grid(
                     ct, rows_n, row.w, (bw, bh))
-                mask = valid & ~np.isnan(data)
-                if not np.isnan(row.no_val):
-                    mask &= data != row.no_val
+                mask = valid & _valid_mask(data, row.no_val)
                 if not mask.any():
                     continue
                 ii, jj = np.nonzero(mask)
                 vb = sub_b[i2[ii, jj], j2[ii, jj]]
-                ok = ~np.isnan(vb)
-                if not np.isnan(row.b_no_val):
-                    ok &= vb != row.b_no_val
+                ok = _valid_mask(vb, row.b_no_val)
                 d = vb[ok] - data[ii[ok], jj[ok]] + adjust
                 if negate:
                     d = -d
@@ -384,16 +375,14 @@ def chunked_zonal_stats(chunks: DataFrame, aois: pd.DataFrame) -> DataFrame:
     its DATA rows only, one groupBy merges. Equals the whole-image
     zonal_stats exactly (tested); the path for rasters whose full block
     exceeds task memory."""
-    from .stats import ZONAL_PARTIAL_SCHEMA, _packed_aoi_rows
     aoi_rows = _packed_aoi_rows(aois)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["image_id", "aoi_id", "count", "min", "max", "sum", "sum_2"]
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
                 out.extend(_strip_zonal_partials(row, aoi_rows))
-            yield pd.DataFrame(out, columns=cols)
+            yield pd.DataFrame(out, columns=ZONAL_PARTIAL_COLS)
 
     partials = chunks.mapInPandas(gen, schema=ZONAL_PARTIAL_SCHEMA)
     return with_derived_stats(
@@ -401,53 +390,8 @@ def chunked_zonal_stats(chunks: DataFrame, aois: pd.DataFrame) -> DataFrame:
 
 
 def _strip_zonal_partials(row, aoi_rows) -> list:
-    """Per-(strip, aoi) PixelStats partial tuples for ONE chunk-strip
-    row against (aoi_id, ring_offsets, xs, ys, bbox) buffers — shared
-    by chunked_zonal_stats (broadcast AOIs) and
-    chunked_zonal_stats_dist (cell-join-pruned subsets)."""
-    out = []
-    strip = codecs.decode_block(
-        row.bytes, row.load_end - row.load_start, row.w, row.fmt)
-    ds = int(row.data_start)
-    data = strip[ds - int(row.load_start):
-                 int(row.data_end) - int(row.load_start)]
-    valid = ~np.isnan(data)
-    if not np.isnan(row.no_val):
-        valid &= data != row.no_val
-    if not valid.any():
-        return out
-    ii, jj = np.nonzero(valid)
-    vals = data[ii, jj]
-    t = geom.transform_from_gdal(row.gt)
-    # pixel centers in world coords: strip rows are global
-    # rows ds..data_end, so shift i by the data offset
-    wx, wy = geom.transform_points(t, jj + 0.5, ii + ds + 0.5)
-    # half-pixel padding: 1-row strips (common with default
-    # chunk sizing on wide rasters) have a DEGENERATE
-    # pixel-center bbox and the strict bounds_intersect
-    # would silently skip every AOI for them
-    hpx = abs(float(row.gt[1])) / 2.0
-    hpy = abs(float(row.gt[5])) / 2.0
-    box = (wx.min() - hpx, wy.min() - hpy,
-           wx.max() + hpx, wy.max() + hpy)
-    for (aoi_id, ro, xs, ys, abox) in aoi_rows:
-        if geom.bounds_intersect(box, abox) is None:
-            continue
-        cand = ((wx >= abox[0]) & (wx <= abox[2])
-                & (wy >= abox[1]) & (wy <= abox[3]))
-        if not cand.any():
-            continue
-        ci = np.nonzero(cand)[0]
-        inside = np.zeros(len(wx), dtype=bool)
-        inside[ci] = geom.points_in_rings(
-            wx[ci], wy[ci], ro, xs, ys)
-        if not inside.any():
-            continue
-        v = vals[inside]
-        out.append((row.image_id, aoi_id, float(v.size),
-                    float(v.min()), float(v.max()),
-                    float(v.sum()), float((v * v).sum())))
-    return out
+    return zonal_block_partials(row.image_id, _strip_data(row), row.gt,
+                                row.no_val, int(row.data_start), aoi_rows)
 
 
 def chunked_zonal_stats_dist(chunks: DataFrame, aois: DataFrame,
@@ -462,7 +406,6 @@ def chunked_zonal_stats_dist(chunks: DataFrame, aois: DataFrame,
     chunked_zonal_stats (tested)."""
     from ..functions.mercator import MAX_COORD
     from .celljoin import aoi_cells_dist
-    from .stats import ZONAL_PARTIAL_SCHEMA, _packed_aoi_rows
 
     ts = 2.0 * MAX_COORD / float(1 << zoom)
     g = [F.col("gt")[i] for i in range(6)]
@@ -501,12 +444,11 @@ def chunked_zonal_stats_dist(chunks: DataFrame, aois: DataFrame,
                     "aoi_id", "ring_offsets", "xs", "ys"))
 
     def kernel(strip_pdf: pd.DataFrame, aoi_pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["image_id", "aoi_id", "count", "min", "max", "sum", "sum_2"]
         aoi_rows = _packed_aoi_rows(aoi_pdf.sort_values("aoi_id"))
         out = []
         for row in strip_pdf.itertuples(index=False):
             out.extend(_strip_zonal_partials(row, aoi_rows))
-        return pd.DataFrame(out, columns=cols)
+        return pd.DataFrame(out, columns=ZONAL_PARTIAL_COLS)
 
     partials = chunks.groupBy("image_id", "chunk_idx").cogroup(
         cand.groupBy("_img", "_ci")) \
@@ -522,15 +464,11 @@ def chunked_pixel_stats(chunks: DataFrame) -> DataFrame:
     the whole-image statistics exactly."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .stats import _block_partial
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
-                strip = codecs.decode_block(
-                    row.bytes, row.load_end - row.load_start, row.w, row.fmt)
-                ds = int(row.data_start) - int(row.load_start)
-                de = int(row.data_end) - int(row.load_start)
-                c, mn, mx, s, s2 = _block_partial(strip[ds:de], row.no_val)
+                c, mn, mx, s, s2 = _block_partial(_strip_data(row),
+                                                  row.no_val)
                 out.append((row.image_id, c, mn, mx, s, s2))
             yield pd.DataFrame(out, columns=["image_id", "count", "min",
                                              "max", "sum", "sum_2"])
@@ -549,64 +487,16 @@ def chunked_zonal_majority(chunks: DataFrame, aois: pd.DataFrame,
     monoid, so the merged table equals the whole-image operator
     exactly — then the same tiny argmax window. The path for rasters
     whose full block exceeds task memory."""
-    from pyspark.sql import Window
-
-    from .stats import _packed_aoi_rows
-    from .vectorize import quantize_classes
-
     aoi_rows = _packed_aoi_rows(aois)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["image_id", "aoi_id", "cls", "count"]
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
-                strip = codecs.decode_block(
-                    row.bytes, row.load_end - row.load_start, row.w,
-                    row.fmt)
-                ds = int(row.data_start)
-                data = strip[ds - int(row.load_start):
-                             int(row.data_end) - int(row.load_start)]
-                valid = ~np.isnan(data)
-                if not np.isnan(row.no_val):
-                    valid &= data != row.no_val
-                if not valid.any():
-                    continue
-                ii, jj = np.nonzero(valid)
-                vals = data[ii, jj]
-                cls = quantize_classes(vals, n_classes)
-                t = geom.transform_from_gdal(row.gt)
-                wx, wy = geom.transform_points(
-                    t, jj + 0.5, ii + ds + 0.5)
-                for (aoi_id, ro, xs, ys, box) in aoi_rows:
-                    cand = ((wx >= box[0]) & (wx <= box[2])
-                            & (wy >= box[1]) & (wy <= box[3]))
-                    if not cand.any():
-                        continue
-                    ci = np.nonzero(cand)[0]
-                    inside = ci[geom.points_in_rings(
-                        wx[ci], wy[ci], ro, xs, ys)]
-                    if len(inside) == 0:
-                        continue
-                    counts = np.bincount(cls[inside],
-                                         minlength=n_classes)
-                    for c in np.nonzero(counts)[0]:
-                        out.append((row.image_id, aoi_id, int(c),
-                                    int(counts[c])))
-            yield pd.DataFrame(out, columns=cols)
+                out.extend(majority_block_partials(
+                    row.image_id, _strip_data(row), row.gt, row.no_val,
+                    int(row.data_start), aoi_rows, n_classes))
+            yield pd.DataFrame(out, columns=MAJORITY_PARTIAL_COLS)
 
-    partials = chunks.mapInPandas(
-        gen, schema=("image_id string, aoi_id string, cls int, "
-                     "count long"))
-    per_cls = partials.groupBy("aoi_id", "cls") \
-                      .agg(F.sum("count").alias("n"))
-    w = Window.partitionBy("aoi_id").orderBy(F.col("n").desc(),
-                                             F.col("cls").asc())
-    tot = Window.partitionBy("aoi_id")
-    return (per_cls
-            .withColumn("rk", F.row_number().over(w))
-            .withColumn("n_total", F.sum("n").over(tot).cast("long"))
-            .where(F.col("rk") == 1)
-            .select("aoi_id", F.col("cls").alias("majority_cls"),
-                    F.col("n").cast("long").alias("n_majority"),
-                    "n_total"))
+    return majority_from_partials(
+        chunks.mapInPandas(gen, schema=MAJORITY_PARTIAL_SCHEMA))

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions import codecs, geom
 from ..plans.chunking import ChunkPlan
+from .stats import _valid_mask
 _STAT_KEYS = ("first", "second", "diff", "abs_diff")
 
 
@@ -114,27 +115,21 @@ def align_pairs(block_a: np.ndarray, gt_a, no_val_a: float,
         valid_idx, i2, j2 = geom.index_transform_grid(ct, rows, cols, (bw, bh))
 
         va = sub
-        mask = valid_idx & ~np.isnan(va)
-        if not np.isnan(no_val_a):
-            mask &= va != no_val_a
+        mask = valid_idx & _valid_mask(va, no_val_a)
 
         if ext is not None:
             # extent translated to cell-center coords of this chunk
             ro, exs, eys = ext
-            jjg, iig = np.meshgrid(np.arange(cols, dtype=np.float64),
-                                   np.arange(rows, dtype=np.float64))
-            pin = geom.points_in_rings(
-                jjg.ravel(), iig.ravel(), ro,
-                exs - 0.5, eys - (ls + 0.5)).reshape(rows, cols)
-            mask &= pin
+            mask &= geom.grid_in_rings(
+                np.arange(cols, dtype=np.float64),
+                np.arange(rows, dtype=np.float64), ro,
+                exs - 0.5, eys - (ls + 0.5))
 
         if not mask.any():
             continue
         ii, jj = np.nonzero(mask)
         vb = sub_b[i2[ii, jj], j2[ii, jj]]
-        ok = ~np.isnan(vb)
-        if not np.isnan(no_val_b):
-            ok &= vb != no_val_b
+        ok = _valid_mask(vb, no_val_b)
         ii, jj = ii[ok], jj[ok]
         yield ii + ls, jj, sub[ii, jj], vb[ok]
 

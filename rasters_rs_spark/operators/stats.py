@@ -8,9 +8,10 @@ Reference semantics:
 - Histogram with under/overflow counters (src/histogram.rs:58-72,107-137).
 - Zonal stats: every pixel contributes to EVERY containing polygon
   (many-to-many, raster-stats/main.rs:72-82); we replace the O(pixels x
-  polygons) nested loop with broadcast AOI buffers + vectorized
-  winding-number refine inside an Arrow-batched pandas UDF, emitting
-  per-(image, aoi) partial stats that a single groupBy merges.
+  polygons) nested loop with broadcast AOI buffers + a scanline
+  point-in-polygon refine (geom.grid_in_rings) inside an Arrow-batched
+  pandas UDF, emitting per-(image, aoi) partial stats that a single
+  groupBy merges.
 """
 
 from __future__ import annotations
@@ -19,9 +20,10 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import codecs, geom
+from .vectorize import quantize_classes
 
 PIXEL_STATS_SCHEMA = (
     "count double, min double, max double, sum double, sum_2 double"
@@ -69,13 +71,18 @@ def merge_partials_exprs():
     ]
 
 
-def _block_partial(block: np.ndarray, no_val: float):
-    """Per-block PixelStats partial over valid pixels (F1 filter:
-    skip val == no_val or NaN, raster-diff/diff.rs:96-98)."""
+def _valid_mask(block: np.ndarray, no_val: float) -> np.ndarray:
+    """Valid pixels (F1 filter: skip val == no_val or NaN,
+    raster-diff/diff.rs:96-98)."""
     valid = ~np.isnan(block)
     if not np.isnan(no_val):
         valid &= block != no_val
-    vals = block[valid]
+    return valid
+
+
+def _block_partial(block: np.ndarray, no_val: float):
+    """Per-block PixelStats partial over valid pixels."""
+    vals = block[_valid_mask(block, no_val)]
     if vals.size == 0:
         return (0.0, np.inf, -np.inf, 0.0, 0.0)
     return (
@@ -140,6 +147,8 @@ def histogram(df: DataFrame, value_col: str, hmin: float, hmax: float,
 
 
 ZONAL_PARTIAL_SCHEMA = f"image_id string, aoi_id string, {PIXEL_STATS_SCHEMA}"
+ZONAL_PARTIAL_COLS = ["image_id", "aoi_id", "count", "min", "max", "sum",
+                      "sum_2"]
 
 
 def zonal_stats(images: DataFrame, aois: pd.DataFrame,
@@ -149,8 +158,8 @@ def zonal_stats(images: DataFrame, aois: pd.DataFrame,
     ``aois`` is a (small) pandas AOI table with packed coordinate buffers
     in *world* coordinates; it is broadcast to every task (J6). Pixel
     centers (+0.5 +0.5, main.rs:74) are mapped to world coords through
-    each image's geo-transform; containment uses the vectorized
-    winding-number test, restricted by a bbox prefilter so only
+    each image's geo-transform; containment runs the scanline test
+    over the window of centres inside each AOI's bbox, so only
     plausibly overlapping polygons pay the exact test.
 
     A pixel contributes to every containing polygon (A4). When
@@ -160,12 +169,11 @@ def zonal_stats(images: DataFrame, aois: pd.DataFrame,
     aoi_rows = _packed_aoi_rows(aois)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["image_id", "aoi_id", "count", "min", "max", "sum", "sum_2"]
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
-                out.extend(_zonal_image_partials(row, aoi_rows, include_whole))
-            yield pd.DataFrame(out, columns=cols)
+                out.extend(_image_zonal_partials(row, aoi_rows, include_whole))
+            yield pd.DataFrame(out, columns=ZONAL_PARTIAL_COLS)
 
     partials = images.mapInPandas(gen, schema=ZONAL_PARTIAL_SCHEMA)
     return with_derived_stats(partials.groupBy("aoi_id").agg(*merge_partials_exprs()))
@@ -173,65 +181,64 @@ def zonal_stats(images: DataFrame, aois: pd.DataFrame,
 
 def _packed_aoi_rows(aois: pd.DataFrame) -> list:
     """(aoi_id, ring_offsets, xs, ys, bbox) tuples from an AOI table —
-    bboxes precomputed once so the per-image loop stays cheap."""
+    bboxes precomputed once so the per-image loop stays cheap. An AOI
+    with no ring of at least 3 vertices contains no pixel centre and
+    is left out."""
     out = []
     for r in aois.itertuples(index=False):
         ro = np.asarray(r.ring_offsets)
         xs = np.asarray(r.xs, dtype=np.float64)
         ys = np.asarray(r.ys, dtype=np.float64)
+        if not (np.diff(np.append(ro, len(xs))) >= 3).any():
+            continue
         out.append((r.aoi_id, ro, xs, ys, geom.polygon_bbox(ro, xs, ys)))
     return out
 
 
-def _zonal_image_partials(row, aoi_rows, include_whole: bool) -> list:
-    """Per-(image, aoi) PixelStats partial tuples for ONE image row
+def _aoi_pixel_values(block: np.ndarray, valid: np.ndarray, gt, row0: int,
+                      aoi_rows):
+    """(aoi_id, values) for each AOI that contains a valid pixel centre
+    of ``block``, whose first row is global row ``row0`` of the raster
+    with geo-transform ``gt`` (pixel centres +0.5 +0.5, main.rs:74).
+    Values come in row-major order, so their sums are bit-equal to a
+    flat filter of the same pixels."""
+    xc, yc = geom.pixel_centers(geom.transform_from_gdal(gt),
+                                block.shape[0], block.shape[1], row0)
+    for aoi_id, rows, cols, mask in geom.centers_in_polygons(
+            xc, yc, aoi_rows):
+        mask &= valid[rows, cols]
+        if mask.any():
+            yield aoi_id, block[rows, cols][mask]
+
+
+def _pixel_stats_row(image_id, aoi_id, v: np.ndarray) -> tuple:
+    return (image_id, aoi_id, float(v.size), float(v.min()),
+            float(v.max()), float(v.sum()), float((v * v).sum()))
+
+
+def zonal_block_partials(image_id, block: np.ndarray, gt, no_val: float,
+                         row0: int, aoi_rows,
+                         include_whole: bool = False) -> list:
+    """Per-(image, aoi) PixelStats partial tuples for one pixel block
     against (aoi_id, ring_offsets, xs, ys, bbox) buffers — the kernel
-    shared by zonal_stats (broadcast AOIs) and zonal_stats_dist
-    (cell-join-pruned AOI subset)."""
-    out = []
-    block = codecs.decode_block(row.bytes, row.h, row.w, row.fmt)
-    t = geom.transform_from_gdal(row.gt)
-    valid = ~np.isnan(block)
-    if not np.isnan(row.no_val):
-        valid &= block != row.no_val
+    of every whole-image (``row0 = 0``) and strip (``row0 =
+    data_start``, data rows only) zonal operator, broadcast or
+    cell-join-pruned AOIs alike. ``include_whole`` adds an ``__all__``
+    partial over every valid pixel."""
+    valid = _valid_mask(block, no_val)
     if not valid.any():
-        return out
-    ii, jj = np.nonzero(valid)
-    vals = block[ii, jj]
-    # pixel centers in world coords
-    wx, wy = geom.transform_points(t, jj + 0.5, ii + 0.5)
-    # bbox padded by half a pixel: a PIXEL-CENTER box can be
-    # degenerate (1-row/1-col/1-pixel images) and the strict
-    # bounds_intersect would then skip every AOI
-    hpx = abs(float(row.gt[1])) / 2.0
-    hpy = abs(float(row.gt[5])) / 2.0
-    img_box = (wx.min() - hpx, wy.min() - hpy,
-               wx.max() + hpx, wy.max() + hpy)
-    if include_whole:
-        out.append((row.image_id, "__all__", float(vals.size),
-                    float(vals.min()), float(vals.max()),
-                    float(vals.sum()), float((vals * vals).sum())))
-    for (aoi_id, ro, xs, ys, box) in aoi_rows:
-        if geom.bounds_intersect(img_box, box) is None:
-            continue
-        # pre-mask to the AOI bbox: the winding test is
-        # O(pixels x edges) — a center outside the AOI's own
-        # bbox can never be inside the polygon
-        cand = ((wx >= box[0]) & (wx <= box[2])
-                & (wy >= box[1]) & (wy <= box[3]))
-        if not cand.any():
-            continue
-        ci = np.nonzero(cand)[0]
-        inside = np.zeros(len(wx), dtype=bool)
-        inside[ci] = geom.points_in_rings(
-            wx[ci], wy[ci], ro, xs, ys)
-        if not inside.any():
-            continue
-        v = vals[inside]
-        out.append((row.image_id, aoi_id, float(v.size),
-                    float(v.min()), float(v.max()),
-                    float(v.sum()), float((v * v).sum())))
+        return []
+    out = [_pixel_stats_row(image_id, "__all__", block[valid])] \
+        if include_whole else []
+    for aoi_id, v in _aoi_pixel_values(block, valid, gt, row0, aoi_rows):
+        out.append(_pixel_stats_row(image_id, aoi_id, v))
     return out
+
+
+def _image_zonal_partials(row, aoi_rows, include_whole: bool) -> list:
+    block = codecs.decode_block(row.bytes, row.h, row.w, row.fmt)
+    return zonal_block_partials(row.image_id, block, row.gt, row.no_val, 0,
+                                aoi_rows, include_whole)
 
 
 def zonal_stats_dist(images: DataFrame, aois: DataFrame, zoom: int = 12,
@@ -262,13 +269,12 @@ def zonal_stats_dist(images: DataFrame, aois: DataFrame, zoom: int = 12,
                     "aoi_id", "ring_offsets", "xs", "ys"))
 
     def kernel(img_pdf: pd.DataFrame, aoi_pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["image_id", "aoi_id", "count", "min", "max", "sum", "sum_2"]
         # deterministic kernel order (output is merge-order-free anyway)
         aoi_rows = _packed_aoi_rows(aoi_pdf.sort_values("aoi_id"))
         out = []
         for row in img_pdf.itertuples(index=False):
-            out.extend(_zonal_image_partials(row, aoi_rows, include_whole))
-        return pd.DataFrame(out, columns=cols)
+            out.extend(_image_zonal_partials(row, aoi_rows, include_whole))
+        return pd.DataFrame(out, columns=ZONAL_PARTIAL_COLS)
 
     partials = images.groupBy("image_id").cogroup(
         cand.groupBy("img_id")) \
@@ -336,9 +342,7 @@ def zonal_stats_rect_weighted(images: DataFrame,
                 gx, psx = float(row.gt[0]), float(row.gt[1])
                 gy, psy = float(row.gt[3]), float(row.gt[5])
                 pa = abs(psx) * abs(psy)
-                valid = ~np.isnan(block)
-                if not np.isnan(row.no_val):
-                    valid &= block != row.no_val
+                valid = _valid_mask(block, row.no_val)
                 if not valid.any():
                     continue
                 ii, jj = np.nonzero(valid)
@@ -461,9 +465,7 @@ def zonal_stats_weighted(images: DataFrame, aois: pd.DataFrame) -> DataFrame:
                 gx, psx = float(row.gt[0]), float(row.gt[1])
                 gy, psy = float(row.gt[3]), float(row.gt[5])
                 pa = abs(psx) * abs(psy)
-                valid = ~np.isnan(block)
-                if not np.isnan(row.no_val):
-                    valid &= block != row.no_val
+                valid = _valid_mask(block, row.no_val)
                 if not valid.any():
                     continue
                 ii, jj = np.nonzero(valid)
@@ -528,48 +530,46 @@ def zonal_majority(images: DataFrame, aois: pd.DataFrame,
     emitting (aoi, cls, count) rows (bounded by zones x classes, not
     pixels), one merge groupBy, then a window over the per-zone class
     table (tiny) for the argmax."""
-    from pyspark.sql import Window
-    from ..operators.vectorize import quantize_classes
-
     aoi_rows = _packed_aoi_rows(aois)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["image_id", "aoi_id", "cls", "count"]
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
                 block = codecs.decode_block(row.bytes, row.h, row.w,
                                             row.fmt)
-                t = geom.transform_from_gdal(row.gt)
-                valid = ~np.isnan(block)
-                if not np.isnan(row.no_val):
-                    valid &= block != row.no_val
-                if not valid.any():
-                    continue
-                ii, jj = np.nonzero(valid)
-                vals = block[ii, jj]
-                cls = quantize_classes(vals, n_classes)
-                wx, wy = geom.transform_points(t, jj + 0.5, ii + 0.5)
-                for (aoi_id, ro, xs, ys, box) in aoi_rows:
-                    cand = ((wx >= box[0]) & (wx <= box[2])
-                            & (wy >= box[1]) & (wy <= box[3]))
-                    if not cand.any():
-                        continue
-                    ci = np.nonzero(cand)[0]
-                    inside = ci[geom.points_in_rings(
-                        wx[ci], wy[ci], ro, xs, ys)]
-                    if len(inside) == 0:
-                        continue
-                    counts = np.bincount(cls[inside],
-                                         minlength=n_classes)
-                    for c in np.nonzero(counts)[0]:
-                        out.append((row.image_id, aoi_id, int(c),
-                                    int(counts[c])))
-            yield pd.DataFrame(out, columns=cols)
+                out.extend(majority_block_partials(
+                    row.image_id, block, row.gt, row.no_val, 0, aoi_rows,
+                    n_classes))
+            yield pd.DataFrame(out, columns=MAJORITY_PARTIAL_COLS)
 
-    partials = images.mapInPandas(
-        gen, schema=("image_id string, aoi_id string, cls int, "
-                     "count long"))
+    return majority_from_partials(
+        images.mapInPandas(gen, schema=MAJORITY_PARTIAL_SCHEMA))
+
+
+MAJORITY_PARTIAL_SCHEMA = "image_id string, aoi_id string, cls int, count long"
+MAJORITY_PARTIAL_COLS = ["image_id", "aoi_id", "cls", "count"]
+
+
+def majority_block_partials(image_id, block: np.ndarray, gt, no_val: float,
+                            row0: int, aoi_rows, n_classes: int) -> list:
+    """(image_id, aoi_id, cls, count) rows for one pixel block — the
+    zonal_block_partials window and mask, then a class bincount."""
+    valid = _valid_mask(block, no_val)
+    if not valid.any():
+        return []
+    out = []
+    for aoi_id, v in _aoi_pixel_values(block, valid, gt, row0, aoi_rows):
+        counts = np.bincount(quantize_classes(v, n_classes),
+                             minlength=n_classes)
+        for c in np.flatnonzero(counts):
+            out.append((image_id, aoi_id, int(c), int(counts[c])))
+    return out
+
+
+def majority_from_partials(partials: DataFrame) -> DataFrame:
+    """Merge (aoi, cls, count) partials and pick each zone's most
+    frequent class, ties to the smallest class id."""
     per_cls = partials.groupBy("aoi_id", "cls") \
                       .agg(F.sum("count").alias("n"))
     w = Window.partitionBy("aoi_id").orderBy(F.col("n").desc(),

@@ -426,3 +426,28 @@ def test_zonal_majority_tie_breaks_to_smallest_class(spark):
     r = S.zonal_majority(imgs, aois, n_classes=4).collect()[0]
     assert r["majority_cls"] == 0 and r["n_majority"] == 8 \
         and r["n_total"] == 16
+
+
+def test_zonal_operators_skip_aoi_without_vertices(spark):
+    """An AOI with no vertices (or no ring of at least 3) contains no
+    pixel centre: zonal_stats, chunked_zonal_stats and zonal_majority
+    leave it out instead of failing, and the other AOIs are unchanged."""
+    from rasters_rs_spark.operators import chunked as C
+
+    images = _images_df(spark, synth.image_table(
+        4, seed=5, h=16, w=16, fmt_cycle=("raw",),
+        extent=(-100, -100, 100, 100), pixel_size=4.0))
+    good = synth.aoi_table(3, seed=6, extent=(-100, -100, 100, 100))
+    bad = pd.DataFrame([
+        {"aoi_id": "empty", "ring_offsets": [0], "xs": [], "ys": []},
+        {"aoi_id": "no_rings", "ring_offsets": [], "xs": [], "ys": []},
+        {"aoi_id": "segment", "ring_offsets": [0], "xs": [-50.0, 50.0],
+         "ys": [-50.0, 50.0]}])
+    aois = pd.concat([good, bad], ignore_index=True)
+    chunks = C.chunk_images(images, min_data_size=16 * 4)
+    for run in (lambda a: S.zonal_stats(images, a),
+                lambda a: C.chunked_zonal_stats(chunks, a),
+                lambda a: S.zonal_majority(images, a)):
+        want = sorted(tuple(r) for r in run(good).collect())
+        got = sorted(tuple(r) for r in run(aois).collect())
+        assert got == want and len(want) > 0
