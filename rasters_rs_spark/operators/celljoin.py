@@ -78,18 +78,14 @@ def rasterize(spark: SparkSession, aois: pd.DataFrame, gt, w: int, h: int,
     prefilter per strip, exactly like the zonal broadcast. Returns
     chunked strip rows (chunked.CHUNK_SCHEMA); assemble with
     chunked.assemble_images when the raster fits one task."""
-    G = geom
+    from .chunked import CHUNK_SCHEMA, _CHUNK_COLS
     gt = [float(v) for v in gt]
     strip_height = max(1, min(strip_height, h))
-    srt = aois.sort_values("aoi_id").reset_index(drop=True)
-    polys = [(k, list(r.ring_offsets),
-              np.asarray(r.xs, dtype=np.float64),
-              np.asarray(r.ys, dtype=np.float64),
-              G.polygon_bbox(r.ring_offsets, r.xs, r.ys))
-             for k, r in enumerate(srt.itertuples(index=False))]
+    srt = aois.sort_values("aoi_id")
+    polys = _burn_polys(srt.assign(ordinal=np.arange(len(srt))))
     winding = _winding(pip_rule)
     n_strips = (h + strip_height - 1) // strip_height
-    t = G.transform_from_gdal(gt)
+    t = geom.transform_from_gdal(gt)
 
     def gen(batches):
         for pdf in batches:
@@ -100,13 +96,16 @@ def rasterize(spark: SparkSession, aois: pd.DataFrame, gt, w: int, h: int,
                                            polys, winding))
             yield pd.DataFrame(out, columns=_CHUNK_COLS)
 
-    from .chunked import CHUNK_SCHEMA
     return spark.range(n_strips).mapInPandas(gen, schema=CHUNK_SCHEMA)
 
 
-_CHUNK_COLS = ["image_id", "chunk_idx", "data_start", "data_end",
-               "load_start", "load_end", "bytes", "w", "h", "fmt",
-               "gt", "crs", "no_val"]
+def _burn_polys(aois: pd.DataFrame) -> list:
+    """(ordinal, ring_offsets, xs, ys, bbox) burn polygons of an AOI
+    table with an ``ordinal`` column, in ascending ordinal order. An AOI
+    with no ring of at least 3 vertices burns no pixel and is left out;
+    the others keep their ordinals."""
+    from .stats import _packed_aoi_rows
+    return _packed_aoi_rows(aois.sort_values("ordinal"), key="ordinal")
 
 
 def _winding(pip_rule: str) -> bool:
@@ -161,12 +160,12 @@ def rasterize_dist(aois: DataFrame, gt, w: int, h: int,
     two-pass distributed rank — no single-partition window): all parts
     of a multipart id burn the same value, which the pandas rasterize
     only matches for unique-id tables (its ordinals are per ROW)."""
+    from .chunked import CHUNK_SCHEMA, _CHUNK_COLS
     spark = aois.sparkSession
-    G = geom
     gt = [float(v) for v in gt]
     strip_height = max(1, min(strip_height, h))
     n_strips = (h + strip_height - 1) // strip_height
-    t = G.transform_from_gdal(gt)
+    t = geom.transform_from_gdal(gt)
     winding = _winding(pip_rule)
 
     if "ordinal" not in aois.columns:
@@ -206,18 +205,12 @@ def rasterize_dist(aois: DataFrame, gt, w: int, h: int,
 
     def kernel(strip_pdf: pd.DataFrame, aoi_pdf: pd.DataFrame) -> pd.DataFrame:
         out = []
-        polys = [(int(r.ordinal), list(r.ring_offsets),
-                  np.asarray(r.xs, dtype=np.float64),
-                  np.asarray(r.ys, dtype=np.float64),
-                  G.polygon_bbox(r.ring_offsets, r.xs, r.ys))
-                 for r in aoi_pdf.sort_values("ordinal")
-                                 .itertuples(index=False)]
+        polys = _burn_polys(aoi_pdf)
         for row in strip_pdf.itertuples(index=False):
             out.append(_burn_strip_row(int(row.sy), strip_height, w, h,
                                        gt, t, polys, winding))
         return pd.DataFrame(out, columns=_CHUNK_COLS)
 
-    from .chunked import CHUNK_SCHEMA
     return strips.groupBy("sy").cogroup(cand.groupBy("_sy")) \
         .applyInPandas(lambda key, a, b_: kernel(a, b_), schema=CHUNK_SCHEMA)
 

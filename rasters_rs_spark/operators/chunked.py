@@ -5,9 +5,16 @@ For rasters too large to hold one-per-row, images explode into
 full-width padded strips keyed by (image_id, chunk_idx). This is the
 distributed form of the reference's physical plan: each chunk row is a
 Spark partition-level work unit (P1/P2), and the alignment diff (J1)
-becomes a chunk-granular equi-join — each A-chunk row joins the B rows
-whose windows it needs, computed from the plan at plan time (the manual
-dynamic-partition-pruning analogue described in SURVEY.md section 4).
+becomes a chunk-granular equi-join — each A-chunk row joins its B
+image, or the B strips whose rows it needs, computed from the plan at
+plan time (the manual dynamic-partition-pruning analogue described in
+SURVEY.md section 4).
+
+A whole image is the one-strip chunk (load_start = data_start = 0,
+data_end = h; ``_strip``), so the chunked operators here are thin
+adapters over the whole-image kernels: the zonal and majority block
+kernels of ``stats``, the diff strip kernel, bin rule, accumulator and
+merge of ``diff``, and the hole and patch kernels of ``knn``.
 
 Memory note: chunk rows duplicate the padding region only (rows
 load_start..data_start and data_end..load_end), so the blow-up over the
@@ -22,11 +29,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions import codecs, geom
+from ..functions import codecs
 from ..plans.chunking import ChunkPlan
 from .stats import (MAJORITY_PARTIAL_COLS, MAJORITY_PARTIAL_SCHEMA,
                     ZONAL_PARTIAL_COLS, ZONAL_PARTIAL_SCHEMA, _block_partial,
-                    _packed_aoi_rows, _valid_mask, majority_block_partials,
+                    _packed_aoi_rows, majority_block_partials,
                     majority_from_partials, merge_partials_exprs,
                     with_derived_stats, zonal_block_partials)
 
@@ -35,6 +42,7 @@ CHUNK_SCHEMA = (
     "load_start long, load_end long, bytes binary, w int, h int, "
     "fmt string, gt array<double>, crs string, no_val double"
 )
+_CHUNK_COLS = [c.split(" ")[0] for c in CHUNK_SCHEMA.split(", ")]
 
 
 def _slice_strip_bytes(data: bytes, ls: int, le: int, w: int,
@@ -51,12 +59,33 @@ def _slice_strip_bytes(data: bytes, ls: int, le: int, w: int,
     raise ValueError(f"unknown block format: {fmt}")
 
 
+def _strip_span(row, prefix: str = ""):
+    """(load_start, data_start, data_end, load_end) of the image or
+    chunk-strip columns of ``row`` named ``prefix + column``. A whole
+    image is the one-strip chunk: load_start = data_start = 0 and
+    data_end = load_end = h."""
+    if not hasattr(row, prefix + "load_start"):
+        h = int(getattr(row, prefix + "h"))
+        return 0, 0, h, h
+    return tuple(int(getattr(row, prefix + c)) for c in
+                 ("load_start", "data_start", "data_end", "load_end"))
+
+
+def _strip(row, prefix: str = ""):
+    """(decoded strip, load_start, data_start, data_end) of the image or
+    chunk-strip columns of ``row`` named ``prefix + column``."""
+    ls, ds, de, le = _strip_span(row, prefix)
+    strip = codecs.decode_block(getattr(row, prefix + "bytes"), le - ls,
+                                getattr(row, prefix + "w"),
+                                getattr(row, prefix + "fmt"))
+    return strip, ls, ds, de
+
+
 def _strip_data(row) -> np.ndarray:
-    """The DATA rows (data_start..data_end) of one chunk-strip row."""
-    strip = codecs.decode_block(
-        row.bytes, row.load_end - row.load_start, row.w, row.fmt)
-    return strip[int(row.data_start) - int(row.load_start):
-                 int(row.data_end) - int(row.load_start)]
+    """The DATA rows (data_start..data_end) of one image or chunk-strip
+    row."""
+    strip, ls, ds, de = _strip(row)
+    return strip[ds - ls:de - ls]
 
 
 def chunk_images(images: DataFrame, min_data_size: int = 0x10000,
@@ -81,10 +110,7 @@ def chunk_images(images: DataFrame, min_data_size: int = 0x10000,
                                                    row.w, row.fmt),
                                 row.w, row.h, row.fmt, list(row.gt),
                                 row.crs, row.no_val))
-            yield pd.DataFrame(out, columns=[
-                "image_id", "chunk_idx", "data_start", "data_end",
-                "load_start", "load_end", "bytes", "w", "h", "fmt",
-                "gt", "crs", "no_val"])
+            yield pd.DataFrame(out, columns=_CHUNK_COLS)
 
     return images.mapInPandas(gen, schema=CHUNK_SCHEMA)
 
@@ -158,70 +184,15 @@ def diff_stats_chunked(a_chunks: DataFrame, b: DataFrame,
                        negate: bool = False,
                        per_pair: bool = False) -> DataFrame:
     """Chunk-granular alignment diff (J1, distributed form): every
-    A-chunk row processes independently against its pair's B image; the
-    partial-stat rows merge in one aggregation. With A chunked, the
-    parallelism unit is the chunk, not the image — the path for rasters
-    whose full block exceeds task memory. For huge-B-side pairs use
-    ``diff_stats_chunked_both`` (both sides chunked, windowed B reads
-    like raster-diff/diff.rs:38-57)."""
-    bb = b.select(
-        F.col(pair_col).alias("pair_id"),
-        *[F.col(c).alias(f"b_{c}") for c in b.columns if c != pair_col],
-    )
-    aa = a_chunks.withColumnRenamed(pair_col, "pair_id")
-    pairs = aa.join(bb, on="pair_id", how="inner")
-
-    from .diff import DIFF_PARTIAL_SCHEMA, _acc, _empty_partial
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                # aggregate over DATA rows only: padding rows are loaded
-                # context shared with adjacent chunks and must not be
-                # double-counted (mirrors chunked_pixel_stats)
-                ds = int(row.data_start)
-                data = _strip_data(row)
-                block_b = codecs.decode_block(row.b_bytes, row.b_h, row.b_w, row.b_fmt)
-                t = geom.transform_between(row.gt, row.b_gt)
-                h_b, w_b = block_b.shape
-                rows_n = data.shape[0]
-                win_b = geom.transform_window(((0, ds), (row.w, rows_n)),
-                                              t, (w_b, h_b))
-                (bx, by), (bw, bh) = win_b
-                sub_b = block_b[by:by + bh, bx:bx + bw]
-                vals = _empty_partial()
-                if data.size and sub_b.size:
-                    ct = geom.chunk_transform(t, (0.5, ds + 0.5),
-                                              (float(bx), float(by)))
-                    valid, i2, j2 = geom.index_transform_grid(
-                        ct, rows_n, row.w, (bw, bh))
-                    mask = valid & _valid_mask(data, row.no_val)
-                    if mask.any():
-                        ii, jj = np.nonzero(mask)
-                        vb = sub_b[i2[ii, jj], j2[ii, jj]]
-                        ok = _valid_mask(vb, row.b_no_val)
-                        va = data[ii[ok], jj[ok]]
-                        vb = vb[ok]
-                        d = vb - va + adjust
-                        if negate:
-                            d = -d
-                        vals["count"] = float(va.size)
-                        _acc(vals, "first", va)
-                        _acc(vals, "second", vb)
-                        _acc(vals, "diff", d)
-                        _acc(vals, "abs_diff", np.abs(d))
-                out.append({"pair_id": row.pair_id, **vals})
-            cols = [c.split(" ")[0] for c in DIFF_PARTIAL_SCHEMA.split(", ")]
-            yield pd.DataFrame(out, columns=cols)
-
-    from .diff import diff_merge_exprs
-    partials = pairs.mapInPandas(gen, schema=DIFF_PARTIAL_SCHEMA)
-    out = (partials.groupBy("pair_id").agg(*diff_merge_exprs()) if per_pair
-           else partials.agg(*diff_merge_exprs()))
-    return out \
-        .withColumn("diff_mean", F.col("diff_sum") / F.col("count")) \
-        .withColumn("diff_std", F.sqrt(F.col("diff_sum_2") / F.col("count")))
+    A-chunk row's DATA rows pair independently against its pair's B
+    image through the one diff strip kernel; the partial-stat rows
+    merge in one aggregation. With A chunked, the parallelism unit is
+    the chunk, not the image — the path for rasters whose full block
+    exceeds task memory. For huge-B-side pairs use
+    ``diff_stats_chunked_both``."""
+    from .diff import _pair_stats, diff_pairs_df
+    return _pair_stats(diff_pairs_df(a_chunks, b, pair_col), adjust,
+                       negate, per_pair)
 
 
 def diff_stats_chunked_both(a_chunks: DataFrame, b_chunks: DataFrame,
@@ -234,78 +205,38 @@ def diff_stats_chunked_both(a_chunks: DataFrame, b_chunks: DataFrame,
     Plan: the B row range each A chunk needs is a plan-time expression
     of the two geo-transforms (north-aligned rasters: row mapping is
     monotonic in y), so the join is pair-key equi + a range-overlap
-    predicate on B's data rows with a +/-1 safety margin. Each A pixel's
-    mapped B row lands in exactly one B chunk's half-open data range,
-    so no pair is double-counted. Exactly equal to the whole-image
-    diff (tested).
+    predicate on B's data rows with a +/-1 safety margin. The diff
+    strip kernel maps each A pixel to GLOBAL B indices and keeps those
+    in the B chunk's half-open data range, so every pair lands in
+    exactly one B chunk and none is double-counted. Exactly equal to
+    the whole-image diff (tested).
+
+    The predicate needs north-up rasters, the reference's gate: a pair
+    whose A or B transform has a rotation term (gt[2] or gt[4] != 0)
+    is refused with an error naming the pair, where a silent predicate
+    would drop pairs. ``diff_stats_chunked`` takes rotated A images.
 
     B chunks are lookup storage, so chunk B with padding=0 (data ranges
     then tile the full height). Padded B chunks follow the reference's
     processed-range clamp: the first/last `padding` rows are context
     only and lookups there are dropped."""
-    bb = b_chunks.select(
-        F.col(pair_col).alias("pair_id"),
-        *[F.col(c).alias(f"b_{c}") for c in b_chunks.columns if c != pair_col],
-    )
-    aa = a_chunks.withColumnRenamed(pair_col, "pair_id")
+    from .diff import _pair_stats, diff_pairs_df
+    gt, b_gt = F.col("gt"), F.col("b_gt")
+    rotated = (gt[2] != 0) | (gt[4] != 0) | (b_gt[2] != 0) | (b_gt[4] != 0)
     # B fractional row of the first/last A data-row center (plan-time
-    # expression over the gt metadata columns; gt[2] == gt[4] == 0 per
-    # the reference's north-aligned gate)
-    fa = (F.col("gt")[3] + (F.col("data_start") + 0.5) * F.col("gt")[5]
-          - F.col("b_gt")[3]) / F.col("b_gt")[5]
-    fb = (F.col("gt")[3] + (F.col("data_end") - 0.5) * F.col("gt")[5]
-          - F.col("b_gt")[3]) / F.col("b_gt")[5]
+    # expression over the gt metadata columns)
+    fa = (gt[3] + (F.col("data_start") + 0.5) * gt[5] - b_gt[3]) / b_gt[5]
+    fb = (gt[3] + (F.col("data_end") - 0.5) * gt[5] - b_gt[3]) / b_gt[5]
     overlap = ((F.col("b_data_start") <= F.greatest(fa, fb) + 1) &
                (F.col("b_data_end") >= F.least(fa, fb) - 1))
-    pairs = aa.join(bb, on="pair_id", how="inner").where(overlap)
-
-    from .diff import DIFF_PARTIAL_SCHEMA, _acc, _empty_partial
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                ds = int(row.data_start)
-                data = _strip_data(row)
-                b_strip = codecs.decode_block(
-                    row.b_bytes, row.b_load_end - row.b_load_start,
-                    row.b_w, row.b_fmt)
-                t = geom.transform_between(row.gt, row.b_gt)
-                rows_n = data.shape[0]
-                vals = _empty_partial()
-                if data.size and b_strip.size:
-                    # GLOBAL B indices (same rounding as the whole-image
-                    # path), then restrict to this B chunk's data rows
-                    ct = geom.chunk_transform(t, (0.5, ds + 0.5), (0.0, 0.0))
-                    valid, i2, j2 = geom.index_transform_grid(
-                        ct, rows_n, row.w, (row.b_w, row.b_h))
-                    bds, bde = int(row.b_data_start), int(row.b_data_end)
-                    valid &= (i2 >= bds) & (i2 < bde)
-                    mask = valid & _valid_mask(data, row.no_val)
-                    if mask.any():
-                        ii, jj = np.nonzero(mask)
-                        bls = int(row.b_load_start)
-                        vb = b_strip[i2[ii, jj] - bls, j2[ii, jj]]
-                        ok = _valid_mask(vb, row.b_no_val)
-                        va = data[ii[ok], jj[ok]]
-                        vb = vb[ok]
-                        d = vb - va
-                        vals["count"] = float(va.size)
-                        _acc(vals, "first", va)
-                        _acc(vals, "second", vb)
-                        _acc(vals, "diff", d)
-                        _acc(vals, "abs_diff", np.abs(d))
-                out.append({"pair_id": row.pair_id, **vals})
-            cols = [c.split(" ")[0] for c in DIFF_PARTIAL_SCHEMA.split(", ")]
-            yield pd.DataFrame(out, columns=cols)
-
-    from .diff import diff_merge_exprs
-    partials = pairs.mapInPandas(gen, schema=DIFF_PARTIAL_SCHEMA)
-    out = (partials.groupBy("pair_id").agg(*diff_merge_exprs()) if per_pair
-           else partials.agg(*diff_merge_exprs()))
-    return out \
-        .withColumn("diff_mean", F.col("diff_sum") / F.col("count")) \
-        .withColumn("diff_std", F.sqrt(F.col("diff_sum_2") / F.col("count")))
+    refuse = F.raise_error(F.concat(
+        F.lit("diff_stats_chunked_both: pair "), F.col("pair_id").cast("string"),
+        F.lit(" has a rotated geo-transform (gt[2] or gt[4] != 0); the "
+              "B-strip predicate needs north-up rasters, use "
+              "diff_stats_chunked")))
+    pairs = diff_pairs_df(a_chunks, b_chunks, pair_col).where(
+        F.when(rotated, refuse).otherwise(overlap))
+    return _pair_stats(pairs, 0.0, False, per_pair)
 
 
 def diff_histogram_chunked(a_chunks: DataFrame, b: DataFrame,
@@ -314,58 +245,14 @@ def diff_histogram_chunked(a_chunks: DataFrame, b: DataFrame,
                            adjust: float = 0.0,
                            negate: bool = False) -> DataFrame:
     """Histogram of diff values with the A side chunked: per-strip bin
-    counts (data rows only), additively merged — bin counts equal the
-    whole-image diff_histogram exactly (counts are integers; the merge
-    is exact). Reference shape: raster-diff bins per chunk inside the
-    rayon fold and merges histograms (main.rs:108-156)."""
-    bb = b.select(
-        F.col(pair_col).alias("pair_id"),
-        *[F.col(c).alias(f"b_{c}") for c in b.columns if c != pair_col],
-    )
-    aa = a_chunks.withColumnRenamed(pair_col, "pair_id")
-    pairs = aa.join(bb, on="pair_id", how="inner")
-    step = (hmax - hmin) / bins
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            acc: dict[int, int] = {}
-            for row in pdf.itertuples(index=False):
-                ds = int(row.data_start)
-                data = _strip_data(row)
-                block_b = codecs.decode_block(row.b_bytes, row.b_h, row.b_w,
-                                              row.b_fmt)
-                t = geom.transform_between(row.gt, row.b_gt)
-                h_b, w_b = block_b.shape
-                rows_n = data.shape[0]
-                (bx, by), (bw, bh) = geom.transform_window(
-                    ((0, ds), (row.w, rows_n)), t, (w_b, h_b))
-                sub_b = block_b[by:by + bh, bx:bx + bw]
-                if not (data.size and sub_b.size):
-                    continue
-                ct = geom.chunk_transform(t, (0.5, ds + 0.5),
-                                          (float(bx), float(by)))
-                valid, i2, j2 = geom.index_transform_grid(
-                    ct, rows_n, row.w, (bw, bh))
-                mask = valid & _valid_mask(data, row.no_val)
-                if not mask.any():
-                    continue
-                ii, jj = np.nonzero(mask)
-                vb = sub_b[i2[ii, jj], j2[ii, jj]]
-                ok = _valid_mask(vb, row.b_no_val)
-                d = vb[ok] - data[ii[ok], jj[ok]] + adjust
-                if negate:
-                    d = -d
-                bn = np.floor((d - hmin) / step).astype(np.int64)
-                bn = np.where(d >= hmax, bins,
-                              np.where(d < hmin, -1, np.minimum(bn, bins)))
-                idx, cnt = np.unique(bn, return_counts=True)
-                for i, c in zip(idx, cnt):
-                    acc[int(i)] = acc.get(int(i), 0) + int(c)
-            yield pd.DataFrame({"bin": list(acc.keys()),
-                                "n": list(acc.values())})
-
-    partials = pairs.mapInPandas(gen, schema="bin long, n long")
-    return partials.groupBy("bin").agg(F.sum("n").alias("n")).orderBy("bin")
+    counts (data rows only, through the one diff strip kernel),
+    additively merged — bin counts equal the whole-image
+    diff_histogram exactly (counts are integers; the merge is exact).
+    Reference shape: raster-diff bins per chunk inside the rayon fold
+    and merges histograms (main.rs:108-156)."""
+    from .diff import _pair_histogram, diff_pairs_df
+    return _pair_histogram(diff_pairs_df(a_chunks, b, pair_col), hmin, hmax,
+                           bins, adjust, negate)
 
 
 def chunked_zonal_stats(chunks: DataFrame, aois: pd.DataFrame) -> DataFrame:

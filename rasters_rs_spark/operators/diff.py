@@ -11,11 +11,20 @@ Semantics (raster-diff/diff.rs:35-121, main.rs:74-168):
   optional diff raster (float64) or discretized i32 raster with bins
   mapped Min->-1, Bin(i)->i, Max->len and no-data -128 (main.rs:117-125).
 
-Spark shape: pair A and B rows with an equi-join on a pair key, then an
-Arrow-batched pandas UDF runs the vectorized alignment per A-chunk
-(ChunkPlan rows keep memory bounded for large blocks) and emits partial
-aggregate rows; one groupBy merges them. The only shuffle is the
-broadcast-or-hash pair join plus the tiny partial-agg merge.
+One strip kernel, ``_strip_pairs``, does every A->B pairing: A's data
+rows with their global first row against a B strip given by its load
+start and data-row range, with global B indices (a whole image is the
+one-strip chunk 0..h). ``align_pairs`` (whole blocks, optionally in
+``chunk_rows`` A strips), the A-chunked ``chunked.diff_stats_chunked``
+/ ``diff_histogram_chunked`` and the both-chunked
+``chunked.diff_stats_chunked_both`` are adapters over it, and one bin
+rule, one partial accumulator and one merge serve all the operators.
+
+Spark shape: pair A and B rows with an equi-join on a pair key
+(``diff_pairs_df``), then an Arrow-batched pandas UDF runs the
+vectorized alignment per row and emits partial aggregate rows; one
+groupBy merges them. The only shuffle is the broadcast-or-hash pair
+join plus the tiny partial-agg merge.
 """
 
 from __future__ import annotations
@@ -26,18 +35,18 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions import codecs, geom
-from ..plans.chunking import ChunkPlan
+from ..functions import geom
+from .chunked import _strip
 from .stats import _valid_mask
+
 _STAT_KEYS = ("first", "second", "diff", "abs_diff")
 
 
 def diff_merge_exprs():
     """The partial->final merge expressions of the diff-stats monoid —
-    shared by diff_stats and both chunked variants so the aggregation
-    can never silently diverge between the whole-image and chunked
-    paths."""
-    from pyspark.sql import functions as F
+    the one merge of diff_stats and both chunked variants (``_pair_stats``),
+    so the aggregation can never diverge between the whole-image and
+    chunked paths."""
     merged = [F.sum("count").alias("count")]
     for k in _STAT_KEYS:
         merged += [
@@ -47,6 +56,7 @@ def diff_merge_exprs():
             F.sum(f"{k}_sum_2").alias(f"{k}_sum_2"),
         ]
     return merged
+
 
 DIFF_PARTIAL_SCHEMA = "pair_id string, count double, " + ", ".join(
     f"{k}_{f} double" for k in _STAT_KEYS for f in ("min", "max", "sum", "sum_2")
@@ -73,70 +83,95 @@ def _acc(vals: dict, key: str, arr: np.ndarray):
     vals[f"{key}_sum_2"] += float((arr * arr).sum())
 
 
-def align_pairs(block_a: np.ndarray, gt_a, no_val_a: float,
-                block_b: np.ndarray, gt_b, no_val_b: float,
-                extent=None, chunk_rows: int | None = None):
-    """Yield (ii, jj, vals_a, vals_b) index/value arrays of aligned valid
-    pixel pairs, chunk by chunk. ``ii``/``jj`` index into block_a.
+def _strip_pairs(a_rows: np.ndarray, row0: int, gt_a, no_val_a: float,
+                 b_strip: np.ndarray, b_load_start: int, b_rows,
+                 gt_b, no_val_b: float, extent=None):
+    """The one A->B pairing kernel: (global A row, A column, va, vb) of
+    the valid pairs between A's data rows ``a_rows`` (first row is
+    global row ``row0``) and a B strip (first row is global row
+    ``b_load_start``; only its data rows ``b_rows = (start, end)`` are
+    looked up). A whole B is the strip 0..h.
 
-    ``extent`` is an optional (ring_offsets, xs, ys) polygon in *world*
-    coords; A pixels outside it are dropped (J3, diff.rs:79-107: the
-    test point is the pixel center expressed in cell-center coordinates).
-    """
+    Each A pixel centre maps to GLOBAL B indices (diff.rs:72-74 chunk
+    transform with the pixel-centre shift and no B offset), so a B
+    strip needs no window of its own: indices are restricted to B's
+    data rows and read at ``i2 - b_load_start``. ``extent`` is an
+    optional (ring_offsets, xs, ys) polygon in *world* coords; A pixels
+    outside it are dropped (J3, diff.rs:79-107: the test point is the
+    pixel center expressed in cell-center coordinates)."""
+    rows, cols = a_rows.shape
     t = geom.transform_between(gt_a, gt_b)
-    h_a, w_a = block_a.shape
-    h_b, w_b = block_b.shape
-    plan = ChunkPlan(w_a, h_a)
-    plan = plan.with_min_data_height(chunk_rows if chunk_rows else h_a)
-
-    ext = None
+    ct = geom.chunk_transform(t, (0.5, row0 + 0.5), (0.0, 0.0))
+    b_start, b_end = b_rows
+    valid, i2, j2 = geom.index_transform_grid(
+        ct, rows, cols, (b_strip.shape[1], b_end))
+    mask = valid & (i2 >= b_start) & _valid_mask(a_rows, no_val_a)
     if extent is not None:
         inv = np.linalg.inv(geom.transform_from_gdal(gt_a))
         ro, xs, ys = extent
         exs, eys = geom.transform_points(inv, np.asarray(xs, dtype=np.float64),
                                          np.asarray(ys, dtype=np.float64))
-        ext = (ro, exs, eys)
+        # extent translated to cell-center coords of these rows
+        mask &= geom.grid_in_rings(
+            np.arange(cols, dtype=np.float64),
+            np.arange(rows, dtype=np.float64), ro,
+            exs - 0.5, eys - (row0 + 0.5))
+    ii, jj = np.nonzero(mask)
+    vb = b_strip[i2[ii, jj] - b_load_start, j2[ii, jj]]
+    ok = _valid_mask(vb, no_val_b)
+    ii, jj = ii[ok], jj[ok]
+    return ii + row0, jj, a_rows[ii, jj], vb[ok]
 
-    for (_, ds, de, ls, le) in plan.chunks():
-        sub = block_a[ls:le]
-        rows, cols = sub.shape
-        if rows == 0:
-            continue
-        # window of B covering this A chunk (diff.rs:38-43)
-        win_b = geom.transform_window(((0, ls), (w_a, rows)), t, (w_b, h_b))
-        (bx, by), (bw, bh) = win_b
-        sub_b = block_b[by:by + bh, bx:bx + bw]
 
-        if sub.size == 0 or sub_b.size == 0:
-            continue  # F4 early exit (diff.rs:67-70)
+def align_pairs(block_a: np.ndarray, gt_a, no_val_a: float,
+                block_b: np.ndarray, gt_b, no_val_b: float,
+                extent=None, chunk_rows: int | None = None):
+    """Yield (ii, jj, vals_a, vals_b) index/value arrays of aligned valid
+    pixel pairs of two whole blocks, A chunk by A chunk (``chunk_rows``
+    rows each, the whole block by default). ``ii``/``jj`` index into
+    block_a. ``extent``: see ``_strip_pairs``."""
+    h_a = block_a.shape[0]
+    step = chunk_rows or h_a or 1
+    for r0 in range(0, h_a, step):
+        yield _strip_pairs(block_a[r0:r0 + step], r0, gt_a, no_val_a,
+                           block_b, 0, (0, block_b.shape[0]),
+                           gt_b, no_val_b, extent)
 
-        # chunk transform with pixel-center shift (diff.rs:72-74)
-        ct = geom.chunk_transform(t, (0.5, ls + 0.5), (float(bx), float(by)))
-        valid_idx, i2, j2 = geom.index_transform_grid(ct, rows, cols, (bw, bh))
 
-        va = sub
-        mask = valid_idx & _valid_mask(va, no_val_a)
+def _row_pairs(row, extent=None, chunk_rows=None):
+    """The valid pairs of one ``diff_pairs_df`` row: a whole A image
+    against a whole B image through ``align_pairs``, or an A chunk
+    strip's DATA rows (padding rows are another strip's, never counted
+    twice) against a whole B or a B chunk strip (columns ``b_*``)."""
+    a, ls, ds, de = _strip(row)
+    b, b_ls, b_ds, b_de = _strip(row, "b_")
+    if not hasattr(row, "data_start"):
+        return align_pairs(a, row.gt, row.no_val, b, row.b_gt,
+                           row.b_no_val, extent, chunk_rows)
+    return [_strip_pairs(a[ds - ls:de - ls], ds, row.gt, row.no_val,
+                         b, b_ls, (b_ds, b_de), row.b_gt, row.b_no_val,
+                         extent)]
 
-        if ext is not None:
-            # extent translated to cell-center coords of this chunk
-            ro, exs, eys = ext
-            mask &= geom.grid_in_rings(
-                np.arange(cols, dtype=np.float64),
-                np.arange(rows, dtype=np.float64), ro,
-                exs - 0.5, eys - (ls + 0.5))
 
-        if not mask.any():
-            continue
-        ii, jj = np.nonzero(mask)
-        vb = sub_b[i2[ii, jj], j2[ii, jj]]
-        ok = _valid_mask(vb, no_val_b)
-        ii, jj = ii[ok], jj[ok]
-        yield ii + ls, jj, sub[ii, jj], vb[ok]
+def _diff(va: np.ndarray, vb: np.ndarray, adjust: float,
+          negate: bool) -> np.ndarray:
+    """diff = b - a + adjust, negated on request (main.rs:109-112)."""
+    d = vb - va + adjust
+    return -d if negate else d
+
+
+def _diff_bins(d: np.ndarray, hmin: float, hmax: float, bins) -> np.ndarray:
+    """The reference histogram bin of each diff: -1 below ``hmin``,
+    ``bins`` at or above ``hmax`` (main.rs:117-125)."""
+    bn = np.floor((d - hmin) / ((hmax - hmin) / bins)).astype(np.int64)
+    return np.where(d >= hmax, bins,
+                    np.where(d < hmin, -1, np.minimum(bn, bins)))
 
 
 def diff_pairs_df(a: DataFrame, b: DataFrame, pair_col: str = "image_id") -> DataFrame:
-    """Join the A and B image tables into one pair table. B columns get a
-    ``b_`` prefix. Catalyst picks broadcast vs shuffle hash."""
+    """Join the A and B image (or chunk-strip) tables into one pair
+    table. B columns get a ``b_`` prefix. Catalyst picks broadcast vs
+    shuffle hash."""
     bb = b.select(
         F.col(pair_col).alias("pair_id"),
         *[F.col(c).alias(f"b_{c}") for c in b.columns if c != pair_col],
@@ -146,36 +181,26 @@ def diff_pairs_df(a: DataFrame, b: DataFrame, pair_col: str = "image_id") -> Dat
     return aa.join(bb, on="pair_id", how="inner")
 
 
-def diff_stats(a: DataFrame, b: DataFrame, pair_col: str = "image_id",
-               adjust: float = 0.0, negate: bool = False,
-               extent=None, chunk_rows: int | None = None,
-               per_pair: bool = False) -> DataFrame:
-    """RasterDiffStats over aligned pairs (A3). Returns one row (or one
-    per pair) with count + {first,second,diff,abs_diff}_{min,max,sum,sum_2}
-    and derived mean/variance/std for the diff."""
-    pairs = diff_pairs_df(a, b, pair_col)
+def _pair_stats(pairs: DataFrame, adjust: float, negate: bool,
+                per_pair: bool, extent=None,
+                chunk_rows: int | None = None) -> DataFrame:
+    """RasterDiffStats of a pair table: one partial row per pair row,
+    merged (per pair on request) with the derived diff mean and std."""
+    cols = [c.split(" ")[0] for c in DIFF_PARTIAL_SCHEMA.split(", ")]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
-                block_a = codecs.decode_block(row.bytes, row.h, row.w, row.fmt)
-                block_b = codecs.decode_block(row.b_bytes, row.b_h, row.b_w, row.b_fmt)
                 vals = _empty_partial()
-                for (_, _, va, vb) in align_pairs(
-                        block_a, row.gt, row.no_val,
-                        block_b, row.b_gt, row.b_no_val,
-                        extent=extent, chunk_rows=chunk_rows):
-                    d = vb - va + adjust
-                    if negate:
-                        d = -d
+                for (_, _, va, vb) in _row_pairs(row, extent, chunk_rows):
+                    d = _diff(va, vb, adjust, negate)
                     vals["count"] += float(va.size)
                     _acc(vals, "first", va)
                     _acc(vals, "second", vb)
                     _acc(vals, "diff", d)
                     _acc(vals, "abs_diff", np.abs(d))
                 out.append({"pair_id": row.pair_id, **vals})
-            cols = [c.split(" ")[0] for c in DIFF_PARTIAL_SCHEMA.split(", ")]
             yield pd.DataFrame(out, columns=cols)
 
     partials = pairs.mapInPandas(gen, schema=DIFF_PARTIAL_SCHEMA)
@@ -188,28 +213,18 @@ def diff_stats(a: DataFrame, b: DataFrame, pair_col: str = "image_id",
               .withColumn("diff_std", F.sqrt(F.col("diff_sum_2") / F.col("count")))
 
 
-def diff_histogram(a: DataFrame, b: DataFrame, hmin: float, hmax: float,
-                   bins: int, pair_col: str = "image_id",
-                   adjust: float = 0.0, negate: bool = False) -> DataFrame:
-    """Histogram of the diff values (A2 over M3), bin -1 = underflow,
-    bin len = overflow; reference histogram bin rule exactly."""
-    pairs = diff_pairs_df(a, b, pair_col)
-    step = (hmax - hmin) / bins
+def _pair_histogram(pairs: DataFrame, hmin: float, hmax: float, bins: int,
+                    adjust: float, negate: bool) -> DataFrame:
+    """Diff histogram of a pair table: per-task bin counts, additively
+    merged (integer counts, so the merge is exact)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             acc: dict[int, int] = {}
             for row in pdf.itertuples(index=False):
-                block_a = codecs.decode_block(row.bytes, row.h, row.w, row.fmt)
-                block_b = codecs.decode_block(row.b_bytes, row.b_h, row.b_w, row.b_fmt)
-                for (_, _, va, vb) in align_pairs(block_a, row.gt, row.no_val,
-                                                  block_b, row.b_gt, row.b_no_val):
-                    d = vb - va + adjust
-                    if negate:
-                        d = -d
-                    bn = np.floor((d - hmin) / step).astype(np.int64)
-                    bn = np.where(d >= hmax, bins, np.where(d < hmin, -1,
-                                  np.minimum(bn, bins)))
+                for (_, _, va, vb) in _row_pairs(row):
+                    bn = _diff_bins(_diff(va, vb, adjust, negate),
+                                    hmin, hmax, bins)
                     idx, cnt = np.unique(bn, return_counts=True)
                     for i, c in zip(idx, cnt):
                         acc[int(i)] = acc.get(int(i), 0) + int(c)
@@ -217,6 +232,26 @@ def diff_histogram(a: DataFrame, b: DataFrame, hmin: float, hmax: float,
 
     partials = pairs.mapInPandas(gen, schema="bin long, n long")
     return partials.groupBy("bin").agg(F.sum("n").alias("n")).orderBy("bin")
+
+
+def diff_stats(a: DataFrame, b: DataFrame, pair_col: str = "image_id",
+               adjust: float = 0.0, negate: bool = False,
+               extent=None, chunk_rows: int | None = None,
+               per_pair: bool = False) -> DataFrame:
+    """RasterDiffStats over aligned pairs (A3). Returns one row (or one
+    per pair) with count + {first,second,diff,abs_diff}_{min,max,sum,sum_2}
+    and derived mean/variance/std for the diff."""
+    return _pair_stats(diff_pairs_df(a, b, pair_col), adjust, negate,
+                       per_pair, extent, chunk_rows)
+
+
+def diff_histogram(a: DataFrame, b: DataFrame, hmin: float, hmax: float,
+                   bins: int, pair_col: str = "image_id",
+                   adjust: float = 0.0, negate: bool = False) -> DataFrame:
+    """Histogram of the diff values (A2 over M3), bin -1 = underflow,
+    bin len = overflow; reference histogram bin rule exactly."""
+    return _pair_histogram(diff_pairs_df(a, b, pair_col), hmin, hmax, bins,
+                           adjust, negate)
 
 
 def diff_raster(a: DataFrame, b: DataFrame, pair_col: str = "image_id",
@@ -234,26 +269,16 @@ def diff_raster(a: DataFrame, b: DataFrame, pair_col: str = "image_id",
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
-                block_a = codecs.decode_block(row.bytes, row.h, row.w, row.fmt)
-                block_b = codecs.decode_block(row.b_bytes, row.b_h, row.b_w, row.b_fmt)
                 if discretize is None:
-                    res = np.full(block_a.shape, np.nan)
+                    res = np.full((row.h, row.w), np.nan)
                 else:
-                    res = np.full(block_a.shape, -128, dtype=np.int32)
-                for (ii, jj, va, vb) in align_pairs(block_a, row.gt, row.no_val,
-                                                    block_b, row.b_gt, row.b_no_val):
-                    d = vb - va + adjust
-                    if negate:
-                        d = -d
+                    res = np.full((row.h, row.w), -128, dtype=np.int32)
+                for (ii, jj, va, vb) in _row_pairs(row):
+                    d = _diff(va, vb, adjust, negate)
                     if discretize is None:
                         res[ii, jj] = d
                     else:
-                        hmin, hmax, bins = discretize
-                        step = (hmax - hmin) / bins
-                        bn = np.floor((d - hmin) / step).astype(np.int64)
-                        bn = np.where(d >= hmax, bins,
-                                      np.where(d < hmin, -1, np.minimum(bn, bins)))
-                        res[ii, jj] = bn.astype(np.int32)
+                        res[ii, jj] = _diff_bins(d, *discretize).astype(np.int32)
                 dtype = "<f8" if discretize is None else "<i4"
                 out.append((row.pair_id, res.astype(dtype).tobytes(),
                             row.w, row.h,

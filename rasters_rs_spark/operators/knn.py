@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import codecs, geom
 from ..sources.io import local_table
+from .chunked import CHUNK_SCHEMA, _CHUNK_COLS, _strip, _strip_span
 
 
 def _with_cell(df: DataFrame, x_col: str, y_col: str, cs: float, prefix: str):
@@ -321,6 +322,117 @@ def idw(values: np.ndarray, dists: np.ndarray, power: float = 2.0) -> np.ndarray
     return est
 
 
+# Output schema of the whole-image fills: the image row plus the
+# number of pixels filled (A11).
+_FILLED_SCHEMA = ("image_id string, bytes binary, w int, h int, fmt string, "
+                  "gt array<double>, crs string, no_val double, filled long")
+_FILLED_COLS = [c.split(" ")[0] for c in _FILLED_SCHEMA.split(", ")]
+
+
+def _hole_centres(rows: np.ndarray, row0: int, gt, no_val: float,
+                  fill_nan: bool):
+    """(global row, column, world x, world y) of each hole pixel of data
+    rows whose first row is global row ``row0``, at the pixel centre.
+    The one hole test: ``val == no_val`` (the reference's literal
+    predicate, interpolation.rs:19), and NaN too with ``fill_nan``."""
+    holes = rows == no_val
+    if fill_nan:
+        holes |= np.isnan(rows)
+    ii, jj = np.nonzero(holes)
+    gi = ii + row0
+    wx, wy = geom.transform_points(geom.transform_from_gdal(gt),
+                                   jj + 0.5, gi + 0.5)
+    return gi, jj, wx, wy
+
+
+def _patch_strip(row, gi: np.ndarray, jj: np.ndarray,
+                 vals: np.ndarray) -> bytes:
+    """The stored bytes of an image or chunk-strip row with ``vals``
+    written at GLOBAL pixels (gi, jj) of its data rows (an image is the
+    one-strip chunk 0..h). Unfilled pixels stay byte-identical and q16
+    fills land on the image-global grid, never a strip-local
+    re-quantize (codecs.patch_block_bytes)."""
+    ls, ds, de, le = _strip_span(row)
+    assert ((gi >= ds) & (gi < de)).all(), \
+        "fill rows outside the strip's data range"
+    return codecs.patch_block_bytes(row.bytes, gi - ls, jj, vals, le - ls,
+                                    row.w, row.fmt)
+
+
+def _fill_images(images: DataFrame, fill_nan: bool, values_at) -> DataFrame:
+    """Shared mapInPandas shape of the broadcast fills (IDW, barycentric,
+    Sibson): decode, locate holes, ``values_at(wx, wy) -> (ok, vals)``
+    at their centres, byte-patch the ``ok`` ones. Emits _FILLED_SCHEMA
+    rows; ``filled`` counts the patched pixels."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for row in pdf.itertuples(index=False):
+                block = codecs.decode_block(row.bytes, row.h, row.w, row.fmt)
+                gi, jj, wx, wy = _hole_centres(block, 0, row.gt, row.no_val,
+                                               fill_nan)
+                data, n = row.bytes, 0
+                if len(gi):
+                    ok, vals = values_at(wx, wy)
+                    n = int(ok.sum())
+                    if n:
+                        data = _patch_strip(row, gi[ok], jj[ok], vals[ok])
+                out.append((row.image_id, data, row.w, row.h, row.fmt,
+                            list(row.gt), row.crs, row.no_val, n))
+            yield pd.DataFrame(out, columns=_FILLED_COLS)
+
+    return images.mapInPandas(gen, schema=_FILLED_SCHEMA)
+
+
+def _patch_cogroup(images: DataFrame, fills: DataFrame, chunked: bool,
+                   fill_vals) -> DataFrame:
+    """Cogroup image (or chunk-strip) rows with their fill rows and patch
+    each row's stored bytes. ``fills`` carries ``_fid`` (the image id,
+    a fresh attribute: fills derive from ``images`` through the hole
+    rows, and shared exprIds across the two cogroup sides trip the
+    ambiguous-self-join check) plus ``chunk_idx`` when chunked;
+    ``fill_vals(rows) -> (gi, jj, vals)`` turns one row's fill rows
+    into global pixel values. Chunked: patched CHUNK_SCHEMA strips
+    (assemble with chunked.assemble_images; padding rows re-duplicate
+    from the patched data there); whole images: _FILLED_SCHEMA."""
+
+    def patch(img_pdf: pd.DataFrame, f_pdf: pd.DataFrame) -> pd.DataFrame:
+        out = []
+        for row in img_pdf.itertuples(index=False):
+            rec = row._asdict()
+            rec["gt"], rec["filled"] = list(row.gt), 0
+            g = f_pdf[f_pdf["_fid"] == row.image_id] if len(f_pdf) else f_pdf
+            if len(g):
+                gi, jj, vals = fill_vals(g)
+                rec["bytes"] = _patch_strip(row, gi, jj, vals)
+                rec["filled"] = len(gi)
+            out.append(rec)
+        return pd.DataFrame(out, columns=_CHUNK_COLS if chunked
+                            else _FILLED_COLS)
+
+    keys = ["image_id", "chunk_idx"] if chunked else ["image_id"]
+    return images.groupBy(*keys).cogroup(
+        fills.groupBy("_fid", *keys[1:])) \
+        .applyInPandas(lambda k, a, b: patch(a, b),
+                       schema=CHUNK_SCHEMA if chunked else _FILLED_SCHEMA)
+
+
+def _knn_idw(nn: pd.DataFrame, power: float):
+    """(pi, pj, idw) of kNN rows (pi, pj, pt_id, dist, z): every hole has
+    the same neighbor count (min(k, N)), folded in (dist, pt_id) order
+    — the order fill_idw's stable sort and the SQL oracle use."""
+    g = nn.sort_values(["pi", "pj", "dist", "pt_id"])
+    counts = g.groupby(["pi", "pj"], sort=True).size()
+    kk = int(counts.iloc[0])
+    assert (counts == kk).all(), "ragged kNN result"
+    dk = g["dist"].to_numpy().reshape(len(counts), kk)
+    vk = g["z"].to_numpy().reshape(len(counts), kk)
+    return (counts.index.get_level_values(0).to_numpy(),
+            counts.index.get_level_values(1).to_numpy(),
+            idw(vk, dk, power))
+
+
 def fill_idw(images: DataFrame, points: pd.DataFrame, k: int = 8,
              power: float = 2.0, fill_nan: bool = False) -> DataFrame:
     """Fill hole pixels by IDW over the k nearest broadcast points.
@@ -332,48 +444,55 @@ def fill_idw(images: DataFrame, points: pd.DataFrame, k: int = 8,
     py = points["y"].to_numpy()
     pz = points["z"].to_numpy()
 
+    def values_at(wx, wy):
+        if len(px) == 0:               # nothing to interpolate from
+            return np.zeros(len(wx), dtype=bool), None
+        ddx = wx[:, None] - px[None, :]
+        ddy = wy[:, None] - py[None, :]
+        d = np.sqrt(ddx * ddx + ddy * ddy)
+        # stable full sort: the k-set AND its accumulation order are
+        # (dist, positional idx) ascending — the exact ordering
+        # knn_join's (dist, pt_id) rank and the SQL oracle's ranked
+        # fold use (argpartition would pick an arbitrary member of a
+        # tie at the k boundary)
+        idx = np.argsort(d, axis=1, kind="stable")[:, :min(k, d.shape[1])]
+        dk = np.take_along_axis(d, idx, axis=1)
+        return np.ones(len(wx), dtype=bool), idw(pz[idx], dk, power)
+
+    return _fill_images(images, fill_nan, values_at)
+
+
+def _hole_rows(images: DataFrame, fill_nan: bool, chunked: bool) -> DataFrame:
+    """The one hole-pixel kernel of hole_pixels and hole_pixels_chunked:
+    each image or strip row emits the holes of its DATA rows with
+    GLOBAL pixel indices and world pixel-centre coordinates."""
+    ids = ["image_id", "chunk_idx"] if chunked else ["image_id"]
+    cols = ids + ["pi", "pj", "x", "y"]
+
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
-                block = codecs.decode_block(row.bytes, row.h, row.w, row.fmt)
-                holes = block == row.no_val
-                if fill_nan:
-                    holes |= np.isnan(block)
-                n = int(holes.sum())
-                if n and len(px) == 0:
-                    n = 0          # nothing to interpolate from
-                data = row.bytes
-                if n:
-                    ii, jj = np.nonzero(holes)
-                    t = geom.transform_from_gdal(row.gt)
-                    wx, wy = geom.transform_points(t, jj + 0.5, ii + 0.5)
-                    ddx = wx[:, None] - px[None, :]
-                    ddy = wy[:, None] - py[None, :]
-                    d = np.sqrt(ddx * ddx + ddy * ddy)
-                    kk = min(k, d.shape[1])
-                    # stable full sort: the k-set AND its accumulation
-                    # order are (dist, positional idx) ascending — the
-                    # exact ordering knn_join's (dist, pt_id) rank and
-                    # the SQL oracle's ranked fold use (argpartition
-                    # would pick an arbitrary member of a tie at the
-                    # k boundary)
-                    idx = np.argsort(d, axis=1, kind="stable")[:, :kk]
-                    dk = np.take_along_axis(d, idx, axis=1)
-                    vk = pz[idx]
-                    data = codecs.patch_block_bytes(
-                        row.bytes, ii, jj, idw(vk, dk, power),
-                        row.h, row.w, row.fmt)
-                out.append((row.image_id, data,
-                            row.w, row.h, row.fmt, list(row.gt), row.crs,
-                            row.no_val, n))
-            yield pd.DataFrame(out, columns=[
-                "image_id", "bytes", "w", "h", "fmt", "gt", "crs",
-                "no_val", "filled"])
+                strip, ls, ds, de = _strip(row)
+                gi, jj, wx, wy = _hole_centres(strip[ds - ls:de - ls], ds,
+                                               row.gt, row.no_val, fill_nan)
+                if len(gi):
+                    out.append(pd.DataFrame({
+                        **{c: getattr(row, c) for c in ids},
+                        "pi": gi, "pj": jj, "x": wx, "y": wy}))
+            yield pd.concat(out) if out else pd.DataFrame(columns=cols)
 
-    schema = ("image_id string, bytes binary, w int, h int, fmt string, "
-              "gt array<double>, crs string, no_val double, filled long")
-    return images.mapInPandas(gen, schema=schema)
+    return images.mapInPandas(
+        gen, schema=("image_id string, " + ("chunk_idx int, " if chunked
+                                            else "")
+                     + "pi long, pj long, x double, y double"))
+
+
+def hole_pixels(images: DataFrame, fill_nan: bool = False) -> DataFrame:
+    """Explode each image's hole pixels (val == no_val, optionally NaN)
+    into point rows (image_id, pi, pj, x, y) with world coordinates at
+    the pixel center — the query side of the distributed fill."""
+    return _hole_rows(images, fill_nan, chunked=False)
 
 
 def hole_pixels_chunked(chunks: DataFrame, fill_nan: bool = False) -> DataFrame:
@@ -383,35 +502,24 @@ def hole_pixels_chunked(chunks: DataFrame, fill_nan: bool = False) -> DataFrame:
     indices, so world coordinates come straight from the image's gt.
     The unit of decode is the strip — the path for rasters whose full
     block exceeds task memory."""
+    return _hole_rows(chunks, fill_nan, chunked=True)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                ls, le = int(row.load_start), int(row.load_end)
-                ds, de = int(row.data_start), int(row.data_end)
-                strip = codecs.decode_block(row.bytes, le - ls, row.w,
-                                            row.fmt)
-                data = strip[ds - ls:de - ls]
-                holes = data == row.no_val
-                if fill_nan:
-                    holes |= np.isnan(data)
-                if not holes.any():
-                    continue
-                ii, jj = np.nonzero(holes)
-                gi = ii + ds                      # global pixel rows
-                t = geom.transform_from_gdal(row.gt)
-                wx, wy = geom.transform_points(t, jj + 0.5, gi + 0.5)
-                out.append(pd.DataFrame({
-                    "image_id": row.image_id,
-                    "chunk_idx": int(row.chunk_idx),
-                    "pi": gi, "pj": jj, "x": wx, "y": wy}))
-            yield (pd.concat(out) if out else pd.DataFrame(
-                columns=["image_id", "chunk_idx", "pi", "pj", "x", "y"]))
 
-    return chunks.mapInPandas(
-        gen, schema="image_id string, chunk_idx int, pi long, pj long, "
-                    "x double, y double")
+def _fill_idw_knn(images: DataFrame, points: DataFrame, k: int,
+                  power: float, fill_nan: bool, cell_size: float,
+                  fast_path_points: int, chunked: bool) -> DataFrame:
+    """hole rows -> distributed knn_join -> per-image (or per-strip)
+    cogroup patch with the strict-fold IDW kernel."""
+    # knn_join partitions by a single query-id column: derive one
+    q = _hole_rows(images, fill_nan, chunked).withColumn(
+        "qid", F.concat_ws(":", "image_id", "pi", "pj"))
+    nn = knn_join(q, points, k=k, cell_size=cell_size, query_id="qid",
+                  fast_path_points=fast_path_points) \
+        .select(F.col("image_id").alias("_fid"),
+                *(["chunk_idx"] if chunked else []),
+                "pi", "pj", "pt_id", "dist", "z")
+    return _patch_cogroup(images, nn, chunked,
+                          lambda g: _knn_idw(g, power))
 
 
 def fill_idw_distributed_chunked(chunks: DataFrame, points: DataFrame,
@@ -432,81 +540,8 @@ def fill_idw_distributed_chunked(chunks: DataFrame, points: DataFrame,
     re-quantize): holes fall in exactly one strip's data range, and
     padding rows are re-duplicated from the patched data by the
     caller's assembly."""
-    q = hole_pixels_chunked(chunks, fill_nan).withColumn(
-        "qid", F.concat_ws(":", "image_id", "pi", "pj"))
-    nn = knn_join(q, points, k=k, cell_size=cell_size, query_id="qid",
-                  fast_path_points=fast_path_points) \
-        .select("image_id", "chunk_idx", "pi", "pj", "pt_id", "dist", "z")
-
-    from .chunked import CHUNK_SCHEMA
-
-    def patch(chunk_pdf: pd.DataFrame, nn_pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        nn_sorted = (nn_pdf.sort_values(["pi", "pj", "dist", "pt_id"])
-                     if len(nn_pdf) else nn_pdf)
-        for row in chunk_pdf.itertuples(index=False):
-            ls, le = int(row.load_start), int(row.load_end)
-            ds, de = int(row.data_start), int(row.data_end)
-            data = row.bytes
-            if len(nn_sorted):
-                # invariant: hole_pixels_chunked only emits data-range
-                # holes and the cogroup key is (image_id, chunk_idx),
-                # so every neighbor row belongs to THIS strip's data rows
-                g = nn_sorted
-                counts = g.groupby(["pi", "pj"], sort=True).size()
-                kk = int(counts.iloc[0])
-                assert (counts == kk).all(), "ragged kNN result"
-                gi = counts.index.get_level_values(0).to_numpy()
-                assert ((gi >= ds) & (gi < de)).all(), \
-                    "neighbor rows outside the strip's data range"
-                jj = counts.index.get_level_values(1).to_numpy()
-                dk = g["dist"].to_numpy().reshape(len(counts), kk)
-                vk = g["z"].to_numpy().reshape(len(counts), kk)
-                # patch codes into the stored strip bytes: unfilled
-                # pixels stay byte-identical and q16 fills land on the
-                # image-global grid (never a strip-local re-quantize)
-                data = codecs.patch_block_bytes(
-                    row.bytes, gi - ls, jj, idw(vk, dk, power),
-                    le - ls, row.w, row.fmt)
-            out.append((row.image_id, int(row.chunk_idx), ds, de, ls, le,
-                        data, row.w, row.h,
-                        row.fmt, list(row.gt), row.crs, row.no_val))
-        return pd.DataFrame(out, columns=[
-            "image_id", "chunk_idx", "data_start", "data_end",
-            "load_start", "load_end", "bytes", "w", "h", "fmt", "gt",
-            "crs", "no_val"])
-
-    return chunks.groupBy("image_id", "chunk_idx").cogroup(
-        nn.groupBy("image_id", "chunk_idx")) \
-        .applyInPandas(lambda key, a, b: patch(a, b), schema=CHUNK_SCHEMA)
-
-
-def hole_pixels(images: DataFrame, fill_nan: bool = False) -> DataFrame:
-    """Explode each image's hole pixels (val == no_val, optionally NaN)
-    into point rows (image_id, pi, pj, x, y) with world coordinates at
-    the pixel center — the query side of the distributed fill."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                block = codecs.decode_block(row.bytes, row.h, row.w, row.fmt)
-                holes = block == row.no_val
-                if fill_nan:
-                    holes |= np.isnan(block)
-                if not holes.any():
-                    continue
-                ii, jj = np.nonzero(holes)
-                t = geom.transform_from_gdal(row.gt)
-                wx, wy = geom.transform_points(t, jj + 0.5, ii + 0.5)
-                out.append(pd.DataFrame({
-                    "image_id": row.image_id, "pi": ii, "pj": jj,
-                    "x": wx, "y": wy}))
-            yield (pd.concat(out) if out else pd.DataFrame(
-                columns=["image_id", "pi", "pj", "x", "y"]))
-
-    return images.mapInPandas(
-        gen, schema="image_id string, pi long, pj long, x double, y double")
+    return _fill_idw_knn(chunks, points, k, power, fill_nan, cell_size,
+                         fast_path_points, chunked=True)
 
 
 def fill_idw_distributed(images: DataFrame, points: DataFrame, k: int = 8,
@@ -529,47 +564,8 @@ def fill_idw_distributed(images: DataFrame, points: DataFrame, k: int = 8,
 
     ``points``: DataFrame with (pt_id string, x, y, z). Returns the
     fill_idw schema (filled image rows + per-image filled count)."""
-    # knn_join partitions by a single query-id column: derive one
-    q = hole_pixels(images, fill_nan).withColumn(
-        "qid", F.concat_ws(":", "image_id", "pi", "pj"))
-    nn = knn_join(q, points, k=k, cell_size=cell_size, query_id="qid",
-                  fast_path_points=fast_path_points) \
-        .select("image_id", "pi", "pj", "pt_id", "dist", "z")
-
-    out_schema = ("image_id string, bytes binary, w int, h int, fmt string, "
-                  "gt array<double>, crs string, no_val double, filled long")
-
-    def patch(img_pdf: pd.DataFrame, nn_pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        nn_by_img = (nn_pdf.sort_values(["pi", "pj", "dist", "pt_id"])
-                     if len(nn_pdf) else nn_pdf)
-        for row in img_pdf.itertuples(index=False):
-            n = 0
-            data = row.bytes
-            if len(nn_by_img):
-                g = nn_by_img[nn_by_img["image_id"] == row.image_id]
-                if len(g):
-                    # every hole has the same neighbor count (min(k, N))
-                    counts = g.groupby(["pi", "pj"], sort=True).size()
-                    kk = int(counts.iloc[0])
-                    assert (counts == kk).all(), "ragged kNN result"
-                    n = len(counts)
-                    ii = counts.index.get_level_values(0).to_numpy()
-                    jj = counts.index.get_level_values(1).to_numpy()
-                    dk = g["dist"].to_numpy().reshape(n, kk)
-                    vk = g["z"].to_numpy().reshape(n, kk)
-                    data = codecs.patch_block_bytes(
-                        row.bytes, ii, jj, idw(vk, dk, power),
-                        row.h, row.w, row.fmt)
-            out.append((row.image_id, data,
-                        row.w, row.h, row.fmt, list(row.gt), row.crs,
-                        row.no_val, n))
-        return pd.DataFrame(out, columns=[
-            "image_id", "bytes", "w", "h", "fmt", "gt", "crs",
-            "no_val", "filled"])
-
-    return images.groupBy("image_id").cogroup(nn.groupBy("image_id")) \
-        .applyInPandas(lambda ik, a, b: patch(a, b), schema=out_schema)
+    return _fill_idw_knn(images, points, k, power, fill_nan, cell_size,
+                         fast_path_points, chunked=False)
 
 
 # ---------------------------------------------------------------------------
@@ -1234,45 +1230,22 @@ def sibson_c1_discrete(spark, sites: DataFrame, queries: DataFrame,
 def _fill_with_triangles(images: DataFrame, points: pd.DataFrame,
                          triangles: np.ndarray, fill_nan: bool,
                          interp) -> DataFrame:
-    """Shared mapInPandas shape of the triangulation-backed fills
-    (barycentric / Sibson): decode, hole-locate, interpolate at pixel
-    centers, byte-patch. Unfilled (outside-hull) pixels stay
-    byte-identical; q16 re-encodes on the image-global grid."""
+    """The broadcast fill shape of the triangulation-backed fills
+    (barycentric / Sibson): interpolate at the hole centres; holes
+    whose value is NaN (outside the hull) stay byte-identical and are
+    not counted."""
     px = points["x"].to_numpy()
     py = points["y"].to_numpy()
     pz = points["z"].to_numpy()
     tris = np.asarray(triangles, dtype=np.int64)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                block = codecs.decode_block(row.bytes, row.h, row.w, row.fmt)
-                holes = block == row.no_val
-                if fill_nan:
-                    holes |= np.isnan(block)
-                data = row.bytes
-                n = 0
-                if holes.any() and len(px):
-                    ii, jj = np.nonzero(holes)
-                    t = geom.transform_from_gdal(row.gt)
-                    wx, wy = geom.transform_points(t, jj + 0.5, ii + 0.5)
-                    vals = interp(wx, wy, px, py, pz, tris)
-                    ok = ~np.isnan(vals)
-                    n = int(ok.sum())
-                    if n:
-                        data = codecs.patch_block_bytes(
-                            row.bytes, ii[ok], jj[ok], vals[ok],
-                            row.h, row.w, row.fmt)
-                out.append((row.image_id, data, row.w, row.h, row.fmt,
-                            list(row.gt), row.crs, row.no_val, n))
-            yield pd.DataFrame(out, columns=[
-                "image_id", "bytes", "w", "h", "fmt", "gt", "crs",
-                "no_val", "filled"])
+    def values_at(wx, wy):
+        if len(px) == 0:
+            return np.zeros(len(wx), dtype=bool), None
+        vals = interp(wx, wy, px, py, pz, tris)
+        return ~np.isnan(vals), vals
 
-    schema = ("image_id string, bytes binary, w int, h int, fmt string, "
-              "gt array<double>, crs string, no_val double, filled long")
-    return images.mapInPandas(gen, schema=schema)
+    return _fill_images(images, fill_nan, values_at)
 
 
 def fill_barycentric(images: DataFrame, points: pd.DataFrame,
@@ -1605,7 +1578,7 @@ def _fill_dist_tri_core(images: DataFrame, points: DataFrame,
     t = t.select("x1", "y1", "z1", "x2", "y2", "z2", "x3", "y3", "z3",
                  *gcols, "tcx", "tcy")
 
-    q = (hole_pixels_chunked if chunked else hole_pixels)(images, fill_nan)
+    q = _hole_rows(images, fill_nan, chunked)
     q = q.withColumn("qcx", F.floor(F.col("x") / cs).cast("long")) \
          .withColumn("qcy", F.floor(F.col("y") / cs).cast("long"))
     id_cols = ["image_id", "chunk_idx"] if chunked else ["image_id"]
@@ -1651,64 +1624,8 @@ def _fill_dist_tri_core(images: DataFrame, points: DataFrame,
     fills = q.groupBy("qcx", "qcy").cogroup(t.groupBy("tcx", "tcy")) \
         .applyInPandas(lambda k, a, b: cell_kernel(k, a, b),
                        schema=fills_schema)
-    # fresh attribute for the patch cogroup key: fills derives from
-    # images (hole_pixels), and sharing exprIds across the two cogroup
-    # sides trips the ambiguous-self-join check
     fills = fills.select(F.col("image_id").alias("_fid"),
                          *(["chunk_idx"] if chunked else []),
                          "pi", "pj", "val")
-
-    if chunked:
-        from .chunked import CHUNK_SCHEMA
-
-        def patch_strip(chunk_pdf: pd.DataFrame,
-                        f_pdf: pd.DataFrame) -> pd.DataFrame:
-            out = []
-            for row in chunk_pdf.itertuples(index=False):
-                ls, le = int(row.load_start), int(row.load_end)
-                ds, de = int(row.data_start), int(row.data_end)
-                data = row.bytes
-                if len(f_pdf):
-                    # hole_pixels_chunked emits data-range holes only
-                    # and the cogroup key is (image_id, chunk_idx), so
-                    # every fill row belongs to THIS strip
-                    gi = f_pdf["pi"].to_numpy()
-                    assert ((gi >= ds) & (gi < de)).all(), \
-                        "fill rows outside the strip's data range"
-                    data = codecs.patch_block_bytes(
-                        row.bytes, gi - ls, f_pdf["pj"].to_numpy(),
-                        f_pdf["val"].to_numpy(), le - ls, row.w, row.fmt)
-                out.append((row.image_id, int(row.chunk_idx), ds, de,
-                            ls, le, data, row.w, row.h, row.fmt,
-                            list(row.gt), row.crs, row.no_val))
-            return pd.DataFrame(out, columns=[
-                "image_id", "chunk_idx", "data_start", "data_end",
-                "load_start", "load_end", "bytes", "w", "h", "fmt",
-                "gt", "crs", "no_val"])
-
-        return images.groupBy("image_id", "chunk_idx").cogroup(
-            fills.groupBy("_fid", "chunk_idx")) \
-            .applyInPandas(lambda k, a, b: patch_strip(a, b),
-                           schema=CHUNK_SCHEMA)
-
-    out_schema = ("image_id string, bytes binary, w int, h int, fmt string, "
-                  "gt array<double>, crs string, no_val double, filled long")
-
-    def patch(img_pdf: pd.DataFrame, f_pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for row in img_pdf.itertuples(index=False):
-            g = f_pdf[f_pdf["_fid"] == row.image_id] if len(f_pdf) else f_pdf
-            data = row.bytes
-            n = len(g)
-            if n:
-                data = codecs.patch_block_bytes(
-                    row.bytes, g["pi"].to_numpy(), g["pj"].to_numpy(),
-                    g["val"].to_numpy(), row.h, row.w, row.fmt)
-            out.append((row.image_id, data, row.w, row.h, row.fmt,
-                        list(row.gt), row.crs, row.no_val, n))
-        return pd.DataFrame(out, columns=[
-            "image_id", "bytes", "w", "h", "fmt", "gt", "crs",
-            "no_val", "filled"])
-
-    return images.groupBy("image_id").cogroup(fills.groupBy("_fid")) \
-        .applyInPandas(lambda k, a, b: patch(a, b), schema=out_schema)
+    return _patch_cogroup(images, fills, chunked, lambda g: (
+        g["pi"].to_numpy(), g["pj"].to_numpy(), g["val"].to_numpy()))

@@ -179,11 +179,11 @@ def zonal_stats(images: DataFrame, aois: pd.DataFrame,
     return with_derived_stats(partials.groupBy("aoi_id").agg(*merge_partials_exprs()))
 
 
-def _packed_aoi_rows(aois: pd.DataFrame) -> list:
-    """(aoi_id, ring_offsets, xs, ys, bbox) tuples from an AOI table —
-    bboxes precomputed once so the per-image loop stays cheap. An AOI
-    with no ring of at least 3 vertices contains no pixel centre and
-    is left out."""
+def _packed_aoi_rows(aois: pd.DataFrame, key: str = "aoi_id") -> list:
+    """(key, ring_offsets, xs, ys, bbox) tuples from an AOI table, keyed
+    by its ``key`` column — bboxes precomputed once so the per-image
+    loop stays cheap. An AOI with no ring of at least 3 vertices
+    contains no pixel centre and is left out."""
     out = []
     for r in aois.itertuples(index=False):
         ro = np.asarray(r.ring_offsets)
@@ -191,7 +191,8 @@ def _packed_aoi_rows(aois: pd.DataFrame) -> list:
         ys = np.asarray(r.ys, dtype=np.float64)
         if not (np.diff(np.append(ro, len(xs))) >= 3).any():
             continue
-        out.append((r.aoi_id, ro, xs, ys, geom.polygon_bbox(ro, xs, ys)))
+        out.append((getattr(r, key), ro, xs, ys,
+                    geom.polygon_bbox(ro, xs, ys)))
     return out
 
 

@@ -185,6 +185,30 @@ def test_rasterize_dist_equals_broadcast(spark):
     assert np.isfinite(burned).sum() > 0
 
 
+def test_rasterize_skips_aoi_without_vertices(spark):
+    """An AOI with no vertices burns no pixel and no longer crashes
+    rasterize (polygon_bbox raised "zero-size array to reduction
+    operation minimum"); the other AOIs keep their ordinals, so the
+    square, second in aoi_id order, burns 1. rasterize_dist agrees."""
+    from rasters_rs_spark.operators import celljoin as CJ
+
+    aois = pd.DataFrame([
+        {"aoi_id": "a", "ring_offsets": [0], "xs": [], "ys": []},
+        {"aoi_id": "b", "ring_offsets": [0], "xs": [2.0, 6.0, 6.0, 2.0],
+         "ys": [2.0, 2.0, 6.0, 6.0]}])
+    gt = [0.0, 1.0, 0.0, 0.0, 0.0, 1.0]
+    want = np.full((8, 8), np.nan)
+    want[2:6, 2:6] = 1.0          # centres (j + 0.5, i + 0.5) in the square
+    for out in (CJ.rasterize(spark, aois, gt, 8, 8, strip_height=3),
+                CJ.rasterize_dist(_aoi_df(spark, aois), gt, 8, 8,
+                                  strip_height=3, zoom=10)):
+        rows = sorted(out.collect(), key=lambda r: r["chunk_idx"])
+        got = np.concatenate([
+            np.frombuffer(bytes(r["bytes"]), dtype="<f8").reshape(-1, 8)
+            for r in rows])
+        np.testing.assert_array_equal(got, want)
+
+
 def test_cell_pip_join_cogroup_refine_parquet_catalog(spark, tmp_path):
     """The shuffled-catalog path (broadcast_aois=False -> slim
     candidate join + per-(part, salt) cogroup refine; ring buffers

@@ -133,6 +133,44 @@ def test_both_sides_chunked_diff_equals_whole(spark):
         assert got["second_sum"] == pytest.approx(whole["second_sum"], rel=1e-12)
 
 
+def test_both_sides_chunked_diff_refuses_rotated_pair(spark):
+    """diff_stats_chunked_both's plan-time B-strip predicate assumes
+    north-up rasters. On A 32x32 at gt [0,1,0,0,0.5,1] (a y-shear per
+    column) in 8-row strips against B 16x16 at [-8,4,0,-8,0,4] in 4-row
+    strips it silently dropped 128 of the 1024 pairs; a pair with a
+    rotation term on either side is refused by name instead. The
+    A-chunked diff has no predicate and still equals the whole-image
+    diff on the rotated A."""
+    rng = np.random.default_rng(0x207)
+
+    def img(iid, h, w, gt):
+        return spark.createDataFrame(pd.DataFrame([{
+            "image_id": iid, "bytes": codecs.encode_raw(rng.normal(size=(h, w))),
+            "w": w, "h": h, "fmt": "raw", "gt": gt,
+            "crs": "IDENTITY", "no_val": float("nan")}]))
+
+    a = img("rot0", 32, 32, [0.0, 1.0, 0.0, 0.0, 0.5, 1.0])
+    b = img("rot0", 16, 16, [-8.0, 4.0, 0.0, -8.0, 0.0, 4.0])
+    whole = D.diff_stats(a, b).collect()[0]
+    assert whole["count"] == 1024
+    a_chunks = C.chunk_images(a, min_data_size=32 * 8)
+    chunked = C.diff_stats_chunked(a_chunks, b).collect()[0]
+    for k in ("count", "diff_min", "diff_max", "first_min", "second_max"):
+        assert chunked[k] == whole[k], k
+    assert chunked["diff_sum"] == pytest.approx(whole["diff_sum"], rel=1e-12)
+
+    b_chunks = C.chunk_images(b, min_data_size=16 * 4)
+    with pytest.raises(Exception, match="pair rot0 has a rotated"):
+        C.diff_stats_chunked_both(a_chunks, b_chunks).collect()
+    # a rotated B is refused too, with a north-up A
+    north = C.chunk_images(img("rot1", 32, 32, [0.0, 1.0, 0.0, 0.0, 0.0, 1.0]),
+                           min_data_size=32 * 8)
+    b_rot = C.chunk_images(img("rot1", 16, 16, [-8.0, 4.0, 0.5, -8.0, 0.0, 4.0]),
+                           min_data_size=16 * 4)
+    with pytest.raises(Exception, match="pair rot1 has a rotated"):
+        C.diff_stats_chunked_both(north, b_rot).collect()
+
+
 def test_chunked_diff_histogram_equals_whole(spark):
     """Chunked histogram bin counts are integers merged additively —
     exactly equal to the whole-image diff_histogram."""

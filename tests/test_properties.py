@@ -550,3 +550,71 @@ def test_zonal_block_kernel_memory_bound():
         tracemalloc.stop()
     assert out and 0.75 * 256 * 256 < out[0][2] < 256 * 256
     assert peak < 8 * 2**20, peak
+
+
+# Binary-exact geo-transform terms: every product and sum the diff
+# kernel forms stays exact, so pixel centres that land exactly on a B
+# pixel edge (frequent here) round the same way in every strip.
+_SCALES = st.sampled_from([0.25, 0.5, 1.0, 2.0, -0.5, -1.0, -2.0])
+_B_SCALES = st.sampled_from([0.5, 1.0, 2.0, 4.0, -1.0, -2.0, -4.0])
+_ORIGINS = st.integers(-64, 64).map(lambda v: v / 4.0)
+_SHEARS = st.sampled_from([0.0, 0.25, -0.25, 0.5, -0.5])
+
+
+@given(st.data())
+@settings(max_examples=150, deadline=None)
+def test_diff_strip_kernel_strips_equal_whole_image(data):
+    """The union of the diff strip kernel's pairs over A strips x B
+    strips equals the whole-image pairs restricted to the rows the
+    ChunkPlan padding clamp leaves processed on each side, with no pair
+    found twice. A is north-up or rotated, B north-up; NaN and no-data
+    pixels on both sides."""
+    from rasters_rs_spark.operators.diff import _strip_pairs, align_pairs
+
+    rng = np.random.default_rng(data.draw(st.integers(0, 2**32 - 1)))
+    h_a, w_a = data.draw(st.integers(1, 24)), data.draw(st.integers(1, 24))
+    h_b, w_b = data.draw(st.integers(1, 16)), data.draw(st.integers(1, 16))
+    rotated = data.draw(st.booleans())
+    gt_a = [data.draw(_ORIGINS), data.draw(_SCALES),
+            data.draw(_SHEARS) if rotated else 0.0,
+            data.draw(_ORIGINS),
+            data.draw(_SHEARS) if rotated else 0.0, data.draw(_SCALES)]
+    gt_b = [data.draw(_ORIGINS), data.draw(_B_SCALES), 0.0,
+            data.draw(_ORIGINS), 0.0, data.draw(_B_SCALES)]
+    nv_a, nv_b = -9.0, 7.0
+    a = rng.normal(size=(h_a, w_a))
+    b = rng.normal(size=(h_b, w_b))
+    a[rng.random(a.shape) < 0.1] = np.nan
+    a[rng.random(a.shape) < 0.1] = nv_a
+    b[rng.random(b.shape) < 0.1] = np.nan
+    b[rng.random(b.shape) < 0.1] = nv_b
+
+    def strips(w, h):
+        plan = (ChunkPlan(w, h)
+                .with_min_data_height(data.draw(st.integers(1, 8)))
+                .with_padding(data.draw(st.integers(0, 3))))
+        return [(ds, de, ls, le) for (_, ds, de, ls, le) in plan.chunks()]
+
+    a_strips, b_strips = strips(w_a, h_a), strips(w_b, h_b)
+    got = []
+    for (ds, de, ls, le) in a_strips:
+        a_strip = a[ls:le]
+        for (bds, bde, bls, ble) in b_strips:
+            for arr in zip(*_strip_pairs(
+                    a_strip[ds - ls:de - ls], ds, gt_a, nv_a,
+                    b[bls:ble], bls, (bds, bde), gt_b, nv_b)):
+                got.append(tuple(float(v) for v in arr))
+
+    # whole-image oracle: rows outside the processed ranges are no-data
+    def processed(block, spans):
+        out = np.full(block.shape, np.nan)
+        for (ds, de, _, _) in spans:
+            out[ds:de] = block[ds:de]
+        return out
+
+    want = [tuple(float(v) for v in arr)
+            for pairs in align_pairs(processed(a, a_strips), gt_a, nv_a,
+                                     processed(b, b_strips), gt_b, nv_b)
+            for arr in zip(*pairs)]
+    assert len(set(got)) == len(got)
+    assert sorted(got) == sorted(want)
