@@ -720,15 +720,14 @@ def _q_zonal_chunked_dist(spark, sf_dir):
     catalog: strip-bbox cells x aoi cells -> cogrouped shared kernel)
     against the SAME edge-for-edge PIP oracle as zonal_stats_synth —
     LCG dyadic pixels make the strip-partial merge order-free."""
-    from rasters_rs_spark.operators.chunked import (chunk_images,
-                                                    chunked_zonal_stats_dist)
+    from rasters_rs_spark.operators.chunked import chunk_images
     images = spark.createDataFrame(synth.lcg_image_table(32))
     chunks = chunk_images(images, min_data_size=32 * 8)
     aois = synth.aoi_table(8, seed=43, extent=_ZONAL_AOI_EXTENT)
     adf = spark.createDataFrame(
         aois[["aoi_id", "ring_offsets", "xs", "ys"]],
         schema=celljoin.AOI_SCHEMA)
-    return chunked_zonal_stats_dist(chunks, adf, zoom=12)
+    return stats.zonal_stats_dist(chunks, adf, zoom=12)
 
 
 def _q_image_stats(spark, sf_dir):
@@ -1292,7 +1291,7 @@ def _q_fill_barycentric_dist(spark, sf_dir):
 def _q_fill_barycentric_chunked(spark, sf_dir):
     """The FULLY chunked triangulation fill (round-6): the same
     fixture strip-decomposed (chunked.chunk_images, 8-row strips)
-    through fill_barycentric_distributed_chunked — no task decodes a
+    through fill_barycentric_distributed — no task decodes a
     whole image AND no broadcast triangle table — then reassembled.
     Byte-identity with the whole-image distributed fill means the SAME
     bit-exact embedded-triangle oracle as fill_barycentric_dist_synth
@@ -1303,7 +1302,7 @@ def _q_fill_barycentric_chunked(spark, sf_dir):
     images = spark.createDataFrame(pdf)
     points = spark.createDataFrame(_bdist_points())
     strips = CH.chunk_images(images, min_data_size=32 * 8)
-    patched = knn.fill_barycentric_distributed_chunked(
+    patched = knn.fill_barycentric_distributed(
         strips, points, cell_size=_BDIST_CS)
     return _explode_pixels(CH.assemble_images(patched))
 
@@ -3264,7 +3263,7 @@ def _q_lcg_diff_chunked(spark, sf_dir):
         synth.lcg_image_table(32, 16, 16, 4.0, k_offset=10_000_000))
     a_chunks = C.chunk_images(a, min_data_size=32 * 8)   # 8-row strips
     b_chunks = C.chunk_images(b, min_data_size=16 * 4)   # 4-row strips
-    return C.diff_stats_chunked_both(a_chunks, b_chunks, per_pair=True)
+    return diff.diff_stats(a_chunks, b_chunks, per_pair=True)
 
 
 def _focal_images(spark):
@@ -3283,7 +3282,7 @@ def _q_focal(spark, op):
                                                     chunk_images)
     chunks = chunk_images(_focal_images(spark), min_data_size=32 * 8,
                           padding=1)
-    out = assemble_images(FO.focal_chunked(chunks, op))
+    out = assemble_images(FO.focal(chunks, op))
     return _explode_pixels(out) \
         .where(F.col("v").isNotNull() & ~F.isnan("v")) \
         .select("image_id", "i", "j", "v")

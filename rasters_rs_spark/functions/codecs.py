@@ -110,6 +110,46 @@ def encode_block(block: np.ndarray, fmt: str) -> bytes:
     raise ValueError(f"unknown block format: {fmt}")
 
 
+# An image row is the one-strip chunk of its table: the readers below
+# serve image rows and chunk-strip rows (chunked.chunk_images) alike.
+
+
+def _strip_keys(columns) -> list:
+    """Row keys of a table with ``columns``: ``image_id``, plus
+    ``chunk_idx`` for a chunk-strip table."""
+    return ["image_id", "chunk_idx"] if "chunk_idx" in columns \
+        else ["image_id"]
+
+
+def _strip_span(row, prefix: str = ""):
+    """(load_start, data_start, data_end, load_end) of the image or
+    chunk-strip columns of ``row`` named ``prefix + column``. A whole
+    image is the one-strip chunk: load_start = data_start = 0 and
+    data_end = load_end = h."""
+    if not hasattr(row, prefix + "load_start"):
+        h = int(getattr(row, prefix + "h"))
+        return 0, 0, h, h
+    return tuple(int(getattr(row, prefix + c)) for c in
+                 ("load_start", "data_start", "data_end", "load_end"))
+
+
+def _strip(row, prefix: str = ""):
+    """(decoded strip, load_start, data_start, data_end) of the image or
+    chunk-strip columns of ``row`` named ``prefix + column``."""
+    ls, ds, de, le = _strip_span(row, prefix)
+    strip = decode_block(getattr(row, prefix + "bytes"), le - ls,
+                         getattr(row, prefix + "w"),
+                         getattr(row, prefix + "fmt"))
+    return strip, ls, ds, de
+
+
+def _strip_data(row):
+    """(DATA rows data_start..data_end, data_start) of one image or
+    chunk-strip row."""
+    strip, ls, ds, de = _strip(row)
+    return strip[ds - ls:de - ls], ds
+
+
 def patch_block_bytes(original: bytes, ii: np.ndarray, jj: np.ndarray,
                       values: np.ndarray, h: int, w: int, fmt: str) -> bytes:
     """Write ``values`` at pixel positions (ii, jj) INTO the original

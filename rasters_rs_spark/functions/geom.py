@@ -151,16 +151,20 @@ def chunk_transform(t: np.ndarray, off_1, off_2) -> np.ndarray:
     return out
 
 
-def index_transform_grid(chunk_t: np.ndarray, rows: int, cols: int, dims):
+def index_transform_grid(chunk_t: np.ndarray, rows: int, cols: int, dims,
+                         row0: int = 0):
     """Vectorized equivalent of the reference's index_transformer
-    (src/align.rs:122-144) applied to the full (rows x cols) index grid.
+    (src/align.rs:122-144) applied to the (rows x cols) index grid whose
+    first row is row ``row0`` (a strip evaluates ``chunk_t`` at the same
+    rows, hence the same floats, as the whole grid).
 
     Returns (valid, i2, j2): boolean mask plus target row/col indices
     (int64, only meaningful where valid). Target ``dims`` is (cols2, rows2).
     Negative coordinates are rejected *before* flooring, as in the
     reference (so -0.3 is out of bounds, not pixel 0).
     """
-    jj, ii = np.meshgrid(np.arange(cols, dtype=np.float64), np.arange(rows, dtype=np.float64))
+    jj, ii = np.meshgrid(np.arange(cols, dtype=np.float64),
+                         np.arange(row0, row0 + rows, dtype=np.float64))
     x, y = transform_points(chunk_t, jj, ii)
     valid = (x >= 0.0) & (y >= 0.0)
     j2 = np.floor(x).astype(np.int64)

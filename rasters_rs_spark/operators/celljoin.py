@@ -317,26 +317,32 @@ def aoi_cells_dist(aois: DataFrame, zoom: int, extra_cols=()) -> DataFrame:
 
 
 def image_cells_dist(images: DataFrame, zoom: int) -> DataFrame:
-    """(image_id, cell) covering cells of each image's world-space
-    bbox, as pure Catalyst expressions over (gt, w, h) — the image side
-    of the distributed zonal/rasterize candidate join. The bbox maps
-    all four corners (rotated-gt safe, the G6 lesson) and pads by half
-    a pixel along each gt axis so it is always a superset of the
-    padded pixel-CENTER bbox the zonal kernel prefilters with. Only
-    (image_id, cell) survives the explode — bytes never enter it."""
+    """(image_id[, chunk_idx], cell) covering cells of the world-space
+    bbox of each image, or of each chunk strip's DATA rows
+    (data_start..data_end; an image's rows are 0..h), as pure Catalyst
+    expressions over gt, w and the row range — the image side of the
+    distributed zonal candidate join. The bbox maps all four corners
+    (rotated-gt safe, the G6 lesson) and pads by half a pixel along
+    each gt axis so it is always a superset of the padded pixel-CENTER
+    bbox the zonal kernel prefilters with. Only the row keys and the
+    cell survive the explode — bytes never enter it."""
+    keys = codecs._strip_keys(images.columns)
     ts = 2.0 * MAX_COORD / float(1 << zoom)
     g = [F.col("gt")[i] for i in range(6)]
     w = F.col("w").cast("double")
-    h = F.col("h").cast("double")
     zero = F.lit(0.0)
-    cxs = [g[0] + j * g[1] + i * g[2]
-           for (j, i) in ((zero, zero), (w, zero), (zero, h), (w, h))]
-    cys = [g[3] + j * g[4] + i * g[5]
-           for (j, i) in ((zero, zero), (w, zero), (zero, h), (w, h))]
+    if "data_start" in images.columns:
+        i0 = F.col("data_start").cast("double")
+        i1 = F.col("data_end").cast("double")
+    else:
+        i0, i1 = zero, F.col("h").cast("double")
+    corners = ((zero, i0), (w, i0), (zero, i1), (w, i1))
+    cxs = [g[0] + j * g[1] + i * g[2] for (j, i) in corners]
+    cys = [g[3] + j * g[4] + i * g[5] for (j, i) in corners]
     hx = (F.abs(g[1]) + F.abs(g[2])) / 2.0
     hy = (F.abs(g[4]) + F.abs(g[5])) / 2.0
     b = (images.select(
-            "image_id",
+            *keys,
             F.floor((F.least(*cxs) - hx + F.lit(MAX_COORD)) / F.lit(ts))
              .cast("long").alias("_x0"),
             F.floor((F.greatest(*cxs) + hx + F.lit(MAX_COORD)) / F.lit(ts))
@@ -348,7 +354,7 @@ def image_cells_dist(images: DataFrame, zoom: int) -> DataFrame:
     b = b.withColumn("_cx", F.explode(F.sequence("_x0", "_x1")))
     b = b.withColumn("_cy", F.explode(F.sequence("_y0", "_y1")))
     return b.select(
-        "image_id",
+        *keys,
         (F.shiftleft(F.col("_cx"), 32) + F.col("_cy")).alias("cell"))
 
 

@@ -11,20 +11,22 @@ Semantics (raster-diff/diff.rs:35-121, main.rs:74-168):
   optional diff raster (float64) or discretized i32 raster with bins
   mapped Min->-1, Bin(i)->i, Max->len and no-data -128 (main.rs:117-125).
 
-One strip kernel, ``_strip_pairs``, does every A->B pairing: A's data
-rows with their global first row against a B strip given by its load
-start and data-row range, with global B indices (a whole image is the
-one-strip chunk 0..h). ``align_pairs`` (whole blocks, optionally in
-``chunk_rows`` A strips), the A-chunked ``chunked.diff_stats_chunked``
-/ ``diff_histogram_chunked`` and the both-chunked
-``chunked.diff_stats_chunked_both`` are adapters over it, and one bin
-rule, one partial accumulator and one merge serve all the operators.
+A and B are each an image table or a chunk-strip table
+(chunked.chunk_images; the path for rasters whose full block exceeds
+task memory, and the reference's windowed per-chunk reads,
+raster-diff/diff.rs:38-57). One strip kernel, ``_strip_pairs``, does
+every A->B pairing: A's data rows at their global rows against a B
+strip given by its load start and data-row range, with global B
+indices (a whole image is the one-strip chunk 0..h). Each pair row is
+one ``_strip_pairs`` call, and one bin rule, one partial accumulator
+and one merge serve all the operators.
 
 Spark shape: pair A and B rows with an equi-join on a pair key
-(``diff_pairs_df``), then an Arrow-batched pandas UDF runs the
-vectorized alignment per row and emits partial aggregate rows; one
-groupBy merges them. The only shuffle is the broadcast-or-hash pair
-join plus the tiny partial-agg merge.
+(``diff_pairs_df``; a B strip table adds a plan-time row-range
+predicate), then an Arrow-batched pandas UDF runs the vectorized
+alignment per row and emits partial aggregate rows; one groupBy merges
+them. The only shuffle is the broadcast-or-hash pair join plus the
+tiny partial-agg merge.
 """
 
 from __future__ import annotations
@@ -36,7 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import geom
-from .chunked import _strip
+from ..functions.codecs import _strip
 from .stats import _valid_mask
 
 _STAT_KEYS = ("first", "second", "diff", "abs_diff")
@@ -44,9 +46,7 @@ _STAT_KEYS = ("first", "second", "diff", "abs_diff")
 
 def diff_merge_exprs():
     """The partial->final merge expressions of the diff-stats monoid —
-    the one merge of diff_stats and both chunked variants (``_pair_stats``),
-    so the aggregation can never diverge between the whole-image and
-    chunked paths."""
+    the one merge of diff_stats over images and strips alike."""
     merged = [F.sum("count").alias("count")]
     for k in _STAT_KEYS:
         merged += [
@@ -98,24 +98,26 @@ def _strip_pairs(a_rows: np.ndarray, row0: int, gt_a, no_val_a: float,
     data rows and read at ``i2 - b_load_start``. ``extent`` is an
     optional (ring_offsets, xs, ys) polygon in *world* coords; A pixels
     outside it are dropped (J3, diff.rs:79-107: the test point is the
-    pixel center expressed in cell-center coordinates)."""
+    pixel center expressed in cell-center coordinates). The transform
+    and the extent test run at GLOBAL A rows, so a strip evaluates the
+    same floats as the whole image, bit for bit."""
     rows, cols = a_rows.shape
     t = geom.transform_between(gt_a, gt_b)
-    ct = geom.chunk_transform(t, (0.5, row0 + 0.5), (0.0, 0.0))
+    ct = geom.chunk_transform(t, (0.5, 0.5), (0.0, 0.0))
     b_start, b_end = b_rows
     valid, i2, j2 = geom.index_transform_grid(
-        ct, rows, cols, (b_strip.shape[1], b_end))
+        ct, rows, cols, (b_strip.shape[1], b_end), row0)
     mask = valid & (i2 >= b_start) & _valid_mask(a_rows, no_val_a)
     if extent is not None:
         inv = np.linalg.inv(geom.transform_from_gdal(gt_a))
         ro, xs, ys = extent
         exs, eys = geom.transform_points(inv, np.asarray(xs, dtype=np.float64),
                                          np.asarray(ys, dtype=np.float64))
-        # extent translated to cell-center coords of these rows
+        # extent in cell-center coords, tested at the global rows
         mask &= geom.grid_in_rings(
             np.arange(cols, dtype=np.float64),
-            np.arange(rows, dtype=np.float64), ro,
-            exs - 0.5, eys - (row0 + 0.5))
+            np.arange(row0, row0 + rows, dtype=np.float64), ro,
+            exs - 0.5, eys - 0.5)
     ii, jj = np.nonzero(mask)
     vb = b_strip[i2[ii, jj] - b_load_start, j2[ii, jj]]
     ok = _valid_mask(vb, no_val_b)
@@ -123,34 +125,15 @@ def _strip_pairs(a_rows: np.ndarray, row0: int, gt_a, no_val_a: float,
     return ii + row0, jj, a_rows[ii, jj], vb[ok]
 
 
-def align_pairs(block_a: np.ndarray, gt_a, no_val_a: float,
-                block_b: np.ndarray, gt_b, no_val_b: float,
-                extent=None, chunk_rows: int | None = None):
-    """Yield (ii, jj, vals_a, vals_b) index/value arrays of aligned valid
-    pixel pairs of two whole blocks, A chunk by A chunk (``chunk_rows``
-    rows each, the whole block by default). ``ii``/``jj`` index into
-    block_a. ``extent``: see ``_strip_pairs``."""
-    h_a = block_a.shape[0]
-    step = chunk_rows or h_a or 1
-    for r0 in range(0, h_a, step):
-        yield _strip_pairs(block_a[r0:r0 + step], r0, gt_a, no_val_a,
-                           block_b, 0, (0, block_b.shape[0]),
-                           gt_b, no_val_b, extent)
-
-
-def _row_pairs(row, extent=None, chunk_rows=None):
-    """The valid pairs of one ``diff_pairs_df`` row: a whole A image
-    against a whole B image through ``align_pairs``, or an A chunk
-    strip's DATA rows (padding rows are another strip's, never counted
-    twice) against a whole B or a B chunk strip (columns ``b_*``)."""
+def _row_pairs(row, extent=None):
+    """The valid pairs of one ``diff_pairs_df`` row: the DATA rows of
+    the A image or strip (padding rows are another strip's, never
+    counted twice) against the B image or strip (columns ``b_*``)."""
     a, ls, ds, de = _strip(row)
     b, b_ls, b_ds, b_de = _strip(row, "b_")
-    if not hasattr(row, "data_start"):
-        return align_pairs(a, row.gt, row.no_val, b, row.b_gt,
-                           row.b_no_val, extent, chunk_rows)
-    return [_strip_pairs(a[ds - ls:de - ls], ds, row.gt, row.no_val,
-                         b, b_ls, (b_ds, b_de), row.b_gt, row.b_no_val,
-                         extent)]
+    return _strip_pairs(a[ds - ls:de - ls], ds, row.gt, row.no_val,
+                        b, b_ls, (b_ds, b_de), row.b_gt, row.b_no_val,
+                        extent)
 
 
 def _diff(va: np.ndarray, vb: np.ndarray, adjust: float,
@@ -171,19 +154,38 @@ def _diff_bins(d: np.ndarray, hmin: float, hmax: float, bins) -> np.ndarray:
 def diff_pairs_df(a: DataFrame, b: DataFrame, pair_col: str = "image_id") -> DataFrame:
     """Join the A and B image (or chunk-strip) tables into one pair
     table. B columns get a ``b_`` prefix. Catalyst picks broadcast vs
-    shuffle hash."""
+    shuffle hash.
+
+    With B as strips, a north-up pair (no rotation term in either
+    transform) joins only the B strips whose data rows the A rows map
+    into: B's fractional row of the first and last A data-row centre
+    is a plan-time expression of the two transforms (the row mapping is
+    monotonic), with a +/-1 safety margin. A rotated pair meets every
+    B strip of its pair. Either way the strip kernel keeps only the B
+    lookups inside a strip's half-open data range, so every pair lands
+    in exactly one B strip."""
     bb = b.select(
         F.col(pair_col).alias("pair_id"),
         *[F.col(c).alias(f"b_{c}") for c in b.columns if c != pair_col],
     )
     aa = a.select(F.col(pair_col).alias("pair_id"),
                   *[c for c in a.columns if c != pair_col])
-    return aa.join(bb, on="pair_id", how="inner")
+    pairs = aa.join(bb, on="pair_id", how="inner")
+    if "data_start" not in b.columns:
+        return pairs
+    gt, b_gt = F.col("gt"), F.col("b_gt")
+    north_up = (gt[2] == 0) & (gt[4] == 0) & (b_gt[2] == 0) & (b_gt[4] == 0)
+    a0, a1 = ((F.col("data_start"), F.col("data_end"))
+              if "data_start" in a.columns else (F.lit(0), F.col("h")))
+    fa = (gt[3] + (a0 + 0.5) * gt[5] - b_gt[3]) / b_gt[5]
+    fb = (gt[3] + (a1 - 0.5) * gt[5] - b_gt[3]) / b_gt[5]
+    overlap = ((F.col("b_data_start") <= F.greatest(fa, fb) + 1) &
+               (F.col("b_data_end") >= F.least(fa, fb) - 1))
+    return pairs.where(~north_up | overlap)
 
 
 def _pair_stats(pairs: DataFrame, adjust: float, negate: bool,
-                per_pair: bool, extent=None,
-                chunk_rows: int | None = None) -> DataFrame:
+                per_pair: bool, extent=None) -> DataFrame:
     """RasterDiffStats of a pair table: one partial row per pair row,
     merged (per pair on request) with the derived diff mean and std."""
     cols = [c.split(" ")[0] for c in DIFF_PARTIAL_SCHEMA.split(", ")]
@@ -193,13 +195,13 @@ def _pair_stats(pairs: DataFrame, adjust: float, negate: bool,
             out = []
             for row in pdf.itertuples(index=False):
                 vals = _empty_partial()
-                for (_, _, va, vb) in _row_pairs(row, extent, chunk_rows):
-                    d = _diff(va, vb, adjust, negate)
-                    vals["count"] += float(va.size)
-                    _acc(vals, "first", va)
-                    _acc(vals, "second", vb)
-                    _acc(vals, "diff", d)
-                    _acc(vals, "abs_diff", np.abs(d))
+                _, _, va, vb = _row_pairs(row, extent)
+                d = _diff(va, vb, adjust, negate)
+                vals["count"] = float(va.size)
+                _acc(vals, "first", va)
+                _acc(vals, "second", vb)
+                _acc(vals, "diff", d)
+                _acc(vals, "abs_diff", np.abs(d))
                 out.append({"pair_id": row.pair_id, **vals})
             yield pd.DataFrame(out, columns=cols)
 
@@ -222,12 +224,12 @@ def _pair_histogram(pairs: DataFrame, hmin: float, hmax: float, bins: int,
         for pdf in batches:
             acc: dict[int, int] = {}
             for row in pdf.itertuples(index=False):
-                for (_, _, va, vb) in _row_pairs(row):
-                    bn = _diff_bins(_diff(va, vb, adjust, negate),
-                                    hmin, hmax, bins)
-                    idx, cnt = np.unique(bn, return_counts=True)
-                    for i, c in zip(idx, cnt):
-                        acc[int(i)] = acc.get(int(i), 0) + int(c)
+                _, _, va, vb = _row_pairs(row)
+                bn = _diff_bins(_diff(va, vb, adjust, negate),
+                                hmin, hmax, bins)
+                idx, cnt = np.unique(bn, return_counts=True)
+                for i, c in zip(idx, cnt):
+                    acc[int(i)] = acc.get(int(i), 0) + int(c)
             yield pd.DataFrame({"bin": list(acc.keys()), "n": list(acc.values())})
 
     partials = pairs.mapInPandas(gen, schema="bin long, n long")
@@ -236,20 +238,23 @@ def _pair_histogram(pairs: DataFrame, hmin: float, hmax: float, bins: int,
 
 def diff_stats(a: DataFrame, b: DataFrame, pair_col: str = "image_id",
                adjust: float = 0.0, negate: bool = False,
-               extent=None, chunk_rows: int | None = None,
-               per_pair: bool = False) -> DataFrame:
+               extent=None, per_pair: bool = False) -> DataFrame:
     """RasterDiffStats over aligned pairs (A3). Returns one row (or one
     per pair) with count + {first,second,diff,abs_diff}_{min,max,sum,sum_2}
-    and derived mean/variance/std for the diff."""
+    and derived mean/variance/std for the diff. ``a`` and ``b`` are
+    image or chunk-strip tables; strip partials merge to the
+    whole-image result."""
     return _pair_stats(diff_pairs_df(a, b, pair_col), adjust, negate,
-                       per_pair, extent, chunk_rows)
+                       per_pair, extent)
 
 
 def diff_histogram(a: DataFrame, b: DataFrame, hmin: float, hmax: float,
                    bins: int, pair_col: str = "image_id",
                    adjust: float = 0.0, negate: bool = False) -> DataFrame:
     """Histogram of the diff values (A2 over M3), bin -1 = underflow,
-    bin len = overflow; reference histogram bin rule exactly."""
+    bin len = overflow; reference histogram bin rule exactly. Per-task
+    bin counts merge additively, so image and strip inputs give the
+    same counts (raster-diff bins per chunk, main.rs:108-156)."""
     return _pair_histogram(diff_pairs_df(a, b, pair_col), hmin, hmax, bins,
                            adjust, negate)
 
@@ -273,12 +278,12 @@ def diff_raster(a: DataFrame, b: DataFrame, pair_col: str = "image_id",
                     res = np.full((row.h, row.w), np.nan)
                 else:
                     res = np.full((row.h, row.w), -128, dtype=np.int32)
-                for (ii, jj, va, vb) in _row_pairs(row):
-                    d = _diff(va, vb, adjust, negate)
-                    if discretize is None:
-                        res[ii, jj] = d
-                    else:
-                        res[ii, jj] = _diff_bins(d, *discretize).astype(np.int32)
+                ii, jj, va, vb = _row_pairs(row)
+                d = _diff(va, vb, adjust, negate)
+                if discretize is None:
+                    res[ii, jj] = d
+                else:
+                    res[ii, jj] = _diff_bins(d, *discretize).astype(np.int32)
                 dtype = "<f8" if discretize is None else "<i4"
                 out.append((row.pair_id, res.astype(dtype).tobytes(),
                             row.w, row.h,

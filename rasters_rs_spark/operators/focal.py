@@ -4,11 +4,11 @@ difference gradient magnitude.
 This is what the chunk model's PADDING is for (reference
 src/chunking.rs: load ranges overlap data ranges by `padding` rows so
 neighborhood kernels can run per-chunk without a halo exchange):
-``focal_chunked`` computes each strip's kernel over its padded load
-range and emits only data rows, so the distributed result equals the
-whole-image kernel exactly. Border pixels (incomplete neighborhoods)
-are NaN by definition, which coincides with the chunk plan's
-border-row clamp.
+``focal`` takes image rows or padded chunk strips alike and computes
+each row's kernel over its whole LOAD range (an image is the one-strip
+chunk 0..h), so a strip's data rows equal the whole-image kernel
+exactly. Border pixels (incomplete neighborhoods) are NaN by
+definition, which coincides with the chunk plan's border-row clamp.
 
 Both kernels are exact-arithmetic friendly on the LCG fixtures: the
 3x3 mean is an order-free dyadic sum / 9, and the gradient magnitude
@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..functions import codecs
+from .chunked import CHUNK_SCHEMA
 
 FOCAL_OPS = ("mean3", "grad_mag", "slope", "hillshade")
 
@@ -99,61 +100,32 @@ def focal_block(block: np.ndarray, op: str, pixel_size: float = 1.0,
 
 def focal(images: DataFrame, op: str, sun_azimuth_deg: float = 315.0,
           sun_altitude_deg: float = 45.0) -> DataFrame:
-    """Whole-image focal kernel: one image row in, one out (fmt raw;
-    pixel_size from the geo-transform)."""
+    """Focal kernel over image rows or padded chunk strips
+    (chunked.CHUNK_SCHEMA, padding >= 1): one row in, one row out with
+    the same columns (fmt raw, no_val NaN; pixel_size from the
+    geo-transform). Each row computes the kernel on its LOAD range,
+    which carries a strip's halo rows, so no strip needs another
+    strip's pixels and the DATA rows of the strips reassemble
+    (chunked.assemble_images) to the whole-image kernel exactly. The
+    kernel leaves a strip's first and last loaded row NaN; when the
+    strip is interior those are halo rows, outside its data range."""
+    schema = CHUNK_SCHEMA if "chunk_idx" in images.columns else (
+        "image_id string, bytes binary, w int, h int, fmt string, "
+        "gt array<double>, crs string, no_val double")
+    cols = [c.split(" ")[0] for c in schema.split(", ")]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
-                block = codecs.decode_block(row.bytes, row.h, row.w, row.fmt)
-                res = focal_block(block, op, abs(float(row.gt[1])),
-                                  sun_azimuth_deg, sun_altitude_deg,
-                                  pixel_size_y=abs(float(row.gt[5])))
-                out.append((row.image_id, codecs.encode_raw(res),
-                            row.w, row.h, "raw", list(row.gt), row.crs,
-                            float("nan")))
-            yield pd.DataFrame(out, columns=["image_id", "bytes", "w", "h",
-                                             "fmt", "gt", "crs", "no_val"])
-
-    schema = ("image_id string, bytes binary, w int, h int, fmt string, "
-              "gt array<double>, crs string, no_val double")
-    return images.mapInPandas(gen, schema=schema)
-
-
-def focal_chunked(chunks: DataFrame, op: str,
-                  sun_azimuth_deg: float = 315.0,
-                  sun_altitude_deg: float = 45.0) -> DataFrame:
-    """Focal kernel over padded chunk strips (chunked.CHUNK_SCHEMA,
-    padding >= 1): each strip computes the kernel on its LOAD range
-    (which carries the halo rows) and keeps only its DATA rows, so no
-    strip needs any other strip's pixels and the reassembled raster
-    equals the whole-image kernel exactly. This is the reference's
-    padded-chunk execution model as a distributed plan — the unit of
-    work is the strip, never the image."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                ls, le = int(row.load_start), int(row.load_end)
-                ds, de = int(row.data_start), int(row.data_end)
-                strip = codecs.decode_block(row.bytes, le - ls, row.w,
-                                            row.fmt)
+                strip = codecs._strip(row)[0]
                 res = focal_block(strip, op, abs(float(row.gt[1])),
                                   sun_azimuth_deg, sun_altitude_deg,
                                   pixel_size_y=abs(float(row.gt[5])))
-                # rows 0 / le-ls-1 of the strip are NaN from the kernel;
-                # when ls > 0 (interior strip) those are halo rows and
-                # the data range has full neighborhoods
-                out.append((row.image_id, int(row.chunk_idx), ds, de,
-                            ls, le, codecs.encode_raw(res),
-                            row.w, row.h, "raw", list(row.gt), row.crs,
-                            float("nan")))
-            yield pd.DataFrame(out, columns=[
-                "image_id", "chunk_idx", "data_start", "data_end",
-                "load_start", "load_end", "bytes", "w", "h", "fmt",
-                "gt", "crs", "no_val"])
+                rec = {c: getattr(row, c) for c in cols}
+                rec.update(bytes=codecs.encode_raw(res), fmt="raw",
+                           gt=list(row.gt), no_val=float("nan"))
+                out.append(rec)
+            yield pd.DataFrame(out, columns=cols)
 
-    from .chunked import CHUNK_SCHEMA
-    return chunks.mapInPandas(gen, schema=CHUNK_SCHEMA)
+    return images.mapInPandas(gen, schema=schema)

@@ -19,6 +19,14 @@ interpolation.rs:36-39); the engine's equivalents are:
   (`val == f64::NAN` is always false, interpolation.rs:19), so by
   default only `val == no_val` marks holes; pass ``fill_nan=True`` for
   the intended behavior.
+
+``hole_pixels`` and the distributed fills (``fill_idw_distributed``,
+``fill_barycentric_distributed``, ``fill_sibson_distributed``) take an
+image table or a chunk-strip table (chunked.chunk_images) alike: a row
+emits the holes of its DATA rows with GLOBAL pixel indices (a whole
+image is the one-strip chunk 0..h), and the fills patch each row's
+stored bytes, keyed by ``image_id`` plus ``chunk_idx`` when the input
+has it. Strip output reassembles with chunked.assemble_images.
 """
 
 from __future__ import annotations
@@ -30,8 +38,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import codecs, geom
+from ..functions.codecs import _strip_data, _strip_keys, _strip_span
 from ..sources.io import local_table
-from .chunked import CHUNK_SCHEMA, _CHUNK_COLS, _strip, _strip_span
+from .chunked import CHUNK_SCHEMA
 
 
 def _with_cell(df: DataFrame, x_col: str, y_col: str, cs: float, prefix: str):
@@ -385,17 +394,17 @@ def _fill_images(images: DataFrame, fill_nan: bool, values_at) -> DataFrame:
     return images.mapInPandas(gen, schema=_FILLED_SCHEMA)
 
 
-def _patch_cogroup(images: DataFrame, fills: DataFrame, chunked: bool,
+def _patch_cogroup(images: DataFrame, fills: DataFrame,
                    fill_vals) -> DataFrame:
     """Cogroup image (or chunk-strip) rows with their fill rows and patch
     each row's stored bytes. ``fills`` carries ``_fid`` (the image id,
     a fresh attribute: fills derive from ``images`` through the hole
     rows, and shared exprIds across the two cogroup sides trip the
-    ambiguous-self-join check) plus ``chunk_idx`` when chunked;
+    ambiguous-self-join check) plus ``chunk_idx`` for strips;
     ``fill_vals(rows) -> (gi, jj, vals)`` turns one row's fill rows
-    into global pixel values. Chunked: patched CHUNK_SCHEMA strips
-    (assemble with chunked.assemble_images; padding rows re-duplicate
-    from the patched data there); whole images: _FILLED_SCHEMA."""
+    into global pixel values. Images: _FILLED_SCHEMA rows; strips:
+    patched CHUNK_SCHEMA rows (assemble with chunked.assemble_images;
+    padding rows re-duplicate from the patched data there)."""
 
     def patch(img_pdf: pd.DataFrame, f_pdf: pd.DataFrame) -> pd.DataFrame:
         out = []
@@ -408,14 +417,14 @@ def _patch_cogroup(images: DataFrame, fills: DataFrame, chunked: bool,
                 rec["bytes"] = _patch_strip(row, gi, jj, vals)
                 rec["filled"] = len(gi)
             out.append(rec)
-        return pd.DataFrame(out, columns=_CHUNK_COLS if chunked
-                            else _FILLED_COLS)
+        return pd.DataFrame(out, columns=cols)
 
-    keys = ["image_id", "chunk_idx"] if chunked else ["image_id"]
+    keys = _strip_keys(images.columns)
+    schema = _FILLED_SCHEMA if len(keys) == 1 else CHUNK_SCHEMA
+    cols = [c.split(" ")[0] for c in schema.split(", ")]
     return images.groupBy(*keys).cogroup(
         fills.groupBy("_fid", *keys[1:])) \
-        .applyInPandas(lambda k, a, b: patch(a, b),
-                       schema=CHUNK_SCHEMA if chunked else _FILLED_SCHEMA)
+        .applyInPandas(lambda k, a, b: patch(a, b), schema=schema)
 
 
 def _knn_idw(nn: pd.DataFrame, power: float):
@@ -462,20 +471,23 @@ def fill_idw(images: DataFrame, points: pd.DataFrame, k: int = 8,
     return _fill_images(images, fill_nan, values_at)
 
 
-def _hole_rows(images: DataFrame, fill_nan: bool, chunked: bool) -> DataFrame:
-    """The one hole-pixel kernel of hole_pixels and hole_pixels_chunked:
-    each image or strip row emits the holes of its DATA rows with
-    GLOBAL pixel indices and world pixel-centre coordinates."""
-    ids = ["image_id", "chunk_idx"] if chunked else ["image_id"]
+def hole_pixels(images: DataFrame, fill_nan: bool = False) -> DataFrame:
+    """Explode the hole pixels (val == no_val, optionally NaN) of each
+    image or chunk strip into point rows (image_id[, chunk_idx], pi,
+    pj, x, y) with world coordinates at the pixel center — the query
+    side of the distributed fill. A strip emits ONLY its data-range
+    holes (padding rows belong to their owner strip) with GLOBAL pixel
+    indices, so world coordinates come straight from the image's gt
+    and the unit of decode is the strip."""
+    ids = _strip_keys(images.columns)
     cols = ids + ["pi", "pj", "x", "y"]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
-                strip, ls, ds, de = _strip(row)
-                gi, jj, wx, wy = _hole_centres(strip[ds - ls:de - ls], ds,
-                                               row.gt, row.no_val, fill_nan)
+                gi, jj, wx, wy = _hole_centres(*_strip_data(row), row.gt,
+                                               row.no_val, fill_nan)
                 if len(gi):
                     out.append(pd.DataFrame({
                         **{c: getattr(row, c) for c in ids},
@@ -483,65 +495,9 @@ def _hole_rows(images: DataFrame, fill_nan: bool, chunked: bool) -> DataFrame:
             yield pd.concat(out) if out else pd.DataFrame(columns=cols)
 
     return images.mapInPandas(
-        gen, schema=("image_id string, " + ("chunk_idx int, " if chunked
-                                            else "")
+        gen, schema=("image_id string, "
+                     + ("chunk_idx int, " if len(ids) > 1 else "")
                      + "pi long, pj long, x double, y double"))
-
-
-def hole_pixels(images: DataFrame, fill_nan: bool = False) -> DataFrame:
-    """Explode each image's hole pixels (val == no_val, optionally NaN)
-    into point rows (image_id, pi, pj, x, y) with world coordinates at
-    the pixel center — the query side of the distributed fill."""
-    return _hole_rows(images, fill_nan, chunked=False)
-
-
-def hole_pixels_chunked(chunks: DataFrame, fill_nan: bool = False) -> DataFrame:
-    """hole_pixels over the chunked-strip representation
-    (chunked.CHUNK_SCHEMA): each strip row emits ONLY its data-range
-    holes (padding rows belong to their owner strip) with GLOBAL pixel
-    indices, so world coordinates come straight from the image's gt.
-    The unit of decode is the strip — the path for rasters whose full
-    block exceeds task memory."""
-    return _hole_rows(chunks, fill_nan, chunked=True)
-
-
-def _fill_idw_knn(images: DataFrame, points: DataFrame, k: int,
-                  power: float, fill_nan: bool, cell_size: float,
-                  fast_path_points: int, chunked: bool) -> DataFrame:
-    """hole rows -> distributed knn_join -> per-image (or per-strip)
-    cogroup patch with the strict-fold IDW kernel."""
-    # knn_join partitions by a single query-id column: derive one
-    q = _hole_rows(images, fill_nan, chunked).withColumn(
-        "qid", F.concat_ws(":", "image_id", "pi", "pj"))
-    nn = knn_join(q, points, k=k, cell_size=cell_size, query_id="qid",
-                  fast_path_points=fast_path_points) \
-        .select(F.col("image_id").alias("_fid"),
-                *(["chunk_idx"] if chunked else []),
-                "pi", "pj", "pt_id", "dist", "z")
-    return _patch_cogroup(images, nn, chunked,
-                          lambda g: _knn_idw(g, power))
-
-
-def fill_idw_distributed_chunked(chunks: DataFrame, points: DataFrame,
-                                 k: int = 8, power: float = 2.0,
-                                 fill_nan: bool = False,
-                                 cell_size: float = 256.0,
-                                 fast_path_points: int = 10_000) -> DataFrame:
-    """The fully scaled fill: BOTH sides distributed — the raster as
-    chunk strips (chunked.CHUNK_SCHEMA; no task ever decodes a whole
-    image) and the points as a cell-bucketed table (no broadcast above
-    fast_path_points). Composes hole_pixels_chunked -> knn_join ->
-    per-STRIP cogroup patching; returns patched chunk rows (same
-    schema), assemble with chunked.assemble_images if the final image
-    fits a task. Output is BYTE-identical to fill_idw /
-    fill_idw_distributed for raw AND q16 (same strict-fold IDW kernel
-    and tie-breaks; filled codes are patched into the stored strip
-    bytes on the image-global q16 grid, never a strip-local
-    re-quantize): holes fall in exactly one strip's data range, and
-    padding rows are re-duplicated from the patched data by the
-    caller's assembly."""
-    return _fill_idw_knn(chunks, points, k, power, fill_nan, cell_size,
-                         fast_path_points, chunked=True)
 
 
 def fill_idw_distributed(images: DataFrame, points: DataFrame, k: int = 8,
@@ -562,10 +518,24 @@ def fill_idw_distributed(images: DataFrame, points: DataFrame, k: int = 8,
     synth.points_table), because knn_join tie-breaks by (dist, pt_id)
     and fill_idw by (dist, positional index).
 
+    ``images`` may be chunk strips (chunked.CHUNK_SCHEMA): BOTH sides
+    distributed, no task decodes a whole image, and each strip is
+    patched on the image-global q16 grid, never a strip-local
+    re-quantize; holes fall in exactly one strip's data range, so the
+    assembled strips are BYTE-identical to fill_idw.
+
     ``points``: DataFrame with (pt_id string, x, y, z). Returns the
-    fill_idw schema (filled image rows + per-image filled count)."""
-    return _fill_idw_knn(images, points, k, power, fill_nan, cell_size,
-                         fast_path_points, chunked=False)
+    fill_idw schema (filled image rows + per-image filled count), or
+    patched strip rows."""
+    # knn_join partitions by a single query-id column: derive one
+    q = hole_pixels(images, fill_nan).withColumn(
+        "qid", F.concat_ws(":", "image_id", "pi", "pj"))
+    nn = knn_join(q, points, k=k, cell_size=cell_size, query_id="qid",
+                  fast_path_points=fast_path_points) \
+        .select(F.col("image_id").alias("_fid"),
+                *_strip_keys(images.columns)[1:],
+                "pi", "pj", "pt_id", "dist", "z")
+    return _patch_cogroup(images, nn, lambda g: _knn_idw(g, power))
 
 
 # ---------------------------------------------------------------------------
@@ -1437,7 +1407,14 @@ def fill_barycentric_distributed(images: DataFrame, points: DataFrame,
     triangle survives the halo rule (strictly-interior holes are
     bit-identical: same canonical triangle, same IEEE expression);
     holes covered only by dropped sliver triangles stay unfilled
-    (delaunay_triangles_dist docstring). Returns the fill_idw schema."""
+    (delaunay_triangles_dist docstring). Returns the fill_idw schema.
+
+    ``images`` may be chunk strips: then no task decodes a whole image
+    AND no triangle table is broadcast. Strip holes carry global pixel
+    indices, so world coordinates and fill values are those of the
+    whole-image fill, and each strip is patched on the image-global
+    q16 grid; the patched strip rows assemble with
+    chunked.assemble_images."""
     return _fill_dist_tri_core(images, points, cell_size,
                                max_bucket_points, fill_nan, triangles,
                                mode="barycentric")
@@ -1468,59 +1445,18 @@ def fill_sibson_distributed(images: DataFrame, points: DataFrame,
     triangle corners before the cell explode; the cell kernel then
     evaluates the same blend as broadcast fill_sibson(c1=True).
     Requires distinct data points to have distinct (x, y) (gradients
-    key on coordinates — true of any valid triangulation input)."""
+    key on coordinates — true of any valid triangulation input).
+    Takes chunk strips like fill_barycentric_distributed."""
     return _fill_dist_tri_core(images, points, cell_size,
                                max_bucket_points, fill_nan, triangles,
                                mode="sibson", c1=c1, flatness=flatness)
-
-
-def fill_barycentric_distributed_chunked(chunks: DataFrame,
-                                         points: DataFrame,
-                                         cell_size: float,
-                                         max_bucket_points: int = 4000,
-                                         fill_nan: bool = False,
-                                         triangles: DataFrame | None = None
-                                         ) -> DataFrame:
-    """fill_barycentric_distributed over the chunked-strip
-    representation (chunked.CHUNK_SCHEMA): BOTH sides distributed — no
-    task decodes a whole image AND no broadcast triangle table (round-5
-    VERDICT #7; previously only IDW had the fully chunked path).
-    hole_pixels_chunked -> the same cell-cogroup triangulation kernel
-    (strip holes carry global pixel indices, so world coordinates and
-    hence fill values are identical to the whole-image fill) -> fills
-    patched per STRIP on the image-global q16 grid. Returns patched
-    chunk rows; assemble with chunked.assemble_images (padding rows
-    re-duplicate from patched data there). Byte-identical to broadcast
-    fill_barycentric on every hole whose triangle survives the halo
-    rule (tested; bit-exact contract oracle shared with
-    fill_barycentric_synth)."""
-    return _fill_dist_tri_core(chunks, points, cell_size,
-                               max_bucket_points, fill_nan, triangles,
-                               mode="barycentric", chunked=True)
-
-
-def fill_sibson_distributed_chunked(chunks: DataFrame, points: DataFrame,
-                                    cell_size: float,
-                                    max_bucket_points: int = 4000,
-                                    fill_nan: bool = False,
-                                    triangles: DataFrame | None = None,
-                                    c1: bool = False,
-                                    flatness: float = 0.5) -> DataFrame:
-    """fill_sibson_distributed over chunk strips — the Sibson (C0 or
-    C1) analogue of fill_barycentric_distributed_chunked; same
-    circumcircle-bbox candidate cells, same strip patch discipline."""
-    return _fill_dist_tri_core(chunks, points, cell_size,
-                               max_bucket_points, fill_nan, triangles,
-                               mode="sibson", c1=c1, flatness=flatness,
-                               chunked=True)
 
 
 def _fill_dist_tri_core(images: DataFrame, points: DataFrame,
                         cell_size: float, max_bucket_points: int,
                         fill_nan: bool, triangles: DataFrame | None,
                         mode: str, c1: bool = False,
-                        flatness: float = 0.5,
-                        chunked: bool = False) -> DataFrame:
+                        flatness: float = 0.5) -> DataFrame:
     cs = float(cell_size)
     tris = triangles if triangles is not None else \
         delaunay_triangles_dist(points, cs, max_bucket_points)
@@ -1578,10 +1514,10 @@ def _fill_dist_tri_core(images: DataFrame, points: DataFrame,
     t = t.select("x1", "y1", "z1", "x2", "y2", "z2", "x3", "y3", "z3",
                  *gcols, "tcx", "tcy")
 
-    q = _hole_rows(images, fill_nan, chunked)
+    q = hole_pixels(images, fill_nan)
     q = q.withColumn("qcx", F.floor(F.col("x") / cs).cast("long")) \
          .withColumn("qcy", F.floor(F.col("y") / cs).cast("long"))
-    id_cols = ["image_id", "chunk_idx"] if chunked else ["image_id"]
+    id_cols = _strip_keys(images.columns)
 
     def cell_kernel(key, qpdf: pd.DataFrame, tpdf: pd.DataFrame):
         cols = id_cols + ["pi", "pj", "val"]
@@ -1619,13 +1555,12 @@ def _fill_dist_tri_core(images: DataFrame, points: DataFrame,
         return pd.DataFrame(res)
 
     fills_schema = ("image_id string, "
-                    + ("chunk_idx int, " if chunked else "")
+                    + ("chunk_idx int, " if len(id_cols) > 1 else "")
                     + "pi long, pj long, val double")
     fills = q.groupBy("qcx", "qcy").cogroup(t.groupBy("tcx", "tcy")) \
         .applyInPandas(lambda k, a, b: cell_kernel(k, a, b),
                        schema=fills_schema)
-    fills = fills.select(F.col("image_id").alias("_fid"),
-                         *(["chunk_idx"] if chunked else []),
+    fills = fills.select(F.col("image_id").alias("_fid"), *id_cols[1:],
                          "pi", "pj", "val")
-    return _patch_cogroup(images, fills, chunked, lambda g: (
+    return _patch_cogroup(images, fills, lambda g: (
         g["pi"].to_numpy(), g["pj"].to_numpy(), g["val"].to_numpy()))

@@ -12,6 +12,12 @@ Reference semantics:
   point-in-polygon refine (geom.grid_in_rings) inside an Arrow-batched
   pandas UDF, emitting per-(image, aoi) partial stats that a single
   groupBy merges.
+
+The pixel-stats and centre-rule zonal operators take an image table or
+a chunk-strip table (chunked.chunk_images) alike: a row contributes
+its DATA rows (``codecs._strip_data``; a whole image is the one-strip
+chunk 0..h), so strip partials merge to the whole-image result — the
+reference's per-chunk fold (raster-stats main.rs:50-93).
 """
 
 from __future__ import annotations
@@ -95,25 +101,29 @@ def _block_partial(block: np.ndarray, no_val: float):
 
 
 def image_pixel_stats(images: DataFrame, per_image: bool = False) -> DataFrame:
-    """PixelStats over decoded image blocks.
+    """PixelStats over decoded image blocks or chunk strips.
 
     Narrow stage: each task decodes its blocks with numpy and emits one
-    partial row per image; one tiny shuffle merges partials. Scales
-    linearly in image count; no pixel-level rows ever hit the shuffle.
+    partial row per image (or strip: data rows only, padding excluded);
+    one tiny shuffle merges partials. Scales linearly in image count;
+    no pixel-level rows ever hit the shuffle. ``per_image`` merges a
+    strip table's partials per image.
     """
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
-                block = codecs.decode_block(row.bytes, row.h, row.w, row.fmt)
-                c, mn, mx, s, s2 = _block_partial(block, row.no_val)
+                c, mn, mx, s, s2 = _block_partial(codecs._strip_data(row)[0],
+                                                  row.no_val)
                 out.append((row.image_id, c, mn, mx, s, s2))
             yield pd.DataFrame(
                 out, columns=["image_id", "count", "min", "max", "sum", "sum_2"]
             )
 
     partials = images.mapInPandas(gen, schema=f"image_id string, {PIXEL_STATS_SCHEMA}")
+    if per_image and "chunk_idx" in images.columns:
+        partials = partials.groupBy("image_id").agg(*merge_partials_exprs())
     if per_image:
         return with_derived_stats(partials)
     return with_derived_stats(partials.agg(*merge_partials_exprs()))
@@ -153,7 +163,9 @@ ZONAL_PARTIAL_COLS = ["image_id", "aoi_id", "count", "min", "max", "sum",
 
 def zonal_stats(images: DataFrame, aois: pd.DataFrame,
                 include_whole: bool = False) -> DataFrame:
-    """Zonal statistics with reference raster-stats semantics.
+    """Zonal statistics with reference raster-stats semantics, over an
+    image table or a chunk-strip table (each strip contributes its DATA
+    rows; the path for rasters whose full block exceeds task memory).
 
     ``aois`` is a (small) pandas AOI table with packed coordinate buffers
     in *world* coordinates; it is broadcast to every task (J6). Pixel
@@ -172,7 +184,7 @@ def zonal_stats(images: DataFrame, aois: pd.DataFrame,
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
-                out.extend(_image_zonal_partials(row, aoi_rows, include_whole))
+                out.extend(_strip_zonal_partials(row, aoi_rows, include_whole))
             yield pd.DataFrame(out, columns=ZONAL_PARTIAL_COLS)
 
     partials = images.mapInPandas(gen, schema=ZONAL_PARTIAL_SCHEMA)
@@ -236,9 +248,9 @@ def zonal_block_partials(image_id, block: np.ndarray, gt, no_val: float,
     return out
 
 
-def _image_zonal_partials(row, aoi_rows, include_whole: bool) -> list:
-    block = codecs.decode_block(row.bytes, row.h, row.w, row.fmt)
-    return zonal_block_partials(row.image_id, block, row.gt, row.no_val, 0,
+def _strip_zonal_partials(row, aoi_rows, include_whole: bool) -> list:
+    block, row0 = codecs._strip_data(row)
+    return zonal_block_partials(row.image_id, block, row.gt, row.no_val, row0,
                                 aoi_rows, include_whole)
 
 
@@ -246,27 +258,31 @@ def zonal_stats_dist(images: DataFrame, aois: DataFrame, zoom: int = 12,
                      include_whole: bool = False) -> DataFrame:
     """zonal_stats with a DISTRIBUTED AOI side: ``aois`` is an AOI
     DataFrame (celljoin.AOI_SCHEMA) — the path for AOI catalogs too
-    large to broadcast in a task closure.
+    large to broadcast in a task closure. With a chunk-strip table both
+    sides are huge: no task decodes a whole image and nothing AOI-side
+    lands on the driver.
 
-    Shape: image bbox covering cells (pure Catalyst over gt/w/h,
-    image_cells_dist) equi-join AOI covering cells (aoi_cells_dist) ->
-    distinct (image, aoi-part) candidates -> cogroup with the image
-    rows -> the SAME per-image kernel as zonal_stats over each image's
-    pruned AOI subset -> one partial merge. Two covering cells
+    Shape: image (or strip data-row) bbox covering cells (pure
+    Catalyst over gt/w and the row range, image_cells_dist) equi-join
+    AOI covering cells (aoi_cells_dist) -> distinct (row, aoi-part)
+    candidates -> cogroup with the image or strip rows -> the SAME
+    kernel as zonal_stats over each row's pruned AOI subset -> one
+    partial merge. Two covering cells
     intersect whenever the bboxes do, so the candidate set is a
     superset of zonal_stats' bbox prefilter and results are identical.
     Per-task memory is one image block + its candidate AOIs; the AOI
     catalog never lands on the driver or in a closure."""
     from .celljoin import aoi_cells_dist, image_cells_dist
 
+    keys = codecs._strip_keys(images.columns)
     icells = image_cells_dist(images, zoom)
     acells = aoi_cells_dist(aois, zoom)
-    # img_id alias: the candidate side derives from `images`, so a
-    # same-name cogroup key would be an ambiguous self-join — the alias
-    # mints a fresh attribute
+    # key aliases: the candidate side derives from `images`, so
+    # same-name cogroup keys would be an ambiguous self-join — the
+    # aliases mint fresh attributes
     cand = (icells.join(acells, on="cell")
-            .dropDuplicates(["image_id", "part"])
-            .select(F.col("image_id").alias("img_id"),
+            .dropDuplicates([*keys, "part"])
+            .select(*[F.col(k).alias("_" + k) for k in keys],
                     "aoi_id", "ring_offsets", "xs", "ys"))
 
     def kernel(img_pdf: pd.DataFrame, aoi_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -274,11 +290,11 @@ def zonal_stats_dist(images: DataFrame, aois: DataFrame, zoom: int = 12,
         aoi_rows = _packed_aoi_rows(aoi_pdf.sort_values("aoi_id"))
         out = []
         for row in img_pdf.itertuples(index=False):
-            out.extend(_image_zonal_partials(row, aoi_rows, include_whole))
+            out.extend(_strip_zonal_partials(row, aoi_rows, include_whole))
         return pd.DataFrame(out, columns=ZONAL_PARTIAL_COLS)
 
-    partials = images.groupBy("image_id").cogroup(
-        cand.groupBy("img_id")) \
+    partials = images.groupBy(*keys).cogroup(
+        cand.groupBy(*["_" + k for k in keys])) \
         .applyInPandas(lambda key, a, b: kernel(a, b),
                        schema=ZONAL_PARTIAL_SCHEMA)
     return with_derived_stats(
@@ -525,7 +541,8 @@ def zonal_majority(images: DataFrame, aois: pd.DataFrame,
     pick each zone's most frequent class (ties break to the smallest
     class id — deterministic, oracle-mirrorable). Returns
     (aoi_id, majority_cls, n_majority, n_total); all integers —
-    hash-hard by construction.
+    hash-hard by construction. Takes image or chunk-strip rows (a
+    pure count monoid, so strip partials merge exactly).
 
     Plan: the same broadcast-AOI Arrow partial stage as zonal_stats
     emitting (aoi, cls, count) rows (bounded by zones x classes, not
@@ -537,10 +554,9 @@ def zonal_majority(images: DataFrame, aois: pd.DataFrame,
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
-                block = codecs.decode_block(row.bytes, row.h, row.w,
-                                            row.fmt)
+                block, row0 = codecs._strip_data(row)
                 out.extend(majority_block_partials(
-                    row.image_id, block, row.gt, row.no_val, 0, aoi_rows,
+                    row.image_id, block, row.gt, row.no_val, row0, aoi_rows,
                     n_classes))
             yield pd.DataFrame(out, columns=MAJORITY_PARTIAL_COLS)
 

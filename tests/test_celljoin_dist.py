@@ -244,9 +244,7 @@ def test_chunked_zonal_stats_dist_equals_all_paths(spark):
     the broadcast chunked path AND the whole-image path exactly on an
     LCG fixture."""
     from rasters_rs_spark.operators import stats as S
-    from rasters_rs_spark.operators.chunked import (chunk_images,
-                                                    chunked_zonal_stats,
-                                                    chunked_zonal_stats_dist)
+    from rasters_rs_spark.operators.chunked import chunk_images
 
     pdf = synth.lcg_image_table(6, 32, 32, pixel_size=2.0,
                                 spacing=64.0, grid_cols=3)
@@ -258,9 +256,9 @@ def test_chunked_zonal_stats_dist_equals_all_paths(spark):
     whole = {r["aoi_id"]: tuple(r)
              for r in S.zonal_stats(images, aois).collect()}
     bcast = {r["aoi_id"]: tuple(r)
-             for r in chunked_zonal_stats(chunks, aois).collect()}
+             for r in S.zonal_stats(chunks, aois).collect()}
     dist = {r["aoi_id"]: tuple(r)
-            for r in chunked_zonal_stats_dist(
+            for r in S.zonal_stats_dist(
                 chunks, _aoi_df(spark, aois), zoom=10).collect()}
     assert bcast == whole and dist == whole
     assert len(whole) > 1

@@ -1,6 +1,7 @@
-"""Chunked-image representation: round trip, chunked stats == whole
-stats, chunked diff == whole diff (the reference's -c 1 stress in
-distributed form)."""
+"""Chunked-image representation: round trip, and every operator over
+strip rows == the same operator over the whole images (stats, zonal,
+majority, diff with A and/or B as strips — the reference's -c 1 stress
+in distributed form)."""
 
 import numpy as np
 import pandas as pd
@@ -46,7 +47,8 @@ def test_chunked_stats_equal_whole(spark, images):
     whole = {r["image_id"]: r for r in
              S.image_pixel_stats(images, per_image=True).collect()}
     chunks = C.chunk_images(images, min_data_size=48 * 4)
-    part = {r["image_id"]: r for r in C.chunked_pixel_stats(chunks).collect()}
+    part = {r["image_id"]: r for r in
+            S.image_pixel_stats(chunks, per_image=True).collect()}
     assert set(whole) == set(part)
     for k in whole:
         assert whole[k]["count"] == part[k]["count"]
@@ -63,7 +65,7 @@ def test_chunked_zonal_equals_whole(spark, images):
     whole = {r["aoi_id"]: r for r in S.zonal_stats(images, aois).collect()}
     chunks = C.chunk_images(images, min_data_size=48 * 8)
     part = {r["aoi_id"]: r
-            for r in C.chunked_zonal_stats(chunks, aois).collect()}
+            for r in S.zonal_stats(chunks, aois).collect()}
     assert set(whole) == set(part) and len(whole) > 0
     for k in whole:
         assert whole[k]["count"] == part[k]["count"]
@@ -92,7 +94,7 @@ def test_chunked_diff_equals_whole(spark):
     # chunk A into 8-row strips: the distributed work unit
     a_chunks = C.chunk_images(a, min_data_size=128 * 8)
     assert a_chunks.count() == 8
-    chunked = C.diff_stats_chunked(a_chunks, b).collect()[0]
+    chunked = D.diff_stats(a_chunks, b).collect()[0]
     assert chunked["count"] == whole["count"]
     assert chunked["diff_min"] == whole["diff_min"]
     assert chunked["diff_max"] == whole["diff_max"]
@@ -122,7 +124,7 @@ def test_both_sides_chunked_diff_equals_whole(spark):
     for b_rows, pad in ((4, 0), (8, 2)):
         a_chunks = C.chunk_images(a, min_data_size=128 * 8)
         b_chunks = C.chunk_images(b, min_data_size=64 * b_rows, padding=pad)
-        got = C.diff_stats_chunked_both(a_chunks, b_chunks).collect()[0]
+        got = D.diff_stats(a_chunks, b_chunks).collect()[0]
         assert got["count"] == whole["count"], (b_rows, pad)
         assert got["diff_min"] == whole["diff_min"]
         assert got["diff_max"] == whole["diff_max"]
@@ -133,14 +135,15 @@ def test_both_sides_chunked_diff_equals_whole(spark):
         assert got["second_sum"] == pytest.approx(whole["second_sum"], rel=1e-12)
 
 
-def test_both_sides_chunked_diff_refuses_rotated_pair(spark):
-    """diff_stats_chunked_both's plan-time B-strip predicate assumes
-    north-up rasters. On A 32x32 at gt [0,1,0,0,0.5,1] (a y-shear per
-    column) in 8-row strips against B 16x16 at [-8,4,0,-8,0,4] in 4-row
-    strips it silently dropped 128 of the 1024 pairs; a pair with a
-    rotation term on either side is refused by name instead. The
-    A-chunked diff has no predicate and still equals the whole-image
-    diff on the rotated A."""
+def test_both_sides_chunked_diff_rotated_pair_equals_whole(spark):
+    """The plan-time B-strip predicate assumes north-up rasters: on A
+    32x32 at gt [0,1,0,0,0.5,1] (a y-shear per column) in 8-row strips
+    against B 16x16 at [-8,4,0,-8,0,4] in 4-row strips it once dropped
+    128 of the 1024 pairs. It now prunes north-up pairs only; a pair
+    with a rotation term on either side meets every B strip and the
+    kernel's data-row test keeps it exact, so A strips against B
+    strips equal the whole-image diff, as A strips against a whole B
+    do."""
     rng = np.random.default_rng(0x207)
 
     def img(iid, h, w, gt):
@@ -154,21 +157,27 @@ def test_both_sides_chunked_diff_refuses_rotated_pair(spark):
     whole = D.diff_stats(a, b).collect()[0]
     assert whole["count"] == 1024
     a_chunks = C.chunk_images(a, min_data_size=32 * 8)
-    chunked = C.diff_stats_chunked(a_chunks, b).collect()[0]
+    chunked = D.diff_stats(a_chunks, b).collect()[0]
     for k in ("count", "diff_min", "diff_max", "first_min", "second_max"):
         assert chunked[k] == whole[k], k
     assert chunked["diff_sum"] == pytest.approx(whole["diff_sum"], rel=1e-12)
 
     b_chunks = C.chunk_images(b, min_data_size=16 * 4)
-    with pytest.raises(Exception, match="pair rot0 has a rotated"):
-        C.diff_stats_chunked_both(a_chunks, b_chunks).collect()
-    # a rotated B is refused too, with a north-up A
-    north = C.chunk_images(img("rot1", 32, 32, [0.0, 1.0, 0.0, 0.0, 0.0, 1.0]),
-                           min_data_size=32 * 8)
-    b_rot = C.chunk_images(img("rot1", 16, 16, [-8.0, 4.0, 0.5, -8.0, 0.0, 4.0]),
-                           min_data_size=16 * 4)
-    with pytest.raises(Exception, match="pair rot1 has a rotated"):
-        C.diff_stats_chunked_both(north, b_rot).collect()
+    both = D.diff_stats(a_chunks, b_chunks).collect()[0]
+    for k in ("count", "diff_min", "diff_max", "first_min", "second_max"):
+        assert both[k] == whole[k], k
+    assert both["diff_sum"] == pytest.approx(whole["diff_sum"], rel=1e-12)
+    # a rotated B, with a north-up A
+    north = img("rot1", 32, 32, [0.0, 1.0, 0.0, 0.0, 0.0, 1.0])
+    b_rot = img("rot1", 16, 16, [-8.0, 4.0, 0.5, -8.0, 0.0, 4.0])
+    whole = D.diff_stats(north, b_rot).collect()[0]
+    assert whole["count"] > 0
+    both = D.diff_stats(C.chunk_images(north, min_data_size=32 * 8),
+                        C.chunk_images(b_rot, min_data_size=16 * 4)
+                        ).collect()[0]
+    for k in ("count", "diff_min", "diff_max", "first_min", "second_max"):
+        assert both[k] == whole[k], k
+    assert both["diff_sum"] == pytest.approx(whole["diff_sum"], rel=1e-12)
 
 
 def test_chunked_diff_histogram_equals_whole(spark):
@@ -191,7 +200,7 @@ def test_chunked_diff_histogram_equals_whole(spark):
              for r in D.diff_histogram(a, b, -3.0, 3.0, 12).collect()}
     a_chunks = C.chunk_images(a, min_data_size=128 * 8)
     got = {r["bin"]: r["n"]
-           for r in C.diff_histogram_chunked(a_chunks, b, -3.0, 3.0, 12).collect()}
+           for r in D.diff_histogram(a_chunks, b, -3.0, 3.0, 12).collect()}
     assert got == whole and sum(whole.values()) == 64 * 128
 
 
@@ -213,7 +222,7 @@ def test_chunked_diff_with_padding_equals_unpadded_range(spark):
 
     pad = 3
     a_chunks = C.chunk_images(a, min_data_size=32 * 8, padding=pad)
-    chunked = C.diff_stats_chunked(a_chunks, b).collect()[0]
+    chunked = D.diff_stats(a_chunks, b).collect()[0]
 
     # oracle: numpy over the chunked data range (the planner clamps
     # start to `padding` and the last data_end to load_end - padding,
@@ -238,8 +247,7 @@ def test_one_row_strips_zonal_not_skipped(spark):
     chunked zonal stats must equal the whole-image zonal stats even
     when every strip is a single data row."""
     from rasters_rs_spark.operators import stats as S
-    from rasters_rs_spark.operators.chunked import (chunk_images,
-                                                    chunked_zonal_stats)
+    from rasters_rs_spark.operators.chunked import chunk_images
     from rasters_rs_spark.sources import synth
     images = spark.createDataFrame(synth.lcg_image_table(16, 32, 32, 2.0))
     aois = synth.aoi_table(6, seed=43,
@@ -250,7 +258,7 @@ def test_one_row_strips_zonal_not_skipped(spark):
     per_img = strips.groupBy("image_id").count().collect()
     assert all(r["count"] == 32 for r in per_img)
     got = {r["aoi_id"]: (r["count"], r["sum"])
-           for r in chunked_zonal_stats(strips, aois).collect()}
+           for r in S.zonal_stats(strips, aois).collect()}
     assert got == whole and len(got) > 0
 
 
@@ -275,18 +283,17 @@ def test_q16_chunks_keep_global_quantization_grid(spark):
 
 
 def test_diff_stats_chunked_adjust_negate_matches_whole(spark):
-    """diff_stats_chunked must honor adjust/negate exactly like
-    diff_stats (it silently ignored them before)."""
+    """diff_stats over A strips must honor adjust/negate exactly like
+    over whole images (the strip path silently ignored them once)."""
     from rasters_rs_spark.operators import diff as DF
-    from rasters_rs_spark.operators.chunked import (chunk_images,
-                                                    diff_stats_chunked)
+    from rasters_rs_spark.operators.chunked import chunk_images
     from rasters_rs_spark.sources import synth
     a = spark.createDataFrame(synth.lcg_image_table(4, 32, 32, 2.0))
     b = spark.createDataFrame(
         synth.lcg_image_table(4, 16, 16, 4.0, k_offset=7_000_000))
     whole = DF.diff_stats(a, b, adjust=1.5, negate=True).collect()[0]
-    chunked = diff_stats_chunked(chunk_images(a, min_data_size=32 * 8), b,
-                                 adjust=1.5, negate=True).collect()[0]
+    chunked = DF.diff_stats(chunk_images(a, min_data_size=32 * 8), b,
+                            adjust=1.5, negate=True).collect()[0]
     for c in ("count", "diff_min", "diff_max", "diff_sum", "diff_sum_2"):
         assert chunked[c] == whole[c], c
 
@@ -321,8 +328,7 @@ def test_chunked_zonal_majority_equals_whole(spark):
     import pandas as pd
 
     from rasters_rs_spark.operators import stats as S
-    from rasters_rs_spark.operators.chunked import (chunk_images,
-                                                    chunked_zonal_majority)
+    from rasters_rs_spark.operators.chunked import chunk_images
     from rasters_rs_spark.sources import synth
 
     imgs = spark.createDataFrame(synth.lcg_image_table(8))
@@ -339,6 +345,5 @@ def test_chunked_zonal_majority_equals_whole(spark):
     for strip_rows in (4, 32):
         chunks = chunk_images(imgs, min_data_size=32 * strip_rows)
         ch = sorted(tuple(r) for r in
-                    chunked_zonal_majority(chunks, aois,
-                                           n_classes=4).collect())
+                    S.zonal_majority(chunks, aois, n_classes=4).collect())
         assert ch == whole and len(ch) == 2

@@ -9,6 +9,7 @@ import pandas as pd
 
 from rasters_rs_spark.functions import codecs
 from rasters_rs_spark.operators import diff as D
+from rasters_rs_spark.operators.chunked import chunk_images
 from rasters_rs_spark.operators.mask import mask, mask_block
 
 
@@ -54,10 +55,31 @@ def test_diff_chunked_equals_unchunked(spark):
     data1, data2 = _fixture_blocks()
     a, b = _pair_dfs(spark, data1, data2)
     full = D.diff_stats(a, b).collect()[0]
-    tiny = D.diff_stats(a, b, chunk_rows=1).collect()[0]
+    tiny = D.diff_stats(chunk_images(a, min_data_size=1), b).collect()[0]
     for k in ("count", "diff_min", "diff_max"):
         assert full[k] == tiny[k]
     assert isclose(full["diff_sum"], tiny["diff_sum"], rel_tol=1e-12)
+
+
+def test_diff_whole_a_against_strip_b_equals_whole(spark):
+    """Whole A images against B cut into 4-row strips (with and without
+    padding): each A pixel pairs with the B strip whose data rows hold
+    its partner, so diff_stats and diff_histogram equal the
+    whole-image results. The fixture's pairs read B rows 8..23 only,
+    so the padding clamp of B's border rows drops none."""
+    data1, data2 = _fixture_blocks()
+    a, b = _pair_dfs(spark, data1, data2)
+    full = D.diff_stats(a, b).collect()[0]
+    hist = D.diff_histogram(a, b, -1.0, 1.0, 4).collect()
+    for pad in (0, 2):
+        strips = chunk_images(b, min_data_size=64 * 4, padding=pad)
+        got = D.diff_stats(a, strips).collect()[0]
+        for k in ("count", "diff_min", "diff_max", "first_min",
+                  "second_min", "second_max"):
+            assert got[k] == full[k], (pad, k)
+        for k in ("diff_sum", "abs_diff_sum", "first_sum", "second_sum"):
+            assert isclose(got[k], full[k], rel_tol=1e-12), (pad, k)
+        assert D.diff_histogram(a, strips, -1.0, 1.0, 4).collect() == hist
 
 
 def test_diff_adjust_negate(spark):

@@ -38,7 +38,7 @@ def test_focal_chunked_equals_whole_image(spark, op):
     chunks = chunk_images(images, min_data_size=32 * 8, padding=1)
     assert chunks.count() > 4                       # multiple strips
     got = {r["image_id"]: codecs.decode_raw(bytes(r["bytes"]), 32, 32)
-           for r in assemble_images(FO.focal_chunked(chunks, op)).collect()}
+           for r in assemble_images(FO.focal(chunks, op)).collect()}
     for iid, w in whole.items():
         g = got[iid]
         # data ranges cover rows 1..31 (padding clamps row 0); the
@@ -83,7 +83,7 @@ def test_slope_hillshade_chunked_equals_whole(spark):
         chunks = chunk_images(images, min_data_size=32 * 8, padding=1)
         got = {r["image_id"]: codecs.decode_raw(bytes(r["bytes"]), 32, 32)
                for r in assemble_images(
-                   FO.focal_chunked(chunks, op)).collect()}
+                   FO.focal(chunks, op)).collect()}
         for iid, w in whole.items():
             assert np.array_equal(got[iid][1:31], w[1:31], equal_nan=True)
 

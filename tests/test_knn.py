@@ -399,7 +399,7 @@ def test_fill_idw_distributed_chunked_equals_broadcast(spark, padding):
     chunks = chunk_images(images, min_data_size=32 * 8,  # 8-row strips
                           padding=padding)
     assert chunks.count() > len(pdf)        # really multiple strips
-    patched = K.fill_idw_distributed_chunked(
+    patched = K.fill_idw_distributed(
         chunks, spark.createDataFrame(pts), k=4, cell_size=256.0,
         fast_path_points=0)
     got = {r["image_id"]: bytes(r["bytes"])
@@ -508,7 +508,7 @@ def test_fill_idw_q16_preserves_global_grid(spark):
         assert np.isnan(ob).any() and not np.isnan(nb).any()
 
     chunks = chunk_images(images, min_data_size=32 * 8)  # 8-row strips
-    patched = K.fill_idw_distributed_chunked(
+    patched = K.fill_idw_distributed(
         chunks, spark.createDataFrame(pts), k=4, fill_nan=True,
         cell_size=256.0, fast_path_points=0)
     got = {r["image_id"]: bytes(r["bytes"])
@@ -999,7 +999,7 @@ def test_fill_sibson_c1_and_distributed_match(spark):
 
 def test_fill_triangulated_chunked_equals_broadcast(spark):
     """The fully chunked triangulation fills (round-5 VERDICT #7):
-    strip-decomposed images through fill_barycentric_distributed_chunked
+    strip-decomposed images through fill_barycentric_distributed
     reassemble BYTE-identical to broadcast fill_barycentric (interior
     holes, same canonical triangle tables), and the chunked Sibson C1
     fill matches broadcast fill_sibson(c1=True) to distributed-
@@ -1030,12 +1030,12 @@ def test_fill_triangulated_chunked_equals_broadcast(spark):
     pts_df = spark.createDataFrame(pts_pdf)
 
     base = K.fill_barycentric(images, pts_pdf, drv).collect()[0]
-    got = assemble_images(K.fill_barycentric_distributed_chunked(
+    got = assemble_images(K.fill_barycentric_distributed(
         chunks, pts_df, cell_size=64.0)).collect()[0]
     assert bytes(got["bytes"]) == bytes(base["bytes"])
 
     sib = K.fill_sibson(images, pts_pdf, drv, c1=True).collect()[0]
-    gots = assemble_images(K.fill_sibson_distributed_chunked(
+    gots = assemble_images(K.fill_sibson_distributed(
         chunks, pts_df, cell_size=64.0, c1=True)).collect()[0]
     a = codecs.decode_raw(bytes(sib["bytes"]), 32, 32)
     b = codecs.decode_raw(bytes(gots["bytes"]), 32, 32)

@@ -569,8 +569,6 @@ def test_diff_strip_kernel_strips_equal_whole_image(data):
     ChunkPlan padding clamp leaves processed on each side, with no pair
     found twice. A is north-up or rotated, B north-up; NaN and no-data
     pixels on both sides."""
-    from rasters_rs_spark.operators.diff import _strip_pairs, align_pairs
-
     rng = np.random.default_rng(data.draw(st.integers(0, 2**32 - 1)))
     h_a, w_a = data.draw(st.integers(1, 24)), data.draw(st.integers(1, 24))
     h_b, w_b = data.draw(st.integers(1, 16)), data.draw(st.integers(1, 16))
@@ -589,32 +587,85 @@ def test_diff_strip_kernel_strips_equal_whole_image(data):
     b[rng.random(b.shape) < 0.1] = np.nan
     b[rng.random(b.shape) < 0.1] = nv_b
 
-    def strips(w, h):
+    got, want = _strip_union_and_whole(data, a, gt_a, nv_a, b, gt_b, nv_b)
+    assert len(set(got)) == len(got)
+    assert sorted(got) == sorted(want)
+
+
+def _strip_union_and_whole(data, a, gt_a, nv_a, b, gt_b, nv_b, extent=None,
+                           max_strip_rows=8):
+    """(pairs of the diff strip kernel over every A strip x B strip of
+    drawn ChunkPlans, pairs of the whole blocks with rows outside the
+    processed ranges set to no-data) as lists of float tuples."""
+    from rasters_rs_spark.operators.diff import _strip_pairs
+
+    def strips(block):
+        h, w = block.shape
         plan = (ChunkPlan(w, h)
-                .with_min_data_height(data.draw(st.integers(1, 8)))
+                .with_min_data_height(data.draw(st.integers(1, max_strip_rows)))
                 .with_padding(data.draw(st.integers(0, 3))))
         return [(ds, de, ls, le) for (_, ds, de, ls, le) in plan.chunks()]
 
-    a_strips, b_strips = strips(w_a, h_a), strips(w_b, h_b)
-    got = []
-    for (ds, de, ls, le) in a_strips:
-        a_strip = a[ls:le]
-        for (bds, bde, bls, ble) in b_strips:
-            for arr in zip(*_strip_pairs(
-                    a_strip[ds - ls:de - ls], ds, gt_a, nv_a,
-                    b[bls:ble], bls, (bds, bde), gt_b, nv_b)):
-                got.append(tuple(float(v) for v in arr))
-
-    # whole-image oracle: rows outside the processed ranges are no-data
     def processed(block, spans):
         out = np.full(block.shape, np.nan)
         for (ds, de, _, _) in spans:
             out[ds:de] = block[ds:de]
         return out
 
-    want = [tuple(float(v) for v in arr)
-            for pairs in align_pairs(processed(a, a_strips), gt_a, nv_a,
-                                     processed(b, b_strips), gt_b, nv_b)
-            for arr in zip(*pairs)]
+    def tuples(pairs):
+        return [tuple(float(v) for v in arr) for arr in zip(*pairs)]
+
+    a_strips, b_strips = strips(a), strips(b)
+    got = []
+    for (ds, de, ls, le) in a_strips:
+        for (bds, bde, bls, ble) in b_strips:
+            got += tuples(_strip_pairs(
+                a[ls:le][ds - ls:de - ls], ds, gt_a, nv_a,
+                b[bls:ble], bls, (bds, bde), gt_b, nv_b, extent))
+    want = tuples(_strip_pairs(
+        processed(a, a_strips), 0, gt_a, nv_a, processed(b, b_strips), 0,
+        (0, b.shape[0]), gt_b, nv_b, extent))
+    return got, want
+
+
+# Decimal geo-transform terms, not exact in binary. B's pixels are
+# whole multiples of A's and its origin sits a whole number of half A
+# pixels away, so in real arithmetic many A pixel centres land exactly
+# on a B pixel edge and only the float evaluation decides the B pixel.
+_DEC_SIZES = st.sampled_from([0.1, 0.3, 0.7, 1.1, -0.1, -0.3, -0.7])
+_DEC_ORIGINS = st.integers(-500, 500).map(lambda v: v / 10.0)
+
+
+@given(st.data())
+@settings(max_examples=300, deadline=None)
+def test_diff_strip_kernel_decimal_transforms_bit_equal_whole_image(data):
+    """With decimal pixel sizes and origins, the union of the strip
+    kernel's pairs over A strips x B strips (random strip heights and
+    padding, optionally inside an extent polygon whose vertices are A
+    pixel centres) equals the whole-image pairs bit for bit: a strip
+    evaluates the transform and the extent test at its global rows,
+    the same floats as the whole image."""
+    rng = np.random.default_rng(data.draw(st.integers(0, 2**32 - 1)))
+    h_a, w_a = data.draw(st.integers(16, 48)), data.draw(st.integers(1, 16))
+    sx, sy = data.draw(_DEC_SIZES), data.draw(_DEC_SIZES)
+    n = data.draw(st.sampled_from([1, 3, 6, 7]))
+    gt_a = [data.draw(_DEC_ORIGINS), sx, 0.0, data.draw(_DEC_ORIGINS), 0.0,
+            sy]
+    gt_b = [gt_a[0] + data.draw(st.integers(-6, 6)) * sx / 2, n * sx, 0.0,
+            gt_a[3] + data.draw(st.integers(-6, 6)) * sy / 2, 0.0, n * sy]
+    h_b = data.draw(st.integers(1, h_a // n + 2))
+    w_b = data.draw(st.integers(1, w_a // n + 2))
+    a = rng.normal(size=(h_a, w_a))
+    b = rng.normal(size=(h_b, w_b))
+    a[rng.random(a.shape) < 0.1] = np.nan
+    b[rng.random(b.shape) < 0.1] = np.nan
+    extent = None
+    if data.draw(st.booleans()):
+        k = data.draw(st.integers(3, 5))
+        cj = rng.integers(-1, w_a + 1, size=k) + 0.5
+        ci = rng.integers(-1, h_a + 1, size=k) + 0.5
+        extent = ([0], list(gt_a[0] + cj * sx), list(gt_a[3] + ci * sy))
+    got, want = _strip_union_and_whole(data, a, gt_a, np.nan, b, gt_b,
+                                       np.nan, extent, max_strip_rows=3)
     assert len(set(got)) == len(got)
     assert sorted(got) == sorted(want)

@@ -153,8 +153,8 @@ def test_codegen_cache_holds_a_pipeline(spark):
         strips = chunked.chunk_images(images, min_data_size=32 * 8)
         return [
             stats.zonal_stats(images, aois).count(),
-            chunked.chunked_zonal_stats(strips, aois).count(),
-            chunked.chunked_zonal_stats_dist(strips, aoi_df, zoom=10).count(),
+            stats.zonal_stats(strips, aois).count(),
+            stats.zonal_stats_dist(strips, aoi_df, zoom=10).count(),
             celljoin.cell_pip_join(pts, aoi_df, zoom=12,
                                    broadcast_aois=False).count(),
             dedup.minhash_dedup(docs).count(),

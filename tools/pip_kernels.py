@@ -10,8 +10,8 @@ written) and prints one JSON object:
   window's centres and through ``geom.grid_in_rings`` (absent from
   trees without the scanline kernel);
 - ``image_kernel_ms`` / ``strip_kernel_ms`` / ``strip16_kernel_ms``:
-  the per-row zonal kernels of ``zonal_stats`` over the 16 images and
-  of ``chunked_zonal_stats`` over the strips ``chunk_images`` cuts at
+  the per-row zonal kernel of ``zonal_stats`` over the 16 images and
+  over the strips ``chunk_images`` cuts at
   the benchmark's ``min_data_size`` (one strip per image) and over
   16-row strips (8 per image, 7 of them starting past row 0);
 - ``image_kernel_peak_mb``: the ``tracemalloc`` peak of the
@@ -47,9 +47,18 @@ from rasters_rs_spark.functions import geom  # noqa: E402
 from rasters_rs_spark.operators import chunked, stats  # noqa: E402
 from rasters_rs_spark.plans.chunking import ChunkPlan  # noqa: E402
 
-# the whole-image row kernel; older trees name it _zonal_image_partials
-image_kernel = getattr(stats, "_image_zonal_partials", None) \
-    or stats._zonal_image_partials
+# the row kernel of zonal_stats, images and strips alike; older trees
+# have a whole-image kernel (_image_zonal_partials, earlier
+# _zonal_image_partials) and chunked._strip_zonal_partials for strips
+if hasattr(stats, "_strip_zonal_partials"):
+    image_kernel = stats._strip_zonal_partials
+
+    def strip_kernel(row, aoi_rows):
+        return stats._strip_zonal_partials(row, aoi_rows, False)
+else:
+    image_kernel = getattr(stats, "_image_zonal_partials", None) \
+        or stats._zonal_image_partials
+    strip_kernel = chunked._strip_zonal_partials
 
 Row = collections.namedtuple(
     "Row", "image_id bytes w h fmt gt no_val "
@@ -123,10 +132,10 @@ def main() -> None:
 
     image_all = kernel_all("image", images,
                            lambda r: image_kernel(r, aoi_rows, False))
-    strip_all = kernel_all("strip", strips, lambda r: chunked
-                           ._strip_zonal_partials(r, aoi_rows))
-    strip16_all = kernel_all("strip16", strips16, lambda r: chunked
-                             ._strip_zonal_partials(r, aoi_rows))
+    strip_all = kernel_all("strip", strips,
+                           lambda r: strip_kernel(r, aoi_rows))
+    strip16_all = kernel_all("strip16", strips16,
+                             lambda r: strip_kernel(r, aoi_rows))
 
     out = {"seed": args.seed, "images": len(images), "strips": len(strips),
            "strips16": len(strips16), "aois": len(aoi_rows),

@@ -372,7 +372,7 @@ def main():
     chunks_z = chunked.chunk_images(imgs_z, min_data_size=0x2000).persist()
     chunks_z.count()
     timed("zonal_chunked_dist_8192img_512aoi",
-          lambda: chunked.chunked_zonal_stats_dist(
+          lambda: stats.zonal_stats_dist(
               chunks_z, aoi_cat2, zoom=12).count())
     chunks_z.unpersist()
     # area-weighted (coverage-fraction) zonal over the same 8192-image
@@ -560,7 +560,7 @@ both volumes).
 | stage | input | output rows | wall (s) | spread (s) |
 |---|---|---|---|---|
 | zonal_stats_dist | 8192 64px images x 512-AOI catalog | {results['zonal_dist_8192img_512aoi']['rows']} | {results['zonal_dist_8192img_512aoi']['sec']} | {results['zonal_dist_8192img_512aoi']['runs_sec']} |
-| chunked_zonal_stats_dist | same volume, strip chunks | {results['zonal_chunked_dist_8192img_512aoi']['rows']} | {results['zonal_chunked_dist_8192img_512aoi']['sec']} | {results['zonal_chunked_dist_8192img_512aoi']['runs_sec']} |
+| zonal_stats_dist over strip chunks | same volume, strip chunks | {results['zonal_chunked_dist_8192img_512aoi']['rows']} | {results['zonal_chunked_dist_8192img_512aoi']['sec']} | {results['zonal_chunked_dist_8192img_512aoi']['runs_sec']} |
 | zonal_stats_weighted (coverage fractions, clipped-trapezoid) | 8192 images x 64 polygon AOIs | {results['zonal_weighted_8192img_64poly']['rows']} | {results['zonal_weighted_8192img_64poly']['sec']} | {results['zonal_weighted_8192img_64poly']['runs_sec']} |
 | fill_barycentric_distributed | 256 64px images, ~259k points, cell-bucketed Delaunay | {results['fill_barycentric_dist_256img_259kpts']['rows']} filled | {results['fill_barycentric_dist_256img_259kpts']['sec']} | {results['fill_barycentric_dist_256img_259kpts']['runs_sec']} |
 | fill_sibson_distributed (vectorized cavity solve) | same volume | {results['fill_sibson_dist_256img_259kpts']['rows']} filled | {results['fill_sibson_dist_256img_259kpts']['sec']} | {results['fill_sibson_dist_256img_259kpts']['runs_sec']} |
