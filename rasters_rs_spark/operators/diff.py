@@ -211,8 +211,11 @@ def _pair_stats(pairs: DataFrame, adjust: float, negate: bool,
         out = partials.groupBy("pair_id").agg(*merged)
     else:
         out = partials.agg(*merged)
-    return out.withColumn("diff_mean", F.col("diff_sum") / F.col("count")) \
-              .withColumn("diff_std", F.sqrt(F.col("diff_sum_2") / F.col("count")))
+    # NULL, not DIVIDE_BY_ZERO, when no pixel pairs (disjoint rasters)
+    count = F.col("count")
+    return out.withColumn("diff_mean", F.try_divide("diff_sum", count)) \
+              .withColumn("diff_std",
+                          F.sqrt(F.try_divide("diff_sum_2", count)))
 
 
 def _pair_histogram(pairs: DataFrame, hmin: float, hmax: float, bins: int,

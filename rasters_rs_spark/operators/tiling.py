@@ -9,12 +9,17 @@ Pipeline semantics, re-expressed for Spark:
   (raster-tile/main.rs:94-105, dem.rs:150-170);
 - pyramid (A7): parent pixel = NaN-aware mean of the child 2x2 block,
   children placed by corner: x even -> left half, y odd -> TOP half
-  (tile y grows northward; dem.rs:176-251). The reference's streaming
-  stack (dem.rs:35-104) is a memory optimization with identical
-  semantics; here each level is either computed in-task per image
-  ("local" mode: zero shuffle, right for billions of small images) or
-  via a per-level groupBy shuffle ("distributed" mode, right for huge
-  single rasters);
+  (tile y grows northward; dem.rs:176-251). Each level is either
+  computed in-task per image ("local" mode: zero shuffle, right for
+  billions of small images) or via a per-level groupBy shuffle
+  ("distributed" mode, right for huge single rasters);
+- streaming (dem.rs:35-104 hands tiles to a decoupled writer as they
+  are made, a memory optimization with identical semantics): every
+  tile generator is a ``mapInArrow`` that makes one image's tiles at a
+  time (``_image_tiles``) and yields an Arrow batch whenever its
+  payload reaches ``_BATCH_BYTES`` (``_arrow_batches``), so a task
+  holds one batch budget plus one image's pyramid, however many images
+  its input batch carries;
 - encode (S9/M5): 16-bit quantization, 0 = NaN, per-tile max
   reconstruction error (dem.rs:253-298);
 - index (S11): nested {zoom: {y: {"y": y, "index": {x: stats}}}} JSON
@@ -24,10 +29,13 @@ Pipeline semantics, re-expressed for Spark:
 from __future__ import annotations
 
 import json
+import zlib
+from functools import partial
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import codecs, geom
@@ -42,6 +50,28 @@ ENCODED_SCHEMA = (
     "image_id string, z int, x long, y long, bytes binary, "
     "min double, max double, bins int, err double"
 )
+
+#: Image-table columns the tile generators read.
+_IMAGE_COLS = ("image_id", "bytes", "h", "w", "fmt", "gt", "crs", "no_val")
+
+#: Payload bytes an output batch of a tile generator collects before it
+#: is yielded. One batch per image instead costs the parquet sink about
+#: a tenth more per stage; 1 and 4 MiB write equally fast.
+_BATCH_BYTES = 1 << 20
+
+_ARROW_TYPES = {"string": pa.string(), "int": pa.int32(),
+                "long": pa.int64(), "binary": pa.binary(),
+                "double": pa.float64()}
+
+
+def _arrow_schema(ddl: str) -> pa.Schema:
+    """The Arrow schema ``mapInArrow`` expects for a flat DDL schema."""
+    return pa.schema([(n, _ARROW_TYPES[t]) for n, t in
+                      (f.split() for f in ddl.split(", "))])
+
+
+_TILE_ARROW = _arrow_schema(TILE_SCHEMA)
+_ENCODED_ARROW = _arrow_schema(ENCODED_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -304,40 +334,108 @@ def pyramid_local(base_rows, zoom: int, min_zoom: int, ts: int):
 # ---------------------------------------------------------------------------
 
 
+def _image_tiles(batches: Iterator[pa.RecordBatch], ts: int,
+                 min_zoom: int | None, max_zoom: int | None,
+                 pyramid: bool = True):
+    """Tile rows (image_id, z, x, y, tile, vmin, vmax, min_zoom) of the
+    images in ``batches`` (Arrow batches of an image table), made one
+    image at a time: decode, base level, then with ``pyramid`` every
+    level down to min zoom (``pyramid_local``). The pixel payload is
+    read from the Arrow buffer without a copy."""
+    for batch in batches:
+        data = batch.column("bytes")
+        ids, hs, ws, fmts, gts, crss, nvs = (
+            batch.column(c).to_pylist() for c in _IMAGE_COLS if c != "bytes")
+        for i in range(batch.num_rows):
+            block = codecs.decode_block(data[i].as_buffer(), hs[i], ws[i],
+                                        fmts[i])
+            no_val = np.nan if nvs[i] is None else nvs[i]
+            _, zoom, mz, rows = base_tiles_for_image(
+                block, gts[i], crss[i], no_val, ts, min_zoom, max_zoom)
+            if pyramid:
+                levels = pyramid_local(rows, zoom, mz, ts)
+            else:
+                levels = ((zoom, x, y, a, mn, mx) for (x, y, a, mn, mx) in rows)
+            for (z, x, y, arr, vmin, vmax) in levels:
+                yield ids[i], z, x, y, arr, vmin, vmax, mz
+
+
+def _arrow_batches(rows, schema: pa.Schema,
+                   payload: str) -> Iterator[pa.RecordBatch]:
+    """``schema`` record batches of the row tuples ``rows``: one is
+    yielded whenever its ``payload`` column holds ``_BATCH_BYTES`` or
+    more, and the rest at the end of ``rows``."""
+    at = schema.get_field_index(payload)
+    cols: list = [[] for _ in schema]
+    size = 0
+
+    def batch():
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+            schema=schema)
+
+    for row in rows:
+        for col, v in zip(cols, row):
+            col.append(v)
+        size += len(row[at])
+        if size >= _BATCH_BYTES:
+            yield batch()
+            cols, size = [[] for _ in schema], 0
+    if cols[0]:
+        yield batch()
+
+
+def _tile_batches(batches: Iterator[pa.RecordBatch], ts: int,
+                  min_zoom: int | None, max_zoom: int | None,
+                  pyramid: bool) -> Iterator[pa.RecordBatch]:
+    """tile_pyramid's generator: TILE_SCHEMA batches of raw tiles."""
+    return _arrow_batches(
+        ((iid, z, x, y, codecs.encode_raw(arr), vmin, vmax, mz)
+         for (iid, z, x, y, arr, vmin, vmax, mz)
+         in _image_tiles(batches, ts, min_zoom, max_zoom, pyramid)),
+        _TILE_ARROW, "data")
+
+
+def _encoded_tiles(tiles, compress: bool = False):
+    """ENCODED_SCHEMA rows of tile rows (image_id, z, x, y, tile, vmin,
+    vmax, ...): q16 payload, deflated at level 1 with ``compress``."""
+    for (iid, z, x, y, arr, vmin, vmax, *_) in tiles:
+        data, err = encode_tile_array(arr, vmin, vmax)
+        if compress:
+            data = zlib.compress(data, 1)
+        yield iid, z, x, y, data, float(vmin), float(vmax), codecs.Q16_BINS, err
+
+
+def _manifest_batches(batches: Iterator[pa.RecordBatch], ts: int,
+                      min_zoom: int | None, max_zoom: int | None,
+                      compress: bool) -> Iterator[pa.RecordBatch]:
+    """tile_index_manifest's local generator: ENCODED_SCHEMA batches."""
+    return _arrow_batches(
+        _encoded_tiles(_image_tiles(batches, ts, min_zoom, max_zoom),
+                       compress),
+        _ENCODED_ARROW, "bytes")
+
+
 def tile_pyramid(images: DataFrame, tile_size: int = 256,
                  min_zoom: int | None = None, max_zoom: int | None = None,
                  mode: str = "local") -> DataFrame:
     """Tile pyramid rows for every image: TILE_SCHEMA DataFrame.
 
-    mode="local": base + pyramid inside one mapInPandas pass per image
+    mode="local": base + pyramid inside one mapInArrow pass per image
     (no shuffle; the scale path for corpora of bounded-size images).
-    mode="distributed": base via mapInPandas, then one groupBy per level
+    mode="distributed": base via mapInArrow, then one groupBy per level
     (the scale path for a single huge raster; bit-identical results).
     """
     ts = tile_size
 
-    def base_gen(emit_pyramid: bool):
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                out = []
-                for row in pdf.itertuples(index=False):
-                    block = codecs.decode_block(row.bytes, row.h, row.w, row.fmt)
-                    cfg, zoom, mz, rows = base_tiles_for_image(
-                        block, row.gt, row.crs, row.no_val, ts,
-                        min_zoom, max_zoom)
-                    if emit_pyramid:
-                        it = pyramid_local(rows, zoom, mz, ts)
-                    else:
-                        it = ((zoom, x, y, a, mn, mx) for (x, y, a, mn, mx) in rows)
-                    for (z, x, y, arr, vmin, vmax) in it:
-                        out.append((row.image_id, z, x, y,
-                                    codecs.encode_raw(arr), vmin, vmax, mz))
-                cols = ["image_id", "z", "x", "y", "data", "vmin", "vmax", "min_zoom"]
-                yield pd.DataFrame(out, columns=cols)
-        return gen
+    def base(pyramid: bool) -> DataFrame:
+        return images.select(*_IMAGE_COLS).mapInArrow(
+            partial(_tile_batches, ts=ts, min_zoom=min_zoom,
+                    max_zoom=max_zoom, pyramid=pyramid),
+            schema=TILE_SCHEMA)
 
     if mode == "local":
-        return images.mapInPandas(base_gen(True), schema=TILE_SCHEMA)
+        return base(True)
 
     # parents are reduced in BUCKETS of B x B parent tiles per group,
     # not one group per parent: applyInPandas pays a Python call +
@@ -374,10 +472,8 @@ def tile_pyramid(images: DataFrame, tile_size: int = 256,
     # blocks are reclaimed when the DataFrames are GC'd — a plain
     # persist would pin every level in executor storage for the
     # application lifetime with no caller-visible handle to release
-    base = images.mapInPandas(base_gen(False), schema=TILE_SCHEMA) \
-        .localCheckpoint(eager=True)
-    levels = [base]
-    cur = base
+    cur = base(False).localCheckpoint(eager=True)
+    levels = [cur]
     # driver loop over zoom levels; each step is one shuffle (A7)
     while True:
         children = cur.where(F.col("z") > F.col("min_zoom"))
@@ -437,19 +533,21 @@ def encode_tiles(tiles: DataFrame, tile_size: int = 256) -> DataFrame:
     (min, max, bins, err) used by the index."""
     ts = tile_size
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                arr = codecs.decode_raw(row.data, ts, ts)
-                data, err = encode_tile_array(arr, row.vmin, row.vmax)
-                out.append((row.image_id, row.z, row.x, row.y, data,
-                            float(row.vmin), float(row.vmax),
-                            codecs.Q16_BINS, err))
-            cols = ["image_id", "z", "x", "y", "bytes", "min", "max", "bins", "err"]
-            yield pd.DataFrame(out, columns=cols)
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        def tile_rows():
+            for batch in batches:
+                data = batch.column("data")
+                ids, zs, xs, ys, vmins, vmaxs = (
+                    batch.column(c).to_pylist()
+                    for c in ("image_id", "z", "x", "y", "vmin", "vmax"))
+                for i in range(batch.num_rows):
+                    yield (ids[i], zs[i], xs[i], ys[i],
+                           codecs.decode_raw(data[i].as_buffer(), ts, ts),
+                           vmins[i], vmaxs[i])
+        return _arrow_batches(_encoded_tiles(tile_rows()), _ENCODED_ARROW,
+                              "bytes")
 
-    return tiles.mapInPandas(gen, schema=ENCODED_SCHEMA)
+    return tiles.mapInArrow(gen, schema=ENCODED_SCHEMA)
 
 
 #: Largest tile count index_json will collect into one driver dict.
@@ -538,7 +636,6 @@ def decode_tile_bytes(data: bytes, tile_size: int, vmin: float, vmax: float,
                       compressed: bool = False) -> np.ndarray:
     """Decode a tile payload (optionally deflate-compressed q16) back to
     float64 pixels."""
-    import zlib
     raw = zlib.decompress(data) if compressed else data
     stored = np.frombuffer(raw, dtype=">u2").reshape(tile_size, tile_size)
     return codecs.q16_dequantize(stored.astype(np.uint16), vmin, vmax)
@@ -552,39 +649,27 @@ def tile_index_manifest(images: DataFrame, tile_size: int = 256,
     """End-to-end: images -> pyramid -> encoded tiles DataFrame (the
     manifest is the DataFrame; index_json() renders the nested JSON).
 
-    In local mode base+pyramid+encode are FUSED inside one mapInPandas
+    In local mode base+pyramid+encode are FUSED inside one mapInArrow
     generator, so raw float64 tile arrays never cross an Arrow stage
-    boundary — only the 2-byte quantized payloads leave Python. With
-    ``compress=True`` payloads are additionally deflate-compressed in
-    the (parallel) Python stage — mostly-NaN deep-pyramid tiles shrink
-    to ~7%, trading cheap task CPU for scarce bus/JVM-heap traffic
-    (decode with ``decode_tile_bytes(compressed=True)``). The
-    distributed mode keeps the per-level shuffle and encodes after."""
+    boundary — only the 2-byte quantized payloads leave Python. The
+    generator makes one image's pyramid at a time and streams its tiles
+    out in Arrow batches of about ``_BATCH_BYTES`` of payload, so a
+    task holds one batch plus one image's pyramid, whatever the length
+    of its input batch. With ``compress=True`` payloads are
+    additionally deflate-compressed in the (parallel) Python stage —
+    mostly-NaN deep-pyramid tiles shrink to ~7%, trading cheap task CPU
+    for scarce bus/JVM-heap traffic (decode with
+    ``decode_tile_bytes(compressed=True)``). The distributed mode keeps
+    the per-level shuffle and encodes after."""
     if mode != "local":
         return encode_tiles(
             tile_pyramid(images, tile_size, min_zoom, max_zoom, mode=mode),
             tile_size)
 
-    ts = tile_size
-    import zlib
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                block = codecs.decode_block(row.bytes, row.h, row.w, row.fmt)
-                cfg, zoom, mz, rows = base_tiles_for_image(
-                    block, row.gt, row.crs, row.no_val, ts, min_zoom, max_zoom)
-                for (z, x, y, arr, vmin, vmax) in pyramid_local(rows, zoom, mz, ts):
-                    data, err = encode_tile_array(arr, vmin, vmax)
-                    if compress:
-                        data = zlib.compress(data, 1)
-                    out.append((row.image_id, z, x, y, data,
-                                float(vmin), float(vmax), codecs.Q16_BINS, err))
-            cols = ["image_id", "z", "x", "y", "bytes", "min", "max", "bins", "err"]
-            yield pd.DataFrame(out, columns=cols)
-
-    return images.mapInPandas(gen, schema=ENCODED_SCHEMA)
+    return images.select(*_IMAGE_COLS).mapInArrow(
+        partial(_manifest_batches, ts=tile_size, min_zoom=min_zoom,
+                max_zoom=max_zoom, compress=compress),
+        schema=ENCODED_SCHEMA)
 
 
 def dump_index_json(encoded: DataFrame, path: str, image_id: str | None = None):

@@ -21,6 +21,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources import io
+
 
 @dataclass
 class StageResult:
@@ -53,8 +55,10 @@ class CheckpointRunner:
             return False  # torn manifest == incomplete -> stage reruns
 
     def load(self, stage: str) -> DataFrame:
+        """A stage's persisted output; its schema comes from a parquet
+        footer (``io.read_table``), so loading runs no Spark job."""
         _, data, _ = self._paths(stage)
-        return self.spark.read.parquet(data)
+        return io.read_table(self.spark, data)
 
     def run(self, stage: str, df_fn, repartition: int | None = None) -> DataFrame:
         """Execute ``df_fn() -> DataFrame`` once: if the stage's manifest
@@ -87,7 +91,7 @@ class CheckpointRunner:
                 sz = os.path.getsize(os.path.join(data, fn))
                 files.append({"file": fn, "bytes": sz})
                 total_bytes += sz
-        out = self.spark.read.parquet(data)
+        out = self.load(stage)
         rows = observed_rows if observed_rows >= 0 else out.count()
 
         manifest = {

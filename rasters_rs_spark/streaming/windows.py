@@ -248,9 +248,10 @@ def stream_tile_ingest(spark: SparkSession, source_dir: str, schema: str,
                        max_zoom: int | None = None, compress: bool = False):
     """Continuous tile ingestion: image rows arriving as a stream run
     the SAME fused base+pyramid+encode generator the batch pipeline
-    uses (tiling.tile_index_manifest local mode is stateless
-    mapInPandas, so it lifts to Structured Streaming unchanged — each
-    image's full pyramid is one row-local computation). Attach a
+    uses (tiling.tile_index_manifest local mode is a stateless
+    mapInArrow that streams byte-bounded Arrow batches, so it lifts to
+    Structured Streaming unchanged — each image's full pyramid is one
+    row-local computation). Attach a
     parquet/memory sink in append mode; per-image tile rows are final
     on arrival, so no watermark or state is involved and streamed
     output is row-identical to the batch pipeline (tested)."""

@@ -3,7 +3,8 @@ make (``image_tiles`` and ``zonal_curation``), on a tiny fixed input.
 
 Each call runs under its own job group and ends in a ``noop`` write, as
 the benchmark's sink does (``read_table`` alone has no sink: its
-budget is what reading costs before anything is computed). Per call it
+budget is what reading costs before anything is computed;
+``CheckpointRunner.run`` writes parquet itself). Per call it
 counts the Spark jobs (``statusTracker().getJobIdsForGroup``: no event
 log, no timing) and, in the executed plans of every query the call ran,
 the nodes in ``NODES``. The counts are committed in
@@ -76,13 +77,15 @@ def write_inputs(root: Path) -> tuple:
     }, aois
 
 
-def calls(spark, paths: dict, aois: pd.DataFrame) -> list:
+def calls(spark, paths: dict, aois: pd.DataFrame, out: Path) -> list:
     """(name, thunk) per public call, in workload order; a thunk returns
-    the DataFrame the sink writes, or None."""
+    the DataFrame the sink writes, or None. ``CheckpointRunner.run``
+    writes its stage under ``out``, as ``image_tiles`` does."""
     from rasters_rs_spark.operators import (celljoin, chunked, dedup,
                                             multimodal, similarity, stats,
                                             tiling)
     from rasters_rs_spark.sources import io
+    from rasters_rs_spark.streaming.manifest import CheckpointRunner
     t: dict = {}
 
     def read():
@@ -94,6 +97,11 @@ def calls(spark, paths: dict, aois: pd.DataFrame) -> list:
             (F.col("gt")[0] + F.col("gt")[1] * F.col("w") / 2).alias("x"),
             (F.col("gt")[3] + F.col("gt")[5] * F.col("h") / 2).alias("y"))
         return celljoin.cell_pip_join(cents, aois, zoom=12)
+
+    def checkpoint_run():
+        CheckpointRunner(spark, str(out)).run(
+            "tiles", lambda: tiling.tile_index_manifest(t["images"],
+                                                        compress=True))
 
     return [
         ("sources.io.read_table", read),
@@ -125,6 +133,7 @@ def calls(spark, paths: dict, aois: pd.DataFrame) -> list:
                                            partitions=8)),
         ("operators.tiling.tile_index_manifest",
          lambda: tiling.tile_index_manifest(t["images"], compress=True)),
+        ("streaming.manifest.CheckpointRunner.run", checkpoint_run),
     ]
 
 
@@ -203,7 +212,7 @@ def measure(spark, root: Path) -> dict:
     paths, aois = write_inputs(root)
     out = {}
     try:
-        for name, thunk in calls(spark, paths, aois):
+        for name, thunk in calls(spark, paths, aois, root / "checkpoint"):
             bus.waitUntilEmpty()
             seen = max((i for i, _ in _executions(spark)), default=-1)
             sc.setJobGroup(GROUP + name, name)

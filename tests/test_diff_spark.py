@@ -130,6 +130,21 @@ def test_diff_extent_clip(spark):
     assert row["count"] == inside.sum()
 
 
+def test_diff_stats_of_disjoint_pair_is_null_mean(spark):
+    """A pair with no pixel pair (B far from A) has count 0 and a NULL
+    diff mean and std, not a DIVIDE_BY_ZERO for the whole query."""
+    data1, data2 = _fixture_blocks()
+    a, b = _pair_dfs(spark, data1, data2)
+    from pyspark.sql import functions as F
+    far = F.array(*[F.lit(v) for v in (1e6, 4.0, 0.0, 1e6, 0.0, 4.0)])
+    b = b.withColumn("gt", far)
+    for per_pair in (False, True):
+        rows = D.diff_stats(a, b, per_pair=per_pair).collect()
+        assert len(rows) == 1
+        assert rows[0]["count"] == 0
+        assert rows[0]["diff_mean"] is None and rows[0]["diff_std"] is None
+
+
 def test_no_val_pixels_skipped(spark):
     data1, data2 = _fixture_blocks()
     data1[0, :] = -999.0  # A no-data row

@@ -35,6 +35,30 @@ def test_stage_runs_and_resumes(spark, tmp_path):
     assert r2.summary()[0]["skipped"] is True
 
 
+def test_run_reads_back_without_a_job(spark, tmp_path):
+    """The DataFrame ``run`` returns has the written schema, and the
+    call's only Spark job is the write (the read-back takes its schema
+    from a parquet footer)."""
+    root = str(tmp_path / "ckpt")
+    sc = spark.sparkContext
+    sc.setJobGroup("test.checkpoint_run", "checkpoint run")
+    try:
+        out = CheckpointRunner(spark, root).run(
+            "stage_a", lambda: spark.range(50).selectExpr(
+                "id", "cast(id as double) * 0.5 as v", "'a' as s"))
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup("test.checkpoint_run")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) == 1
+    written = spark.read.parquet(os.path.join(root, "stage_a", "data"))
+    assert out.schema == written.schema
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == \
+        [("id", "bigint"), ("v", "double"), ("s", "string")]
+    assert out.count() == 50
+
+
 def test_headline_pipeline_resumes(spark, tmp_path):
     import shutil
     from rasters_rs_spark.streaming.pipeline import run_headline

@@ -246,3 +246,76 @@ def test_index_json_refuses_huge_tile_table(spark):
     with pytest.raises(ValueError, match="max_tiles"):
         T.index_json(enc, max_tiles=0)
     assert T.index_json(enc, max_tiles=10)  # under the bound: normal path
+
+
+def _image_batch(n: int):
+    import pyarrow as pa
+    from rasters_rs_spark.sources import synth
+    return pa.RecordBatch.from_pandas(
+        synth.image_table(n, h=128, w=128, pixel_size=2.0),
+        preserve_index=False)
+
+
+def _traced(gen):
+    """(rows, batches, tracemalloc peak) of consuming ``gen``, holding
+    no batch past its own step."""
+    import tracemalloc
+    rows = batches = 0
+    tracemalloc.start()
+    try:
+        for b in gen():
+            rows += b.num_rows
+            batches += 1
+            del b
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    return rows, batches, peak
+
+
+def test_tile_generators_memory_bound():
+    """The Arrow tile generators hold one output batch and one image's
+    pyramid, not the tiles of their input batch: on 128 px images the
+    traced peak at 192 images stays near the 12-image peak and under
+    16 MiB (compressed manifest) and 24 MiB (raw tile_pyramid). Holding
+    the batch's tiles, as the pandas generators did, peaked at about 31
+    and 859 MiB on these 192 images."""
+    for fn, bound, kw in (
+            (T._manifest_batches, 16, {"compress": True}),
+            (T._tile_batches, 24, {"pyramid": True})):
+        peaks = {}
+        for n in (12, 192):
+            batch = _image_batch(n)
+            rows, batches, peaks[n] = _traced(
+                lambda: fn(iter([batch]), 256, None, None, **kw))
+            assert rows > n and batches >= 1
+        assert peaks[192] < bound * 2**20, (fn.__name__, peaks)
+        assert peaks[192] < peaks[12] + 4 * 2**20, (fn.__name__, peaks)
+
+
+def test_tile_generators_batch_edges():
+    """One image whose pyramid alone exceeds the batch budget spreads
+    over several batches with every tile kept in order; a batch with no
+    image yields no tile; the batches carry the Spark schema's types."""
+    batch = _image_batch(1)
+    want = [(r[0], r[1], r[2], r[3], codecs.encode_raw(r[4]))
+            for r in T._image_tiles(iter([batch]), 256, None, None)]
+    assert len(want) * 256 * 256 * 8 > T._BATCH_BYTES
+    out = list(T._tile_batches(iter([batch]), 256, None, None, True))
+    assert len(out) > 1
+    for b in out[:-1]:
+        assert sum(len(v) for v in b.column("data").to_pylist()) \
+            >= T._BATCH_BYTES
+    assert all(b.schema == T._TILE_ARROW for b in out)
+    got = [row for b in out for row in zip(
+        *[b.column(c).to_pylist() for c in ("image_id", "z", "x", "y", "data")])]
+    assert got == want
+
+    empty = batch.slice(0, 0)
+    assert list(T._tile_batches(iter([empty]), 256, None, None, True)) == []
+    assert list(T._manifest_batches(iter([empty, empty]), 256, None, None,
+                                    True)) == []
+    enc = list(T._manifest_batches(iter([empty, batch]), 256, None, None,
+                                   False))
+    assert all(b.schema == T._ENCODED_ARROW for b in enc)
+    assert sum(b.num_rows for b in enc) == len(want)
