@@ -38,20 +38,39 @@ def q16_quantize(block: np.ndarray, vmin: float, vmax: float):
     (val == max floors to exactly bins and is stored un-incremented,
     colliding with disc == bins-1 -> 65535; replicated as-is).
     """
+    stored = np.zeros(np.shape(block), dtype=np.uint16)
+    return stored, _q16_into(np.asarray(block, dtype=np.float64), vmin,
+                             vmax, stored)
+
+
+def _q16_into(block: np.ndarray, vmin: float, vmax: float,
+              out: np.ndarray, valid: np.ndarray | None = None) -> float:
+    """q16 codes of ``block`` written into the zeroed uint16 array
+    ``out`` (either byte order) where ``block`` is not NaN; returns the
+    max reconstruction error. ``valid`` (``~isnan(block)``) saves the
+    mask pass when the caller has it.
+
+    One work plane, updated in place: d = (clamped - vmin) * coeff
+    (clip propagates NaN), then its fraction d - floor(d), whose max
+    times (vmax - vmin) / bins is dem.rs:276-280's error."""
     bins = Q16_BINS
-    coeff = bins / (vmax - vmin)
-    # d = (clamped - vmin) * coeff; clip propagates NaN
-    d = (np.clip(block, vmin, vmax) - vmin) * coeff
+    span = vmax - vmin
+    coeff = bins / span
+    d = np.clip(block, vmin, vmax)
+    d -= vmin
+    d *= coeff
     disc = np.floor(d)
-    # err == max |clamped - rec| == max frac(d) * (vmax-vmin)/bins
-    # (same quantity as dem.rs:276-280, fewer array passes)
     with np.errstate(invalid="ignore"):
-        frac = d - disc
-        m = np.nan_to_num(frac, nan=-1.0).max() if frac.size else -1.0
-    err = 0.0 if m < 0.0 else float(m) * (vmax - vmin) / bins
+        np.subtract(d, disc, out=d)
+        m = np.fmax.reduce(d, axis=None, initial=-1.0)
+    err = 0.0 if m < 0.0 else float(m) * span / bins
+    if valid is None or not (np.isfinite(span) and np.isfinite(coeff)):
+        # a non-finite span or coeff makes d NaN at some valid pixels
+        valid = ~np.isnan(disc)
     with np.errstate(invalid="ignore"):
-        stored = np.where(np.isnan(d), 0.0, disc + (disc < bins)).astype(np.uint16)
-    return stored, err
+        disc += disc < bins
+    np.copyto(out, disc, casting="unsafe", where=valid)
+    return err
 
 
 def q16_dequantize(stored: np.ndarray, vmin: float, vmax: float) -> np.ndarray:

@@ -7,13 +7,21 @@ filter-refine spatial join that replaces the reference's O(pixels x
 polygons) nested-loop PIP (raster-stats/main.rs:72-82):
 
   points  -> cell key (one expression, JVM-side)
-  AOIs    -> covering cell set (bbox tile range, exploded)
-  equi-join on cell (broadcast when the AOI side is small, shuffle-hash
-  otherwise, optional salting for hot cells)
-  exact point-in-polygon refine, even-odd by default (nonzero winding
-  on request): a mapInPandas over the candidate rows, or, when an AOI
-  DataFrame is joined without broadcast, a cogroup applyInArrow of
-  pyarrow tables against the one-row-per-part ring table.
+  AOIs    -> covering cell set (bbox tile range)
+  filter  -> a pandas catalog: a lookup of each point's cell in the
+             driver-built cover (sorted cell keys + CSR part offsets)
+             that rides the kernel closure with the rings, inside one
+             mapInArrow over the points; no join, so ``salt`` and
+             ``broadcast_aois`` have no effect on it. An AOI DataFrame:
+             an equi-join on cell (broadcast when the cell table is
+             small, shuffle-hash otherwise, optional salting for hot
+             cells)
+  refine  -> exact point-in-polygon per AOI part, even-odd by default
+             (nonzero winding on request): in the lookup kernel, in a
+             mapInArrow over the ring-carrying candidate rows of a
+             broadcast join, or, when an AOI DataFrame is joined
+             without broadcast, in a cogroup applyInArrow of pyarrow
+             tables against the one-row-per-part ring table.
 """
 
 from __future__ import annotations
@@ -358,86 +366,155 @@ def image_cells_dist(images: DataFrame, zoom: int) -> DataFrame:
         (F.shiftleft(F.col("_cx"), 32) + F.col("_cy")).alias("cell"))
 
 
+def _bbox_cover(aois: pd.DataFrame, zoom: int):
+    """The covering cells at ``zoom`` of every row (part) of a pandas
+    AOI table, as CSR: sorted distinct cell keys ``cells``, and
+    ``parts[offsets[i]:offsets[i + 1]]``, ascending, the row positions
+    whose ring bbox covers ``cells[i]`` (a bbox cover; the exact test
+    happens after the lookup)."""
+    ts = 2.0 * MAX_COORD / float(1 << zoom)
+    keys, owners = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for part, r in enumerate(aois.itertuples(index=False)):
+        minx, miny, maxx, maxy = geom.polygon_bbox(r.ring_offsets, r.xs, r.ys)
+        cx = np.arange(int(np.floor((minx + MAX_COORD) / ts)),
+                       int(np.floor((maxx + MAX_COORD) / ts)) + 1)
+        cy = np.arange(int(np.floor((miny + MAX_COORD) / ts)),
+                       int(np.floor((maxy + MAX_COORD) / ts)) + 1)
+        k = ((cx[:, None] << 32) + cy[None, :]).ravel()
+        keys.append(k)
+        owners.append(np.full(k.size, part, dtype=np.int64))
+    keys, owners = np.concatenate(keys), np.concatenate(owners)
+    order = np.lexsort((owners, keys))
+    keys, parts = keys[order], owners[order]
+    cells, starts = np.unique(keys, return_index=True)
+    return cells, np.append(starts, keys.size), parts
+
+
 def aoi_cells_df(spark: SparkSession, aois: pd.DataFrame, zoom: int) -> DataFrame:
     """Explode each AOI into its covering cells at ``zoom`` (bbox cover;
     the exact test happens after the join). Computed driver-side: the
     AOI table is the small dimension side — aoi_cells_dist is the
     corpus-scale sibling over an AOI DataFrame."""
-    ts = 2.0 * MAX_COORD / float(1 << zoom)
+    cells, offsets, parts = _bbox_cover(aois, zoom)
+    recs = list(aois.itertuples(index=False))
     rows = []
-    for part, r in enumerate(aois.itertuples(index=False)):
-        minx, miny, maxx, maxy = geom.polygon_bbox(r.ring_offsets, r.xs, r.ys)
-        x0 = int(np.floor((minx + MAX_COORD) / ts))
-        x1 = int(np.floor((maxx + MAX_COORD) / ts))
-        y0 = int(np.floor((miny + MAX_COORD) / ts))
-        y1 = int(np.floor((maxy + MAX_COORD) / ts))
-        for cx in range(x0, x1 + 1):
-            for cy in range(y0, y1 + 1):
-                rows.append(
-                    (r.aoi_id, part, (cx << 32) + cy, list(r.ring_offsets),
-                     [float(v) for v in r.xs], [float(v) for v in r.ys])
-                )
+    for i, cell in enumerate(cells.tolist()):
+        for part in parts[offsets[i]:offsets[i + 1]].tolist():
+            r = recs[part]
+            rows.append((r.aoi_id, part, cell, list(r.ring_offsets),
+                         [float(v) for v in r.xs], [float(v) for v in r.ys]))
     return local_table(
         spark, rows,
         "aoi_id string, part int, cell long, ring_offsets array<int>, "
         "xs array<double>, ys array<double>")
 
 
-def _refine(df: DataFrame, keep_cols: list[str],
-            pip_rule: str = "evenodd",
-            rings: dict | None = None) -> DataFrame:
-    """Exact point-in-polygon refine over candidate (point, aoi) rows.
-    ``pip_rule``: 'evenodd' (crossing parity — the reference's
-    geo::Contains semantics) or 'nonzero' (signed winding number — the
-    GEOS/PostGIS rule; differs only on self-intersecting rings and
-    same-winding overlaps).
+def _pip(pip_rule: str):
+    """The point-in-polygon kernel of ``pip_rule``: 'evenodd' (crossing
+    parity — the reference's geo::Contains semantics) or 'nonzero'
+    (signed winding number — the GEOS/PostGIS rule; differs only on
+    self-intersecting rings and same-winding overlaps)."""
+    return {"evenodd": geom.points_in_rings,
+            "nonzero": geom.points_in_rings_winding}[pip_rule]
 
-    ``rings``: optional {part: (ring_offsets, xs, ys)} lookup closed
-    over the kernel (round-8). The pandas-AOI broadcast path knows the
-    whole catalog driver-side, so shipping the ring buffers once in
-    the task closure — instead of DUPLICATED onto every candidate row
-    through the join and the Arrow boundary (a 13x fan-out at the
-    headline's zoom) — cuts the refine stage's payload to the point
-    columns; same kernel, bit-identical keep decisions."""
-    out_schema = ", ".join(keep_cols)
-    pip = {"evenodd": geom.points_in_rings,
-           "nonzero": geom.points_in_rings_winding}[pip_rule]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf[[c.split(" ")[0] for c in keep_cols]][0:0]
+def _column(batch: pa.RecordBatch, name: str) -> np.ndarray:
+    return batch.column(name).to_numpy(zero_copy_only=False)
+
+
+def _inside_parts(px: np.ndarray, py: np.ndarray, part: np.ndarray,
+                  rings, pip) -> np.ndarray:
+    """Whether candidate k's point (px[k], py[k]) lies in its AOI part
+    ``part[k]``: one ``pip`` call per distinct part (an aoi_id spanning
+    several rows tests each candidate against ITS OWN part's rings).
+    ``rings(k)`` is the (ring_offsets, xs, ys) of candidate k's part."""
+    inside = np.zeros(part.size, dtype=bool)
+    order = np.argsort(part, kind="stable")
+    for grp in np.split(order, np.flatnonzero(np.diff(part[order])) + 1):
+        if grp.size:
+            inside[grp] = pip(px[grp], py[grp], *rings(grp[0]))
+    return inside
+
+
+def _lookup_join(pts: DataFrame, aois: pd.DataFrame, zoom: int,
+                 keep_cols: list, x_col: str, y_col: str, pip_rule: str,
+                 multipart: bool) -> DataFrame:
+    """cell_pip_join against a pandas catalog: one mapInArrow over the
+    points and their Catalyst ``cell`` column. Each batch looks its
+    cells up in the driver-built bbox cover (``_bbox_cover``, shipped
+    with the rings in the kernel closure) with one ``searchsorted``,
+    expands the candidate parts, runs the exact test per part and
+    ``take``s the kept point rows: no join, no broadcast job. With
+    ``multipart`` a point row inside several parts of one aoi_id yields
+    one row; every candidate of a point row is in its batch, so that
+    dedup is batch-local."""
+    cells, offsets, parts = _bbox_cover(aois, zoom)
+    ids, codes = np.unique(aois["aoi_id"].to_numpy(dtype=object),
+                           return_inverse=True)
+    ids = pa.array(ids.tolist(), type=pa.string())
+    rings = [(np.asarray(r.ring_offsets, dtype=np.int64),
+              np.asarray(r.xs, dtype=np.float64),
+              np.asarray(r.ys, dtype=np.float64))
+             for r in aois.itertuples(index=False)]
+    names = [c.split(" ")[0] for c in keep_cols]
+    pip = _pip(pip_rule)
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows == 0 or cells.size == 0:
                 continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            # group candidates by AOI ROW (part index), not aoi_id: an
-            # aoi_id spanning multiple rows (multipolygon-as-rows) must
-            # test each candidate against ITS OWN part's rings
-            for part, sub in pdf.groupby("part", sort=False):
-                if rings is not None:
-                    ro, rxs, rys = rings[int(part)]
-                else:
-                    first = sub.iloc[0]
-                    ro, rxs, rys = (first["ring_offsets"], first["xs"],
-                                    first["ys"])
-                inside = pip(
-                    sub["px"].to_numpy(), sub["py"].to_numpy(),
-                    list(ro),
-                    np.asarray(rxs, dtype=np.float64),
-                    np.asarray(rys, dtype=np.float64),
-                )
-                keep[sub.index.to_numpy()] = inside
-            res = pdf.loc[keep, [c.split(" ")[0] for c in keep_cols]]
-            yield res
+            key = batch.column("cell")
+            k = pc.fill_null(key, 0).to_numpy()
+            j = np.minimum(np.searchsorted(cells, k), cells.size - 1)
+            hit = cells[j] == k
+            if key.null_count:
+                hit &= key.is_valid().to_numpy(zero_copy_only=False)
+            row = np.flatnonzero(hit)
+            start, n = offsets[j[row]], np.diff(offsets)[j[row]]
+            # the candidates of a hit are parts[start:start + n]
+            part = parts[np.repeat(start - (np.cumsum(n) - n), n)
+                         + np.arange(n.sum())]
+            row = np.repeat(row, n)
+            inside = _inside_parts(
+                _column(batch, x_col).astype(np.float64)[row],
+                _column(batch, y_col).astype(np.float64)[row], part,
+                lambda c: rings[part[c]], pip)
+            row, aoi = row[inside], codes[part[inside]]
+            if multipart:
+                first = np.sort(np.unique(row * len(ids) + aoi,
+                                          return_index=True)[1])
+                row, aoi = row[first], aoi[first]
+            if row.size:
+                out = batch.select(names).take(pa.array(row))
+                yield pa.RecordBatch.from_arrays(
+                    out.columns + [ids.take(pa.array(aoi))],
+                    names=names + ["aoi_id"])
 
-    # stable integer index required for the boolean scatter above
-    return df.mapInPandas(
-        lambda it: gen(_reindexed(it)), schema=out_schema
-    )
+    return pts.mapInArrow(gen, schema=", ".join(keep_cols + ["aoi_id string"]))
 
 
-def _reindexed(batches):
-    for pdf in batches:
-        yield pdf.reset_index(drop=True)
+def _refine(df: DataFrame, keep_cols: list[str],
+            pip_rule: str = "evenodd") -> DataFrame:
+    """Exact point-in-polygon refine over candidate (point, AOI part)
+    rows that carry their part's rings (an AOI DataFrame joined without
+    the cogroup): one mapInArrow, the per-part test of ``_inside_parts``
+    with each part's rings read from its first candidate row."""
+    names = [c.split(" ")[0] for c in keep_cols]
+    pip = _pip(pip_rule)
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            ring = [batch.column(c) for c in ("ring_offsets", "xs", "ys")]
+            inside = _inside_parts(
+                _column(batch, "px"), _column(batch, "py"),
+                _column(batch, "part"),
+                lambda c: [a[int(c)].values.to_numpy(zero_copy_only=False)
+                           for a in ring], pip)
+            yield batch.select(names).filter(pa.array(inside))
+
+    return df.mapInArrow(gen, schema=", ".join(keep_cols))
 
 
 #: Max probe-side cell rows an auto decision will broadcast (each row
@@ -474,16 +551,22 @@ def cell_pip_join(points: DataFrame, aois, zoom: int = 12,
     ``points`` needs (id..., x_col, y_col) in WM/world coords — column
     names ``cell``/``px``/``py``/``part`` and the AOI column names are
     reserved (rejected, they would be silently clobbered). ``aois`` is
-    either a small pandas AOI table (driver-exploded covering cells,
-    broadcast fast path) or an AOI **DataFrame** in AOI_SCHEMA — the
-    corpus-scale path: covering cells are Catalyst exprs
-    (aoi_cells_dist), nothing lands on the driver, and the join
-    broadcasts only when a capped probe says the cell table is small.
+    either a small pandas AOI table or an AOI **DataFrame** in
+    AOI_SCHEMA:
+
+    - pandas: the driver builds the bbox cover once and the kernel
+      closure carries it with the rings; one mapInArrow over the points
+      looks their cells up and refines (``_lookup_join``). There is no
+      join, so ``broadcast_aois`` and ``salt`` have no effect.
+    - DataFrame, the corpus-scale path: covering cells are Catalyst
+      exprs (aoi_cells_dist), nothing lands on the driver, and the
+      equi-join broadcasts only when a capped probe says the cell table
+      is small. Set ``salt`` > 1 to spread a hot cell across ``salt``
+      shuffle keys when the AOI side is shuffled and a cell is skewed.
+
     An aoi_id may span multiple rows (multipolygon parts); a point
     matching any part yields one output row. Returns the point columns
-    + ``aoi_id``. One equi-join (set ``salt`` > 1 to spread a hot cell
-    across ``salt`` shuffle keys when the AOI side is shuffled and a
-    cell is skewed). ``multipart=None`` auto-detects duplicate aoi_ids
+    + ``aoi_id``. ``multipart=None`` auto-detects duplicate aoi_ids
     (exact for pandas; a bounded id collect for DataFrames — pass
     False/True to skip the probe when the catalog shape is known)."""
     reserved = {"cell", "px", "py", "part", "aoi_id", "ring_offsets",
@@ -492,9 +575,8 @@ def cell_pip_join(points: DataFrame, aois, zoom: int = 12,
         raise ValueError(
             f"cell_pip_join: point columns {sorted(reserved)} collide "
             f"with internal/AOI columns — rename them first")
-    spark = points.sparkSession
-    aoi_parts_src = None
-    if isinstance(aois, DataFrame):
+    catalog = isinstance(aois, DataFrame)
+    if catalog:
         if "part" not in aois.columns:
             aois = aois.withColumn("part",
                                    F.monotonically_increasing_id())
@@ -513,12 +595,8 @@ def cell_pip_join(points: DataFrame, aois, zoom: int = 12,
             cap = MAX_BROADCAST_AOI_CELLS
             broadcast_aois = \
                 cells.select("cell").limit(cap + 1).count() <= cap
-    else:
-        cells = aoi_cells_df(spark, aois, zoom)
-        if multipart is None:
-            multipart = len(aois) != aois["aoi_id"].nunique()
-        if broadcast_aois is None:
-            broadcast_aois = True
+    elif multipart is None:
+        multipart = len(aois) != aois["aoi_id"].nunique()
     if points.isStreaming:
         if multipart:
             # the (_rowid, aoi_id) dropDuplicates below is a CROSS-
@@ -526,26 +604,31 @@ def cell_pip_join(points: DataFrame, aois, zoom: int = 12,
             # monotonically_increasing_id restarts every micro-batch
             # (partition_id << 33 + offset): later batches colliding
             # with earlier state would silently lose rows while state
-            # grows unbounded (round-4 ADVICE)
+            # grows unbounded (round-4 ADVICE). A pandas catalog's
+            # lookup dedups inside its batch, but both catalog kinds
+            # accept the same streams.
             raise ValueError(
                 "cell_pip_join: multipart AOI catalogs are unsupported "
                 "on a streaming point source (per-row dedup is not "
                 "batch-local in Structured Streaming). Split "
                 "multipolygon AOIs into one single-part row per aoi_id "
                 "(or pre-union their rings), then pass multipart=False.")
-        if salt > 1:
+        if catalog and salt > 1:
             raise ValueError(
                 "cell_pip_join: salt > 1 keys the spread on per-row ids, "
                 "which are not stable on a streaming source")
     pts = points.withColumn("cell", cell_expr(x_col, y_col, zoom))
+    keep = [f"{c} {t}" for c, t in points.dtypes]
+    if not catalog:
+        return _lookup_join(pts, aois, zoom, keep, x_col, y_col, pip_rule,
+                            multipart)
     pts = pts.withColumn("px", F.col(x_col)).withColumn("py", F.col(y_col))
 
     # cogroup applyInArrow is batch-only: a streaming query with a
     # too-big-to-broadcast catalog falls back to the carry-rings
     # stream-static equi-join (rings duplicated per candidate row —
     # correct, but prefer broadcast-sized catalogs on streams)
-    cogroup_refine = (isinstance(aois, DataFrame) and not broadcast_aois
-                      and not points.isStreaming)
+    cogroup_refine = not broadcast_aois and not points.isStreaming
     if multipart or salt > 1 or cogroup_refine:
         # per-ROW identity, captured BEFORE the join: the multipart
         # dedup must collapse (one input row x several parts of one
@@ -564,8 +647,7 @@ def cell_pip_join(points: DataFrame, aois, zoom: int = 12,
     else:
         join_keys = ["cell"]
 
-    keep = [f"{c} {t}" for c, t in points.dtypes] \
-        + (["_rowid long"] if multipart else []) + ["aoi_id string"]
+    keep += (["_rowid long"] if multipart else []) + ["aoi_id string"]
 
     if cogroup_refine:
         # SHUFFLED-catalog plan: the candidate join must not carry the
@@ -580,21 +662,9 @@ def cell_pip_join(points: DataFrame, aois, zoom: int = 12,
         out = _refine_cogroup(pts, cells, aoi_parts_src, join_keys, keep,
                               pip_rule, refine_salt)
     else:
-        rings = None
-        if not isinstance(aois, DataFrame):
-            # pandas catalog: rings ride the kernel closure; the
-            # broadcast cell table carries only (aoi_id, part, cell)
-            # so candidate rows stop duplicating ring buffers through
-            # the join + Arrow boundary (round-8; see _refine)
-            rings = {
-                part: (list(r.ring_offsets),
-                       [float(v) for v in r.xs],
-                       [float(v) for v in r.ys])
-                for part, r in enumerate(aois.itertuples(index=False))}
-            cells = cells.drop("ring_offsets", "xs", "ys")
         right = F.broadcast(cells) if broadcast_aois else cells
-        cand = pts.join(right, on=join_keys, how="inner")
-        out = _refine(cand, keep, pip_rule, rings=rings)
+        out = _refine(pts.join(right, on=join_keys, how="inner"), keep,
+                      pip_rule)
     if multipart:
         # multipart AOIs: a point row inside several parts of one
         # aoi_id must still produce ONE row — keyed on row identity,
@@ -615,8 +685,7 @@ def _refine_cogroup(pts: DataFrame, cells: DataFrame,
     same materialized rows (a re-minted monotonically_increasing_id
     under a different partition layout mismatched ~97% of pairs in the
     1M-point scale test)."""
-    pip = {"evenodd": geom.points_in_rings,
-           "nonzero": geom.points_in_rings_winding}[pip_rule]
+    pip = _pip(pip_rule)
     names = [c.split(" ")[0] for c in keep_cols]
     out_schema = ", ".join(keep_cols)
 

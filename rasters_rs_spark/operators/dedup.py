@@ -24,9 +24,14 @@ from pyspark.sql import DataFrame, Observation, Window, functions as F
 from ..functions import scanpar, vectors
 from .text import shingle_expr
 
-#: Max MATERIALIZED band-table bytes the LSH self-join will broadcast
-#: (read from the localCheckpoint's block-manager metadata — no job).
+#: Max band-table bytes the LSH self-join will broadcast (estimated
+#: from an observation on the band checkpoint — no job of its own).
 MAX_BROADCAST_BAND_BYTES = 64 << 20
+
+#: Bytes of one (id, band, band_key) band row besides its id: the
+#: UnsafeRow null word and three 8-byte slots, plus the 32-character
+#: md5 hex key.
+_BAND_ROW_BYTES = 8 + 3 * 8 + 32
 
 
 def _temp_view(df: DataFrame) -> str:
@@ -230,46 +235,20 @@ def minhash_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     # aggregation (the expensive stage) runs once, and the join's two
     # sides (three with the salted path's hot-bucket count) read
     # materialized blocks (reclaimed on GC, unlike a bare persist).
-    # The round-3 +25% regression was the separate count() JOB over
-    # the checkpointed rows, not the checkpoint (A/B at sf0.1: ckpt
-    # 1.49s < probe+ckpt 1.76s < no-ckpt 1.83s < ckpt+count 2.02s).
-    # Round 5: the broadcast-vs-salted decision now reads the
-    # checkpoint's MATERIALIZED byte size from the block manager
-    # (getRDDStorageInfo — metadata, zero jobs), eliminating the probe
-    # job entirely. Bytes is a sound proxy HERE because band rows are
-    # fixed-width (id, band, md5 key) — unlike the text columns the
-    # round-4 docstring warned about. Falls back to the capped row
-    # probe when the new cached RDD can't be identified unambiguously
-    # (concurrent queries checkpointing in the same session).
-    # The block-manager probe rides the private _jsc bridge, absent
-    # under Spark Connect and unstable across PySpark majors — ANY
-    # failure there (AttributeError, Py4J error) must degrade to the
-    # capped row probe, not break the operator (round-5 ADVICE).
-    small = None
-    try:
-        sc = docs.sparkSession.sparkContext
-        before = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
-    except Exception:
-        before = None
+    # The broadcast-vs-salted decision reads the table's size from an
+    # observation on the checkpoint's own job, as semantic_dedup reads
+    # its row count: band rows are fixed-width but for the id, so the
+    # row count and the id bytes give the table's size without a count
+    # job or a block-manager probe.
+    size = Observation()
     band_rows = minhash_bands(docs, text_col, id_col, num_hashes, bands,
-                              shingle_k).localCheckpoint(eager=True)
-    if before is not None:
-        try:
-            new = [i for i in sc._jsc.sc().getRDDStorageInfo()
-                   if i.id() not in before]
-            if len(new) == 1:
-                # memory AND disk: localCheckpoint stores
-                # MEMORY_AND_DISK, and blocks spilled to disk under
-                # pressure are exactly the large tables the cap must
-                # catch
-                small = (int(new[0].memSize()) + int(new[0].diskSize())
-                         <= MAX_BROADCAST_BAND_BYTES)
-        except Exception:
-            small = None
-    if small is None:
-        cap_docs = 1_000_000 // bands
-        small = (docs.select(F.col(id_col)).limit(cap_docs + 1).count()
-                 <= cap_docs)
+                              shingle_k) \
+        .observe(size, F.count(F.lit(1)).alias("n"),
+                 F.sum(F.octet_length("id")).alias("id_bytes")) \
+        .localCheckpoint(eager=True)
+    got = size.get
+    small = ((got["id_bytes"] or 0) + got["n"] * _BAND_ROW_BYTES
+             <= MAX_BROADCAST_BAND_BYTES)
     cand = lsh_candidate_pairs(band_rows, broadcast_right=small)
     # fan_out: the verification side's shingle arrays are row-local
     # HOF exprs — parallelize them off a single-row-group scan too

@@ -270,32 +270,45 @@ def diff_raster(a: DataFrame, b: DataFrame, pair_col: str = "image_id",
     Default: float64 blocks, NaN where unpaired (S7-analogue sink row
     carrying A's geometry). With ``discretize=(hmin, hmax, bins)``:
     int32 blocks, -128 no-data, bins per main.rs:117-125.
-    """
-    pairs = diff_pairs_df(a, b, pair_col)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    Each pair row emits its pairs' flat pixel indices and values; one
+    groupBy on ``pair_id`` writes them into one raster per pair. The
+    partials of an A or B strip table are disjoint (each A pixel pairs
+    with at most one B data row), so strips give the whole-image bytes.
+    """
+    fmt, dtype, fill = (("raw", "<f8", np.nan) if discretize is None
+                        else ("i32", "<i4", -128))
+
+    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
-                if discretize is None:
-                    res = np.full((row.h, row.w), np.nan)
-                else:
-                    res = np.full((row.h, row.w), -128, dtype=np.int32)
                 ii, jj, va, vb = _row_pairs(row)
                 d = _diff(va, vb, adjust, negate)
-                if discretize is None:
-                    res[ii, jj] = d
-                else:
-                    res[ii, jj] = _diff_bins(d, *discretize).astype(np.int32)
-                dtype = "<f8" if discretize is None else "<i4"
-                out.append((row.pair_id, res.astype(dtype).tobytes(),
-                            row.w, row.h,
-                            "raw" if discretize is None else "i32",
-                            list(row.gt), row.crs,
-                            float("nan") if discretize is None else -128.0))
-            yield pd.DataFrame(out, columns=["pair_id", "bytes", "w", "h",
-                                             "fmt", "gt", "crs", "no_val"])
+                if discretize is not None:
+                    d = _diff_bins(d, *discretize)
+                out.append((row.pair_id, (ii * row.w + jj).astype("<i8")
+                            .tobytes(), d.astype(dtype).tobytes(), row.w,
+                            row.h, list(row.gt), row.crs))
+            yield pd.DataFrame(out, columns=["pair_id", "_idx", "_val", "w",
+                                             "h", "gt", "crs"])
 
-    schema = ("pair_id string, bytes binary, w int, h int, fmt string, "
-              "gt array<double>, crs string, no_val double")
-    return pairs.mapInPandas(gen, schema=schema)
+    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
+        first = pdf.iloc[0]
+        res = np.full(int(first["h"]) * int(first["w"]), fill, dtype=dtype)
+        for idx, val in zip(pdf["_idx"], pdf["_val"]):
+            res[np.frombuffer(idx, dtype="<i8")] = np.frombuffer(val, dtype)
+        return pd.DataFrame([(first["pair_id"], res.tobytes(), first["w"],
+                              first["h"], fmt, list(first["gt"]),
+                              first["crs"], float(fill))],
+                            columns=["pair_id", "bytes", "w", "h", "fmt",
+                                     "gt", "crs", "no_val"])
+
+    return diff_pairs_df(a, b, pair_col) \
+        .mapInPandas(partials, schema=(
+            "pair_id string, _idx binary, _val binary, w int, h int, "
+            "gt array<double>, crs string")) \
+        .groupBy("pair_id") \
+        .applyInPandas(merge, schema=(
+            "pair_id string, bytes binary, w int, h int, fmt string, "
+            "gt array<double>, crs string, no_val double"))

@@ -6,7 +6,10 @@ Pipeline semantics, re-expressed for Spark:
   footprint in tile-pixel coords contributes fractional-area weights mu
   (0 < mu <= 1) to each overlapped tile pixel (tiling/base.rs:62-123);
   weighted aggregation value = sum(mu*val)/sum(mu) over valid pixels
-  (raster-tile/main.rs:94-105, dem.rs:150-170);
+  (raster-tile/main.rs:94-105, dem.rs:150-170). One footprint geometry
+  (``_row_footprint``) and its passes (``_footprint_passes``) serve
+  both the aggregate (``row_base_tiles``) and the raw relation
+  (``assignment_triples``), in the order the SQL mirror sums;
 - pyramid (A7): parent pixel = NaN-aware mean of the child 2x2 block,
   children placed by corner: x even -> left half, y odd -> TOP half
   (tile y grows northward; dem.rs:176-251). Each level is either
@@ -79,101 +82,147 @@ _ENCODED_ARROW = _arrow_schema(ENCODED_SCHEMA)
 # ---------------------------------------------------------------------------
 
 
+def _row_footprint(cfg: TileConfig, zoom: int, tile_y: int, w: int,
+                   h: int):
+    """The source-pixel footprints of one tile row at ``zoom`` over a
+    (w, h) raster, the geometry of ChunkConfig::process
+    (base.rs:62-123) shared by ``row_base_tiles`` and
+    ``assignment_triples``. None when no source pixel reaches the row,
+    else ``((ox, oy, sw, sh), rows, cols)``: the read window, then per
+    window row ``(ft, fb, y0, y1, win_r)`` and per window column
+    ``(fl, fr, x0, x1, win_c)``: the footprint edges in tile-pixel
+    coords, the tile-pixel range each footprint may touch and whether
+    it touches any. The footprint bounds are column- and
+    row-separable, so all of this is 1-D."""
+    ts = cfg.tile_size
+    left_t, _, right_t, _ = cfg.tile_index_bounds(zoom)
+    ntiles = right_t - left_t
+    pb = cfg.row_pix_bounds(zoom, tile_y)
+    (ox, oy), (sw, sh) = geom.window_from_bounds(pb, (w, h))
+    if sw == 0 or sh == 0:
+        return None
+    l_edge, t_edge, r_edge, b_edge = pb
+    tpw = (r_edge - l_edge) / ntiles / ts
+    tph = (b_edge - t_edge) / ts
+    cc = np.arange(sw, dtype=np.float64)
+    rr = np.arange(sh, dtype=np.float64)
+    fl = (cc + ox - l_edge) / tpw          # footprint left  (per col)
+    ft = (rr + oy - t_edge) / tph          # footprint top   (per row)
+    fr = (cc + 1.0 + ox - l_edge) / tpw
+    fb = (rr + 1.0 + oy - t_edge) / tph
+    # per-pixel candidate tile-pixel window (window_from_bounds)
+    ix0 = np.maximum(fl, 0.0)
+    iy0 = np.maximum(ft, 0.0)
+    ix1 = np.minimum(fr, float(ntiles * ts))
+    iy1 = np.minimum(fb, float(ts))
+    win_c = ix0 < ix1
+    win_r = iy0 < iy1
+    if not (win_r.any() and win_c.any()):
+        return None
+    return ((ox, oy, sw, sh),
+            (ft, fb, np.floor(iy0).astype(np.int64),
+             np.ceil(iy1).astype(np.int64), win_r),
+            (fl, fr, np.floor(ix0).astype(np.int64),
+             np.ceil(ix1).astype(np.int64), win_c))
+
+
+def _footprint_passes(fp, vmask: np.ndarray | None = None):
+    """The passes of a ``_row_footprint``: a footprint covers up to
+    span_y x span_x tile pixels, and pass (dy, dx) pairs every source
+    pixel with its (dy, dx)-th one. Passes come in dy-then-dx order
+    and yield ``(idx, r, c, tr, tc, ovy, ovx)``: ``idx`` the flat
+    read-window index of each contributing pixel, row-major, and
+    ``r``, ``c`` its row and column; ``tr``, ``ovy`` the pass's
+    tile-pixel row and overlap height per window row; ``tc``, ``ovx``
+    the same per window column. ``vmask`` (rows x cols) drops pixels.
+    Only the pass mask is a plane, one per pass."""
+    (_, _, sw, _), (ft, fb, y0, y1, win_r), (fl, fr, x0, x1, win_c) = fp
+    cols = []
+    for dx in range(int((x1 - x0)[win_c].max())):
+        tc = x0 + dx
+        ovx = np.minimum(tc + 1.0, fr) - np.maximum(tc.astype(np.float64), fl)
+        use_c = win_c & (tc < x1) & (ovx > 0.0)
+        if use_c.any():
+            cols.append((tc, ovx, use_c))
+    for dy in range(int((y1 - y0)[win_r].max())):
+        tr = y0 + dy
+        ovy = np.minimum(tr + 1.0, fb) - np.maximum(tr.astype(np.float64), ft)
+        use_r = win_r & (tr < y1) & (ovy > 0.0)
+        if not use_r.any():
+            continue
+        for tc, ovx, use_c in cols:
+            use = use_r[:, None] & use_c[None, :]
+            if vmask is not None:
+                use &= vmask
+            idx = np.flatnonzero(use)
+            if idx.size:
+                r, c = np.divmod(idx, sw)
+                yield idx, r, c, tr, tc, ovy, ovx
+
+
 def row_base_tiles(block: np.ndarray, cfg: TileConfig, zoom: int,
                    tile_y: int, no_val: float):
     """All base tiles of one tile row: list of (x, tile_array, vmin, vmax).
 
     Vectorized replication of ChunkConfig::process (base.rs:62-123) +
     the weighted accumulate (main.rs:94-105) + Tile::from_aggregate
-    (dem.rs:150-170).
+    (dem.rs:150-170): each footprint pass adds mu * val and mu onto
+    its tile pixels, and a tile pixel is sum(mu * val) / sum(mu), NaN
+    where no valid (not NaN, not ``no_val``) source pixel reached it.
+
+    The sums run in pass order, then in row-major source order
+    (``np.add.at``, not bincount: window-edge clipping makes several
+    source pixels share a tile pixel within one pass). The SQL mirror
+    of ``tile_pyramid_synth`` and the triple cross-check follow that
+    order bit for bit, so it must not change. The sums cover only the
+    bounding box of the row's footprints, a fraction of the tiles for
+    an image smaller than its tiles.
     """
     ts = cfg.tile_size
     h, w = block.shape
     left_t, _, right_t, _ = cfg.tile_index_bounds(zoom)
     ntiles = right_t - left_t
+    tiles = np.full((ntiles, ts, ts), np.nan)
+    fp = _row_footprint(cfg, zoom, tile_y, w, h)
+    if fp is None:
+        return [(left_t + slot, tiles[slot], np.inf, -np.inf)
+                for slot in range(ntiles)]
 
-    pb = cfg.row_pix_bounds(zoom, tile_y)
-    (ox, oy), (sw, sh) = geom.window_from_bounds(pb, (w, h))
+    (ox, oy, sw, sh), (_, _, y0, y1, win_r), (_, _, x0, x1, win_c) = fp
+    ty0, ty1 = int(y0[win_r].min()), int(y1[win_r].max())
+    tx0, tx1 = int(x0[win_c].min()), int(x1[win_c].max())
+    bw = tx1 - tx0
+    data = block[oy:oy + sh, ox:ox + sw]
+    vmask = ~np.isnan(data)
+    if not np.isnan(no_val):
+        vmask &= data != no_val
+    flat = data.ravel()
+    wsum = np.zeros((ty1 - ty0) * bw)
+    wgt = np.zeros((ty1 - ty0) * bw)
+    for idx, r, c, tr, tc, ovy, ovx in _footprint_passes(fp, vmask):
+        lin = ((tr - ty0) * bw)[r] + (tc - tx0)[c]
+        mu = ovx[c] * ovy[r]
+        np.add.at(wsum, lin, mu * flat[idx])
+        np.add.at(wgt, lin, mu)
 
-    wsum = np.zeros((ntiles * ts * ts,), dtype=np.float64)
-    wgt = np.zeros((ntiles * ts * ts,), dtype=np.float64)
-
-    if sw > 0 and sh > 0:
-        data = block[oy:oy + sh, ox:ox + sw]
-        l_edge, t_edge, r_edge, b_edge = pb
-        tpw = (r_edge - l_edge) / ntiles / ts
-        tph = (b_edge - t_edge) / ts
-        tpx_w, tpx_h = ntiles * ts, ts
-
-        # footprint bounds are column-/row-separable: compute 1-D and
-        # broadcast (bit-identical per-element values; the 2-D meshgrid
-        # formulation allocated ~12 full planes of the same numbers)
-        cc = np.arange(sw, dtype=np.float64)
-        rr = np.arange(sh, dtype=np.float64)
-        fl = (cc + ox - l_edge) / tpw          # footprint left  (per col)
-        ft = (rr + oy - t_edge) / tph          # footprint top   (per row)
-        fr = (cc + 1.0 + ox - l_edge) / tpw
-        fb = (rr + 1.0 + oy - t_edge) / tph
-
-        # per-pixel candidate tile-pixel window (window_from_bounds)
-        ix0 = np.maximum(fl, 0.0)
-        iy0 = np.maximum(ft, 0.0)
-        ix1 = np.minimum(fr, float(tpx_w))
-        iy1 = np.minimum(fb, float(tpx_h))
-        win_c = ix0 < ix1
-        win_r = iy0 < iy1
-        x0 = np.floor(ix0).astype(np.int64)
-        y0 = np.floor(iy0).astype(np.int64)
-        x1 = np.ceil(ix1).astype(np.int64)
-        y1 = np.ceil(iy1).astype(np.int64)
-
-        vals = data
-        vmask = ~np.isnan(vals)
-        if not np.isnan(no_val):
-            vmask &= vals != no_val
-        has_any = win_r.any() and win_c.any()
-
-        span_x = int((x1 - x0)[win_c].max()) if has_any else 0
-        span_y = int((y1 - y0)[win_r].max()) if has_any else 0
-        for dy in range(span_y):
-            tr = y0 + dy
-            ovy = np.minimum(tr + 1.0, fb) - np.maximum(tr.astype(np.float64), ft)
-            use_r = win_r & (tr < y1) & (ovy > 0.0)
-            if not use_r.any():
-                continue
-            for dx in range(span_x):
-                tc = x0 + dx
-                ovx = np.minimum(tc + 1.0, fr) - np.maximum(tc.astype(np.float64), fl)
-                use_c = win_c & (tc < x1) & (ovx > 0.0)
-                if not use_c.any():
-                    continue
-                use = use_r[:, None] & use_c[None, :] & vmask
-                if not use.any():
-                    continue
-                # mu = ovx * ovy elementwise, built by broadcast (same
-                # operands per cell as the 2-D form -> same bits)
-                mu = ovx[None, :] * ovy[:, None]
-                tc2 = np.broadcast_to(tc, (sh, sw))
-                tr2 = np.broadcast_to(tr[:, None], (sh, sw))
-                # linear index: tile slot = tc // ts, within-tile col tc % ts
-                # (np.add.at, not bincount: window-edge clipping makes
-                # several source pixels share a tile pixel within one
-                # pass, and the sequential add.at order is what the
-                # bit-exact pyramid oracle and triple cross-check mirror)
-                lin = (tc2[use] // ts) * ts * ts + tr2[use] * ts + (tc2[use] % ts)
-                np.add.at(wsum, lin, mu[use] * vals[use])
-                np.add.at(wgt, lin, mu[use])
-
-    wsum = wsum.reshape(ntiles, ts, ts)
-    wgt = wgt.reshape(ntiles, ts, ts)
+    valid = wgt > 0.0
+    box = np.full(wsum.shape, np.nan)
+    np.divide(wsum, wgt, out=box, where=valid)
+    box = box.reshape(ty1 - ty0, bw)
+    valid = valid.reshape(ty1 - ty0, bw)
     out = []
     for slot in range(ntiles):
-        with np.errstate(invalid="ignore", divide="ignore"):
-            tile = np.where(wgt[slot] > 0.0, wsum[slot] / wgt[slot], np.nan)
-        valid = wgt[slot] > 0.0
-        vmin = float(tile[valid].min()) if valid.any() else np.inf
-        vmax = float(tile[valid].max()) if valid.any() else -np.inf
-        out.append((left_t + slot, tile, vmin, vmax))
+        # the box's columns inside this tile
+        a = max(tx0, slot * ts)
+        b = min(tx1, (slot + 1) * ts)
+        v = np.empty(0)
+        if a < b:
+            sub = box[:, a - tx0:b - tx0]
+            tiles[slot, ty0:ty1, a - slot * ts:b - slot * ts] = sub
+            v = sub[valid[:, a - tx0:b - tx0]]
+        vmin = float(v.min()) if v.size else np.inf
+        vmax = float(v.max()) if v.size else -np.inf
+        out.append((left_t + slot, tiles[slot], vmin, vmax))
     return out
 
 
@@ -201,59 +250,20 @@ def assignment_triples(cfg: TileConfig, zoom: int, tile_y: int, dims):
 
     Value-independent (pure geometry) — this is the exact-match surface
     BASELINE.json requires; `row_base_tiles` is its aggregated form
-    (cross-checked in tests). Mirrors base.rs:62-123 triple-for-triple.
+    over the same footprint passes, in the same order (cross-checked in
+    tests). Mirrors base.rs:62-123 triple-for-triple.
     """
     ts = cfg.tile_size
-    w, h = dims
-    left_t, _, right_t, _ = cfg.tile_index_bounds(zoom)
-    ntiles = right_t - left_t
-    pb = cfg.row_pix_bounds(zoom, tile_y)
-    (ox, oy), (sw, sh) = geom.window_from_bounds(pb, (w, h))
-    empty = tuple(np.empty(0, dtype=t) for t in
-                  (np.int64, np.int64, np.int64, np.int64, np.int64, np.float64))
-    if sw == 0 or sh == 0:
-        return empty
-    l_edge, t_edge, r_edge, b_edge = pb
-    tpw = (r_edge - l_edge) / ntiles / ts
-    tph = (b_edge - t_edge) / ts
-    tpx_w, tpx_h = ntiles * ts, ts
-
-    cc, rr = np.meshgrid(np.arange(sw, dtype=np.float64),
-                         np.arange(sh, dtype=np.float64))
-    fl = (cc + ox - l_edge) / tpw
-    ft = (rr + oy - t_edge) / tph
-    fr = (cc + 1.0 + ox - l_edge) / tpw
-    fb = (rr + 1.0 + oy - t_edge) / tph
-    ix0 = np.maximum(fl, 0.0)
-    iy0 = np.maximum(ft, 0.0)
-    ix1 = np.minimum(fr, float(tpx_w))
-    iy1 = np.minimum(fb, float(tpx_h))
-    has_win = (ix0 < ix1) & (iy0 < iy1)
-    x0 = np.floor(ix0).astype(np.int64)
-    y0 = np.floor(iy0).astype(np.int64)
-    x1 = np.ceil(ix1).astype(np.int64)
-    y1 = np.ceil(iy1).astype(np.int64)
-    if not has_win.any():
-        return empty
-
+    fp = _row_footprint(cfg, zoom, tile_y, *dims)
+    left_t = cfg.tile_index_bounds(zoom)[0]
     outs = []
-    span_x = int((x1 - x0)[has_win].max())
-    span_y = int((y1 - y0)[has_win].max())
-    for dy in range(span_y):
-        for dx in range(span_x):
-            tc = x0 + dx
-            tr = y0 + dy
-            ovx = np.minimum(tc + 1.0, fr) - np.maximum(tc.astype(np.float64), fl)
-            ovy = np.minimum(tr + 1.0, fb) - np.maximum(tr.astype(np.float64), ft)
-            use = has_win & (tc < x1) & (tr < y1) & (ovx > 0.0) & (ovy > 0.0)
-            if not use.any():
-                continue
-            mu = (ovx * ovy)[use]
-            outs.append((
-                left_t + tc[use] // ts, tc[use] % ts, tr[use],
-                cc[use].astype(np.int64), rr[use].astype(np.int64), mu))
+    for _, r, c, tr, tc, ovy, ovx in (() if fp is None
+                                      else _footprint_passes(fp)):
+        t = tc[c]
+        outs.append((left_t + t // ts, t % ts, tr[r], c, r, ovx[c] * ovy[r]))
     if not outs:
-        return empty
+        return (tuple(np.empty(0, dtype=np.int64) for _ in range(5))
+                + (np.empty(0, dtype=np.float64),))
     return tuple(np.concatenate([o[i] for o in outs]) for i in range(6))
 
 
@@ -503,28 +513,27 @@ def encode_tile_array(arr: np.ndarray, vmin: float, vmax: float):
     disc casts to 0, stored 1, rec == min, err 0).
 
     Deep pyramid tiles are mostly NaN (one child quadrant of data), so
-    the quantization passes run only over the valid bounding box — the
-    rest of the output is memset zeros. Bit-identical result, a
-    fraction of the memory traffic."""
+    the quantization runs only over the valid bounding box, in place,
+    and writes its codes straight into the big-endian output through
+    the valid mask; the rest of the output stays the NaN code 0."""
+    stored = np.zeros(arr.shape, dtype=">u2")
     if not np.isfinite(vmin) or not np.isfinite(vmax):
-        return np.zeros(arr.shape, dtype=">u2").tobytes(), 0.0
+        return stored.tobytes(), 0.0
 
     valid = ~np.isnan(arr)
     rows = valid.any(axis=1)
     if not rows.any():
-        return np.zeros(arr.shape, dtype=">u2").tobytes(), 0.0
-    cols = valid.any(axis=0)
+        return stored.tobytes(), 0.0
     r0, r1 = np.argmax(rows), len(rows) - np.argmax(rows[::-1])
+    cols = valid[r0:r1].any(axis=0)
     c0, c1 = np.argmax(cols), len(cols) - np.argmax(cols[::-1])
-    sub = arr[r0:r1, c0:c1]
-
+    win = stored[r0:r1, c0:c1]
+    vwin = valid[r0:r1, c0:c1]
     if vmax > vmin:
-        sub_stored, err = codecs.q16_quantize(sub, vmin, vmax)
+        err = codecs._q16_into(arr[r0:r1, c0:c1], vmin, vmax, win, vwin)
     else:  # constant tile
-        sub_stored = np.where(np.isnan(sub), 0, 1).astype(np.uint16)
+        np.copyto(win, 1, where=vwin)
         err = 0.0
-    stored = np.zeros(arr.shape, dtype=">u2")
-    stored[r0:r1, c0:c1] = sub_stored  # byteswap happens on assignment
     return stored.tobytes(), err
 
 

@@ -560,8 +560,9 @@ def stream_cell_pip(spark: SparkSession, source_dir: str, schema: str,
     (celljoin.cell_pip_join — a stateless cell-key projection,
     covering-cell join and Arrow PIP refine all lift to Structured
     Streaming unchanged). ``aois`` is either the small pandas AOI
-    table (broadcast side; a changing catalog is a re-deploy, like any
-    broadcast dimension) or an AOI **DataFrame** in AOI_SCHEMA — the
+    table (its cell cover and rings ride the refine kernel's closure;
+    a changing catalog is a re-deploy, like any broadcast dimension)
+    or an AOI **DataFrame** in AOI_SCHEMA — the
     static side of a stream-static join, with covering cells as pure
     Catalyst exprs; a too-big-to-broadcast catalog falls back to the
     carry-rings shuffled join (the cogroup refine is batch-only).

@@ -333,3 +333,69 @@ def test_point_tile_pyramid_parents_equal_children(spark):
                round(sum(r["sum_value"] for r in byz[z].values()), 2))
            for z in byz}
     assert len(set(tot.values())) == 1
+
+
+def test_lookup_join_equals_broadcast_join(spark, tmp_path):
+    """A pandas catalog (the closure lookup kernel) joins exactly like
+    the same catalog as a DataFrame (broadcast equi-join + Arrow
+    refine): holes, a multipart id, points on cell edges, NULL x/y,
+    an empty catalog, empty batches, both pip rules and a stream."""
+    from rasters_rs_spark.functions.mercator import MAX_COORD
+    from rasters_rs_spark.streaming.windows import stream_cell_pip
+    zoom = 12
+    ts = 2.0 * MAX_COORD / float(1 << zoom)
+    aois = synth.aoi_table(6, seed=10)
+    # a square with a square hole whose edges lie on cell edges
+    c0 = np.floor((aois.loc[2, "xs"][0] + MAX_COORD) / ts) * ts - MAX_COORD
+    r0 = np.floor((aois.loc[2, "ys"][0] + MAX_COORD) / ts) * ts - MAX_COORD
+    sq = pd.DataFrame([{
+        "aoi_id": "edge_sq", "ring_offsets": [0, 4],
+        "xs": [c0, c0 + 4 * ts, c0 + 4 * ts, c0,
+               c0 + ts, c0 + 2 * ts, c0 + 2 * ts, c0 + ts],
+        "ys": [r0, r0, r0 + 4 * ts, r0 + 4 * ts,
+               r0 + ts, r0 + ts, r0 + 2 * ts, r0 + 2 * ts]}])
+    single = pd.concat([aois, sq], ignore_index=True)
+    multi = single.copy()
+    multi.loc[3, "aoi_id"] = multi.loc[0, "aoi_id"]
+    pts = synth.points_table(400, seed=9)[["pt_id", "x", "y"]]
+    k = np.arange(9)
+    edges = pd.DataFrame({"pt_id": [f"edge_{i}" for i in k],
+                          "x": c0 + (k % 5) * ts, "y": r0 + (k // 2) * ts})
+    nulls = pd.DataFrame({"pt_id": ["null_x", "null_y", "null_xy"],
+                          "x": [None, c0 + 0.5 * ts, None],
+                          "y": [r0 + 0.5 * ts, None, None]})
+    pts = pd.concat([pts, edges, nulls], ignore_index=True)
+    pts_df = spark.createDataFrame(pts, schema="pt_id string, x double, "
+                                               "y double").repartition(8)
+
+    def rows(df):
+        return sorted((r["pt_id"], r["aoi_id"]) for r in df.collect())
+
+    for cat in (single, multi):
+        for rule in ("evenodd", "nonzero"):
+            want = rows(cell_pip_join(pts_df, _aoi_df(spark, cat), zoom=zoom,
+                                      broadcast_aois=True, pip_rule=rule))
+            got = rows(cell_pip_join(pts_df, cat, zoom=zoom, pip_rule=rule))
+            assert got == want and want, (len(cat), rule)
+    assert any(p.startswith("edge_") for p, _ in want)
+    # empty batches: no point at all, and every point in one partition
+    none = pts_df.where("false")
+    assert rows(cell_pip_join(none, single, zoom=zoom)) == []
+    assert rows(cell_pip_join(pts_df.coalesce(1), single, zoom=zoom)) == \
+        rows(cell_pip_join(pts_df, single, zoom=zoom))
+    # an empty catalog
+    empty = single.iloc[:0]
+    assert rows(cell_pip_join(pts_df, empty, zoom=zoom)) == []
+    assert rows(cell_pip_join(pts_df, _aoi_df(spark, empty), zoom=zoom,
+                              broadcast_aois=True)) == []
+    # a streaming point source
+    src = str(tmp_path / "pts")
+    pts_df.write.parquet(src)
+    q = (stream_cell_pip(spark, src, "pt_id string, x double, y double",
+                         single, zoom=zoom)
+         .writeStream.format("memory").queryName("lookup_stream")
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    streamed = rows(spark.sql("select * from lookup_stream"))
+    assert streamed == rows(cell_pip_join(pts_df, _aoi_df(spark, single),
+                                          zoom=zoom, broadcast_aois=True))

@@ -117,6 +117,26 @@ def test_diff_histogram_and_raster(spark):
     assert np.array_equal(gotd, expect_bins)
 
 
+def test_diff_raster_strips_equal_whole_image(spark):
+    """diff_raster over A strips, B strips, or both gives one row per
+    pair with the whole-image bytes: the strip partials of a pair are
+    disjoint and merge into one raster."""
+    data1, data2 = _fixture_blocks()
+    data1[3:9, 5:40] = np.nan
+    a, b = _pair_dfs(spark, data1, data2)
+    sides = {"a strips": (chunk_images(a, min_data_size=128 * 8), b),
+             "b strips": (a, chunk_images(b, min_data_size=64 * 4)),
+             "both": (chunk_images(a, min_data_size=128 * 16),
+                      chunk_images(b, min_data_size=64 * 4, padding=1))}
+    for disc in (None, (-1.0, 1.0, 4)):
+        whole = D.diff_raster(a, b, discretize=disc).collect()
+        assert len(whole) == 1
+        for name, (sa, sb) in sides.items():
+            got = D.diff_raster(sa, sb, discretize=disc).collect()
+            assert len(got) == 1, (name, disc, len(got))
+            assert got[0].asDict() == whole[0].asDict(), (name, disc)
+
+
 def test_diff_extent_clip(spark):
     data1, data2 = _fixture_blocks()
     a, b = _pair_dfs(spark, data1, data2)

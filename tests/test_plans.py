@@ -41,13 +41,15 @@ def test_minhash_pipeline_has_no_cartesian_and_partial_aggs(spark, docs):
     assert "partial_min" in p or "partial_merge" in p or "HashAggregate" in p
 
 
-def test_cell_join_broadcasts_small_aoi_side(spark, sf_dir):
+def test_cell_join_small_aoi_side_is_a_closure_lookup(spark, sf_dir):
     import __spark_entry__ as E
     q = E.queries()["zonal_rect_events"](spark, sf_dir)
     p = plan(q)
-    # the AOI/cell side is tiny and must broadcast — a shuffle join on
-    # the full event table would be the wrong plan at scale
-    assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p
+    # the AOI/cell side is tiny and rides the refine kernel's closure —
+    # a shuffle join on the full event table would be the wrong plan at
+    # scale, and a broadcast of a driver-built table costs a job
+    assert "Join" not in p and "BroadcastExchange" not in p
+    assert "MapInArrow" in p
 
 
 def test_knn_topk_broadcasts_queries(spark, sf_dir):

@@ -8,10 +8,15 @@ from pathlib import Path
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from rasters_rs_spark.functions import codecs
 from rasters_rs_spark.operators import tiling as T
 from rasters_rs_spark.plans.tileplan import TileConfig
+
+from .tile_reference import (encode_tile_array_reference,
+                             q16_quantize_reference,
+                             row_base_tiles_reference)
 
 FIXTURE = Path("/root/reference/raster-tools/tests/fixtures/tile-test-fab1-index.json")
 
@@ -319,3 +324,91 @@ def test_tile_generators_batch_edges():
                                    False))
     assert all(b.schema == T._ENCODED_ARROW for b in enc)
     assert sum(b.num_rows for b in enc) == len(want)
+
+
+@given(data=st.data(), h=st.integers(1, 40), w=st.integers(1, 40),
+       ts=st.sampled_from([8, 16, 64]),
+       # source pixels smaller and larger than the tile pixels
+       ps=st.sampled_from([0.3, 1.7, 2.0, 9.5, 40.0, 333.3]),
+       dz=st.integers(-2, 2), south_up=st.booleans(),
+       nan_frac=st.sampled_from([0.0, 0.2, 1.0]), use_no_val=st.booleans())
+@settings(max_examples=150, deadline=None)
+def test_row_base_tiles_bit_equal_reference(data, h, w, ts, ps, dz,
+                                            south_up, nan_frac, use_no_val):
+    """The base kernel gives the reference kernel's bits (tiles, vmin,
+    vmax) on every tile row, including the rows just outside the raster
+    whose windows are clipped or empty."""
+    x0 = data.draw(st.floats(-3000.0, 3000.0), label="x0")
+    y0 = data.draw(st.floats(-3000.0, 3000.0), label="y0")
+    seed = data.draw(st.integers(0, 2**32 - 1), label="seed")
+    rng = np.random.default_rng(seed)
+    block = rng.normal(size=(h, w)) * 100.0
+    block[rng.random((h, w)) < nan_frac] = np.nan
+    no_val = np.nan
+    if use_no_val:
+        no_val = -9999.0
+        block[rng.random((h, w)) < 0.2] = no_val
+    gt = [x0, ps, 0.0, y0, 0.0, ps if south_up else -ps]
+    cfg = TileConfig.for_raster(w, h, gt, "EPSG:3857", ts)
+    zoom = max(cfg.max_zoom() + dz, 0)
+    _, top, _, bot = cfg.tile_index_bounds(zoom)
+    for ty in range(top - 1, bot + 1):
+        got = T.row_base_tiles(block, cfg, zoom, ty, no_val)
+        want = row_base_tiles_reference(block, cfg, zoom, ty, no_val)
+        assert len(got) == len(want)
+        for (gx, gtile, gmin, gmax), (wx, wtile, wmin, wmax) in zip(got, want):
+            assert gx == wx
+            assert gtile.tobytes() == wtile.tobytes()
+            assert (gmin, gmax) == (wmin, wmax)
+
+
+_ENCODE_CASES = ("data", "constant", "all_nan", "inf_range", "single",
+                 "at_vmax", "wide_range")
+
+
+@given(data=st.data(), n=st.integers(1, 24),
+       case=st.sampled_from(_ENCODE_CASES))
+@settings(max_examples=300, deadline=None)
+def test_encode_tile_array_bytes_equal_reference(data, n, case):
+    """q16 tile encode and ``q16_quantize`` give the reference's bytes
+    and err: tiles with their own min/max, constant tiles, all-NaN
+    tiles, +-inf vmin/vmax, one valid pixel, values equal to vmax (the
+    disc == bins edge) and a range whose width overflows."""
+    rng = np.random.default_rng(data.draw(st.integers(0, 2**32 - 1)))
+    arr = rng.normal(size=(n, n)) * 10.0 ** rng.integers(-3, 4)
+    arr[rng.random((n, n)) < data.draw(st.sampled_from([0.0, 0.5, 0.95]))] \
+        = np.nan
+    if case == "constant":
+        arr[~np.isnan(arr)] = 3.25
+    elif case == "all_nan":
+        arr[:] = np.nan
+    elif case == "single":
+        arr[:] = np.nan
+        arr[rng.integers(n), rng.integers(n)] = rng.normal()
+    elif case == "wide_range":
+        arr[~np.isnan(arr)] = np.sign(arr[~np.isnan(arr)]) * 1e308
+    vals = arr[~np.isnan(arr)]
+    vmin, vmax = ((float(vals.min()), float(vals.max())) if vals.size
+                  else (np.inf, -np.inf))
+    if case == "inf_range":
+        vmin, vmax = data.draw(st.sampled_from(
+            [(-np.inf, 1.0), (0.0, np.inf), (-np.inf, np.inf)]))
+    elif case == "at_vmax" and vals.size:
+        vmax = float(vals.min()) + 1.0
+        arr[0, :] = vmax
+    elif case == "data" and data.draw(st.booleans()):
+        # a range narrower than the values: both ends clamp
+        lo, hi = sorted(rng.normal(size=2))
+        vmin, vmax = float(lo), float(hi)
+    with np.errstate(over="ignore", invalid="ignore"):
+        got = T.encode_tile_array(arr, vmin, vmax)
+        want = encode_tile_array_reference(arr, vmin, vmax)
+        assert got[0] == want[0]
+        # an overflowing range makes both errs NaN
+        assert np.array_equal(got[1], want[1], equal_nan=True)
+        if np.isfinite(vmin) and np.isfinite(vmax) and vmax > vmin:
+            codes, err = codecs.q16_quantize(arr, vmin, vmax)
+            ref_codes, ref_err = q16_quantize_reference(arr, vmin, vmax)
+            assert codes.dtype == ref_codes.dtype
+            assert codes.tobytes() == ref_codes.tobytes()
+            assert np.array_equal(err, ref_err, equal_nan=True)
