@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import codecs, geom, scanpar
 from ..functions.mercator import MAX_COORD
-from ..sources.io import local_table
 
 AOI_SCHEMA = (
     "aoi_id string, ring_offsets array<int>, xs array<double>, ys array<double>"
@@ -290,7 +289,7 @@ def hilbert_xy2d(x: int, y: int, bits: int = 8) -> int:
 
 def aoi_cells_dist(aois: DataFrame, zoom: int, extra_cols=()) -> DataFrame:
     """Covering cells of an AOI DataFrame (AOI_SCHEMA) as PURE Catalyst
-    expressions — the corpus-scale counterpart of aoi_cells_df for AOI
+    expressions — the corpus-scale counterpart of _bbox_cover for AOI
     catalogs too large for the driver: bbox from array_min/array_max
     (all-ring bbox, the polygon_bbox convention), tile range floors,
     sequence() x sequence() double explode. The plan is scan ->
@@ -388,25 +387,6 @@ def _bbox_cover(aois: pd.DataFrame, zoom: int):
     keys, parts = keys[order], owners[order]
     cells, starts = np.unique(keys, return_index=True)
     return cells, np.append(starts, keys.size), parts
-
-
-def aoi_cells_df(spark: SparkSession, aois: pd.DataFrame, zoom: int) -> DataFrame:
-    """Explode each AOI into its covering cells at ``zoom`` (bbox cover;
-    the exact test happens after the join). Computed driver-side: the
-    AOI table is the small dimension side — aoi_cells_dist is the
-    corpus-scale sibling over an AOI DataFrame."""
-    cells, offsets, parts = _bbox_cover(aois, zoom)
-    recs = list(aois.itertuples(index=False))
-    rows = []
-    for i, cell in enumerate(cells.tolist()):
-        for part in parts[offsets[i]:offsets[i + 1]].tolist():
-            r = recs[part]
-            rows.append((r.aoi_id, part, cell, list(r.ring_offsets),
-                         [float(v) for v in r.xs], [float(v) for v in r.ys]))
-    return local_table(
-        spark, rows,
-        "aoi_id string, part int, cell long, ring_offsets array<int>, "
-        "xs array<double>, ys array<double>")
 
 
 def _pip(pip_rule: str):

@@ -10,6 +10,17 @@ pairs (never the full cross product). Because every hash is md5 over
 deterministic strings, the full MinHash/SimHash pipelines are
 reproducible in ANSI SQL and carry hard DuckDB oracles in the driver
 contract (__spark_entry__.py).
+
+Pair rule. Every LSH operator, batch or incremental, takes its
+candidates from ``_bucket_pairs`` and verifies them in one join: a
+batch dedup is an incremental probe whose corpus is empty. Rows sharing
+a bucket pair up; without a corpus each pair is kept once, as
+(id_a < id_b). With a corpus, a corpus id that the arriving batch also
+holds is superseded by the batch version (its corpus rows are dropped,
+both bucket and payload rows), and the kept pairs are (new id_a,
+corpus id_b) in either id order plus (new id_a < new id_b), so the
+result is the batch dedup of (corpus UNION new) restricted to pairs
+touching a new row.
 """
 
 from __future__ import annotations
@@ -22,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 from ..functions import scanpar, vectors
+from .similarity import cosine_expr, lcg_planes
 from .text import shingle_expr
 
 #: Max band-table bytes the LSH self-join will broadcast (estimated
@@ -150,11 +162,11 @@ def minhash_bands(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     return out
 
 
-def _salted_bucket_join(left: DataFrame, right: DataFrame, keys: list[str],
-                        hot_bucket_rows: int, hot_salt: int,
-                        sizes_from: DataFrame,
-                        salt_on: str = "id_a") -> DataFrame:
-    """Self-equi-join on bucket ``keys`` with hot-bucket salting.
+def _salt_sides(left: DataFrame, right: DataFrame, keys: list[str],
+                hot_bucket_rows: int, hot_salt: int,
+                sizes_from: DataFrame | None, salt_on: str = "id_a"):
+    """``left`` and ``right`` with the ``_salt`` column of the hot-bucket
+    guard, for a join or cogroup on ``keys + ["_salt"]``.
 
     A degenerate corpus (N identical/boilerplate docs) puts N rows into
     one bucket, and a plain equi-join then emits N^2 candidate rows from
@@ -164,10 +176,17 @@ def _salted_bucket_join(left: DataFrame, right: DataFrame, keys: list[str],
     only, split the left side into ``hot_salt`` id-hash sub-buckets
     while replicating the right side across them. Every (a, b) pair
     still meets exactly once — a meets b in a's salt partition — but
-    per-task work drops from n^2 to n^2/hot_salt. Cold buckets join on
-    salt 0 exactly as before (bit-identical output either way).
-    ``salt_on`` names the LEFT side's id column (the one hashed into
-    sub-buckets)."""
+    per-task work drops from n^2 to n^2/hot_salt. Cold buckets take
+    salt 0 (bit-identical output either way). ``salt_on`` names the
+    LEFT side's id column (the one hashed into sub-buckets).
+
+    ``sizes_from=None`` says no bucket can be hot (the caller knows its
+    whole table holds at most ``hot_bucket_rows`` rows): every row
+    takes salt 0, and the bucket-size count and its broadcast — two
+    Spark jobs — are not planned."""
+    if sizes_from is None:
+        return left.withColumn("_salt", F.lit(0)), \
+            right.withColumn("_salt", F.lit(0))
     hot = (sizes_from.groupBy(*keys).count()
            .where(F.col("count") > hot_bucket_rows)
            .select(*keys, F.lit(True).alias("_hot")))
@@ -182,7 +201,64 @@ def _salted_bucket_join(left: DataFrame, right: DataFrame, keys: list[str],
                     .otherwise(F.array(F.lit(0)))) \
         .withColumn("_salt", F.explode("_salts")) \
         .drop("_hot", "_salts")
+    return lt, rt
+
+
+def _salted_bucket_join(left: DataFrame, right: DataFrame, keys: list[str],
+                        hot_bucket_rows: int, hot_salt: int,
+                        sizes_from: DataFrame | None,
+                        salt_on: str = "id_a") -> DataFrame:
+    """Equi-join on bucket ``keys`` with hot buckets salted (see
+    _salt_sides)."""
+    lt, rt = _salt_sides(left, right, keys, hot_bucket_rows, hot_salt,
+                         sizes_from, salt_on)
     return lt.join(rt, on=keys + ["_salt"]).drop("_salt")
+
+
+def _supersede(corpus: DataFrame, new: DataFrame) -> DataFrame:
+    """``corpus`` rows without the ids ``new`` holds: the batch version
+    of a replayed id wins. Bucket and payload rows take the same
+    ``new`` (the batch's band rows), so the plan reuses one exchange."""
+    return corpus.join(new.select("id").distinct(), on="id", how="left_anti")
+
+
+def _bucket_pairs(new: DataFrame, keys: list[str],
+                  corpus: DataFrame | None = None, carry=(),
+                  broadcast: bool = False, hot_bucket_rows: int = 10_000,
+                  hot_salt: int = 32) -> DataFrame:
+    """Distinct candidate pairs of LSH bucket rows (id, *carry, *keys)
+    that share every key in ``keys``: the one candidate generator of
+    the LSH dedup operators, applying the module's pair rule. With no
+    ``corpus`` it is the self-join of ``new``; with one, ``new`` is the
+    arriving batch's rows and ``corpus`` the existing rows (replayed ids
+    dropped here). Returns (id_a, id_b, <c>_a..., <c>_b...) for each
+    ``carry`` column c. ``broadcast`` ships the right side whole (the
+    caller knows it is small), which skips the salting too: a
+    broadcastable table cannot host a task-killing bucket."""
+    def side(df, s, *extra):
+        return df.select(F.col("id").alias(f"id_{s}"),
+                         *[F.col(c).alias(f"{c}_{s}") for c in carry],
+                         *keys, *extra)
+
+    if corpus is None:
+        rows, extra = new, ()
+        keep = F.col("id_a") < F.col("id_b")
+    else:
+        rows = new.withColumn("_corp", F.lit(False)) \
+            .unionByName(_supersede(corpus, new).withColumn("_corp",
+                                                            F.lit(True)))
+        extra = ("_corp",)
+        keep = ((F.col("id_a") != F.col("id_b"))
+                & (F.col("_corp") | (F.col("id_a") < F.col("id_b"))))
+    left, right = side(new, "a"), side(rows, "b", *extra)
+    if broadcast:
+        joined = left.join(F.broadcast(right), on=keys)
+    else:
+        joined = _salted_bucket_join(left, right, keys, hot_bucket_rows,
+                                     hot_salt, rows)
+    return joined.where(keep).select(
+        "id_a", "id_b", *[f"{c}_{s}" for s in "ab" for c in carry]) \
+        .distinct()
 
 
 def lsh_candidate_pairs(band_rows: DataFrame,
@@ -192,37 +268,59 @@ def lsh_candidate_pairs(band_rows: DataFrame,
     """Distinct (id_a < id_b) pairs sharing at least one LSH bucket.
     Bucket self-join expressed as an equi-join on (band, band_key);
     pass ``broadcast_right`` when the band table is known-small (the
-    caller usually just counted it) to skip both shuffle exchanges —
-    the salting guard is skipped too, since a broadcastable table can't
-    host a task-killing bucket. Buckets with more than
-    ``hot_bucket_rows`` rows are salted (see _salted_bucket_join) so a
-    boilerplate-heavy corpus can't go quadratic inside one task."""
-    left = band_rows.select(F.col("id").alias("id_a"), "band", "band_key")
-    right = band_rows.select(F.col("id").alias("id_b"), "band", "band_key")
-    if broadcast_right:
-        joined = left.join(F.broadcast(right), on=["band", "band_key"])
-    else:
-        joined = _salted_bucket_join(left, right, ["band", "band_key"],
-                                     hot_bucket_rows, hot_salt, band_rows)
-    return (
-        joined.where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b").distinct()
-    )
+    caller usually just counted it) to skip both shuffle exchanges and
+    the salting guard. Buckets with more than ``hot_bucket_rows`` rows
+    are salted (see _salt_sides) so a boilerplate-heavy corpus can't go
+    quadratic inside one task."""
+    return _bucket_pairs(band_rows, ["band", "band_key"],
+                         broadcast=broadcast_right,
+                         hot_bucket_rows=hot_bucket_rows, hot_salt=hot_salt)
 
 
-def _verify_jaccard(cand: DataFrame, shingles: DataFrame,
-                    threshold: float) -> DataFrame:
-    """Exact-jaccard verification of candidate pairs against
-    pre-shingled texts (id, _sh): JVM-side array_intersect/union."""
-    pairs = (cand.join(shingles.withColumnRenamed("id", "id_a")
-                               .withColumnRenamed("_sh", "_sha"), "id_a")
-                 .join(shingles.withColumnRenamed("id", "id_b")
-                               .withColumnRenamed("_sh", "_shb"), "id_b"))
-    inter = F.size(F.array_intersect("_sha", "_shb")).cast("double")
-    union = F.size(F.array_union("_sha", "_shb")).cast("double")
-    return pairs.withColumn("jaccard", inter / union) \
-                .where(F.col("jaccard") >= threshold) \
-                .select("id_a", "id_b", "jaccard")
+def _jaccard_expr(a: str, b: str):
+    """Exact set jaccard of two distinct-shingle arrays, JVM-side."""
+    inter = F.size(F.array_intersect(a, b)).cast("double")
+    union = F.size(F.array_union(a, b)).cast("double")
+    return inter / union
+
+
+def _verified(cand: DataFrame, payload: DataFrame, measure, name: str,
+              threshold: float, corpus: DataFrame | None = None,
+              new: DataFrame | None = None) -> DataFrame:
+    """The one verify join: candidate pairs (id_a, id_b) whose
+    ``measure`` of the two ids' payloads is >= threshold, as
+    (id_a, id_b, name). ``payload`` and ``corpus`` are (id, _p) rows;
+    a corpus row of an id the batch's band rows ``new`` hold is
+    superseded (two rows per id would duplicate every pair touching
+    it)."""
+    if corpus is not None:
+        payload = payload.unionByName(_supersede(corpus, new))
+
+    def side(s):
+        return payload.select(F.col("id").alias(f"id_{s}"),
+                              F.col("_p").alias(f"_p{s}"))
+
+    return cand.join(side("a"), "id_a").join(side("b"), "id_b") \
+        .withColumn(name, measure("_pa", "_pb")) \
+        .where(F.col(name) >= threshold) \
+        .select("id_a", "id_b", name)
+
+
+def _shingles(docs: DataFrame, text_col: str, id_col: str, shingle_k: int,
+              fan_out: bool = False) -> DataFrame:
+    """(id, _p) verification payload: each doc's distinct shingles."""
+    toks = docs.select(F.col(id_col).cast("string").alias("id"),
+                       F.split(F.col(text_col), " ").alias("_toks"))
+    if fan_out:
+        toks = scanpar.fan_out(toks, key="id")
+    return toks.select("id", shingle_expr("_toks", shingle_k,
+                                          tokens=True).alias("_p"))
+
+
+def _vectors(embs: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, _p) verification payload: each row's embedding."""
+    return embs.select(F.col(id_col).cast("string").alias("id"),
+                       F.col(vec_col).alias("_p"))
 
 
 def minhash_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -252,13 +350,8 @@ def minhash_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     cand = lsh_candidate_pairs(band_rows, broadcast_right=small)
     # fan_out: the verification side's shingle arrays are row-local
     # HOF exprs — parallelize them off a single-row-group scan too
-    texts = scanpar.fan_out(
-        docs.select(F.col(id_col).cast("string").alias("id"),
-                    F.split(F.col(text_col), " ").alias("_toks")),
-        key="id") \
-        .select("id", shingle_expr("_toks", shingle_k,
-                                   tokens=True).alias("_sh"))
-    return _verify_jaccard(cand, texts, threshold)
+    texts = _shingles(docs, text_col, id_col, shingle_k, fan_out=True)
+    return _verified(cand, texts, _jaccard_expr, "jaccard", threshold)
 
 
 def minhash_dedup_incremental(new_docs: DataFrame, corpus: DataFrame,
@@ -292,34 +385,11 @@ def minhash_dedup_incremental(new_docs: DataFrame, corpus: DataFrame,
                        shingle_k).localCheckpoint(eager=True)
     cb = corpus_bands if corpus_bands is not None else minhash_bands(
         corpus, text_col, id_col, num_hashes, bands, shingle_k)
-    # a replayed id (already in the corpus) is SUPERSEDED by the batch
-    # version: drop its corpus band rows, otherwise every pair touching
-    # it would emit in both orientations (corpus rule AND id_a < id_b)
-    # and verify against the stale corpus text
-    new_ids = nb.select("id").distinct()
-    cb = cb.join(new_ids, on="id", how="left_anti")
-    all_b = nb.withColumn("_corp", F.lit(False)) \
-        .unionByName(cb.withColumn("_corp", F.lit(True)))
-    left = nb.select(F.col("id").alias("id_a"), "band", "band_key")
-    right = all_b.select(F.col("id").alias("id_b"), "band", "band_key",
-                         "_corp")
-    cand = _salted_bucket_join(left, right, ["band", "band_key"],
-                               hot_bucket_rows, hot_salt, all_b) \
-        .where((F.col("id_a") != F.col("id_b"))
-               & (F.col("_corp") | (F.col("id_a") < F.col("id_b")))) \
-        .select("id_a", "id_b").distinct()
-
-    def _shingles(docs):
-        return docs.select(F.col(id_col).cast("string").alias("id"),
-                           F.split(F.col(text_col), " ").alias("_toks")) \
-                   .select("id", shingle_expr("_toks", shingle_k,
-                                              tokens=True).alias("_sh"))
-
-    # verification texts: the batch version wins for replayed ids (two
-    # rows per id would duplicate every pair touching it)
-    corpus_sh = _shingles(corpus).join(new_ids, on="id", how="left_anti")
-    texts = _shingles(new_docs).unionByName(corpus_sh)
-    return _verify_jaccard(cand, texts, threshold)
+    cand = _bucket_pairs(nb, ["band", "band_key"], cb,
+                         hot_bucket_rows=hot_bucket_rows, hot_salt=hot_salt)
+    return _verified(cand, _shingles(new_docs, text_col, id_col, shingle_k),
+                     _jaccard_expr, "jaccard", threshold,
+                     _shingles(corpus, text_col, id_col, shingle_k), nb)
 
 
 def embedding_neardup_incremental(new_embs: DataFrame, corpus: DataFrame,
@@ -342,40 +412,15 @@ def embedding_neardup_incremental(new_embs: DataFrame, corpus: DataFrame,
     new batch is hashed per increment. Equals the full
     embedding_neardup over (corpus UNION new) restricted to pairs
     touching a new vector (pinned by test)."""
-    from .similarity import cosine_expr
-
     nb = embedding_bands(new_embs, id_col, vec_col, bands, band_planes,
                          seed).localCheckpoint(eager=True)
     cb = corpus_bands if corpus_bands is not None else embedding_bands(
         corpus, id_col, vec_col, bands, band_planes, seed)
-    new_ids = nb.select("id").distinct()
-    cb = cb.join(new_ids, on="id", how="left_anti")
-    all_b = nb.withColumn("_corp", F.lit(False)) \
-        .unionByName(cb.withColumn("_corp", F.lit(True)))
-    left = nb.select(F.col("id").alias("id_a"), "band", "bucket")
-    right = all_b.select(F.col("id").alias("id_b"), "band", "bucket",
-                         "_corp")
-    cand = _salted_bucket_join(left, right, ["band", "bucket"],
-                               hot_bucket_rows, hot_salt, all_b) \
-        .where((F.col("id_a") != F.col("id_b"))
-               & (F.col("_corp") | (F.col("id_a") < F.col("id_b")))) \
-        .select("id_a", "id_b").distinct()
-
-    def _vecs(df):
-        return df.select(F.col(id_col).cast("string").alias("id"),
-                         F.col(vec_col).alias("_v"))
-
-    # verification vectors: the batch version wins for replayed ids
-    corpus_v = _vecs(corpus).join(new_ids, on="id", how="left_anti")
-    vecs = _vecs(new_embs).unionByName(corpus_v)
-    pairs = (cand
-             .join(vecs.select(F.col("id").alias("id_a"),
-                               F.col("_v").alias("va")), "id_a")
-             .join(vecs.select(F.col("id").alias("id_b"),
-                               F.col("_v").alias("vb")), "id_b"))
-    return pairs.withColumn("cosine", cosine_expr("va", "vb")) \
-                .where(F.col("cosine") >= threshold) \
-                .select("id_a", "id_b", "cosine")
+    cand = _bucket_pairs(nb, ["band", "bucket"], cb,
+                         hot_bucket_rows=hot_bucket_rows, hot_salt=hot_salt)
+    return _verified(cand, _vectors(new_embs, id_col, vec_col), cosine_expr,
+                     "cosine", threshold, _vectors(corpus, id_col, vec_col),
+                     nb)
 
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
@@ -532,26 +577,25 @@ def _block_rows(keyed: DataFrame, hash_col: str, max_hamming: int,
 def _blocked_hamming_pairs(keyed: DataFrame, hash_col: str,
                            max_hamming: int, blocks: int | None,
                            hot_bucket_rows: int = 10_000,
-                           hot_salt: int = 32) -> DataFrame:
+                           hot_salt: int = 32,
+                           corpus: DataFrame | None = None) -> DataFrame:
     """Candidate pairs by block-pigeonhole LSH over ``keyed`` =
     (id, hash_col), verified with bit_count(xor) entirely JVM-side.
     One equi-join on (block idx, block value); complete for hamming
     <= max_hamming by construction. Hot (block, value) buckets — e.g.
-    N identical hashes — are salted so no task goes quadratic.
-    Returns (id_a, id_b, hamming)."""
+    N identical hashes — are salted so no task goes quadratic. With
+    ``corpus`` (id, hash_col) rows, ``keyed`` is an arriving batch
+    probed against them (the module's pair rule). Returns
+    (id_a, id_b, hamming)."""
     # the exploded block rows feed the join's left side, right side,
     # AND the hot-bucket count — checkpoint so the upstream signature
     # aggregation (simhash's 64-wide agg) runs once, not three times
     ex = _block_rows(keyed, hash_col, max_hamming, blocks) \
         .localCheckpoint(eager=True)
-    left = ex.select(F.col("id").alias("id_a"), F.col("hv").alias("hv_a"),
-                     "bi", "bv")
-    right = ex.select(F.col("id").alias("id_b"), F.col("hv").alias("hv_b"),
-                      "bi", "bv")
-    cand = _salted_bucket_join(left, right, ["bi", "bv"],
-                               hot_bucket_rows, hot_salt, ex) \
-        .where(F.col("id_a") < F.col("id_b")) \
-        .select("id_a", "id_b", "hv_a", "hv_b").distinct()
+    cb = None if corpus is None else _block_rows(corpus, hash_col,
+                                                 max_hamming, blocks)
+    cand = _bucket_pairs(ex, ["bi", "bv"], cb, carry=("hv",),
+                         hot_bucket_rows=hot_bucket_rows, hot_salt=hot_salt)
     ham = F.bit_count(F.col("hv_a").bitwiseXOR(F.col("hv_b")))
     return cand.withColumn("hamming", ham) \
                .where(F.col("hamming") <= max_hamming) \
@@ -585,10 +629,9 @@ def phash_neardup(images: DataFrame, max_hamming: int = 6,
     Blocked-LSH candidates (complete for hamming <= max_hamming since
     blocks > max_hamming always holds), verified with bit_count(xor)
     JVM-side. Returns (id_a, id_b, hamming)."""
-    keyed = images.select(F.col(id_col).cast("string").alias("id"),
-                          F.col(hash_col).alias("ph"))
-    return _blocked_hamming_pairs(keyed, "ph", max_hamming, blocks,
-                                  hot_bucket_rows, hot_salt)
+    return _blocked_hamming_pairs(_phashes(images, id_col, hash_col), "ph",
+                                  max_hamming, blocks, hot_bucket_rows,
+                                  hot_salt)
 
 
 def phash_neardup_incremental(new_images: DataFrame, corpus: DataFrame,
@@ -611,37 +654,14 @@ def phash_neardup_incremental(new_images: DataFrame, corpus: DataFrame,
     the corpus side is a cheap 11-way explode of (id, phash) — or
     persist the exploded rows alongside the register to skip even
     that)."""
-    nk = new_images.select(F.col(id_col).cast("string").alias("id"),
-                           F.col(hash_col).alias("ph"))
-    ck = corpus.select(F.col(id_col).cast("string").alias("id"),
-                      F.col(hash_col).alias("ph"))
-    nb = _block_rows(nk, "ph", max_hamming, blocks) \
-        .localCheckpoint(eager=True)
-    new_ids = nb.select("id").distinct()
-    cb = _block_rows(ck.join(new_ids, on="id", how="left_anti"),
-                     "ph", max_hamming, blocks)
-    all_b = nb.withColumn("_corp", F.lit(False)) \
-        .unionByName(cb.withColumn("_corp", F.lit(True)))
-    left = nb.select(F.col("id").alias("id_a"), F.col("hv").alias("hv_a"),
-                     "bi", "bv")
-    right = all_b.select(F.col("id").alias("id_b"),
-                         F.col("hv").alias("hv_b"), "bi", "bv", "_corp")
-    cand = _salted_bucket_join(left, right, ["bi", "bv"],
-                               hot_bucket_rows, hot_salt, all_b) \
-        .where((F.col("id_a") != F.col("id_b"))
-               & (F.col("_corp") | (F.col("id_a") < F.col("id_b")))) \
-        .select("id_a", "id_b", "hv_a", "hv_b").distinct()
-    ham = F.bit_count(F.col("hv_a").bitwiseXOR(F.col("hv_b")))
-    return cand.withColumn("hamming", ham) \
-               .where(F.col("hamming") <= max_hamming) \
-               .select("id_a", "id_b", "hamming")
+    return _blocked_hamming_pairs(_phashes(new_images, id_col, hash_col),
+                                  "ph", max_hamming, blocks, hot_bucket_rows,
+                                  hot_salt, _phashes(corpus, id_col, hash_col))
 
 
-def caption_dup_groups(images: DataFrame, id_col: str = "image_id",
-                       caption_col: str = "caption") -> DataFrame:
-    """Exact caption duplicate groups (caption-equality joins are the
-    input-hint's cheap text-side dedup signal)."""
-    return duplicate_groups(images, [caption_col], id_col)
+def _phashes(images: DataFrame, id_col: str, hash_col: str) -> DataFrame:
+    return images.select(F.col(id_col).cast("string").alias("id"),
+                         F.col(hash_col).alias("ph"))
 
 
 # ---------------------------------------------------------------------------
@@ -654,7 +674,6 @@ def _embedding_planes(dim: int, bands: int, band_planes: int,
     """(bands * band_planes, dim) hyperplane matrix shared by the batch
     and streaming embedding-LSH paths: deterministic LCG planes when
     seed is None (SQL-mirrorable), gaussian otherwise."""
-    from .similarity import lcg_planes
     n_planes = bands * band_planes
     if seed is None:
         return vectors.matrix(lcg_planes(n_planes, dim))
@@ -744,29 +763,15 @@ def embedding_neardup(embs: DataFrame, id_col: str = "vec_id",
     embedding_bands), exact JVM-side cosine verification restricted to
     candidates. Hot buckets are salted like the minhash path. Returns
     (id_a, id_b, cosine)."""
-    from .similarity import cosine_expr
-
     # the band rows feed the join's left side, right side, and the
     # hot-bucket count — checkpoint so the hyperplane UDF (the
     # expensive stage) runs once over the corpus, not three times
     band_rows = embedding_bands(embs, id_col, vec_col, bands, band_planes,
                                 seed).localCheckpoint(eager=True)
-    left = band_rows.select(F.col("id").alias("id_a"), "band", "bucket")
-    right = band_rows.select(F.col("id").alias("id_b"), "band", "bucket")
-    cand = _salted_bucket_join(left, right, ["band", "bucket"],
-                               hot_bucket_rows, hot_salt, band_rows) \
-        .where(F.col("id_a") < F.col("id_b")) \
-        .select("id_a", "id_b").distinct()
-    vecs = embs.select(F.col(id_col).cast("string").alias("id"),
-                       F.col(vec_col).alias("_v"))
-    pairs = (cand
-             .join(vecs.select(F.col("id").alias("id_a"),
-                               F.col("_v").alias("va")), "id_a")
-             .join(vecs.select(F.col("id").alias("id_b"),
-                               F.col("_v").alias("vb")), "id_b"))
-    return pairs.withColumn("cosine", cosine_expr("va", "vb")) \
-                .where(F.col("cosine") >= threshold) \
-                .select("id_a", "id_b", "cosine")
+    cand = _bucket_pairs(band_rows, ["band", "bucket"],
+                         hot_bucket_rows=hot_bucket_rows, hot_salt=hot_salt)
+    return _verified(cand, _vectors(embs, id_col, vec_col), cosine_expr,
+                     "cosine", threshold)
 
 
 def _semdedup_assign_udf(id_col: str, vec_col: str, cents):
@@ -811,28 +816,10 @@ def _salted_pair_cogroup(left: DataFrame, right: DataFrame,
     replicated across them — every (a, b) pair meets exactly once, in
     a's salt partition, identical to the join variant.
 
-    ``sizes_from=None`` says no bucket can be hot (the caller knows its
-    whole table holds at most ``hot_bucket_rows`` rows): every row
-    takes salt 0, and the bucket-size count and its broadcast — two
-    Spark jobs — are not planned. Salting never changes the output."""
-    if sizes_from is None:
-        lt = left.withColumn("_salt", F.lit(0))
-        rt = right.withColumn("_salt", F.lit(0))
-    else:
-        hot = (sizes_from.groupBy(*keys).count()
-               .where(F.col("count") > hot_bucket_rows)
-               .select(*keys, F.lit(True).alias("_hot")))
-        lt = left.join(F.broadcast(hot), on=keys, how="left").withColumn(
-            "_salt", F.when(F.col("_hot").isNotNull(),
-                            F.pmod(F.xxhash64(salt_on), F.lit(hot_salt)))
-                      .otherwise(F.lit(0)).cast("int")).drop("_hot")
-        rt = right.join(F.broadcast(hot), on=keys, how="left") \
-            .withColumn("_salts",
-                        F.when(F.col("_hot").isNotNull(),
-                               F.sequence(F.lit(0), F.lit(hot_salt - 1)))
-                        .otherwise(F.array(F.lit(0)))) \
-            .withColumn("_salt", F.explode("_salts")) \
-            .drop("_hot", "_salts")
+    ``sizes_from=None``: no bucket can be hot (see _salt_sides).
+    Salting never changes the output."""
+    lt, rt = _salt_sides(left, right, keys, hot_bucket_rows, hot_salt,
+                         sizes_from, salt_on)
     # both sides share the checkpointed parent, so identical key
     # attribute ids would be flagged ambiguous by the cogroup's
     # analyzer — rename the right side's keys (cogroup matches groups

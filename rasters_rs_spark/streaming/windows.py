@@ -366,6 +366,53 @@ def _minhash_band_rows_pdf(pdf, text_col: str, id_col: str,
     return pd.DataFrame(rows, columns=["id", "band", "band_key", "hashes"])
 
 
+def _bucket_fold(payload_col: str, score_col: str, cast, prepare, verify,
+                 max_bucket_state: int):
+    """applyInPandasWithState update of one LSH bucket: the one fold of
+    the streaming near-dup operators. State is the bucket's member ids
+    and payloads (``payload_col`` of the band rows; each element goes
+    through ``cast`` to a python scalar). Arriving rows are taken in id
+    order; a row whose id is already a member (a micro-batch replay) is
+    skipped, and so is every row once the bucket holds
+    ``max_bucket_state`` members: pairing without storing would re-emit
+    on redelivery (the id can't be remembered), breaking replay
+    idempotence, so recall in a flooded bucket degrades uniformly
+    instead. Otherwise ``verify(prepare(payload), prepared members)``
+    yields (member index, score) for each member the row near-dups,
+    emitted as (min id, max id, score), and the row joins the bucket.
+    ``prepare`` runs once per member (the jaccard family's set)."""
+    import pandas as pd
+
+    def update(key, pdfs, state):
+        if state.exists:
+            ids, members = state.get
+            ids, members = list(ids), [list(m) for m in members]
+        else:
+            ids, members = [], []
+        new = [(nid, [cast(v) for v in p]) for pdf in pdfs
+               for nid, p in zip(pdf["id"], pdf[payload_col])]
+        new.sort(key=lambda t: t[0])
+        seen, stored = set(ids), len(ids)
+        prepared = [prepare(m) for m in members]
+        pairs = []
+        for nid, payload in new:
+            if nid in seen or len(ids) >= max_bucket_state:
+                continue
+            mine = prepare(payload)
+            if ids:
+                for j, score in verify(mine, prepared):
+                    pairs.append((min(nid, ids[j]), max(nid, ids[j]), score))
+            ids.append(nid)
+            members.append(payload)
+            prepared.append(mine)
+            seen.add(nid)
+        if len(ids) > stored:
+            state.update((ids, members))
+        yield pd.DataFrame(pairs, columns=["id_a", "id_b", score_col])
+
+    return update
+
+
 def stream_minhash_dedup(spark: SparkSession, source_dir: str, schema: str,
                          text_col: str = "text", id_col: str = "doc_id",
                          num_hashes: int = 64, bands: int = 16,
@@ -390,8 +437,7 @@ def stream_minhash_dedup(spark: SparkSession, source_dir: str, schema: str,
     downstream if exactly-once pairs are needed (the convergence test
     compares sets). Replayed ids (micro-batch retries) are skipped
     idempotently."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     stream = spark.readStream.schema(schema).parquet(source_dir)
 
@@ -404,47 +450,15 @@ def stream_minhash_dedup(spark: SparkSession, source_dir: str, schema: str,
         to_bands, schema="id string, band int, band_key string, "
                          "hashes array<long>")
 
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            ids, hash_lists = state.get
-            ids = list(ids)
-            hash_lists = [list(h) for h in hash_lists]
-        else:
-            ids, hash_lists = [], []
-        new = []
-        for pdf in pdfs:
-            for row in pdf.itertuples(index=False):
-                new.append((row.id, [int(v) for v in row.hashes]))
-        new.sort(key=lambda t: t[0])
-        seen = set(ids)
-        esets = [set(h) for h in hash_lists]   # hoisted: one per member
-        pairs = []
-        changed = False
-        for nid, nh in new:
-            if nid in seen:
-                continue          # micro-batch replay: already ingested
-            if len(ids) >= max_bucket_state:
-                # full bucket: neither store NOR pair — pairing without
-                # storing would re-emit on redelivery (the id can't be
-                # remembered), breaking replay idempotence; recall in a
-                # flooded bucket degrades uniformly instead
-                continue
-            nset = set(nh)
-            for eid, eset in zip(ids, esets):
-                union = len(nset | eset)
-                jac = (len(nset & eset) / union) if union else 1.0
-                if jac >= threshold:
-                    a, b = (nid, eid) if nid < eid else (eid, nid)
-                    pairs.append((a, b, jac))
-            ids.append(nid)
-            hash_lists.append(nh)
-            esets.append(nset)
-            seen.add(nid)
-            changed = True
-        if changed:
-            state.update((ids, hash_lists))
-        yield pd.DataFrame(pairs, columns=["id_a", "id_b", "jaccard"])
+    def jaccards(nset, esets):
+        for j, eset in enumerate(esets):
+            union = len(nset | eset)
+            jac = (len(nset & eset) / union) if union else 1.0
+            if jac >= threshold:
+                yield j, jac
 
+    update = _bucket_fold("hashes", "jaccard", int, set, jaccards,
+                          max_bucket_state)
     return band_rows.groupBy("band", "band_key").applyInPandasWithState(
         update,
         outputStructType="id_a string, id_b string, jaccard double",
@@ -474,7 +488,7 @@ def stream_embedding_neardup(spark: SparkSession, source_dir: str,
     downstream if needed. Replayed ids are skipped idempotently."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..functions import vectors
     from ..operators.dedup import _embedding_band_keys, _embedding_planes
@@ -504,43 +518,15 @@ def stream_embedding_neardup(spark: SparkSession, source_dir: str,
         to_bands, schema="id string, band int, bucket long, "
                          "vec array<double>")
 
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            ids, vecs = state.get
-            ids, vecs = list(ids), list(vecs)
-        else:
-            ids, vecs = [], []
-        new = []
-        for pdf in pdfs:
-            new.extend(zip(pdf["id"], pdf["vec"]))
-        new.sort(key=lambda t: t[0])
-        seen = set(ids)
-        pairs = []
-        changed = False
-        for nid, nv in new:
-            if nid in seen:
-                continue
-            if len(ids) >= max_bucket_state:
-                # full bucket: skip entirely (see stream_minhash_dedup —
-                # pairing without storing breaks replay idempotence)
-                continue
-            if ids:
-                # batch parity: cosine_expr's fold, and its NULL (not ok)
-                # for zero-norm vectors drops the pair
-                cos, ok = vectors.cosine(vectors.matrix([nv]),
-                                         vectors.matrix(vecs))
-                for j in np.flatnonzero(ok & (cos >= threshold)):
-                    eid = ids[j]
-                    a, b = (nid, eid) if nid < eid else (eid, nid)
-                    pairs.append((a, b, float(cos[j])))
-            ids.append(nid)
-            vecs.append(nv)
-            seen.add(nid)
-            changed = True
-        if changed:
-            state.update((ids, [[float(x) for x in v] for v in vecs]))
-        yield pd.DataFrame(pairs, columns=["id_a", "id_b", "cosine"])
+    def cosines(nv, vecs):
+        # batch parity: cosine_expr's fold, and its NULL (not ok) for
+        # zero-norm vectors drops the pair
+        cos, ok = vectors.cosine(vectors.matrix([nv]), vectors.matrix(vecs))
+        for j in np.flatnonzero(ok & (cos >= threshold)):
+            yield j, float(cos[j])
 
+    update = _bucket_fold("vec", "cosine", float, lambda v: v, cosines,
+                          max_bucket_state)
     return band_rows.groupBy("band", "bucket").applyInPandasWithState(
         update,
         outputStructType="id_a string, id_b string, cosine double",

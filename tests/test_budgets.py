@@ -205,8 +205,10 @@ def _executions(spark) -> list:
     return out
 
 
-def measure(spark, root: Path) -> dict:
-    """{call: {"jobs": n, node: n ...}} over every call of ``calls``."""
+def measure(spark, root: Path, detail: dict | None = None) -> dict:
+    """{call: {"jobs": n, node: n ...}} over every call of ``calls``.
+    A ``detail`` dict receives, per call, its job ids and the nonzero
+    node counts of each SQL execution it ran, by execution id."""
     sc = spark.sparkContext
     bus = sc._jsc.sc().listenerBus()
     paths, aois = write_inputs(root)
@@ -221,14 +223,19 @@ def measure(spark, root: Path) -> dict:
                 df.write.format("noop").mode("overwrite").save()
             sc.setJobGroup("budget.between", "between calls")
             bus.waitUntilEmpty()
-            counts = {"jobs": len(sc.statusTracker().getJobIdsForGroup(
-                GROUP + name))}
+            jobs = sorted(sc.statusTracker().getJobIdsForGroup(GROUP + name))
+            counts = {"jobs": len(jobs)}
             counts.update(dict.fromkeys(NODES, 0))
+            per_exec = {}
             for i, plan in _executions(spark):
                 if i > seen:
-                    for k, v in count_nodes(plan).items():
+                    n = count_nodes(plan)
+                    per_exec[i] = {k: v for k, v in n.items() if v}
+                    for k, v in n.items():
                         counts[k] += v
             out[name] = counts
+            if detail is not None:
+                detail[name] = {"job_ids": jobs, "executions": per_exec}
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -266,12 +273,17 @@ AdaptiveSparkPlan (9)
 def test_job_and_plan_budget(spark, tmp_path):
     with open(BUDGET) as f:
         budget = json.load(f)
-    got = measure(spark, tmp_path)
+    detail = {}
+    got = measure(spark, tmp_path, detail)
     assert sorted(got) == sorted(budget)
-    grew = {f"{call}.{k}": (budget[call][k], v)
+    grew = {(call, k): (budget[call][k], v)
             for call, counts in got.items() for k, v in counts.items()
             if v > budget[call].get(k, 0)}
-    assert not grew, f"counts above plans/budget.json (budget, got): {grew}"
+    over = {call: detail[call] for call, _ in grew}
+    assert not grew, (
+        "counts above plans/budget.json (budget, got): "
+        f"{ {f'{c}.{k}': bv for (c, k), bv in grew.items()} }; "
+        f"job ids and per-execution nodes of those calls: {over}")
 
 
 if __name__ == "__main__":

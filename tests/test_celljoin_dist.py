@@ -9,7 +9,7 @@ import pandas as pd
 import pytest
 
 from rasters_rs_spark.operators import celljoin
-from rasters_rs_spark.operators.celljoin import (AOI_SCHEMA, aoi_cells_df,
+from rasters_rs_spark.operators.celljoin import (AOI_SCHEMA, _bbox_cover,
                                                  aoi_cells_dist,
                                                  cell_pip_join)
 from rasters_rs_spark.sources import synth
@@ -21,10 +21,12 @@ def _aoi_df(spark, aois: pd.DataFrame):
 
 
 def test_aoi_cells_dist_equals_driver_cells(spark):
-    """Same (aoi_id, cell) cover as the driver-side double loop."""
+    """Same (aoi_id, cell) cover as the driver-side bbox cover."""
     aois = synth.aoi_table(8, seed=10)
-    drv = {(r["aoi_id"], r["cell"])
-           for r in aoi_cells_df(spark, aois, zoom=12).collect()}
+    cells, offsets, parts = _bbox_cover(aois, zoom=12)
+    drv = {(aois["aoi_id"].iloc[p], c)
+           for i, c in enumerate(cells.tolist())
+           for p in parts[offsets[i]:offsets[i + 1]].tolist()}
     dist = {(r["aoi_id"], r["cell"])
             for r in aoi_cells_dist(_aoi_df(spark, aois), zoom=12).collect()}
     assert dist == drv

@@ -54,7 +54,7 @@ def test_caption_dup_groups(spark):
     pdf.loc[len(pdf)] = dict(pdf.iloc[3])
     pdf.loc[len(pdf) - 1, "image_id"] = "img_capdup00"
     df = spark.createDataFrame(pdf)
-    groups = D.caption_dup_groups(df).collect()
+    groups = D.duplicate_groups(df, ["caption"], "image_id").collect()
     assert len(groups) == 1
     assert groups[0]["keeper"] == pdf.iloc[3]["image_id"]
     assert groups[0]["n_dups"] == 2
